@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.multimodal.Multimodal
-import graft.ops.{Curation, Dedup, GroupedRowsToColumns, Retrieval, RowOps, SetContainment, Similarity, Upsert, Web}
+import graft.ops.{Curation, Dedup, GroupedRowsToColumns, Retrieval, RowOps, SetContainment, Similarity, Skew, Upsert, Web}
 import graft.pipeline.{Pipeline, ReferenceTables}
 import graft.streaming.EventsStream
 
@@ -625,20 +625,15 @@ object SparkEntry {
     "q77_training_mix" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       // Spread an under-split corpus BEFORE the signal projection and pin
-      // the spread with a persist of the SIGNAL frame (round-17, VERDICT
-      // r16 #6). The round-16 bare-spread rejection showed why a naked
-      // repartition fails here: predicate pushdown substitutes the `keep`
-      // alias and drags the heavy TextStats/RepetitionStats expressions
-      // through the inserted exchange back onto the single map task. A
-      // persisted frame's build plan ENDS at the projection — nothing can
-      // push through it — so the signals evaluate on the exchange's
-      // reduce side across the session's cores. Properly-split inputs
-      // pass through (the q110/q112 condition).
-      val spreadDocs =
-        if (docs.rdd.getNumPartitions < s.sparkContext.defaultParallelism)
-          docs.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-        else docs
-      val sigs = Curation.qualityFilter(spreadDocs, "doc_id", "text",
+      // the spread with a persist of the SIGNAL frame. A bare spread fails
+      // here: predicate pushdown substitutes the `keep` alias and drags the
+      // heavy TextStats/RepetitionStats expressions through the inserted
+      // exchange back onto the single map task. A persisted frame's build
+      // plan ENDS at the projection — nothing can push through it — so the
+      // signals evaluate on the exchange's reduce side across the
+      // session's cores.
+      val sigs = Curation.qualityFilter(
+          Skew.spreadIfUnderSplit(docs, col("doc_id")), "doc_id", "text",
           minStopwordRatio = 0.0, maxDupSegmentFrac = 0.95, separator = " ")
         .select("doc_id", "n_tokens", "keep")
         .persist()

@@ -2042,13 +2042,8 @@ object Curation {
       .select(md5(col(benchTextCol).substr(col("__bp") + 1, lit(spanLen)))
         .as("__h"))
       .distinct()
-    // Spread under-split inputs (the withNorm / repeatedSpanDedup
-    // discipline): a single-file corpus would run the window explode+md5
-    // AND the excision fold on one task each.
-    val p = docs.sparkSession.sparkContext.defaultParallelism
-    val spreadDocs =
-      if (docs.rdd.getNumPartitions < p) docs.repartition(p, col(idCol))
-      else docs
+    // Spread before both per-row passes, as in repeatedSpanDedup.
+    val spreadDocs = Skew.spreadIfUnderSplit(docs, col(idCol))
     val marked = spreadDocs
       .filter(length(col(textCol)) >= spanLen)
       .select(col(idCol),

@@ -372,17 +372,9 @@ object Dedup {
       stride: Int): DataFrame = {
     require(spanLen >= 1 && stride >= 1,
       s"spanLen/stride must be >= 1, got $spanLen/$stride")
-    // Spread under-split inputs behind a conditional repartition barrier
-    // (the [[Similarity]] withNorm / bm25TopK discipline): a single-file
-    // corpus arrives as ONE input split, which would serialize BOTH
-    // expensive per-row passes — the window explode+md5 here and the
-    // excision fold in [[exciseMarkedRanges]] — onto one task (measured
-    // 853 ms + 475 ms single-task stages at sf0.1). A properly-split
-    // corpus (the 100 TB case) passes through untouched.
-    val p = docs.sparkSession.sparkContext.defaultParallelism
-    val spreadDocs =
-      if (docs.rdd.getNumPartitions < p) docs.repartition(p, col(idCol))
-      else docs
+    // Spread before BOTH per-row passes: the window explode+md5 here and
+    // the excision fold in [[exciseMarkedRanges]].
+    val spreadDocs = Skew.spreadIfUnderSplit(docs, col(idCol))
     val occ = spreadDocs
       .filter(length(col(textCol)) >= spanLen)
       .select(col(idCol),

@@ -56,18 +56,9 @@ object GroupedRowsToColumns {
       .filterNot(groupBy.contains)
       .distinct
     val rowsCol = "__rows"
-    // Spread under-split inputs behind a conditional repartition ON THE
-    // GROUP KEY (the withNorm discipline): collect_list has no map-side
-    // reduction (every row lands in some group's array), so pre-
-    // partitioning costs no extra exchange — the groupBy reuses it — and
-    // a single-split input otherwise runs the whole partial-aggregate
-    // build on one task (measured: a 700–770 ms 3-task stage at sf0.1).
-    // A properly-split input passes through untouched.
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (df.rdd.getNumPartitions < p) df.repartition(p, groupBy.map(col): _*)
-      else df
-    val grouped = spread
+    // Spread on the GROUP KEY: collect_list has no map-side reduction, so
+    // the groupBy reuses this exchange instead of adding one.
+    val grouped = Skew.spreadIfUnderSplit(df, groupBy.map(col): _*)
       .groupBy(groupBy.map(col): _*)
       .agg(sort_array(collect_list(struct(carried.map(col): _*))).as(rowsCol))
 

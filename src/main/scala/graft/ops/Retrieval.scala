@@ -68,17 +68,8 @@ object Retrieval {
       "chunk the query set and union bounded bm25TopK calls (the corpus " +
         "side already streams; only the query vocabulary collects)")
     val spark = docs.sparkSession
-    // Tokenization is the expensive per-row work here, and a small/single
-    // parquet file arrives as ONE input split — which would serialize the
-    // whole tokenize→join→score pipeline onto one task (measured: a 3.4 s
-    // single-task stage at sf0.1). Spread under-split inputs behind a
-    // repartition barrier (the [[Similarity]] withNorm discipline); a
-    // properly-split corpus (the 100 TB case) passes through untouched.
-    val parts = spark.sparkContext.defaultParallelism
-    val base = docs.select(col(idCol), col(textCol))
-    val spread =
-      if (base.rdd.getNumPartitions < parts) base.repartition(parts, col(idCol))
-      else base
+    // Tokenization is the expensive per-row work here.
+    val spread = Skew.spreadIfUnderSplit(docs.select(col(idCol), col(textCol)), col(idCol))
     // The query VOCABULARY collects to the driver: it is query-set-sized
     // by the same contract that lets the scoring join broadcast it
     // (queries ≪ corpus). Bounded by construction, like the IVF centroid

@@ -70,9 +70,8 @@ object Similarity {
   private def withNorm(df: DataFrame, idCol: String, vecCol: String,
       forceBarrier: Boolean = false): DataFrame = {
     val base = df.select(col(idCol), col(vecCol), norm(col(vecCol)).as("__norm"))
-    if (forceBarrier || base.rdd.getNumPartitions < parallelism(df))
-      base.repartition(parallelism(df), col(idCol))
-    else base
+    if (forceBarrier) base.repartition(parallelism(df), col(idCol))
+    else Skew.spreadIfUnderSplit(base, col(idCol))
   }
 
   /** Fail-loud guardrail for every path whose QUERY side is collected to

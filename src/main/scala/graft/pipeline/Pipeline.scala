@@ -40,6 +40,33 @@ object Pipeline {
     }
   }
 
+  /** One stage of the pipeline DAG: its upstream stages and its rule. */
+  private final case class StageDef(
+      name: String,
+      deps: Seq[String],
+      rule: (SparkSession, ReferenceTables, Map[String, DataFrame]) => DataFrame)
+
+  /** The fixed 9-stage DAG (`Pipeline.groovy:484-525`), in topological order. */
+  private val dag: Seq[StageDef] = Seq(
+    StageDef("variant", Nil, (_, _, _) =>
+      throw new IllegalArgumentException("variant input required")),
+    StageDef("hetVariant", Seq("variant"), (spark, refs, d) =>
+      PipelineStages.variantToHetVariant(spark, d("variant"), refs)),
+    StageDef("haplotypeCalls", Seq("variant", "hetVariant"), (spark, refs, d) =>
+      PipelineStages.variantToHaplotypeCalls(spark, d("variant"), d("hetVariant"), refs)),
+    StageDef("geneHaplotype", Seq("haplotypeCalls"), (_, _, d) =>
+      PipelineStages.geneHaplotypeFromCalls(d("haplotypeCalls"))),
+    StageDef("novelHaplotype", Seq("haplotypeCalls"), (_, _, d) =>
+      PipelineStages.novelHaplotypeFromCalls(d("haplotypeCalls"))),
+    StageDef("genotype", Seq("geneHaplotype"), (_, _, d) =>
+      PipelineStages.geneHaplotypeToGenotype(d("geneHaplotype"))),
+    StageDef("genePhenotype", Seq("genotype"), (_, refs, d) =>
+      PipelineStages.genotypeToGenePhenotype(d("genotype"), refs)),
+    StageDef("genotypeDrugRecommendation", Seq("genotype"), (_, refs, d) =>
+      PipelineStages.genotypeToGenotypeDrugRecommendation(d("genotype"), refs)),
+    StageDef("phenotypeDrugRecommendation", Seq("genePhenotype"), (_, refs, d) =>
+      PipelineStages.genePhenotypeToPhenotypeDrugRecommendation(d("genePhenotype"), refs)))
+
   /** Run one job. Any of the four input kinds may be provided
     * (`variant` is the usual entry; later stages short-circuit their
     * upstream rules exactly like the reference's input overrides).
@@ -57,29 +84,8 @@ object Pipeline {
       genePhenotypes: Option[DataFrame] = None,
       persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK
   ): Map[String, DataFrame] = {
-    val matrices = refs.broadcastMatrices(spark)
-
-    val graph = StageGraph(
-      "variant" -> StageGraph.Stage(Nil, _ =>
-        throw new IllegalArgumentException("variant input required")),
-      "hetVariant" -> StageGraph.Stage(Seq("variant"), deps =>
-        PipelineStages.variantToHetVariant(spark, deps("variant"), refs, matrices)),
-      "haplotypeCalls" -> StageGraph.Stage(Seq("variant", "hetVariant"), deps =>
-        PipelineStages.variantToHaplotypeCalls(
-          spark, deps("variant"), deps("hetVariant"), refs, matrices)),
-      "geneHaplotype" -> StageGraph.Stage(Seq("haplotypeCalls"), deps =>
-        PipelineStages.geneHaplotypeFromCalls(deps("haplotypeCalls"))),
-      "novelHaplotype" -> StageGraph.Stage(Seq("haplotypeCalls"), deps =>
-        PipelineStages.novelHaplotypeFromCalls(deps("haplotypeCalls"))),
-      "genotype" -> StageGraph.Stage(Seq("geneHaplotype"), deps =>
-        PipelineStages.geneHaplotypeToGenotype(deps("geneHaplotype"))),
-      "genePhenotype" -> StageGraph.Stage(Seq("genotype"), deps =>
-        PipelineStages.genotypeToGenePhenotype(deps("genotype"), refs)),
-      "genotypeDrugRecommendation" -> StageGraph.Stage(Seq("genotype"), deps =>
-        PipelineStages.genotypeToGenotypeDrugRecommendation(deps("genotype"), refs)),
-      "phenotypeDrugRecommendation" -> StageGraph.Stage(Seq("genePhenotype"), deps =>
-        PipelineStages.genePhenotypeToPhenotypeDrugRecommendation(
-          deps("genePhenotype"), refs)))
+    val graph = StageGraph(dag.map(s =>
+      s.name -> StageGraph.Stage(s.deps, deps => s.rule(spark, refs, deps))): _*)
 
     val overrides = Seq(
       variants.map("variant" -> withJobDefaults(_, jobId, hetComboFields = false)),
@@ -90,27 +96,14 @@ object Pipeline {
 
     require(overrides.nonEmpty, "at least one input stage must be provided")
 
-    // Only build leaves reachable from the provided inputs: e.g. a genotype
-    // input cannot (re)build geneHaplotype/novelHaplotype upstream.
-    val buildable = reachableTargets(overrides.keySet)
-
     graph.build(
-      targets = buildable,
+      targets = reachableTargets(overrides.keySet),
       overrides = overrides,
       materialize = (_, df) => df.persist(persistLevel))
   }
 
   /** The fixed stage dependency shape (`Pipeline.groovy:484-525`). */
-  val stageDeps: Map[String, Seq[String]] = Map(
-    "variant" -> Nil,
-    "hetVariant" -> Seq("variant"),
-    "haplotypeCalls" -> Seq("variant", "hetVariant"),
-    "geneHaplotype" -> Seq("haplotypeCalls"),
-    "novelHaplotype" -> Seq("haplotypeCalls"),
-    "genotype" -> Seq("geneHaplotype"),
-    "genePhenotype" -> Seq("genotype"),
-    "genotypeDrugRecommendation" -> Seq("genotype"),
-    "phenotypeDrugRecommendation" -> Seq("genePhenotype"))
+  val stageDeps: Map[String, Seq[String]] = dag.map(s => s.name -> s.deps).toMap
 
   /** The pipeline graph with introspection-only rules — for layout/levels/
     * dependants queries (`Dependency.groovy:136-317` parity) without a job.
@@ -120,22 +113,13 @@ object Pipeline {
       throw new UnsupportedOperationException(s"shape-only graph: $name"))
   })
 
-  /** Downstream closure of the provided stages over the fixed graph shape. */
+  /** The provided stages plus everything downstream of them, in DAG order:
+    * e.g. a genotype input cannot (re)build geneHaplotype/novelHaplotype
+    * upstream. One pass suffices because `dag` is topologically ordered. */
   private def reachableTargets(provided: Set[String]): Seq[String] = {
-    val deps = stageDeps.filter(_._2.nonEmpty)
-    val buildable = scala.collection.mutable.Set[String](provided.toSeq: _*)
-    var changed = true
-    while (changed) {
-      changed = false
-      deps.foreach { case (stage, ds) =>
-        if (!buildable(stage) && ds.forall(buildable)) {
-          buildable += stage; changed = true
-        }
-      }
+    val buildable = dag.foldLeft(provided) { (b, s) =>
+      if (s.deps.nonEmpty && s.deps.forall(b)) b + s.name else b
     }
-    val order = Seq("variant", "hetVariant", "haplotypeCalls", "geneHaplotype",
-      "novelHaplotype", "genotype", "genePhenotype",
-      "genotypeDrugRecommendation", "phenotypeDrugRecommendation")
-    order.filter(buildable)
+    dag.map(_.name).filter(buildable)
   }
 }

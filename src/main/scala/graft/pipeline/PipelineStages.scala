@@ -2,8 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.broadcast.Broadcast
-import graft.algo.{Disambiguate, GeneHaplotypeMatrix, Variant}
+import graft.algo.{Disambiguate, Variant}
 import graft.ops.{GroupedRowsToColumns, SetContainment}
 import Schemas._
 
@@ -25,9 +24,9 @@ object PipelineStages {
   def variantToHetVariant(
       spark: SparkSession,
       variants: DataFrame,
-      refs: ReferenceTables,
-      matrices: Broadcast[Map[String, GeneHaplotypeMatrix]]): DataFrame = {
+      refs: ReferenceTables): DataFrame = {
     import spark.implicits._
+    val matrices = refs.matrices
     val hets = variants
       .filter($"zygosity" === "het")
       .join(broadcast(refs.geneSnp), Seq("snp_id"))
@@ -59,9 +58,9 @@ object PipelineStages {
       spark: SparkSession,
       variants: DataFrame,
       hetVariants: DataFrame,
-      refs: ReferenceTables,
-      matrices: Broadcast[Map[String, GeneHaplotypeMatrix]]): DataFrame = {
+      refs: ReferenceTables): DataFrame = {
     import spark.implicits._
+    val matrices = refs.matrices
     val geneSnpB = broadcast(refs.geneSnp)
     val homs = variants
       .filter($"zygosity" === "hom")

@@ -1,18 +1,21 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.broadcast.Broadcast
 import graft.algo.GeneHaplotypeMatrix
 
-/** The 6 reference/lookup tables the pipeline joins against, plus the derived
-  * `gene_snp`/`gene_haplotype` views (reference defines them as
-  * `select distinct` MERGE views, `haplorec.sql.jinja:59-76`) and the
-  * broadcast gene–haplotype matrices.
+/** The 5 reference/lookup tables the pipeline joins against, and every view
+  * the pipeline and reports derive from them.
   *
-  * These tables are small (largest real gene matrix is 133×151,
-  * `todo.txt:321-323`), so the haplotype-calling matrices are collected once
-  * and broadcast — replacing the reference's per-(gene,patient) SQL round
-  * trips (`Pipeline.groovy:230-316`) with executor-local map lookups.
+  * `gene_haplotype_variant` is read ONCE per instance, on first use, into
+  * the per-gene gene–haplotype matrices; the broadcast matrices, the
+  * `gene_snp` view (the reference's `select distinct` MERGE view,
+  * `haplorec.sql.jinja:59-67`) and each gene's SNP list all come from that
+  * one driver-side build. Reference tables are small (largest real gene
+  * matrix is 133×151, `todo.txt:321-323`), so broadcasting the matrices
+  * replaces the reference's per-(gene, patient) SQL round trips
+  * (`Pipeline.groovy:230-316`) with executor-local map lookups, and a
+  * caller that keeps one instance for many jobs builds them once.
   */
 final class ReferenceTables(
     val drugRecommendation: DataFrame,
@@ -20,123 +23,101 @@ final class ReferenceTables(
     val geneHaplotypeVariant: DataFrame,
     val genotypePhenotype: DataFrame,
     val genotypeDrugRecommendation: DataFrame
-) extends Serializable {
+) {
 
-  /** Distinct 2-column view over the reference frame. When the frame is a
-    * driver-resident literal (LocalRelation — inline fixtures, literal
-    * reference tables), the distinct folds on the driver and the view
-    * stays a LocalRelation: every broadcast of it then builds WITHOUT a
-    * Spark job, where the `distinct()` aggregate cost one job per
-    * broadcast build in every pipeline/report run (guide §1.2/§5 action
-    * churn). First-occurrence order — the same row order the distributed
-    * aggregate is consumed under set semantics (joins only). Parquet-
-    * backed reference frames keep the distributed distinct.
-    */
-  private def distinctView(a: String, b: String): DataFrame = {
-    val base = geneHaplotypeVariant.select(a, b)
-    if (base.queryExecution.optimizedPlan
-        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) {
-      val rows = base.collect() // LocalTableScan: driver rows, no job
-      val seen = new java.util.LinkedHashSet[(String, String)]()
-      rows.foreach(r => seen.add((r.getString(0), r.getString(1))))
-      val out = new java.util.ArrayList[org.apache.spark.sql.Row](seen.size)
-      seen.forEach(t => out.add(org.apache.spark.sql.Row(t._1, t._2)))
-      base.sparkSession.createDataFrame(out, base.schema)
-    } else base.distinct()
+  private lazy val geneMatrices: Map[String, GeneHaplotypeMatrix] =
+    ReferenceTables.buildMatrices(geneHaplotypeVariant)
+
+  /** The per-gene matrices, broadcast once per instance. Executor closures
+    * capture this handle, never the `ReferenceTables` itself. */
+  lazy val matrices: Broadcast[Map[String, GeneHaplotypeMatrix]] =
+    geneHaplotypeVariant.sparkSession.sparkContext.broadcast(geneMatrices)
+
+  /** `gene_snp` view: distinct (gene_name, snp_id) (`haplorec.sql.jinja:59-67`),
+    * a driver-resident frame, so every broadcast of it builds without a job. */
+  lazy val geneSnp: DataFrame = {
+    val rows = geneMatrices.toSeq.sortBy(_._1).flatMap { case (g, m) =>
+      m.snpIds.map(s => Row(g, s))
+    }
+    geneHaplotypeVariant.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*),
+      geneHaplotypeVariant.select("gene_name", "snp_id").schema)
   }
 
-  /** `gene_snp` view: distinct (gene_name, snp_id) (`haplorec.sql.jinja:59-67`). */
-  lazy val geneSnp: DataFrame = distinctView("gene_name", "snp_id")
+  /** Each gene's SNPs in unsigned-UTF-8 order — Spark's string order, so
+    * the order `pivot("snp_id")` would infer. */
+  lazy val snpsByGene: Map[String, Seq[String]] = geneMatrices.map { case (g, m) =>
+    g -> m.snpIds.sortWith((a, b) => java.util.Arrays.compareUnsigned(
+      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0)
+  }
+}
 
-  /** `gene_haplotype` view (`haplorec.sql.jinja:69-76`). */
-  lazy val geneHaplotype: DataFrame = distinctView("gene_name", "haplotype_name")
+object ReferenceTables {
+  def apply(
+      drugRecommendation: DataFrame,
+      genePhenotypeDrugRecommendation: DataFrame,
+      geneHaplotypeVariant: DataFrame,
+      genotypePhenotype: DataFrame,
+      genotypeDrugRecommendation: DataFrame): ReferenceTables =
+    new ReferenceTables(
+      drugRecommendation,
+      genePhenotypeDrugRecommendation,
+      geneHaplotypeVariant,
+      genotypePhenotype,
+      genotypeDrugRecommendation)
 
-  /** Collect + broadcast all per-gene matrices once per session.
+  /** Build every gene's matrix from `(gene_name, haplotype_name, snp_id,
+    * allele)` rows with no shuffle.
     *
-    * Round-17 shape (guide §2.3 "shuffle keys and metadata instead of
-    * payloads", taken to its limit — VERDICT r16 #3): the historical
-    * `groupByKey.mapGroups` shipped every matrix row across a gene-keyed
-    * exchange as a 4-string Scala tuple (a 2M-row OBJECT shuffle — the
-    * single most expensive stage of the q31 load gate). But the matrix
-    * set is broadcast-class by contract (a few MB dictionary-encoded), so
-    * nothing needs an exchange at all:
-    *
-    *  1. ONE pass (`mapPartitions`, no shuffle) dictionary-encodes each
-    *     partition locally: per-partition name dictionaries plus one
-    *     packed 16-bit×4 long per matrix row. The driver collects packed
-    *     PRIMITIVES plus dictionary-sized string arrays — the same byte
-    *     class as the broadcast this method must build anyway.
-    *  2. The driver merges the per-partition dictionaries (sorted with
-    *     `java.lang.String` ordering — exactly the per-gene
-    *     `distinct.sorted` the mapGroups build used), translates local
-    *     codes to global ones, and fills the per-gene cell arrays with
-    *     tight primitive loops. The matrices are semantically identical
-    *     to the mapGroups build (allele-dict ORDER is internal — every
-    *     consumer dereferences to strings; row/column orders are the
-    *     same sorted orders).
-    *
-    * Bound: ≤ 65535 distinct names per dimension PER INPUT PARTITION
-    * (enforced; a reference frame past that would not broadcast either —
-    * repartition it first).
+    *  1. Rows are dictionary-encoded in parts of at most 65535 rows: per-part
+    *     name dictionaries plus one packed 16-bit×4 long per row. A part can
+    *     hold at most 65535 distinct names per dimension, so every code fits
+    *     its 16-bit field whatever the table's size or partitioning. A
+    *     driver-resident frame is encoded from its collected rows (no Spark
+    *     job); any other frame is encoded per partition by one
+    *     `mapPartitions` job, and the driver collects only packed primitives
+    *     and dictionary-sized string arrays.
+    *  2. The driver merges the per-part dictionaries (sorted with
+    *     `java.lang.String` ordering — each matrix's row and column order),
+    *     translates part codes to global ones, and fills the per-gene cell
+    *     arrays with primitive loops. The part split is not observable.
     */
-  def broadcastMatrices(spark: SparkSession): Broadcast[Map[String, GeneHaplotypeMatrix]] = {
+  private def buildMatrices(ghv: DataFrame): Map[String, GeneHaplotypeMatrix] = {
+    val spark = ghv.sparkSession
     import spark.implicits._
-    val base = geneHaplotypeVariant
-      .select("gene_name", "haplotype_name", "snp_id", "allele")
-    // Dictionary-encode one row iterator into (dicts, packed rows) —
-    // runs per executor partition on the distributed path, or once on the
-    // driver when the reference frame is already a driver-resident literal.
-    def encodePart(it: Iterator[(String, String, String, String)])
+    val base = ghv.select("gene_name", "haplotype_name", "snp_id", "allele")
+    val partRows = 65535
+    def encodePart(rows: Seq[(String, String, String, String)])
         : (Array[String], Array[String], Array[String], Array[String], Array[Long]) = {
       val gd = new java.util.LinkedHashMap[String, Integer]()
       val hd = new java.util.LinkedHashMap[String, Integer]()
       val sd = new java.util.LinkedHashMap[String, Integer]()
       val ad = new java.util.LinkedHashMap[String, Integer]()
-      def code(m: java.util.LinkedHashMap[String, Integer], s: String,
-          what: String): Long = {
+      def code(m: java.util.LinkedHashMap[String, Integer], s: String): Long = {
         var v = m.get(s)
-        if (v == null) {
-          require(m.size < 65536, s"broadcastMatrices: more than 65535 " +
-            s"distinct ${what}s in one input partition; repartition the " +
-            "reference frame")
-          v = Integer.valueOf(m.size)
-          m.put(s, v)
-        }
+        if (v == null) { v = Integer.valueOf(m.size); m.put(s, v) }
         v.longValue()
       }
-      val buf = scala.collection.mutable.ArrayBuilder.make[Long]
-      while (it.hasNext) {
-        val r = it.next()
-        buf += (code(gd, r._1, "gene") << 48) |
-          (code(hd, r._2, "haplotype") << 32) |
-          (code(sd, r._3, "snp") << 16) | code(ad, r._4, "allele")
-      }
+      val packed = rows.iterator.map(r =>
+        (code(gd, r._1) << 48) | (code(hd, r._2) << 32) |
+          (code(sd, r._3) << 16) | code(ad, r._4)).toArray
       def keys(m: java.util.LinkedHashMap[String, Integer]) =
         m.keySet.toArray(new Array[String](0))
-      (keys(gd), keys(hd), keys(sd), keys(ad), buf.result())
+      (keys(gd), keys(hd), keys(sd), keys(ad), packed)
     }
-    // A LocalRelation input (inline fixtures, literal reference tables) is
-    // already on the driver: encoding it through a Spark job would spin
-    // one job + a broadcast-sized collect per pipeline run for rows the
-    // driver can iterate directly (guide §1.2/§5 — action churn). Parquet-
-    // backed or otherwise distributed reference frames keep the
-    // one-pass-per-partition job; dictionaries bound what the driver holds
-    // either way. Encoding all local rows as ONE part yields the same
-    // global merge inputs (per-partition dicts are merged and re-sorted
-    // globally below, so the partition split is not observable).
     val parts: Array[(Array[String], Array[String], Array[String], Array[String], Array[Long])] =
       if (base.queryExecution.optimizedPlan
           .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) {
-        val rows = base.collect() // LocalTableScan: driver rows, no job
-        Array(encodePart(rows.iterator.map(r =>
-          (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))))
+        base.collect().iterator // driver-resident rows: no job
+          .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
+          .grouped(partRows).map(encodePart).toArray
       } else {
         base.as[(String, String, String, String)]
-          .mapPartitions(it => Iterator.single(encodePart(it)))
+          .mapPartitions(_.grouped(partRows).map(encodePart))
           .collect()
       }
-    // Global dictionaries, sorted with java.lang.String ordering — the
-    // same `distinct.sorted` the historical per-gene build applied.
+    // Global dictionaries, sorted with java.lang.String ordering.
     val genes: Array[String] = parts.flatMap(_._1).distinct.sorted
     val haps: Array[String] = parts.flatMap(_._2).distinct.sorted
     val snps: Array[String] = parts.flatMap(_._3).distinct.sorted
@@ -228,7 +209,7 @@ final class ReferenceTables(
         p += 1
       }
     }
-    val matrices = genes.indices.map { g =>
+    genes.indices.map { g =>
       genes(g) -> GeneHaplotypeMatrix(
         genes(g),
         codesOf(snpSeen(g)).map(snps(_)).toVector,
@@ -236,21 +217,5 @@ final class ReferenceTables(
         alleleDicts(g).toVector,
         cellsByGene(g))
     }.toMap
-    spark.sparkContext.broadcast(matrices)
   }
-}
-
-object ReferenceTables {
-  def apply(
-      drugRecommendation: DataFrame,
-      genePhenotypeDrugRecommendation: DataFrame,
-      geneHaplotypeVariant: DataFrame,
-      genotypePhenotype: DataFrame,
-      genotypeDrugRecommendation: DataFrame): ReferenceTables =
-    new ReferenceTables(
-      drugRecommendation,
-      genePhenotypeDrugRecommendation,
-      geneHaplotypeVariant,
-      genotypePhenotype,
-      genotypeDrugRecommendation)
 }

@@ -62,72 +62,9 @@ object Reports {
     * auto_increment ids used as duplicate keys) in the frame's full column
     * ordering — total over every column, so the assignment is
     * deterministic; computed once per report build via [[sequentialId]].
-    *
-    * Reference tables are driver-resident literals (LocalRelation), and
-    * running THEIR id assignment distributed costs a RangePartitioner
-    * sample job + a zipWithIndex partition-count job + an RDD round trip
-    * per report build (guide §1.2/§5 — action churn, not data work). When
-    * the optimized plan is already a bounded LocalRelation of atomic
-    * types, sort + index on the driver with the identical ordering
-    * semantics (unsigned UTF-8 bytes for strings = Spark's UTF8String
-    * order; natural numeric order, NaN greatest, -0.0 = 0.0; nulls
-    * first); anything else — stage frames above all — keeps the
-    * scale-safe distributed path.
     */
   private def withId(df: DataFrame): DataFrame =
-    localWithId(df).getOrElse(
-      sequentialId(df, df.columns.map(c => col(c).asc_nulls_first).toSeq, "id"))
-
-  private val localWithIdMaxRows = 100000
-
-  private[report] def localWithId(df: DataFrame): Option[DataFrame] = {
-    import org.apache.spark.sql.types._
-    val local = df.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-    val supported = df.schema.fields.forall(_.dataType match {
-      case StringType | LongType | IntegerType | ShortType | ByteType |
-          BooleanType | DoubleType | FloatType => true
-      case _ => false
-    })
-    if (!local || !supported) return None
-    val rows = df.collect() // LocalTableScan: returns driver rows, no job
-    if (rows.length > localWithIdMaxRows) return None
-    def cmpValue(a: Any, b: Any): Int = (a, b) match {
-      case (null, null) => 0
-      case (null, _) => -1 // nulls first
-      case (_, null) => 1
-      case (x: String, y: String) =>
-        java.util.Arrays.compareUnsigned(
-          x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case (x: java.lang.Long, y: java.lang.Long) => java.lang.Long.compare(x, y)
-      case (x: java.lang.Integer, y: java.lang.Integer) => Integer.compare(x, y)
-      case (x: java.lang.Short, y: java.lang.Short) => java.lang.Short.compare(x, y)
-      case (x: java.lang.Byte, y: java.lang.Byte) => java.lang.Byte.compare(x, y)
-      case (x: java.lang.Boolean, y: java.lang.Boolean) =>
-        java.lang.Boolean.compare(x, y)
-      case (x: java.lang.Double, y: java.lang.Double) =>
-        java.lang.Double.compare(x + 0.0, y + 0.0) // -0.0 == 0.0, NaN last
-      case (x: java.lang.Float, y: java.lang.Float) =>
-        java.lang.Float.compare(x + 0.0f, y + 0.0f)
-      case _ => throw new IllegalStateException("unsupported local sort type")
-    }
-    val n = df.columns.length
-    val sorted = rows.sortWith { (r1, r2) =>
-      var i = 0
-      var c = 0
-      while (i < n && c == 0) { c = cmpValue(r1.get(i), r2.get(i)); i += 1 }
-      c < 0
-    }
-    val withIds: Seq[org.apache.spark.sql.Row] = sorted.zipWithIndex.map {
-      case (r, i) => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1L))
-    }.toSeq
-    val schema = StructType(
-      df.schema.fields :+ StructField("id", LongType, nullable = false))
-    Some(df.sparkSession.createDataFrame(
-      new java.util.ArrayList(scala.jdk.CollectionConverters
-        .SeqHasAsJava(withIds).asJava), schema))
-  }
+    sequentialId(df, df.columns.map(c => col(c).asc_nulls_first).toSeq, "id")
 
   private def usingOn(left: Seq[(String, String)], table: String,
       cols: Seq[String]): Column = CondensedJoin.usingOn(left, table, cols)
@@ -147,6 +84,50 @@ object Reports {
     */
   private def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 
+  /** A drug report: `head` plus the tail both drug reports share
+    * (`pipeline/Report.groovy:54-114`, `:119-176`): each genotype (`jpg`) → its haplotype calls (`jpgh`, on
+    * either haplotype of the pair) → their reference variants (`ghv`) → the
+    * patient's variants at those alleles (`jpv`). `head` holds the
+    * report-specific tables up to `jpg`; the tail's tables, columns, joins
+    * and duplicate keys are appended to it.
+    */
+  private def drugReport(
+      stages: Map[String, DataFrame],
+      refs: ReferenceTables,
+      headTables: Map[String, DataFrame],
+      head: Spec): DataFrame = {
+    val tables = headTables ++ Map(
+      "jpgh" -> pin(stages("geneHaplotype")),
+      "ghv" -> refs.geneHaplotypeVariant,
+      "jpv" -> pin(stages("variant")))
+    val spec = head.copy(
+      select = head.select ++ Seq(
+        "jpgh" -> Seq("haplotype_name"),
+        "jpv" -> Seq("snp_id", "allele")),
+      joins = head.joins ++ Seq(
+        Join("jpgh", "left", _ =>
+          col2("jpgh", "job_id") === col2("jpg", "job_id") &&
+            col2("jpgh", "patient_id") === col2("jpg", "patient_id") &&
+            col2("jpgh", "gene_name") === col2("jpg", "gene_name") &&
+            col2("jpgh", "het_combo") === col2("jpg", "het_combo") &&
+            (col2("jpgh", "haplotype_name") === col2("jpg", "haplotype_name1") ||
+              col2("jpgh", "haplotype_name") === col2("jpg", "haplotype_name2"))),
+        Join("ghv", "left", _ =>
+          col2("ghv", "gene_name") === col2("jpgh", "gene_name") &&
+            col2("ghv", "haplotype_name") === col2("jpgh", "haplotype_name")),
+        Join("jpv", "left", _ =>
+          col2("jpv", "patient_id") === col2("jpgh", "patient_id") &&
+            col2("jpv", "job_id") === col2("jpgh", "job_id") &&
+            col2("jpv", "snp_id") === col2("ghv", "snp_id") &&
+            col2("jpv", "allele") === col2("ghv", "allele"))),
+      duplicateKey = head.duplicateKey ++ Map(
+        "jpgh" -> Seq(Own("job_id"), Own("patient_id"), Own("gene_name"), Own("haplotype_name")),
+        "jpv" -> Seq(Own("job_id"), Own("patient_id"),
+          Foreign("jpgh", "gene_name"), Foreign("jpgh", "haplotype_name"),
+          Own("allele"), Own("snp_id"))))
+    renameFriendly(condensed(spec, tables))
+  }
+
   /** Phenotype-path drug recommendation report
     * (`pipeline/Report.groovy:54-114`): recommendation → its drug details →
     * the phenotypes that caused it → the genotype behind each phenotype →
@@ -156,62 +137,34 @@ object Reports {
       spark: SparkSession,
       stages: Map[String, DataFrame],
       refs: ReferenceTables,
-      jobId: Long): DataFrame = {
-    val jppdr = pin(stages("phenotypeDrugRecommendation")
-      .filter(col("job_id") === jobId))
-    val tables: Map[String, DataFrame] = Map(
-      "jppdr" -> jppdr,
-      "dr" -> withId(refs.drugRecommendation.drop("id")),
-      "gpdr" -> refs.genePhenotypeDrugRecommendation,
-      "jpgp" -> withId(pin(stages("genePhenotype"))),
-      "gp" -> refs.genotypePhenotype,
-      "jpg" -> pin(stages("genotype")),
-      "jpgh" -> pin(stages("geneHaplotype")),
-      "ghv" -> refs.geneHaplotypeVariant,
-      "jpv" -> pin(stages("variant")))
-
-    val spec = Spec(
-      select = Seq(
-        "jppdr" -> Seq("patient_id", "drug_recommendation_id", "het_combo", "het_combos"),
-        "dr" -> Seq("drug_name", "recommendation"),
-        "jpgp" -> Seq("gene_name", "phenotype_name"),
-        "jpg" -> Seq("haplotype_name1", "haplotype_name2"),
-        "jpgh" -> Seq("haplotype_name"),
-        "jpv" -> Seq("snp_id", "allele")),
-      root = "jppdr",
-      joins = Seq(
-        Join("dr", "left", _ => col2("jppdr", "drug_recommendation_id") === col2("dr", "id")),
-        Join("gpdr", "left", have => usingOn(have, "gpdr", Seq("drug_recommendation_id"))),
-        Join("jpgp", "left", have => usingOn(have, "jpgp",
-          Seq("job_id", "patient_id", "gene_name", "phenotype_name", "het_combo"))),
-        Join("gp", "left", have => usingOn(have, "gp", Seq("gene_name", "phenotype_name"))),
-        Join("jpg", "left", have => usingOn(have, "jpg",
-          Seq("job_id", "patient_id", "haplotype_name1", "haplotype_name2", "het_combo"))),
-        Join("jpgh", "left", _ =>
-          col2("jpgh", "job_id") === col2("jpg", "job_id") &&
-            col2("jpgh", "patient_id") === col2("jpg", "patient_id") &&
-            col2("jpgh", "gene_name") === col2("jpg", "gene_name") &&
-            col2("jpgh", "het_combo") === col2("jpg", "het_combo") &&
-            (col2("jpgh", "haplotype_name") === col2("jpg", "haplotype_name1") ||
-              col2("jpgh", "haplotype_name") === col2("jpg", "haplotype_name2"))),
-        Join("ghv", "left", _ =>
-          col2("ghv", "gene_name") === col2("jpgh", "gene_name") &&
-            col2("ghv", "haplotype_name") === col2("jpgh", "haplotype_name")),
-        Join("jpv", "left", _ =>
-          col2("jpv", "patient_id") === col2("jpgh", "patient_id") &&
-            col2("jpv", "job_id") === col2("jpgh", "job_id") &&
-            col2("jpv", "snp_id") === col2("ghv", "snp_id") &&
-            col2("jpv", "allele") === col2("ghv", "allele"))),
-      duplicateKey = Map(
-        "dr" -> Seq(Own("id"), Foreign("jppdr", "job_id"), Foreign("jppdr", "patient_id")),
-        "jpgp" -> Seq(Own("id"), Foreign("dr", "id")),
-        "jpgh" -> Seq(Own("job_id"), Own("patient_id"), Own("gene_name"), Own("haplotype_name")),
-        "jpv" -> Seq(Own("job_id"), Own("patient_id"),
-          Foreign("jpgh", "gene_name"), Foreign("jpgh", "haplotype_name"),
-          Own("allele"), Own("snp_id"))))
-
-    renameFriendly(condensed(spec, tables))
-  }
+      jobId: Long): DataFrame =
+    drugReport(stages, refs,
+      headTables = Map(
+        "jppdr" -> pin(stages("phenotypeDrugRecommendation")
+          .filter(col("job_id") === jobId)),
+        "dr" -> refs.drugRecommendation,
+        "gpdr" -> refs.genePhenotypeDrugRecommendation,
+        "jpgp" -> withId(pin(stages("genePhenotype"))),
+        "gp" -> refs.genotypePhenotype,
+        "jpg" -> pin(stages("genotype"))),
+      head = Spec(
+        select = Seq(
+          "jppdr" -> Seq("patient_id", "drug_recommendation_id", "het_combo", "het_combos"),
+          "dr" -> Seq("drug_name", "recommendation"),
+          "jpgp" -> Seq("gene_name", "phenotype_name"),
+          "jpg" -> Seq("haplotype_name1", "haplotype_name2")),
+        root = "jppdr",
+        joins = Seq(
+          Join("dr", "left", _ => col2("jppdr", "drug_recommendation_id") === col2("dr", "id")),
+          Join("gpdr", "left", have => usingOn(have, "gpdr", Seq("drug_recommendation_id"))),
+          Join("jpgp", "left", have => usingOn(have, "jpgp",
+            Seq("job_id", "patient_id", "gene_name", "phenotype_name", "het_combo"))),
+          Join("gp", "left", have => usingOn(have, "gp", Seq("gene_name", "phenotype_name"))),
+          Join("jpg", "left", have => usingOn(have, "jpg",
+            Seq("job_id", "patient_id", "haplotype_name1", "haplotype_name2", "het_combo")))),
+        duplicateKey = Map(
+          "dr" -> Seq(Own("id"), Foreign("jppdr", "job_id"), Foreign("jppdr", "patient_id")),
+          "jpgp" -> Seq(Own("id"), Foreign("dr", "id")))))
 
   /** Genotype-path drug recommendation report
     * (`pipeline/Report.groovy:119-176`).
@@ -220,56 +173,28 @@ object Reports {
       spark: SparkSession,
       stages: Map[String, DataFrame],
       refs: ReferenceTables,
-      jobId: Long): DataFrame = {
-    val jpgdr = pin(stages("genotypeDrugRecommendation")
-      .filter(col("job_id") === jobId))
-    val tables: Map[String, DataFrame] = Map(
-      "jpgdr" -> jpgdr,
-      "dr" -> withId(refs.drugRecommendation.drop("id")),
-      "gdr" -> refs.genotypeDrugRecommendation,
-      "jpg" -> withId(pin(stages("genotype"))),
-      "jpgh" -> pin(stages("geneHaplotype")),
-      "ghv" -> refs.geneHaplotypeVariant,
-      "jpv" -> pin(stages("variant")))
-
-    val spec = Spec(
-      select = Seq(
-        "jpgdr" -> Seq("patient_id", "drug_recommendation_id", "het_combo", "het_combos"),
-        "dr" -> Seq("drug_name", "recommendation"),
-        "jpg" -> Seq("gene_name", "haplotype_name1", "haplotype_name2"),
-        "jpgh" -> Seq("haplotype_name"),
-        "jpv" -> Seq("snp_id", "allele")),
-      root = "jpgdr",
-      joins = Seq(
-        Join("dr", "left", _ => col2("jpgdr", "drug_recommendation_id") === col2("dr", "id")),
-        Join("gdr", "left", have => usingOn(have, "gdr", Seq("drug_recommendation_id"))),
-        Join("jpg", "left", have => usingOn(have, "jpg",
-          Seq("job_id", "patient_id", "haplotype_name1", "haplotype_name2", "het_combo"))),
-        Join("jpgh", "left", _ =>
-          col2("jpgh", "job_id") === col2("jpg", "job_id") &&
-            col2("jpgh", "patient_id") === col2("jpg", "patient_id") &&
-            col2("jpgh", "gene_name") === col2("jpg", "gene_name") &&
-            col2("jpgh", "het_combo") === col2("jpg", "het_combo") &&
-            (col2("jpgh", "haplotype_name") === col2("jpg", "haplotype_name1") ||
-              col2("jpgh", "haplotype_name") === col2("jpg", "haplotype_name2"))),
-        Join("ghv", "left", _ =>
-          col2("ghv", "gene_name") === col2("jpgh", "gene_name") &&
-            col2("ghv", "haplotype_name") === col2("jpgh", "haplotype_name")),
-        Join("jpv", "left", _ =>
-          col2("jpv", "patient_id") === col2("jpgh", "patient_id") &&
-            col2("jpv", "job_id") === col2("jpgh", "job_id") &&
-            col2("jpv", "snp_id") === col2("ghv", "snp_id") &&
-            col2("jpv", "allele") === col2("ghv", "allele"))),
-      duplicateKey = Map(
-        "dr" -> Seq(Own("id"), Foreign("jpgdr", "job_id"), Foreign("jpgdr", "patient_id")),
-        "jpg" -> Seq(Own("id"), Foreign("dr", "id")),
-        "jpgh" -> Seq(Own("job_id"), Own("patient_id"), Own("gene_name"), Own("haplotype_name")),
-        "jpv" -> Seq(Own("job_id"), Own("patient_id"),
-          Foreign("jpgh", "gene_name"), Foreign("jpgh", "haplotype_name"),
-          Own("allele"), Own("snp_id"))))
-
-    renameFriendly(condensed(spec, tables))
-  }
+      jobId: Long): DataFrame =
+    drugReport(stages, refs,
+      headTables = Map(
+        "jpgdr" -> pin(stages("genotypeDrugRecommendation")
+          .filter(col("job_id") === jobId)),
+        "dr" -> refs.drugRecommendation,
+        "gdr" -> refs.genotypeDrugRecommendation,
+        "jpg" -> withId(pin(stages("genotype")))),
+      head = Spec(
+        select = Seq(
+          "jpgdr" -> Seq("patient_id", "drug_recommendation_id", "het_combo", "het_combos"),
+          "dr" -> Seq("drug_name", "recommendation"),
+          "jpg" -> Seq("gene_name", "haplotype_name1", "haplotype_name2")),
+        root = "jpgdr",
+        joins = Seq(
+          Join("dr", "left", _ => col2("jpgdr", "drug_recommendation_id") === col2("dr", "id")),
+          Join("gdr", "left", have => usingOn(have, "gdr", Seq("drug_recommendation_id"))),
+          Join("jpg", "left", have => usingOn(have, "jpg",
+            Seq("job_id", "patient_id", "haplotype_name1", "haplotype_name2", "het_combo")))),
+        duplicateKey = Map(
+          "dr" -> Seq(Own("id"), Foreign("jpgdr", "job_id"), Foreign("jpgdr", "patient_id")),
+          "jpg" -> Seq(Own("id"), Foreign("dr", "id")))))
 
   private def renameFriendly(df: DataFrame): DataFrame = {
     // Later duplicate friendly names (e.g. two HAPLOTYPE columns) get
@@ -301,51 +226,27 @@ object Reports {
     val variantPinned = pin(stages("variant").filter(col("job_id") === jobId))
     val genes = novel.select("gene_name").distinct()
       .orderBy("gene_name").as[String].collect()
-    // Pivot-column inference (`pivot(col)` with no values) runs an extra
-    // distinct+sort job over the UNION frame — whose lineage embeds the
-    // whole pipeline — per gene. The pivot columns are knowable up front:
-    // they are exactly the gene's snp set (the `known` half carries every
-    // (haplotype, snp) pair of the gene, and patient rows are filtered to
-    // the same `gene_snp` set), in inferred-pivot order (ascending = the
-    // same unsigned-UTF-8 string sort). When the reference frame is a
-    // driver-resident literal, read that set off the driver for free;
-    // otherwise keep the inferred pivot (one small job at refs scale).
-    val localSnps: Option[Map[String, Seq[String]]] = {
-      val ghv = refs.geneHaplotypeVariant
-      if (ghv.queryExecution.optimizedPlan
-          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) {
-        val gI = ghv.schema.fieldIndex("gene_name")
-        val sI = ghv.schema.fieldIndex("snp_id")
-        Some(ghv.collect() // LocalTableScan: driver rows, no job
-          .map(r => (r.getString(gI), r.getString(sI))).distinct
-          .groupBy(_._1)
-          .map { case (g, ps) =>
-            g -> ps.map(_._2).sortWith((a, b) =>
-              java.util.Arrays.compareUnsigned(
-                a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-                b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0).toSeq
-          })
-      } else None
-    }
+    // Explicit pivot values: inferring them would run a distinct+sort job
+    // over the union frame (whose lineage embeds the whole pipeline) per
+    // gene. The gene's SNP set is exactly the pivot's column set — the
+    // `known` half carries every (haplotype, snp) pair of the gene and
+    // patient rows are filtered to the same set.
     genes.map { gene =>
+      val snps = refs.snpsByGene.getOrElse(gene, Nil)
       val known = refs.geneHaplotypeVariant
         .filter(col("gene_name") === gene)
         .select(col("haplotype_name").as("row_name"), col("snp_id"), col("allele"))
       val patientRows = novel.filter(col("gene_name") === gene)
         .join(variantPinned,
           Seq("job_id", "patient_id", "physical_chromosome"))
-        .join(refs.geneSnp.filter(col("gene_name") === gene).select("snp_id"), Seq("snp_id"))
+        .filter(col("snp_id").isin(snps: _*))
         .select(
           concat(lit("Sample "), col("patient_id"), lit(", chr"),
             col("physical_chromosome"), lit(" ("), col("het_combo"), lit("/"),
             col("het_combos"), lit(")")).as("row_name"),
           col("snp_id"), col("allele"))
-      val grouped = known.unionByName(patientRows).groupBy("row_name")
-      val pivoted = localSnps.flatMap(_.get(gene)) match {
-        case Some(snps) => grouped.pivot("snp_id", snps)
-        case None => grouped.pivot("snp_id")
-      }
-      gene -> pivoted.agg(first("allele")).orderBy("row_name")
+      gene -> known.unionByName(patientRows).groupBy("row_name")
+        .pivot("snp_id", snps).agg(first("allele")).orderBy("row_name")
     }.toMap
   }
 }

@@ -16,12 +16,15 @@ class ReportsSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  def runFixtureJob(): (Map[String, DataFrame], ReferenceTables) = {
+  /** The report fixture's reference tables. Each drug `(id, name)` gets one
+    * phenotype rule and one genotype rule that the fixture patient meets. */
+  def fixtureRefs(drugs: Seq[(Long, String)] = Seq((1L, "drugA"))): ReferenceTables = {
     import spark.implicits._
-    val refs = ReferenceTables(
-      drugRecommendation = Seq((1L, "drugA", "imp", "take drugA", "strong", "egs"))
+    ReferenceTables(
+      drugRecommendation = drugs.map { case (id, name) =>
+        (id, name, "imp", s"take $name", "strong", "egs") }
         .toDF("id", "drug_name", "implications", "recommendation", "classification", "diplotype_egs"),
-      genePhenotypeDrugRecommendation = Seq(("g1", "homozygote normal", 1L))
+      genePhenotypeDrugRecommendation = drugs.map(d => ("g1", "homozygote normal", d._1))
         .toDF("gene_name", "phenotype_name", "drug_recommendation_id"),
       geneHaplotypeVariant = Seq(
         ("g1", "*1", "rs1", "A"), ("g1", "*1", "rs2", "G"),
@@ -29,8 +32,13 @@ class ReportsSpec extends AnyFunSuite {
         .toDF("gene_name", "haplotype_name", "snp_id", "allele"),
       genotypePhenotype = Seq(("g1", "*1", "*1", "homozygote normal"))
         .toDF("gene_name", "haplotype_name1", "haplotype_name2", "phenotype_name"),
-      genotypeDrugRecommendation = Seq(("g1", "*1", "*1", 1L))
+      genotypeDrugRecommendation = drugs.map(d => ("g1", "*1", "*1", d._1))
         .toDF("gene_name", "haplotype_name1", "haplotype_name2", "drug_recommendation_id"))
+  }
+
+  def runFixtureJob(refs: ReferenceTables = fixtureRefs())
+      : (Map[String, DataFrame], ReferenceTables) = {
+    import spark.implicits._
     val variants = Seq(
       ("patient1", "A", "rs1", "A", "hom"),
       ("patient1", "A", "rs2", "G", "hom"),
@@ -39,6 +47,19 @@ class ReportsSpec extends AnyFunSuite {
       .toDF("patient_id", "physical_chromosome", "snp_id", "allele", "zygosity")
     (Pipeline.runJob(spark, refs, 1L, variants = Some(variants)), refs)
   }
+
+  /** Job 2: one patient with an allele no haplotype has at rs1 (novel). */
+  def runNovelJob(refs: ReferenceTables): Map[String, DataFrame] = {
+    import spark.implicits._
+    val variants = Seq(
+      ("patientN", "A", "rs1", "T", "hom"),
+      ("patientN", "B", "rs1", "T", "hom"))
+      .toDF("patient_id", "physical_chromosome", "snp_id", "allele", "zygosity")
+    Pipeline.runJob(spark, refs, 2L, variants = Some(variants))
+  }
+
+  /** Drug ids deliberately NOT in drug-name order. */
+  private val unsortedDrugs = Seq((1L, "zeta"), (2L, "alpha"))
 
   test("phenotype drug recommendation report: friendly columns + condensed rows") {
     val (stages, refs) = runFixtureJob()
@@ -82,19 +103,56 @@ class ReportsSpec extends AnyFunSuite {
   }
 
   test("novel haplotype matrix report") {
-    import spark.implicits._
     val (_, refs) = runFixtureJob()
-    // Job with a novel call: unseen allele at rs1
-    val variants = Seq(
-      ("patientN", "A", "rs1", "T", "hom"),
-      ("patientN", "B", "rs1", "T", "hom"))
-      .toDF("patient_id", "physical_chromosome", "snp_id", "allele", "zygosity")
-    val stages = Pipeline.runJob(spark, refs, 2L, variants = Some(variants))
+    val stages = runNovelJob(refs)
     val matrices = Reports.novelHaplotypeReport(spark, stages, refs, 2L)
     assert(matrices.keySet == Set("g1"))
     val m = matrices("g1").collect().map(r => r.getString(0)).toSet
     assert(m.contains("*1") && m.contains("*2"))
     assert(m.exists(_.startsWith("Sample patientN, chrA")))
     assert(m.exists(_.startsWith("Sample patientN, chrB")))
+  }
+
+  test("drug reports join each recommendation to the drug with its own id") {
+    val (stages, refs) = runFixtureJob(fixtureRefs(unsortedDrugs))
+    Seq(
+      Reports.phenotypeDrugRecommendationReport(spark, stages, refs, 1L),
+      Reports.genotypeDrugRecommendationReport(spark, stages, refs, 1L)
+    ).foreach { report =>
+      val shown = report.collect().filter(r => !r.isNullAt(r.fieldIndex("DRUG")))
+        .map(r => (r.getAs[Long]("DRUG_RECOMMENDATION_ID"), r.getAs[String]("DRUG")))
+        .toSet
+      assert(shown == unsortedDrugs.toSet)
+    }
+  }
+
+  test("parquet-backed refs give the same stage tables and reports as literal refs") {
+    val literal = fixtureRefs(unsortedDrugs)
+    val dir = graft.TestScratch.dir("graft-report-refs")
+    def onDisk(name: String, df: DataFrame): DataFrame = {
+      df.write.parquet(s"$dir/$name")
+      spark.read.parquet(s"$dir/$name")
+    }
+    val parquet = ReferenceTables(
+      onDisk("dr", literal.drugRecommendation),
+      onDisk("gpdr", literal.genePhenotypeDrugRecommendation),
+      onDisk("ghv", literal.geneHaplotypeVariant),
+      onDisk("gp", literal.genotypePhenotype),
+      onDisk("gdr", literal.genotypeDrugRecommendation))
+    def rows(df: DataFrame): Seq[String] = df.columns.toSeq ++ df.collect().map(_.toString)
+    def outputs(refs: ReferenceTables) = {
+      val (stages, _) = runFixtureJob(refs)
+      val novelStages = runNovelJob(refs)
+      val stageRows = (stages.toSeq ++ novelStages.toSeq.map(kv => (kv._1 + "@2", kv._2)))
+        .sortBy(_._1).map { case (k, df) => k -> rows(df).sorted }
+      (stageRows,
+        rows(Reports.phenotypeDrugRecommendationReport(spark, stages, refs, 1L)),
+        rows(Reports.genotypeDrugRecommendationReport(spark, stages, refs, 1L)),
+        Reports.novelHaplotypeReport(spark, novelStages, refs, 2L).toSeq.sortBy(_._1)
+          .map { case (g, df) => g -> rows(df) })
+    }
+    val expected = outputs(literal)
+    assert(expected._2.size > 1 && expected._3.size > 1 && expected._4.nonEmpty)
+    assert(outputs(parquet) == expected)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.multimodal.Multimodal
-import graft.ops.{Curation, Dedup, GroupedRowsToColumns, Retrieval, RowOps, SetContainment, Similarity, Skew, Upsert, Web}
+import graft.ops.{Checkpoints, Curation, Dedup, GroupedRowsToColumns, Retrieval, RowOps, SetContainment, Similarity, Skew, Upsert, Web}
 import graft.pipeline.{Pipeline, ReferenceTables}
 import graft.streaming.EventsStream
 
@@ -144,13 +144,11 @@ object SparkEntry {
   /** ONE fixture pipeline run feeds all ten hom+het fixture queries
     * (q08/q09/q26-q29/q35-q37): the hom and het patients share the reference
     * tables, so they run as one job and each query filters to its patients.
-    * Round-17: the map memoizes the LAZY stage frames (with runJob's
-    * per-stage persists), not eagerly collected local relations — the old
-    * collect-every-stage existed to survive the bench's clearCache sweep,
-    * and since [[invalidateTransientState]] now clears this memo between
-    * timed queries (VERDICT r16 #2), eager collection would make every
-    * fixture query pay ALL nine stages; lazily, a query executes only its
-    * own stage's lineage.
+    * The map memoizes the LAZY stage frames (runJob's per-stage pins), not
+    * eagerly collected local relations: [[invalidateTransientState]] clears
+    * this memo between timed queries (VERDICT r16 #2), so eager collection
+    * would make every fixture query pay ALL nine stages; lazily, a query
+    * executes only its own stage's lineage.
     */
   private val fixtureCache =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, Map[String, DataFrame]]()
@@ -476,10 +474,10 @@ object SparkEntry {
       val q = emb.filter(col("vec_id") === 0)
         .select(col("embedding")).collect()(0)
         .getSeq[Float](0)
-      // Persisted: the assignment feeds the probe (IVF index build is a
+      // Pinned: the assignment feeds the probe (IVF index build is a
       // one-time cost amortized over queries).
-      val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding",
-        nlist = 32).persist()
+      val assigned = Checkpoints.pin(
+        Similarity.ivfAssign(emb, "vec_id", "embedding", nlist = 32))
       val thr = Similarity.sampleThreshold(32L, emb.count())
       val centroids = emb
         .filter(Similarity.hashSampleByThreshold(col("vec_id"), thr))
@@ -551,8 +549,8 @@ object SparkEntry {
     // routing + probe + dedupe + ranking exactly.
     "q72_ivf_knn_join" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding",
-        nlist = 32).persist()
+      val assigned = Checkpoints.pin(
+        Similarity.ivfAssign(emb, "vec_id", "embedding", nlist = 32))
       val thr = Similarity.sampleThreshold(32L, emb.count())
       val centroids = emb
         .filter(Similarity.hashSampleByThreshold(col("vec_id"), thr))
@@ -625,28 +623,26 @@ object SparkEntry {
     "q77_training_mix" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       // Spread an under-split corpus BEFORE the signal projection and pin
-      // the spread with a persist of the SIGNAL frame. A bare spread fails
-      // here: predicate pushdown substitutes the `keep` alias and drags the
-      // heavy TextStats/RepetitionStats expressions through the inserted
-      // exchange back onto the single map task. A persisted frame's build
+      // the SIGNAL frame. A bare spread fails here: predicate pushdown
+      // substitutes the `keep` alias and drags the heavy
+      // TextStats/RepetitionStats expressions through the inserted
+      // exchange back onto the single map task. A pinned frame's build
       // plan ENDS at the projection — nothing can push through it — so the
       // signals evaluate on the exchange's reduce side across the
       // session's cores.
-      val sigs = Curation.qualityFilter(
+      val sigs = Checkpoints.pin(Curation.qualityFilter(
           Skew.spreadIfUnderSplit(docs, col("doc_id")), "doc_id", "text",
           minStopwordRatio = 0.0, maxDupSegmentFrac = 0.95, separator = " ")
-        .select("doc_id", "n_tokens", "keep")
-        .persist()
+        .select("doc_id", "n_tokens", "keep"))
       // Stage barrier (the q63 pattern): sampleToTokenBudget references
       // its input twice (stratum totals + selection join), so without
-      // this persist the kept-join re-executes per reference. The
-      // persisted projection is ids+counts — three narrow columns, cheap
-      // at any corpus scale.
-      val kept = sigs
+      // this pin the kept-join re-executes per reference. The pinned
+      // projection is ids+counts — three narrow columns, cheap at any
+      // corpus scale.
+      val kept = Checkpoints.pin(sigs
         .filter(col("keep"))
         .join(docs.select("doc_id", "source"), "doc_id")
-        .select("doc_id", "source", "n_tokens")
-        .persist()
+        .select("doc_id", "source", "n_tokens"))
       val mixed = graft.ops.Sampling.sampleToTokenBudget(kept, "doc_id",
         "source", "n_tokens", budget = 800L,
         weights = Seq("src0" -> 0.25, "src1" -> 0.25, "src2" -> 0.25,
@@ -1747,13 +1743,13 @@ object SparkEntry {
         .unionByName(docs.filter(col("doc_id") % 5 === 0)
           .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
       // The diff output feeds BOTH sides of the banding composition
-      // (semi-join + anti-join on the new snapshot) — persist the small
+      // (semi-join + anti-join on the new snapshot) — pin the small
       // touched-id frame so the md5 snapshot diff computes once, not
-      // once per side (guide §3.3; released by the caller's sweep).
-      val touched = Curation.snapshotDiff(old, nw, "doc_id", "text")
+      // once per side (guide §3.3).
+      val touched = Checkpoints.pin(
+        Curation.snapshotDiff(old, nw, "doc_id", "text")
         .filter(col("status").isin("added", "changed"))
-        .select(col("doc_id"))
-        .persist()
+        .select(col("doc_id")))
       Dedup.crossCorpusNearDuplicates(
           nw.join(touched, Seq("doc_id")), "doc_id",
           nw.join(touched, Seq("doc_id"), "left_anti"), "doc_id",
@@ -1772,15 +1768,12 @@ object SparkEntry {
       // corpus-derived query frame, which every operator's bounded-check/
       // vocab/broadcast action re-executes). Materialize the join once —
       // guide §3.3/§5: when a composed query re-executes a join per
-      // action, persist the intermediate instead of paying the join 4×.
-      // Round-17: a lazy localCheckpoint instead of persist — same
-      // compute-once blocks, but downstream plans see a LogicalRDD leaf
-      // instead of re-analyzing the join subtree per action (§3.3
-      // "materialising an intermediate truncates the plan"). Same rows,
-      // same hashes; blocks released by the caller's storage sweep.
-      val corpus = t(s, dir, "documents")
-        .join(t(s, dir, "embeddings"), col("doc_id") === col("vec_id"))
-        .localCheckpoint(false)
+      // action, pin the intermediate instead of paying the join 4×. The
+      // pin is a plan leaf, so downstream plans do not re-analyze the
+      // join subtree per action (§3.3 "materialising an intermediate
+      // truncates the plan").
+      val corpus = Checkpoints.pin(t(s, dir, "documents")
+        .join(t(s, dir, "embeddings"), col("doc_id") === col("vec_id")))
       val qdocs = corpus.filter(col("doc_id") < 4)
       val lex = graft.ops.Retrieval.bm25TopK(
         corpus.select("doc_id", "text"), "doc_id", "text",

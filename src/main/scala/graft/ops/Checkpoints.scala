@@ -2,32 +2,34 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.graftbridge.PinBridge
 
-/** Lineage truncation for iterative operators (label-propagation closure,
-  * Lloyd refinement, BPE merge training), with explicit storage release.
+/** The one way a reused or barrier frame is held. Three verbs:
   *
-  * Two concerns every driver-side iteration loop has to handle:
-  *
-  *  1. '''Plan depth''': each iteration references the previous frame, so
-  *     without truncation the logical plan grows per iteration — planning
-  *     cost (and eventually driver memory just holding the plan) becomes
-  *     the bottleneck, not data. [[truncate]] materializes the frame and
-  *     replaces its plan with a leaf.
-  *  2. '''Storage accumulation''': truncation parks the materialized rows
-  *     in executor storage, and `spark.catalog.clearCache` does NOT track
-  *     them — each superseded iteration would otherwise pin its blocks
-  *     until the driver happens to GC the RDD object. For a bounded loop
-  *     that's waste; for a long closure over a skewed edge list it's an
-  *     executor OOM. [[release]] drops a superseded iteration's blocks
-  *     deterministically.
-  *
-  * [[truncate]] picks the durability class from the session: when a
-  * reliable checkpoint dir is configured (`sc.setCheckpointDir` — the
-  * cluster posture, where executor loss must not kill a half-finished
-  * index build), it uses `checkpoint()`; otherwise `localCheckpoint()`
-  * (executor-storage, the right class for single-node/offline builds).
+  *  - [[pin]] — reuse or barrier, KEEPS lineage. The frame becomes a lazy
+  *    columnar-cache leaf: computed once by the first action that reads
+  *    it, carrying real post-materialization statistics (broadcast
+  *    decisions see its true size), and an optimizer fence (nothing is
+  *    inlined or pushed through it). Lost blocks recompute from lineage.
+  *    The leaf is not registered in the session's cache manager, so
+  *    Spark's context cleaner frees its blocks once the frame is
+  *    unreachable, without any release call.
+  *  - [[truncate]] — iterative loops, CUTS lineage. Each iteration's
+  *    plan references the previous frame; without a cut the plan (and
+  *    its planning cost) grows per iteration. The frame is materialized
+  *    eagerly and replaced by an RDD leaf: reliable (`checkpoint()`) when
+  *    the SparkContext has a checkpoint dir (the cluster posture, where
+  *    executor loss must not kill a half-finished build), otherwise
+  *    executor-storage (`localCheckpoint()`).
+  *  - [[release]] — drop a frame's storage now rather than at the next
+  *    GC: loops release each superseded iteration so in-flight storage
+  *    stays one frame deep.
   */
 private[graft] object Checkpoints {
+
+  /** Hold `df` for reuse as a lazy, recoverable, self-freeing leaf. */
+  def pin(df: DataFrame): DataFrame = PinBridge.pin(df)
 
   /** Materialize `df` and truncate its lineage to a leaf. Reliable
     * (checkpoint-dir) when the SparkContext has one set, local otherwise.
@@ -36,27 +38,22 @@ private[graft] object Checkpoints {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()
 
-  /** Release the storage behind a [[truncate]]d frame once a later
-    * iteration supersedes it. No-op for frames that are not checkpoint
-    * leaves. Block-manager storage is dropped for local checkpoints; for
-    * RELIABLE checkpoints the files are deleted too — Spark's context
-    * cleaner does NOT delete reliable checkpoint data under default
-    * config (`spark.cleaner.referenceTracking.cleanCheckpoints` is
-    * false), so without this a thousand-iteration loop would fill the
-    * checkpoint dir with one full frame copy per iteration.
+  /** Release the storage behind a [[pin]]ned or [[truncate]]d frame. No-op
+    * for other frames.
     *
-    * CONTRACT: a released frame must never be referenced again. A
-    * checkpoint leaf has no lineage to recompute from — deleting its
-    * files/blocks makes any later action on it (or on a plan built over
-    * it) fail unrecoverably. Call sites therefore release a frame only
-    * after the frame that replaces it is materialized AND every plan
-    * still to be executed reads the replacement. The FINAL iteration's
-    * frame is intentionally not released here (its rows are the result);
-    * callers that fully consume a returned checkpointed frame may release
-    * it themselves to reclaim the last copy.
+    * A released pin stays usable (a later action recomputes it). A
+    * released truncation does not: it has no lineage, so call sites
+    * release it only after the frame that replaces it is materialized AND
+    * every plan still to be executed reads the replacement. For RELIABLE
+    * checkpoints the files are deleted too — Spark's context cleaner does
+    * not delete reliable checkpoint data under default config
+    * (`spark.cleaner.referenceTracking.cleanCheckpoints` is false), so
+    * without this a thousand-iteration loop would fill the checkpoint dir
+    * with one full frame copy per iteration.
     */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
+      case pinned: InMemoryRelation => pinned.cacheBuilder.clearCache(blocking = false)
       case lr: LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
         lr.rdd.getCheckpointFile.foreach { f =>

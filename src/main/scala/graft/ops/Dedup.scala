@@ -183,7 +183,7 @@ object Dedup {
     // Symmetrize with a single-scan explode, NOT a self-union: a union
     // references the pairs plan twice, and when pairs is an unmaterialized
     // near-dup pipeline (banded candidates + two verification joins) the
-    // whole pipeline executes once PER BRANCH — the internal persists make
+    // whole pipeline executes once PER BRANCH — the internal pins make
     // the second pass cheaper, not free. One scan, each row emitting both
     // directions, halves the dominant cost of every cluster-building
     // caller (q51/q73/q105/q113/q117/q120).
@@ -509,11 +509,11 @@ object Dedup {
       bands: Int = 4,
       shingleLen: Int = 3): DataFrame = {
     require(thresholds.nonEmpty, "lshQualityReport needs thresholds")
-    val sets = shingleSets(df, idCol, textCol, shingleLen).persist()
+    val sets = Checkpoints.pin(shingleSets(df, idCol, textCol, shingleLen))
     val sigs = sets.select(col(idCol), minHashOfShingles(col("sh"), numHashes).as("sig"))
-    // Referenced twice (tp join + count); persisted so the banded
-    // self-join prices once.
-    val cand = bandedCandidates(sigs, idCol, numHashes, bands).persist()
+    // Referenced twice (tp join + count); pinned so the banded self-join
+    // prices once.
+    val cand = Checkpoints.pin(bandedCandidates(sigs, idCol, numHashes, bands))
     val inv = sets.select(col(idCol).as("__id"), explode(col("sh")).as("__g"))
     val common = inv.as("a").join(inv.as("b"),
         col("a.__g") === col("b.__g") && col("a.__id") < col("b.__id"))
@@ -607,21 +607,21 @@ object Dedup {
 
   /** (id, band, band_sig) projection of a signature frame: each document
     * emits one row per band carrying that band's concatenated signature
-    * rows. The persist is a MATERIALIZATION BARRIER keeping the
-    * (expensive) signature expression from being inlined per band
-    * reference by CollapseProject — the historical barrier was a
-    * `repartition(p, id)`, but every caller reaches here with the shingle
-    * frame ALREADY id-partitioned (shingleSets' spread), so that barrier
-    * paid a second full-corpus exchange on the same key purely for its
-    * optimization-fence side effect (guide §2.4: remove shuffles the data
-    * layout already provides). The cache is narrow (id + signature) and
-    * follows the same caller-releases contract as the shingle-set persist.
+    * rows. Callers pass `sigs` PINNED: the pin is a MATERIALIZATION
+    * BARRIER keeping the (expensive) signature expression from being
+    * inlined per band reference by CollapseProject — the historical
+    * barrier was a `repartition(p, id)`, but every caller reaches here
+    * with the shingle frame ALREADY id-partitioned (shingleSets' spread),
+    * so that barrier paid a second full-corpus exchange on the same key
+    * purely for its optimization-fence side effect (guide §2.4: remove
+    * shuffles the data layout already provides). The pin is narrow
+    * (id + signature).
     */
   private def bandProjection(sigs: DataFrame, idCol: String,
       numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
-    sigs.persist().select(
+    sigs.select(
       col(idCol),
       posexplode(array((0 until bands).map { b =>
         concat_ws("|", slice(col("sig"), b * rows + 1, rows))
@@ -630,11 +630,11 @@ object Dedup {
 
   private def bandedCandidates(sigs: DataFrame, idCol: String,
       numHashes: Int, bands: Int, maxBucket: Long = 0L): DataFrame = {
-    // Persist the banded projection: self-join attribute deduplication
+    // Pin the banded projection: self-join attribute deduplication
     // defeats ReuseExchange, so without it the md5 signature pass runs
-    // once per join branch. Callers timing independent queries should
-    // clearCache between them.
-    val banded = bandProjection(sigs, idCol, numHashes, bands).persist()
+    // once per join branch.
+    val banded = Checkpoints.pin(
+      bandProjection(Checkpoints.pin(sigs), idCol, numHashes, bands))
     // Skew guard (same shape as Similarity.lshEmbeddingPairs): a band
     // bucket holding m documents emits m²/2 candidates — an exact-dup
     // mega-cluster (the classic corpus pathology) turns one bucket
@@ -678,16 +678,10 @@ object Dedup {
       bands: Int = 4,
       shingleLen: Int = 3,
       maxBucket: Long = 0L): DataFrame = {
-    // Shingle sets computed once and persisted: they feed the signature
+    // Shingle sets computed once and pinned: they feed the signature
     // pass and both verification joins, and self-join attribute dedup
-    // prevents exchange reuse across those branches. The cache is a
-    // dependency of the RETURNED lazy frame (the caller-releases
-    // contract shared with Similarity.ivfCellNearNeighbors and
-    // Curation's gram index): callers running independent queries
-    // clearCache between them — Bench/Verify's sweep does — and a
-    // long-lived shard-by-shard dedup service should release each
-    // call's caches once its pairs are consumed.
-    val sets = shingleSets(df, idCol, textCol, shingleLen).persist()
+    // prevents exchange reuse across those branches.
+    val sets = Checkpoints.pin(shingleSets(df, idCol, textCol, shingleLen))
     val sigs = sets
       .select(col(idCol), minHashOfShingles(col("sh"), numHashes).as("sig"))
     val candidates = bandedCandidates(sigs, idCol, numHashes, bands, maxBucket)
@@ -860,9 +854,11 @@ object Dedup {
         KeyedState.repairPartitions(spark, bandedDir)
         KeyedState.repairPartitions(spark, shinglesDir)
         KeyedState.repairFlat(spark, pairsDir)
-        val sets = shingleSets(batch, idCol, textCol, shingleLen).persist()
-        val sigs = sets.select(col(idCol), minHashOfShingles(col("sh"), numHashes).as("sig"))
-        val banded = bandProjection(sigs, idCol, numHashes, bands).persist()
+        // Every pin this batch makes is released at the end of the batch.
+        val sets = Checkpoints.pin(shingleSets(batch, idCol, textCol, shingleLen))
+        val sigs = Checkpoints.pin(
+          sets.select(col(idCol), minHashOfShingles(col("sh"), numHashes).as("sig")))
+        val banded = Checkpoints.pin(bandProjection(sigs, idCol, numHashes, bands))
         // Within-batch candidates: the batch's own band self-collisions.
         val within = banded.as("a").join(banded.as("b"),
             col("a.band") === col("b.band") &&
@@ -896,12 +892,12 @@ object Dedup {
         // The verifier needs shingle sets only for docs that actually
         // appear as candidates: batch docs come from `sets` (in memory);
         // prior docs from the id-bucketed shingle store, pruned to the
-        // buckets the candidate id_others hash into. Persist + bucket
+        // buckets the candidate id_others hash into. Pin + bucket
         // collect only when a store exists to prune (from the second
         // batch on) — candidates are consumed twice then and are small
         // by LSH construction.
         val hasShingles = exists(shinglesDir)
-        val cand = if (hasShingles) candRaw.persist() else candRaw
+        val cand = if (hasShingles) Checkpoints.pin(candRaw) else candRaw
         val shBuckets = if (hasShingles) touchedBuckets(
           cand.select(stateBucket(Seq("id_other"), nStateBuckets)))
         else Nil
@@ -933,7 +929,7 @@ object Dedup {
         // append below — the append's old pre-write isEmpty guard is
         // gone; emptiness is detected from the staged output), so it is
         // NOT checkpointed: the staged write computes the candidate +
-        // jaccard-verify joins once, directly over the persisted
+        // jaccard-verify joins once, directly over the pinned
         // sets/banded/cand frames. A duplicate-free batch stages one
         // 0-row schema file, which reads back as the empty pair set.
         // The three sink writes are mutually independent (pairs, band
@@ -972,7 +968,7 @@ object Dedup {
           // shuffle-partitions files; with it, one.
           try Upsert.applyBatchOnce(spark, s"$stateDir/_pairs_w", batchId) {
             KeyedState.appendFlatAtomic(verified, pairsDir, 1, batchId)
-          } finally if (hasShingles) cand.unpersist()
+          } finally Checkpoints.release(cand)
         // published bucket values per store — the compaction-candidate
         // lists (only a bucket that just gained a file can newly cross
         // the compaction threshold; sweeping ALL nStateBuckets dirs per
@@ -1002,7 +998,7 @@ object Dedup {
         // production path below is untouched.
         if (Failpoint.armed(spark, "minhash_mid_writes", batchId)) {
           bandedWrite(); shinglesWrite()
-          if (hasShingles) cand.unpersist()
+          Checkpoints.release(cand)
           Failpoint.hit(spark, "minhash_mid_writes", batchId)
         }
         pairsWrite() // sequential: materializes the sets/banded caches
@@ -1019,8 +1015,7 @@ object Dedup {
           pubBanded.get, compactAfterFiles)
         compactStateBuckets(spark, shinglesDir,
           pubShingles.get, compactAfterFiles)
-        sets.unpersist()
-        banded.unpersist()
+        Seq(sets, sigs, banded).foreach(Checkpoints.release)
         // Injected-crash point "minhash_post_writes" (test-only): every
         // state write landed with its marker, but the whole-batch marker
         // (written when this block returns) and the checkpoint commit
@@ -1077,13 +1072,13 @@ object Dedup {
       numHashes: Int = 8,
       bands: Int = 4,
       shingleLen: Int = 3): DataFrame = {
-    // Shingle sets persist because each feeds its signature pass AND the
-    // verification join; the two sides are distinct frames, so unlike the
-    // self-join path the candidate join itself needs no extra barrier.
-    val corpusSets = shingleSets(corpus, corpusIdCol, textCol, shingleLen).persist()
-    val refSets = shingleSets(reference, refIdCol, textCol, shingleLen).persist()
-    def sigsOf(sets: DataFrame, id: String): DataFrame =
-      sets.select(col(id), minHashOfShingles(col("sh"), numHashes).as("sig"))
+    // Shingle sets are pinned because each feeds its signature pass AND
+    // the verification join; the two sides are distinct frames, so unlike
+    // the self-join path the candidate join itself needs no extra barrier.
+    val corpusSets = Checkpoints.pin(shingleSets(corpus, corpusIdCol, textCol, shingleLen))
+    val refSets = Checkpoints.pin(shingleSets(reference, refIdCol, textCol, shingleLen))
+    def sigsOf(sets: DataFrame, id: String): DataFrame = Checkpoints.pin(
+      sets.select(col(id), minHashOfShingles(col("sh"), numHashes).as("sig")))
     val bandedCorpus =
       bandProjection(sigsOf(corpusSets, corpusIdCol), corpusIdCol, numHashes, bands)
         .withColumnRenamed(corpusIdCol, "corpus_id")
@@ -1137,10 +1132,10 @@ object Dedup {
     val sigs = df
       .select(col(idCol), simHash(col(textCol)).as("sim"))
       .repartition(p, col(idCol))
-    val chunked = sigs.select(col(idCol), col("sim"),
+    val chunked = Checkpoints.pin(sigs.select(col(idCol), col("sim"),
       posexplode(array((0 until chunks).map { c =>
         shiftright(col("sim"), c * width).bitwiseAND((1L << width) - 1)
-      }: _*)).as(Seq("chunk", "chunk_val"))).persist()
+      }: _*)).as(Seq("chunk", "chunk_val"))))
     val a = chunked.as("a")
     val b = chunked.as("b")
     val hamming = {
@@ -1219,7 +1214,7 @@ object Dedup {
     //
     // Gram representation (round-17, guide §2.3/§1.2): at fraction 1.0 the
     // index carries 64-BIT GRAM HASHES ([[graft.functions.HashExpressions
-    // .NgramHashSet]]) — the explode, persist, df-cut aggregate and the
+    // .NgramHashSet]]) — the explode, pin, df-cut aggregate and the
     // gram self-join all move and compare fixed-width longs instead of
     // n-char strings (the gram VALUE is never output; only ids and
     // set-size ratios are). Distinctness/join identity is the hash — see
@@ -1231,7 +1226,7 @@ object Dedup {
     val normed = df
       .select(col(idCol), normalized(col(textCol)).as("__norm"))
       .repartition(p, col(idCol))
-    val grams = (if (gramFraction >= 1.0)
+    val grams = Checkpoints.pin(if (gramFraction >= 1.0)
       normed.select(col(idCol),
         explode(graft.functions.HashExpressions.ngramHashSet(col("__norm"), n))
           .as("gram"))
@@ -1240,15 +1235,14 @@ object Dedup {
           explode(graft.functions.HashExpressions.ngramSet(col("__norm"), n))
             .as("gram"))
         .filter(Similarity.hashSample(col("gram"), gramFraction)))
-      .persist()
     // Anti-join against the (small) stop-shingle list: broadcasting the few
     // over-frequent grams scales; broadcasting the full index would not.
     val stopGrams = grams.groupBy("gram").agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDocFreq)
       .select("gram")
-    // Persisted: feeds the size aggregate and both sides of the gram
+    // Pinned: feeds the size aggregate and both sides of the gram
     // self-join.
-    val pruned = grams.join(broadcast(stopGrams), Seq("gram"), "left_anti").persist()
+    val pruned = Checkpoints.pin(grams.join(broadcast(stopGrams), Seq("gram"), "left_anti"))
     val sizes = pruned.groupBy(idCol).agg(count(lit(1)).as("n_grams"))
     val common = pruned.as("a")
       .join(pruned.as("b"),

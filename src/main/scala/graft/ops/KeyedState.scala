@@ -626,7 +626,7 @@ object KeyedState {
       .repartition(oversized.size, col(partCol))
       .localCheckpoint(true)
     try rows.write.partitionBy(partCol).parquet(stage.toString)
-    finally rows.unpersist()
+    finally Checkpoints.release(rows)
     fs.mkdirs(old)
     oversized.foreach { v =>
       val name = s"$partCol=$v"
@@ -853,7 +853,7 @@ object KeyedState {
     try {
       fs.delete(stage, true)
       rows.coalesce(1).write.parquet(stage.toString)
-    } finally rows.unpersist()
+    } finally Checkpoints.release(rows)
     if (kept.nonEmpty) {
       val out = fs.create(new Path(stage, keptManifest), true)
       try out.write((kept.mkString("\n") + "\n").getBytes("UTF-8"))

@@ -44,12 +44,8 @@ object Retrieval {
     * the ranking/tie-break semantics already assume it, and the fused
     * per-row tf means duplicate-id rows contribute separate (then summed)
     * per-term scores rather than one merged tf. (2) The fused corpus pass
-    * PERSISTS one row per (doc, matched term) — matchless docs included —
-    * for the lifetime of the returned frame's consumers; callers that
-    * invoke this repeatedly in a long-lived session (e.g. the
-    * `graft_bm25_topk` TVF) should sweep storage between calls
-    * (`spark.catalog.clearCache()` or unpersist via
-    * `sparkContext.getPersistentRDDs`) exactly as Bench/Verify do.
+    * PINS one row per (doc, matched term) — matchless docs included —
+    * for the lifetime of the returned frame.
     *
     * Returns (query_id, idCol, score, rank ≤ k).
     */
@@ -113,9 +109,9 @@ object Retrieval {
     // term), so Σ __tok across groups ≡ Σ dl and the first-row count ≡ N
     // — no extra corpus scan for either (docs.count() would re-execute
     // the whole upstream plan, including q121's documents-embeddings
-    // join, just for one number). The persisted frame is docs ×
+    // join, just for one number). The pinned frame is docs ×
     // query-vocab bounded — the same size class the scoring aggregate
-    // shuffles anyway — and is released by the caller's storage sweep.
+    // shuffles anyway.
     // ONE tokenize per doc: the token array and the matched-term array
     // each materialize in their own projection (CollapseProject keeps a
     // non-cheap expression referenced more than once out-of-line, so the
@@ -129,14 +125,13 @@ object Retrieval {
       // null/empty), without re-splitting the text
       coalesce(size(col("__toks")), lit(0)).as("__dl"),
       filter(col("__toks"), t => t.isInCollection(qtermSet)).as("__mt"))
-    val exploded = withM.select(col(idCol), col("__dl"),
+    val exploded = Checkpoints.pin(withM.select(col(idCol), col("__dl"),
         posexplode_outer(transform(array_distinct(col("__mt")),
           t => struct(t.as("t"),
             size(filter(col("__mt"), x => x === t)).cast("long").as("tf"))))
           .as(Seq("__p", "__m")))
       .select(col(idCol), col("__dl"), col("__p"),
-        col("__m.t").as("__t"), col("__m.tf").as("__tf"))
-      .persist()
+        col("__m.t").as("__t"), col("__m.tf").as("__tf")))
     // Corpus statistics in ONE narrow aggregate with ≤ |query vocabulary|
     // + 1 groups; map-side partials collapse every partition to ≤ |qvocab|
     // + 1 rows before the shuffle. Each (doc, term) appears exactly once

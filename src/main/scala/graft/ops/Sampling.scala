@@ -443,13 +443,8 @@ object Sampling {
     * window), broadcast back, then a pure per-row md5 predicate. The corpus
     * never shuffles.
     *
-    * CACHE CONTRACT: the strata-sized totals aggregate is persisted (it
-    * backs two branches of the returned lazy frame, so an eager unpersist
-    * here would fire at plan-construction time, before any action ran).
-    * The cached frame is tiny (one row per stratum), but a long-lived
-    * session issuing many calls accumulates them — callers that care
-    * release via `spark.catalog.clearCache()` between independent
-    * queries, the same contract as [[Similarity.ivfCellNearNeighbors]].
+    * The strata-sized totals aggregate is pinned: it backs two branches
+    * of the returned lazy frame.
     */
   def temperatureMixture(
       df: DataFrame,
@@ -468,14 +463,13 @@ object Sampling {
     // the one-row grand total, not a window: a constant-partitioned window
     // folds to "no partition" (WindowExec's single-partition warning) even
     // though this frame is strata-sized by construction.
-    // persisted: the strata-sized aggregate is referenced TWICE (the
+    // pinned: the strata-sized aggregate is referenced TWICE (the
     // grand-total branch and the join side), and self-join attribute
-    // dedup can defeat exchange reuse — without the (tiny) cache the
+    // dedup can defeat exchange reuse — without the (tiny) pin the
     // full-corpus groupBy may execute twice
-    val powed = df.groupBy(strataCol)
+    val powed = Checkpoints.pin(df.groupBy(strataCol)
       .agg(sum(col(tokenCol).cast("long")).as("__stratum_tokens"))
-      .withColumn("__pow", pow(col("__stratum_tokens").cast("double"), alpha))
-      .persist()
+      .withColumn("__pow", pow(col("__stratum_tokens").cast("double"), alpha)))
     val totals = powed
       .crossJoin(broadcast(powed.agg(sum(col("__pow")).as("__powsum"))))
       .withColumn("__weight", round(col("__pow") / col("__powsum"), 6))

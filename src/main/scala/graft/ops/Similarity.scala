@@ -406,7 +406,7 @@ object Similarity {
 
   /** The md5-threshold seed centroid frame shared by [[ivfAssign]] and
     * [[ivfKMeans]]'s cold start (one definition so the two paths cannot
-    * drift, and so ivfKMeans can assign against its already-persisted
+    * drift, and so ivfKMeans can assign against its already-pinned
     * normed base instead of re-scanning the corpus). */
   private def hashSeedCentroids(
       embeddings: DataFrame,
@@ -542,8 +542,8 @@ object Similarity {
       oversample: Int = 1,
       replicas: Int = 1): (DataFrame, DataFrame) = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val base = withNorm(embeddings, idCol, vecCol).persist()
-    // both seed paths assign against the PERSISTED base — calling
+    val base = Checkpoints.pin(withNorm(embeddings, idCol, vecCol))
+    // both seed paths assign against the PINNED base — calling
     // ivfAssign here would rebuild withNorm(embeddings) from scratch
     // (a full corpus scan + repartition) while base sits unused
     val assigned =
@@ -556,9 +556,9 @@ object Similarity {
   }
 
   /** The shared Lloyd loop: refine an initial (id, vec, centroid_id)
-    * assignment over a persisted normed base for `iterations` rounds,
+    * assignment over a pinned normed base for `iterations` rounds,
     * then apply replica indexing and materialize. Consumes `base`
-    * (unpersists it). Used by [[ivfKMeans]] (cold start from seeds) and
+    * (releases it). Used by [[ivfKMeans]] (cold start from seeds) and
     * [[ivfRecluster]] (warm start from an existing index's assignment).
     */
   private def lloydRefine(
@@ -611,15 +611,15 @@ object Similarity {
     // Lloyd means above always use the primary assignment only.
     if (replicas > 1)
       assigned = assignToNearest(base, centroids, idCol, vecCol, replicas)
-    // Materialize the final assignment before dropping the cached base so
-    // the iterations' reuse is realized and no cached partitions leak.
+    // Materialize the final assignment before releasing the pinned base
+    // so the iterations' reuse is realized.
     // The final assignment's plan reads only `base` and the centroid
     // LEAF, so the last iteration's assignment checkpoint releases too —
     // nothing corpus-sized survives this call but the result itself.
-    val out = assigned.persist()
+    val out = Checkpoints.pin(assigned)
     out.count()
     if (prevCheckpoint != null) Checkpoints.release(prevCheckpoint)
-    base.unpersist()
+    Checkpoints.release(base)
     (out, centroids.select("centroid_id", "centroid_vec"))
   }
 
@@ -738,16 +738,10 @@ object Similarity {
       vecCol: String,
       nlist: Int = 1024,
       threshold: Double = 0.8): DataFrame = {
-    // Persisted: the assignment feeds both self-join branches, and the
-    // self-join's attribute deduplication defeats ReuseExchange. The
-    // cache is a dependency of the RETURNED lazy frame, so it cannot be
-    // released here — same contract as contaminationReport's docGrams:
-    // callers running independent queries clearCache between them
-    // (Bench/Verify's between-query sweep does), and a long-lived
-    // service should release it once the pairs are consumed.
-    val assigned = ivfAssign(embeddings, idCol, vecCol, nlist)
-      .withColumn("__norm", norm(col(vecCol)))
-      .persist()
+    // Pinned: the assignment feeds both self-join branches, and the
+    // self-join's attribute deduplication defeats ReuseExchange.
+    val assigned = Checkpoints.pin(ivfAssign(embeddings, idCol, vecCol, nlist)
+      .withColumn("__norm", norm(col(vecCol))))
     val a = assigned.select(col("centroid_id"), col(idCol).as("id_a"),
       col(vecCol).as("va"), col("__norm").as("na"))
     val b = assigned.select(col("centroid_id"), col(idCol).as("id_b"),
@@ -869,8 +863,8 @@ object Similarity {
       iterations: Int = 2,
       replicas: Int = 1): (DataFrame, DataFrame) = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val base = withNorm(
-      assigned.select(col(idCol), col(vecCol)), idCol, vecCol).persist()
+    val base = Checkpoints.pin(withNorm(
+      assigned.select(col(idCol), col(vecCol)), idCol, vecCol))
     lloydRefine(base, assigned.select(col(idCol), col(vecCol),
       col("centroid_id")), idCol, vecCol, iterations, replicas)
   }
@@ -916,7 +910,7 @@ object Similarity {
       ivfRecluster(primary, idCol, vecCol, iterations, replicas)
     saveIvfIndex(reassigned.select(col(idCol), col(vecCol),
       col("centroid_id")), newCentroids, outPath)
-    reassigned.unpersist()
+    Checkpoints.release(reassigned)
   }
 
   /** Streaming IVF index ingest: embedding vectors arrive in micro-batches

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Top-level pipeline: wires the stage rules into a [[StageGraph]] with
   * input-override semantics matching the reference's `Pipeline.pipelineJob`
@@ -71,8 +70,9 @@ object Pipeline {
     * (`variant` is the usual entry; later stages short-circuit their
     * upstream rules exactly like the reference's input overrides).
     *
-    * @return stage alias -> materialized frame for all 8 stage tables that
-    *         were buildable from the provided inputs
+    * @return stage alias -> pinned frame ([[graft.ops.Checkpoints.pin]])
+    *         for all 8 stage tables that were buildable from the provided
+    *         inputs
     */
   def runJob(
       spark: SparkSession,
@@ -81,8 +81,7 @@ object Pipeline {
       variants: Option[DataFrame] = None,
       geneHaplotypes: Option[DataFrame] = None,
       genotypes: Option[DataFrame] = None,
-      genePhenotypes: Option[DataFrame] = None,
-      persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK
+      genePhenotypes: Option[DataFrame] = None
   ): Map[String, DataFrame] = {
     val graph = StageGraph(dag.map(s =>
       s.name -> StageGraph.Stage(s.deps, deps => s.rule(spark, refs, deps))): _*)
@@ -99,7 +98,7 @@ object Pipeline {
     graph.build(
       targets = reachableTargets(overrides.keySet),
       overrides = overrides,
-      materialize = (_, df) => df.persist(persistLevel))
+      materialize = (_, df) => graft.ops.Checkpoints.pin(df))
   }
 
   /** The fixed stage dependency shape (`Pipeline.groovy:484-525`). */

@@ -107,11 +107,15 @@ object CondensedJoin {
     // order is carried as SNAPSHOTS of the ordering columns (`__ordN`
     // copies taken before blanking): the first-occurrence windows and the
     // final sort order by the snapshots' pre-blank values, which is exactly
-    // the order a dense id assigned in orderCols order would give — rows
+    // the order a dense id assigned in orderCols order would give. Rows
     // tying on every ordering column are identical in every OUTPUT column
     // (orderCols covers the full header and all duplicate keys it
-    // displays), so their arbitrary relative order cannot change the
-    // blanked report. The historical materialized dense id
+    // displays), but each group's window would otherwise pick its own
+    // "first" among them — one tied row could keep group A's columns and
+    // another group B's. The last snapshot, `__ordTie`, is one
+    // `monotonically_increasing_id()` taken here, before any window: it
+    // makes the order total, so every window and the final sort agree on
+    // which tied row comes first. The historical materialized dense id
     // (range-partitioned zipWithIndex) cost a RangePartitioner sample job,
     // a zipWithIndex partition-count job, one extra full exchange of the
     // joined frame and an RDD round trip out of codegen PER REPORT — pure
@@ -120,7 +124,9 @@ object CondensedJoin {
     val snapNames = ordNames.indices.map(i => s"__ord$i")
     val ordered = joined.select(
       joined.columns.map(col) ++
-        ordNames.zip(snapNames).map { case (c, s) => col(c).as(s) }: _*)
+        ordNames.zip(snapNames).map { case (c, s) => col(c).as(s) } :+
+        monotonically_increasing_id().as("__ordTie"): _*)
+    val orderNames = snapNames :+ "__ordTie"
 
     val groups = spec.select.map { case (t, visible) =>
       val key = spec.duplicateKey.get(t) match {
@@ -132,10 +138,10 @@ object CondensedJoin {
       }
       RowOps.DupGroup(t.replace(".", "_"), key, visible.map(c => name2(t, c)))
     }
-    val deduped = RowOps.noDuplicates(ordered, groups, snapNames)
+    val deduped = RowOps.noDuplicates(ordered, groups, orderNames)
 
     deduped
-      .orderBy(snapNames.map(c => col(c).asc_nulls_first): _*)
+      .orderBy(orderNames.map(c => col(c).asc_nulls_first): _*)
       .select(headerCols.map(col): _*)
   }
 

@@ -69,21 +69,6 @@ object Reports {
   private def usingOn(left: Seq[(String, String)], table: String,
       cols: Seq[String]): Column = CondensedJoin.usingOn(left, table, cols)
 
-  /** Truncate a stage frame's lineage at the report boundary (lazy
-    * `localCheckpoint`): the report spec references 4–5 stage frames whose
-    * logical plans each inline the full pipeline lineage, and every
-    * broadcast-build / sample action inside one report run re-analyzed and
-    * re-stringified those deep trees — measured as ~0.3 s no-job driver
-    * gaps (Catalyst `transformDownWithPruning` / `truncatedString` in the
-    * main thread) per report at fixture scale, growing with plan depth,
-    * not data (guide §5 driver work; §3.3 "materialising an intermediate
-    * truncates the plan"). Lazy, so NO extra job: the RDD computes inside
-    * the first action that needs it — through `runJob`'s per-stage
-    * persists, so total stage compute is unchanged — and the blocks are
-    * released by the caller's storage sweep like every operator persist.
-    */
-  private def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
-
   /** A drug report: `head` plus the tail both drug reports share
     * (`pipeline/Report.groovy:54-114`, `:119-176`): each genotype (`jpg`) → its haplotype calls (`jpgh`, on
     * either haplotype of the pair) → their reference variants (`ghv`) → the
@@ -97,9 +82,9 @@ object Reports {
       headTables: Map[String, DataFrame],
       head: Spec): DataFrame = {
     val tables = headTables ++ Map(
-      "jpgh" -> pin(stages("geneHaplotype")),
+      "jpgh" -> stages("geneHaplotype"),
       "ghv" -> refs.geneHaplotypeVariant,
-      "jpv" -> pin(stages("variant")))
+      "jpv" -> stages("variant"))
     val spec = head.copy(
       select = head.select ++ Seq(
         "jpgh" -> Seq("haplotype_name"),
@@ -140,13 +125,13 @@ object Reports {
       jobId: Long): DataFrame =
     drugReport(stages, refs,
       headTables = Map(
-        "jppdr" -> pin(stages("phenotypeDrugRecommendation")
-          .filter(col("job_id") === jobId)),
+        "jppdr" -> stages("phenotypeDrugRecommendation")
+          .filter(col("job_id") === jobId),
         "dr" -> refs.drugRecommendation,
         "gpdr" -> refs.genePhenotypeDrugRecommendation,
-        "jpgp" -> withId(pin(stages("genePhenotype"))),
+        "jpgp" -> withId(stages("genePhenotype")),
         "gp" -> refs.genotypePhenotype,
-        "jpg" -> pin(stages("genotype"))),
+        "jpg" -> stages("genotype")),
       head = Spec(
         select = Seq(
           "jppdr" -> Seq("patient_id", "drug_recommendation_id", "het_combo", "het_combos"),
@@ -176,11 +161,11 @@ object Reports {
       jobId: Long): DataFrame =
     drugReport(stages, refs,
       headTables = Map(
-        "jpgdr" -> pin(stages("genotypeDrugRecommendation")
-          .filter(col("job_id") === jobId)),
+        "jpgdr" -> stages("genotypeDrugRecommendation")
+          .filter(col("job_id") === jobId),
         "dr" -> refs.drugRecommendation,
         "gdr" -> refs.genotypeDrugRecommendation,
-        "jpg" -> withId(pin(stages("genotype")))),
+        "jpg" -> withId(stages("genotype"))),
       head = Spec(
         select = Seq(
           "jpgdr" -> Seq("patient_id", "drug_recommendation_id", "het_combo", "het_combos"),
@@ -222,8 +207,8 @@ object Reports {
       refs: ReferenceTables,
       jobId: Long): Map[String, DataFrame] = {
     import spark.implicits._
-    val novel = pin(stages("novelHaplotype").filter(col("job_id") === jobId))
-    val variantPinned = pin(stages("variant").filter(col("job_id") === jobId))
+    val novel = stages("novelHaplotype").filter(col("job_id") === jobId)
+    val jobVariants = stages("variant").filter(col("job_id") === jobId)
     val genes = novel.select("gene_name").distinct()
       .orderBy("gene_name").as[String].collect()
     // Explicit pivot values: inferring them would run a distinct+sort job
@@ -237,7 +222,7 @@ object Reports {
         .filter(col("gene_name") === gene)
         .select(col("haplotype_name").as("row_name"), col("snp_id"), col("allele"))
       val patientRows = novel.filter(col("gene_name") === gene)
-        .join(variantPinned,
+        .join(jobVariants,
           Seq("job_id", "patient_id", "physical_chromosome"))
         .filter(col("snp_id").isin(snps: _*))
         .select(

@@ -183,13 +183,10 @@ object EventsStream {
     * memory for the session lifetime (the temp-view analogue of the
     * BlockManager leak the bench sweep fixes).
     *
-    * The returned frame's blocks live in BlockManager storage and are
-    * registered in `sc.getPersistentRDDs` — Bench/Verify's between-query
-    * sweep reclaims them; a long-lived session that drains repeatedly
-    * should release each drained frame once consumed
-    * (`Checkpoints.release`, or `df.queryExecution.analyzed`'s RDD
-    * unpersist), or the sink buffers trade a temp-view leak for a
-    * storage one.
+    * The snapshot is eager on purpose: the sink's view is dropped right
+    * after, so lineage could not recompute it. Its blocks are freed by the
+    * context cleaner once the returned frame is unreachable, or at once by
+    * `Checkpoints.release`.
     */
   private def drainToBatch(spark: SparkSession, streaming: DataFrame,
       prefix: String, outputMode: String = "update"): DataFrame = {

@@ -58,6 +58,50 @@ class ReportsSpec extends AnyFunSuite {
     Pipeline.runJob(spark, refs, 2L, variants = Some(variants))
   }
 
+  private def cacheManagerEmpty: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
+
+  /** The three reports over the fixture job (1) and the novel job (2). */
+  private def allReports(stages: Map[String, DataFrame], novel: Map[String, DataFrame],
+      refs: ReferenceTables): Seq[DataFrame] =
+    Seq(Reports.phenotypeDrugRecommendationReport(spark, stages, refs, 1L),
+      Reports.genotypeDrugRecommendationReport(spark, stages, refs, 1L)) ++
+      Reports.novelHaplotypeReport(spark, novel, refs, 2L).toSeq.sortBy(_._1).map(_._2)
+
+  private def rowsOf(reports: Seq[DataFrame]): Seq[Seq[String]] =
+    reports.map(_.collect().map(_.toString).toSeq)
+
+  test("runJob, the three reports and minhash near-dup leave the cache manager empty") {
+    spark.catalog.clearCache()
+    val (stages, refs) = runFixtureJob()
+    assert(rowsOf(allReports(stages, runNovelJob(refs), refs)).forall(_.nonEmpty))
+    import spark.implicits._
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumps over the lazy cat")).toDF("doc_id", "text")
+    assert(graft.ops.Dedup.minHashNearDuplicates(docs, "doc_id", "text", threshold = 0.5)
+      .collect().nonEmpty)
+    assert(cacheManagerEmpty)
+  }
+
+  test("reports recompute after every block persisted during the build is lost") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (stages, refs) = runFixtureJob()
+    val novel = runNovelJob(refs)
+    val reports = allReports(stages, novel, refs)
+    val expected = rowsOf(reports)
+    val built = sc.getPersistentRDDs.keySet -- before
+    assert(built.nonEmpty)
+    // what executor loss does to the blocks
+    built.foreach(id =>
+      org.apache.spark.SparkEnv.get.blockManager.master.removeRdd(id, blocking = true))
+    // A fresh query over each report: re-running the same Dataset would
+    // reuse its finished adaptive plan's shuffle files instead of reading
+    // the lost blocks.
+    assert(rowsOf(reports.map(_.select("*"))) == expected)
+  }
+
   /** Drug ids deliberately NOT in drug-name order. */
   private val unsortedDrugs = Seq((1L, "zeta"), (2L, "alpha"))
 

@@ -680,7 +680,8 @@ object SparkEntry {
       // nBuckets sized to the smoke's key volume (1.5k users → 8 buckets),
       // the same rule a deployment applies upward (one bucket ≪ executor
       // memory); 64 tiny bucket files cost ~0.5 s of pure file churn here
-      // (StreamingCostProbe) with zero data-side difference.
+      // (PLANS.md, round-9 q140/q88 adjudication) with zero data-side
+      // difference.
       Curation.streamingAssembleSequences(
           EventsStream.readEventsStream(s, dir, "events.parquet"),
           "user_id", "ts", "event_id", "event_type", sep = ">",

@@ -31,19 +31,12 @@ object TextFunctions {
         (acc, w) => acc + ceil(length(w).cast("double") / 4.0).cast("long")),
       lit(0L))
 
-  /** Word k-shingles joined by a single space; empty array when there are
-    * fewer than k tokens.
-    *
-    * PERF: pass a pre-projected token-array column (see
-    * [[shinglesFromTokens]]) on hot paths — higher-order-function lambdas
-    * are interpreted and re-evaluate any embedded expression per element,
-    * so tokenizing inside the lambda is quadratic in document length.
-    */
-  def wordShingles(text: Column, k: Int): Column =
-    shinglesFromTokens(tokens(text), k)
-
-  /** k-shingles over an already-computed token array column. The lambda body
-    * touches only the array attribute (cheap slice), not the tokenizer.
+  /** Word k-shingles joined by a single space, over an already-computed
+    * token array column; empty array when there are fewer than k tokens.
+    * The lambda body touches only the array attribute (cheap slice), not
+    * the tokenizer: higher-order-function lambdas are interpreted and
+    * re-evaluate any embedded expression per element, so tokenizing inside
+    * the lambda would be quadratic in document length.
     */
   def shinglesFromTokens(toks: Column, k: Int): Column =
     when(size(toks) >= k,
@@ -51,14 +44,9 @@ object TextFunctions {
         i => concat_ws(" ", slice(toks, i + 1, lit(k)))))
       .otherwise(array().cast("array<string>"))
 
-  /** Character n-grams of the lowercased, whitespace-normalized text.
-    * PERF: prefer [[ngramsFromNormalized]] over a pre-projected normalized
-    * column on hot paths (same interpreted-lambda caveat as shingles).
+  /** Character n-grams over an already-normalized string column (see
+    * [[normalized]]; same interpreted-lambda caveat as shingles).
     */
-  def charNgrams(text: Column, n: Int): Column =
-    ngramsFromNormalized(normalized(text), n)
-
-  /** n-grams over an already-normalized string column. */
   def ngramsFromNormalized(norm: Column, n: Int): Column =
     when(length(norm) >= n,
       transform(sequence(lit(1), length(norm) - (n - 1)),
@@ -74,18 +62,6 @@ object TextFunctions {
     */
   def contentFingerprint(text: Column): Column = md5(normalized(text))
 
-  /** Polynomial rolling hash over tokens (Rabin–Karp style), kept under a
-    * 31-bit prime so ANSI arithmetic can't overflow. Cheap locality-ish
-    * fingerprint; not engine-portable (uses xxhash64).
-    */
-  def rollingHash(text: Column): Column = {
-    val p = 2147483629L // large 31-bit prime
-    coalesce(
-      aggregate(tokens(text), lit(0L),
-        (acc, t) => pmod(acc * 31 + pmod(xxhash64(t), lit(p)), lit(p))),
-      lit(0L))
-  }
-
   // ---- quality scoring ----
 
   /** Ratio of punctuation characters to total characters (0 for empty). */
@@ -93,14 +69,6 @@ object TextFunctions {
     val len = length(text)
     when(len > 0,
       (len - length(regexp_replace(text, "[\\p{Punct}]", ""))).cast("double") / len)
-      .otherwise(lit(0.0))
-  }
-
-  /** Ratio of uppercase letters to total letters (0 when no letters). */
-  def upperRatio(text: Column): Column = {
-    val letters = length(regexp_replace(text, "[^\\p{L}]", ""))
-    when(letters > 0,
-      length(regexp_replace(text, "[^\\p{Lu}]", "")).cast("double") / letters)
       .otherwise(lit(0.0))
   }
 

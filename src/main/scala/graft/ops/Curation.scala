@@ -87,23 +87,19 @@ object Curation {
   private def benchFpArray(
       spark: org.apache.spark.sql.SparkSession,
       benchGrams: DataFrame): Array[Long] = {
-    val cap = spark.conf
-      .getOption("spark.graft.maxBenchGrams").getOrElse("2000000").toLong
-    require(cap <= 0 || cap < Int.MaxValue,
-      s"spark.graft.maxBenchGrams=$cap: a gram set that large cannot " +
-        "ship with the plan anyway; set <= 0 to disable the cap")
-    val rows =
-      (if (cap > 0) benchGrams.select("__fp").limit(cap.toInt + 1)
-       else benchGrams.select("__fp"))
-        .collect().map(_.getString(0))
-    require(cap <= 0 || rows.length <= cap,
+    val cap = DriverCollect.cap(spark, "spark.graft.maxBenchGrams",
+      2000000L, "a gram set that large cannot ship with the plan anyway; " +
+        "set <= 0 to disable the cap")
+    val rows = DriverCollect.upTo(benchGrams.select("__fp"), cap)
+    require(rows.isDefined,
       s"contamination check: the benchmark gram set exceeds " +
         s"spark.graft.maxBenchGrams=$cap fingerprints; it ships to every " +
         "task, so this path is valid only while the benchmark is much " +
         "smaller than the corpus. For a corpus-scale REFERENCE side use " +
         "noveltyReport (both sides shuffle on fingerprints), or raise " +
         "the cap.")
-    graft.functions.HashExpressions.sortedFpPairsFromHex(rows)
+    graft.functions.HashExpressions
+      .sortedFpPairsFromHex(rows.get.map(_.getString(0)))
   }
 
   private def contaminationAgainst(
@@ -165,9 +161,9 @@ object Curation {
     // groupBy(id) for the totals, which forced a persist of the
     // ~gram-multiplied corpus frame (two consumers) plus a second join
     // back on the id — a cache dependency of corpus × n_grams bytes that
-    // cannot exist at real scale (NoveltyVariantProbe adjudicates the
-    // shapes; the left-join rows into the aggregate map-side-combine to
-    // the same O(docs) exchange the anti-join's subset did).
+    // cannot exist at real scale (the left-join rows into the aggregate
+    // map-side-combine to the same O(docs) exchange the anti-join's subset
+    // did).
     val docGrams = grams(docs, textCol, col(idCol))
     val refGrams = grams(ref, refTextCol).select("__fp").distinct()
     val perDoc = docGrams
@@ -453,23 +449,19 @@ object Curation {
       minDocs: Either[Long, Double]): DataFrame = {
     val spark = docs.sparkSession
     val boiler = boilerFps(docs, textCol, separator, minDocs)
-    val cap = spark.conf
-      .getOption("spark.graft.maxBoilerSegments").getOrElse("2000000").toLong
-    require(cap <= 0 || cap < Int.MaxValue,
-      s"spark.graft.maxBoilerSegments=$cap: a boiler set that large " +
-        "cannot ship with the plan anyway; set <= 0 to disable the cap " +
-        "and use stripBoilerplateShuffle instead")
-    // bound BEFORE collecting: at most cap + 1 fps ever reach the driver
-    val rows =
-      (if (cap > 0) boiler.limit(cap.toInt + 1) else boiler)
-        .collect().map(_.getAs[Array[Byte]](0))
-    require(cap <= 0 || rows.length <= cap,
+    val cap = DriverCollect.cap(spark, "spark.graft.maxBoilerSegments",
+      2000000L, "a boiler set that large cannot ship with the plan " +
+        "anyway; set <= 0 to disable the cap and use " +
+        "stripBoilerplateShuffle instead")
+    val rows = DriverCollect.upTo(boiler, cap)
+    require(rows.isDefined,
       s"stripBoilerplate: more than spark.graft.maxBoilerSegments=$cap " +
         s"distinct segments meet the boilerplate threshold; that set is " +
         "shipped to every task, so this path is valid only while it is " +
         "small. Use stripBoilerplateShuffle (anti-join plan, never " +
         "collects), raise the threshold, or raise the cap.")
-    val fps = graft.functions.HashExpressions.sortedFpPairs(rows)
+    val fps = graft.functions.HashExpressions
+      .sortedFpPairs(rows.get.map(_.getAs[Array[Byte]](0)))
     docs.select(col(idCol),
       coalesce(
         graft.functions.HashExpressions
@@ -496,7 +488,8 @@ object Curation {
     * cell, and hash collisions only add false candidates, which the exact
     * second-pass count rejects. The surviving-cell count is bounded by
     * totalOccurrences / threshold (a high threshold ⇒ a handful of
-    * cells), collected bounded (`spark.graft.stripPrefilterMaxCells`) and
+    * cells), collected bounded (`spark.graft.stripPrefilterMaxCells`,
+    * default 65536; ≤ 0 uncaps) and
     * shipped as a row-local InSet filter ahead of the exact shuffle. The
     * pre-filter degrades, never breaks: survivors over the cap, a
     * threshold below `spark.graft.stripPrefilterMinDocs` (default 16 —
@@ -506,7 +499,7 @@ object Curation {
     * boiler set without a second scan. Cost when active: one extra
     * corpus scan + a cell-count shuffle bounded by tasks × cells rows —
     * at the 8M rung that trades the 7.3 GB fp exchange for ~hundreds of
-    * MB (StripBoilerplateProbe's prefilter arms, PLANS.md).
+    * MB (PLANS.md, round-14 boiler-df cell pre-filter ladder).
     */
   private def boilerFps(
       docs: DataFrame,
@@ -554,21 +547,23 @@ object Curation {
         // threshold keeps the survivor set a superset
         cellCounts.crossJoin(broadcast(thr)).filter(col("__cc") >= col("__thr"))
     }).select("__cell")
-    val maxCells = conf("spark.graft.stripPrefilterMaxCells", 1L << 16)
-    // bounded collect: at most maxCells + 1 cell ids reach the driver
-    val survivors = surviving.limit(maxCells.toInt + 1)
-      .collect().map(_.getLong(0))
-    if (survivors.isEmpty)
-      // no cell total reaches the threshold ⇒ no fp can ⇒ empty boiler
-      // set, second scan skipped entirely
-      cut(fps.limit(0))
-    else if (survivors.length > maxCells)
-      // low-threshold corpus where the pre-filter cannot help — exact
-      // single-pass plan, unchanged semantics
-      cut(fps)
-    else
-      // row-local InSet membership ahead of the exact count shuffle
-      cut(fps.filter(cellOf.isin(survivors.map(Long.box): _*)))
+    val maxCells = DriverCollect.cap(spark,
+      "spark.graft.stripPrefilterMaxCells", 1L << 16, "a survivor set " +
+        "that large cannot ship with the plan anyway; set <= 0 to disable " +
+        "the cap")
+    DriverCollect.upTo(surviving, maxCells).map(_.map(_.getLong(0))) match {
+      case None =>
+        // low-threshold corpus where the pre-filter cannot help — exact
+        // single-pass plan, unchanged semantics
+        cut(fps)
+      case Some(survivors) if survivors.isEmpty =>
+        // no cell total reaches the threshold ⇒ no fp can ⇒ empty boiler
+        // set, second scan skipped entirely
+        cut(fps.limit(0))
+      case Some(survivors) =>
+        // row-local InSet membership ahead of the exact count shuffle
+        cut(fps.filter(cellOf.isin(survivors.map(Long.box): _*)))
+    }
   }
 
   /** The pre-round-13 [[stripBoilerplate]] plan, kept as the unbounded

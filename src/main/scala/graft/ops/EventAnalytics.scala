@@ -56,12 +56,12 @@ object EventAnalytics {
     * (round 15). The greedy fold over time-ordered events advances step i
     * on the EARLIEST step-i event strictly after step i−1's time, so the
     * whole funnel is `t_i = min(ts | type = step_i AND ts > t_{i−1})` —
-    * no per-user event collection at all. The EventLadderProbe found the
-    * collected shape's real scale cost: a 10k-element priority queue per
-    * user per aggregation level (ObjectHashAggregate, interpreted, GC-
-    * heavy — 7–100 s at 4M events where this shape runs in ~2 s, with
-    * first-run allocation cliffs the flat shuffle bytes disproved as
-    * data effects).
+    * no per-user event collection at all. The round-15 event scale ladder
+    * (PLANS.md) found the collected shape's real scale cost: a 10k-element
+    * priority queue per user per aggregation level (ObjectHashAggregate,
+    * interpreted, GC-heavy — 7–100 s at 4M events where this shape runs in
+    * ~2 s, with first-run allocation cliffs the flat shuffle bytes
+    * disproved as data effects).
     *
     * Plan shape: ONE raw shuffle of the pruned (user, ts, type) rows —
     * the explicit repartition below, executed once and reused by every

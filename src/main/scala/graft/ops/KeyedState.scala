@@ -46,8 +46,9 @@ object KeyedState {
     * query pins its state-store count from `spark.sql.shuffle.partitions`
     * at FIRST start, and every HDFSBackedStateStore pays a fixed
     * commit/maintenance cost PER MICRO-BATCH regardless of how few rows
-    * it holds (StreamingCostProbe: 32 stores on 14k state rows cost
-    * ~7–9 s of summed commit time vs ~0.6 s across 8; wall 3.3 → 1.5 s);
+    * it holds (PLANS.md, round-9 q140/q88 adjudication: 32 stores on 14k
+    * state rows cost ~7–9 s of summed commit time vs ~0.6 s across 8;
+    * wall 3.3 → 1.5 s);
     * foreachBatch sinks additionally shuffle every internal join on the
     * session count. Smokes size stores to their state volume (8), the
     * same rule a cluster deployment applies upward (state rows ÷ target
@@ -81,7 +82,7 @@ object KeyedState {
   /** [[withStatePartitions]] with an explicit width: `requested > 0`
     * scopes the drain's shuffle/state width to it (callers size it to
     * their known state volume — rows ÷ target rows-per-store, the
-    * EventsStream/StreamingCostProbe rule); `requested <= 0` leaves the
+    * EventsStream rule, PLANS.md round 9); `requested <= 0` leaves the
     * SESSION width in force (the cluster-safe default). The
     * `SPARK_GRAFT_STATE_PARTITIONS` env dial — the determinism sweeps'
     * axis — overrides both when set.
@@ -114,8 +115,8 @@ object KeyedState {
     * applies to lineage): a memory sink is non-durable by construction —
     * its buffered rows die with the session — so its query's offset/commit
     * WAL gains nothing from disk durability, yet the per-batch WAL writes
-    * were 17% of the measured micro-batch setup floor (StreamFloorProbe:
-    * full 0.522 s min vs 0.444 s with a RAM checkpoint). Durable sinks
+    * were 17% of the measured micro-batch setup floor (OPTIMIZATION_r17.md
+    * §6: full 0.522 s min vs 0.444 s with a RAM checkpoint). Durable sinks
     * (foreachBatch parquet paths) keep their caller-provided checkpoint
     * dirs untouched — their WAL IS the crash-recovery story
     * (CrashRecoverySpec). Dirs are deleted on JVM exit.
@@ -322,11 +323,11 @@ object KeyedState {
   // read prunes to those partitions) and once as merge input. Round 14
   // pruned the first pass to a key-hash `distinct().collect()`, but that
   // still re-executed the batch aggregate once per batch
-  // (KeyedSinkJobProbe: jobs 6→5 / 8→7 covered only the fresh batch-0
-  // path). Staging the batch's OUTPUT to a sibling dir makes the plan
-  // execute exactly once — the affected buckets fall out of the staged
-  // partition-dir listing (the same trick that replaced the isEmpty
-  // pre-job), and the merge re-reads the staged parquet, paying a
+  // (PLANS.md, round-14 keyed-sink reclaim: jobs 6→5 / 8→7 covered only
+  // the fresh batch-0 path). Staging the batch's OUTPUT to a sibling dir
+  // makes the plan execute exactly once — the affected buckets fall out
+  // of the staged partition-dir listing (the same trick that replaced the
+  // isEmpty pre-job), and the merge re-reads the staged parquet, paying a
   // roundtrip of the batch's small output instead of a second execution
   // of its plan.
 

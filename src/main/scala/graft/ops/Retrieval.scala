@@ -76,25 +76,19 @@ object Retrieval {
         explode(array_distinct(tokens(col(qTextCol)))).as("__t"))
     // Secondary bound on the collected vocabulary itself (a few huge
     // query documents can blow past what the row cap implies): it is
-    // broadcast into two corpus-side filters below. The cap applies as a
-    // `limit(cap + 1)` INSIDE the collecting plan, so a blown vocabulary
+    // broadcast into two corpus-side filters below. A blown vocabulary
     // never reaches the driver — at most cap + 1 rows land before the
     // require below rejects the call.
-    val vocabCap = spark.conf
-      .getOption("spark.graft.maxQueryVocab").getOrElse("1000000").toLong
-    require(vocabCap <= 0 || vocabCap < Int.MaxValue,
-      s"spark.graft.maxQueryVocab=$vocabCap: a vocabulary that large " +
-        "cannot be broadcast anyway; set <= 0 to disable the check instead")
-    val qtermsDistinct = qterms.select("__t").distinct()
-    val qtermSet =
-      (if (vocabCap > 0) qtermsDistinct.limit(vocabCap.toInt + 1)
-       else qtermsDistinct)
-        .collect().map(_.getString(0)).toSeq
-    require(vocabCap <= 0 || qtermSet.size <= vocabCap,
-      s"bm25TopK: the query vocabulary (${qtermSet.size} distinct terms) " +
+    val vocabCap = DriverCollect.cap(spark, "spark.graft.maxQueryVocab",
+      1000000L, "a vocabulary that large cannot be broadcast anyway; set " +
+        "<= 0 to disable the check instead")
+    val collected = DriverCollect.upTo(qterms.select("__t").distinct(), vocabCap)
+    require(collected.isDefined,
+      s"bm25TopK: the query vocabulary (${vocabCap + 1} distinct terms) " +
         s"exceeds spark.graft.maxQueryVocab=$vocabCap; it is broadcast " +
         "into every corpus task. Chunk the query set into bounded " +
         "bm25TopK calls or raise spark.graft.maxQueryVocab.")
+    val qtermSet = collected.get.map(_.getString(0)).toSeq
     // ONE corpus pass shared by statistics and scoring (the stats collect
     // and the scoring join are separate actions whose exchanges cannot be
     // reused across jobs, so before this fusion the corpus was tokenized,

@@ -60,8 +60,9 @@ object Similarity {
     * passes through untouched: the unconditional barrier this replaces
     * was a full-corpus shuffle of the vector payload per call — linear
     * in data size for zero benefit at the 100 TB posture, where the scan
-    * is already thousands of splits (RetrievalLadderProbe measured the
-    * dense ndcg/topKJoin shuffle dropping ~linear-in-corpus → flat).
+    * is already thousands of splits (PLANS.md, round-16 retrieval scale
+    * ladder: the dense ndcg/topKJoin shuffle dropped ~linear-in-corpus →
+    * flat).
     * `forceBarrier` keeps the exchange for callers that fan the frame
     * into BOTH sides of a self-join: ReuseExchange then scans the corpus
     * once where a barrier-less plan would re-inline the scan + norm per
@@ -99,13 +100,10 @@ object Similarity {
   private[ops] def requireQuerySideBounded(
       queries: DataFrame, op: String, scalePath: String): Unit = {
     if (queries.isStreaming) return
-    val cap = queries.sparkSession.conf
-      .getOption("spark.graft.maxBroadcastQueries")
-      .getOrElse("100000").toLong
+    val cap = DriverCollect.cap(queries.sparkSession,
+      "spark.graft.maxBroadcastQueries", 100000L, "a cap that large cannot " +
+        "be broadcast anyway; set <= 0 to disable the check instead")
     if (cap > 0) {
-      require(cap < Int.MaxValue,
-        s"spark.graft.maxBroadcastQueries=$cap: a cap that large cannot " +
-          "be broadcast anyway; set <= 0 to disable the check instead")
       val seen = queries.limit(cap.toInt + 1).count()
       require(seen <= cap,
         s"$op: the query side has more than " +

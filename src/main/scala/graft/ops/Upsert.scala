@@ -146,7 +146,8 @@ object Upsert {
     // write never re-executes the batch aggregate. Round 14's pruned
     // key-hash distinct still re-ran the aggregate once per batch; the
     // staging roundtrip costs IO proportional to the batch's (small)
-    // output instead (KeyedSinkJobProbe attributes the difference).
+    // output instead (PLANS.md, round-15 "Warm keyed-sink single-execution
+    // rewrite", attributes the difference).
     val affected = KeyedState
       .stageMicroBatch(withBucket, path, "__bucket", nBuckets, None)
     if (affected.isEmpty) return // empty batch: nothing staged, no-op

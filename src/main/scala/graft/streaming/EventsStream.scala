@@ -209,9 +209,9 @@ object EventsStream {
   }
 
   /** State-partition scoping for the single-node smokes — the measured
-    * rationale (StreamingCostProbe: 32 stores on 14k state rows cost
-    * ~7–9 s of summed commit time vs ~0.6 s across 8) and the
-    * `SPARK_GRAFT_STATE_PARTITIONS` dial now live in
+    * rationale (PLANS.md, round-9 q140/q88 adjudication: 32 stores on 14k
+    * state rows cost ~7–9 s of summed commit time vs ~0.6 s across 8) and
+    * the `SPARK_GRAFT_STATE_PARTITIONS` dial now live in
     * [[graft.ops.KeyedState.withStatePartitions]], shared with the
     * Dedup/Similarity/Curation streaming entry points (round 16).
     */

@@ -8,44 +8,77 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Checkpoints.scala` itself and three eager snapshots whose sources are
   * overwritten afterwards, so recomputing them from lineage would read the
   * new data.
+  *
+  * Two ways to look at a job: `perfbench --trace 1` spans, or Spark's own
+  * event log. No main source registers a hand-written listener except the
+  * two scale probes that still report their own per-stage numbers.
   */
 class HoldSitesSpec extends AnyFunSuite {
 
   private val root = new java.io.File("src/main/scala/graft")
   private val hold = """\.persist\(|\.cache\(\)|localCheckpoint\(|\.checkpoint\(""".r
+  private val listener = """addSparkListener\(|streams\.addListener\(""".r
 
   /** Eager snapshots allowed per file (path relative to `root`). */
   private val snapshots = Map(
     "ops/KeyedState.scala" -> 2,
     "streaming/EventsStream.scala" -> 1)
 
-  private def sources(dir: java.io.File): Seq[java.io.File] =
+  /** Files allowed to register a listener (path relative to `root`). */
+  private val listenerProbes = Set(
+    "examples/ComposedChainScaleProbe.scala",
+    "examples/DedupStreamScaleProbe.scala")
+
+  private def sources(dir: java.io.File, withExamples: Boolean): Seq[java.io.File] =
     dir.listFiles().toSeq.sortBy(_.getName).flatMap { f =>
-      if (f.isDirectory) { if (f.getName == "examples") Nil else sources(f) }
+      if (f.isDirectory) {
+        if (f.getName == "examples" && !withExamples) Nil
+        else sources(f, withExamples)
+      }
       else if (f.getName.endsWith(".scala")) Seq(f)
       else Nil
     }
 
-  test("no persist/cache/checkpoint outside Checkpoints and the eager snapshots") {
+  /** Per source file (path relative to `root`), its non-comment lines
+    * matching `pattern`, each with its 0-based line index.
+    */
+  private def codeHits(pattern: scala.util.matching.Regex, withExamples: Boolean)
+      : Seq[(String, Vector[(String, Int)])] = {
     assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
-    val hits = sources(root).flatMap { f =>
+    sources(root, withExamples).map { f =>
       val rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
       val src = scala.io.Source.fromFile(f, "UTF-8")
       val lines = try src.getLines().toVector finally src.close()
-      val code = lines.zipWithIndex.filter { case (l, _) =>
+      rel -> lines.zipWithIndex.filter { case (l, _) =>
         val t = l.trim
         !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) &&
-          hold.findFirstIn(l).isDefined
+          pattern.findFirstIn(l).isDefined
       }
+    }
+  }
+
+  private def show(rel: String, hits: Seq[(String, Int)]): Seq[String] =
+    hits.map { case (l, i) => s"$rel:${i + 1}: ${l.trim}" }
+
+  test("no persist/cache/checkpoint outside Checkpoints and the eager snapshots") {
+    val hits = codeHits(hold, withExamples = false).flatMap { case (rel, code) =>
       if (rel == "ops/Checkpoints.scala") Nil
       else {
         val snaps = code.filter(_._1.contains("localCheckpoint(true)"))
         val allowed = snapshots.getOrElse(rel, 0)
-        val extra = if (snaps.size == allowed) code.filterNot(snaps.contains) else code
-        extra.map { case (l, i) => s"$rel:${i + 1}: ${l.trim}" }
+        show(rel, if (snaps.size == allowed) code.filterNot(snaps.contains) else code)
       }
     }
     assert(hits.isEmpty, "hold a reused frame with Checkpoints.pin (or truncate " +
       "in a loop):\n" + hits.mkString("\n"))
+  }
+
+  test("no hand-written listener outside the two kept scale probes") {
+    val hits = codeHits(listener, withExamples = true).flatMap { case (rel, code) =>
+      if (listenerProbes(rel)) Nil else show(rel, code)
+    }
+    assert(hits.isEmpty, "profile one query with Spark's event log " +
+      "(SPARK_GRAFT_CONF) or a perfbench --trace 1 span, not a new " +
+      "listener:\n" + hits.mkString("\n"))
   }
 }

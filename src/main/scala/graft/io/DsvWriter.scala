@@ -38,7 +38,7 @@ object DsvWriter {
   def renderString(df: DataFrame, sep: String = "\t"): String = {
     val cols = df.columns
     val sb = new StringBuilder(cols.mkString(sep)).append('\n')
-    df.toLocalIterator().forEachRemaining { r =>
+    df.collect().foreach { r =>
       sb.append(cols.indices.map(i =>
         if (r.isNullAt(i)) "" else r.get(i).toString).mkString(sep)).append('\n')
     }

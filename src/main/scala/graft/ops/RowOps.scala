@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * `noDuplicates` is re-expressed as window-based first-occurrence detection
   * (distributed, one shuffle per distinct duplicate key); `collapse` is
   * inherently sequential over the final ordered report and runs on the driver
-  * over `toLocalIterator` (reports are per-job human-readable scale).
+  * over one bounded collect (reports are per-job human-readable scale).
   */
 object RowOps {
 
@@ -91,29 +91,27 @@ object RowOps {
   }
 
   /** Convert a DataFrame's ordered output into sparse maps (null cells
-    * dropped) for [[collapse]]; runs on the driver via `toLocalIterator`.
+    * dropped) for [[collapse]]; the rows reach the driver in one bounded
+    * collect when the iterator is first asked for a row.
     *
-    * Guarded: the driver path is for per-job human-readable reports. Streaming
+    * Guarded: the driver path is for per-job human-readable reports. A frame
     * past `maxDriverRows` rows aborts with a pointer to [[collapseByGroup]]
     * (the distributed form) instead of silently feeding the driver an
-    * unbounded frame. The guard counts during iteration — no upfront count
-    * job.
+    * unbounded frame; at most `maxDriverRows` + 1 rows are ever collected
+    * (≤ 0: no cap, as for every [[DriverCollect]] read).
     */
   def sparseRows(df: DataFrame, maxDriverRows: Long = 1000000L): Iterator[Map[String, Any]] = {
     val cols = df.columns
-    var n = 0L
-    df.toLocalIterator().asInstanceOf[java.util.Iterator[Row]]
-      .asScala
-      .map { r =>
-        n += 1
-        if (n > maxDriverRows)
-          throw new IllegalStateException(
-            s"report exceeds $maxDriverRows driver-side rows; collapse per group " +
-              "with RowOps.collapseByGroup (distributed) instead")
-        cols.zipWithIndex.collect {
-          case (c, i) if !r.isNullAt(i) => c -> r.get(i)
-        }.toMap
-      }
+    Iterator.single(()).flatMap { _ =>
+      DriverCollect.upTo(df, maxDriverRows).getOrElse(
+        throw new IllegalStateException(
+          s"report exceeds $maxDriverRows driver-side rows; collapse per group " +
+            "with RowOps.collapseByGroup (distributed) instead"))
+    }.map { r =>
+      cols.zipWithIndex.collect {
+        case (c, i) if !r.isNullAt(i) => c -> r.get(i)
+      }.toMap
+    }
   }
 
   /** Distributed [[collapse]]: the staircase runs independently WITHIN each
@@ -177,12 +175,5 @@ object RowOps {
               if (gSet(c)) key(c) else m.getOrElse(c, null)))
           }
       }
-  }
-
-  private implicit class JIter[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
   }
 }

@@ -171,4 +171,17 @@ class OpsSpec extends AnyFunSuite {
     val it = RowOps.sparseRows(big, maxDriverRows = 10)
     intercept[IllegalStateException] { it.size }
   }
+
+  test("sparseRows reads a multi-partition frame without a job per partition") {
+    val df = spark.range(0, 64, 1, 16).toDF("a")
+    val sc = spark.sparkContext
+    val group = "ops-spec-sparse-rows"
+    sc.setJobGroup(group, "sparseRows job count")
+    val rows = try RowOps.sparseRows(df).toVector finally sc.clearJobGroup()
+    assert(rows.map(_("a")) == (0L until 64L))
+    // One bounded collect: its limit scan grows 1 → 4 → rest partitions,
+    // where a per-partition read would take 16 jobs.
+    val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+    assert(jobs <= 3, s"$jobs jobs for 16 partitions")
+  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Pipeline, PipelineStages, ReferenceTables}
+import graft.pipeline.{Pipeline, ReferenceTables}
 
 /** Reference-parity load benchmark, mirroring
   * `/root/reference/test/groovy/haplorec/test/util/pipeline/PipelineLoadTest.groovy`:
@@ -25,7 +25,6 @@ object LoadBench {
 
   def generateGeneHaplotypeVariant(spark: SparkSession, variantsPerHaplotype: Int,
       haplotypesPerGene: Int, genes: Int): DataFrame = {
-    import spark.implicits._
     spark.range(0, genes.toLong * haplotypesPerGene * variantsPerHaplotype)
       .select(
         (col("id") / (haplotypesPerGene * variantsPerHaplotype)).cast("long").as("g"),
@@ -41,7 +40,6 @@ object LoadBench {
   }
 
   def generateVariants(spark: SparkSession, variantsPerSample: Int, samples: Int): DataFrame = {
-    import spark.implicits._
     spark.range(0, samples.toLong * variantsPerSample * 2)
       .select(
         (col("id") / (variantsPerSample * 2)).cast("long").as("s"),
@@ -79,7 +77,6 @@ object LoadBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     // Scenario 1: 100k-variant full pipeline, empty reference data.
     val t0 = System.nanoTime()

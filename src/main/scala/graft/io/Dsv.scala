@@ -171,7 +171,6 @@ object Dsv {
     */
   def validate(spark: SparkSession, path: String, header: Seq[String],
       sep: String = "\t"): Unit = {
-    import spark.implicits._
     val n = header.size
     val sepRegex = java.util.regex.Pattern.quote(sep)
     val bad = spark.read.textFile(path)

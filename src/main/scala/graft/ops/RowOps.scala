@@ -1,56 +1,75 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Report-shaping row operators.
   *
   * The reference implements these as order-dependent driver-side iterator
   * transforms (`/root/reference/src/groovy/haplorec/util/Row.groovy`). Here:
-  * `noDuplicates` is re-expressed as window-based first-occurrence detection
-  * (distributed, one shuffle per distinct duplicate key); `collapse` is
-  * inherently sequential over the final ordered report and runs on the driver
-  * over one bounded collect (reports are per-job human-readable scale).
+  * `noDuplicates` is one sort plus one streaming first-occurrence pass on a
+  * single partition (reports are per-job human-readable scale, and every
+  * engine consumer collects them); `collapse` is inherently sequential over
+  * the final ordered report and runs on the driver over one bounded collect.
   */
 object RowOps {
 
   /** One column group for [[noDuplicates]]: rows keep `columnsToShow` only on
-    * the first occurrence of their `duplicateKey` value.
-    * Reference: `Row.groovy:8-64`.
+    * the first occurrence of their `duplicateKey` value. `name` labels the
+    * group. Reference: `Row.groovy:8-64`.
     */
   final case class DupGroup(name: String, duplicateKey: Seq[String], columnsToShow: Seq[String])
 
   /** Blank out repeated column groups: within each group `g`, a row's
     * `columnsToShow` survive only on the first occurrence of the row's
-    * `duplicateKey` values (first per `ordering`, which must match the
-    * report's output order — the reference relies on SQL fetch order, we make
-    * it explicit).
+    * `duplicateKey` values (first per `ordering`, ascending nulls first,
+    * which must match the report's output order — the reference relies on
+    * SQL fetch order, we make it explicit). A column shown by ANY group
+    * containing it survives (the reference builds rows additively across
+    * groups, `Row.groovy:46-60`).
+    *
+    * One sort, one pass: the frame is coalesced to one partition (no
+    * exchange), sorted by `ordering`, and a single streaming pass keeps one
+    * seen-set of key values per group. The result is that one partition in
+    * `ordering` order. Rows tying on every ordering column reach every group
+    * in the same order, so all groups agree on which of them comes first.
+    * Key values match as Spark groups them: nulls equal, NaN equals NaN,
+    * binary by content.
     */
   def noDuplicates(df: DataFrame, groups: Seq[DupGroup], ordering: Seq[String]): DataFrame = {
-    val orderCols = ordering.map(col)
-    // First-occurrence flags are computed per group from the ORIGINAL columns;
-    // a column shown by ANY group containing it survives (reference builds
-    // rows additively across groups, `Row.groovy:46-60`). Flags land in ONE
-    // projection and the blanking + flag-drop in ONE more (not per-column
-    // withColumn/drop folds, whose nested Projects the analyzer re-walks
-    // per level — measurable driver time at report plan width).
-    val flagged = df.select(
-      col("*") +: groups.map { g =>
-        val w = Window.partitionBy(g.duplicateKey.map(col): _*).orderBy(orderCols: _*)
-        (row_number().over(w) === 1).as(s"__show_${g.name}")
-      }: _*)
-    val shownBy: Map[String, Seq[String]] = groups
-      .flatMap(g => g.columnsToShow.map(_ -> g.name))
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    flagged.select(df.columns.map { c =>
-      shownBy.get(c) match {
-        case Some(gs) =>
-          val anyShown = gs.map(n => col(s"__show_$n")).reduce(_ || _)
-          when(anyShown, col(c)).as(c)
-        case None => col(c)
-      }
-    }.toIndexedSeq: _*)
+    val schema = df.schema
+    val keys: Array[Array[Int]] = groups.map(_.duplicateKey.map(schema.fieldIndex).toArray).toArray
+    // per column, the groups that show it; a column no group shows is kept
+    val shownBy: Array[Array[Int]] = schema.fieldNames.map(c =>
+      groups.indices.filter(g => groups(g).columnsToShow.contains(c)).toArray)
+    val out = StructType(schema.fields.zip(shownBy).map { case (f, gs) =>
+      if (gs.isEmpty) f else f.copy(nullable = true)
+    })
+    df.coalesce(1)
+      .sortWithinPartitions(ordering.map(col): _*)
+      .mapPartitions { rows =>
+        val seen = Array.fill(keys.length)(mutable.HashSet.empty[Seq[Any]])
+        rows.map { r =>
+          val first = keys.indices.map(g =>
+            seen(g).add(keys(g).toSeq.map(i => groupingValue(r.get(i)))))
+          Row.fromSeq(shownBy.indices.map { i =>
+            val gs = shownBy(i)
+            if (gs.isEmpty || gs.exists(first)) r.get(i) else null
+          })
+        }
+      }(Encoders.row(out))
+  }
+
+  private case object NaNKey
+
+  /** A key cell as Spark's grouping compares it. */
+  private def groupingValue(v: Any): Any = v match {
+    case b: Array[Byte] => b.toSeq
+    case d: Double if d.isNaN => NaNKey
+    case f: Float if f.isNaN => NaNKey
+    case other => other
   }
 
   /** Driver-side staircase collapse of consecutive sparse rows

@@ -292,7 +292,6 @@ object UnigramLm {
     * irrelevant: the map keys are unique and the total is a sum.
     */
   private def localizeModel(df: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(df.collect(): _*), df.schema)
   }

@@ -102,7 +102,7 @@ object GenomicsQueries {
          WHERE c_custkey % 3 = 0 AND c_custkey % 2 <> 0
          ORDER BY c_custkey"""),
 
-    // O6: window-based duplicate-group blanking (report semantics)
+    // O6: one-pass duplicate-group blanking (report semantics)
     Query("q06_nodup_blank", (s, dir) => {
       RowOps.noDuplicates(
         t(s, dir, "orders")
@@ -348,7 +348,6 @@ object GenomicsQueries {
     // (reference bound ≤ 5 min, PipelineLoadTest.groovy:83-113). Expected
     // calls have a closed form: samples 1..100 call *1 on both chromosomes.
     Query("q31_load_gene_haplotype_2M", (s, dir) => {
-      import s.implicits._
       val refs = ReferenceTables(
         LoadBench.emptyRefs(s).drugRecommendation,
         LoadBench.emptyRefs(s).genePhenotypeDrugRecommendation,

@@ -10,11 +10,12 @@ import graft.ops.RowOps
   * Reference: `/root/reference/src/groovy/haplorec/util/sql/Report.groovy:38-171`.
   * The reference assembles one SQL string selecting every column of every
   * table, relies on unspecified fetch order, and condenses rows in a
-  * driver-side iterator chain. Here the join/dup-suppression/projection run
-  * distributed with an explicit deterministic ORDER BY (fixing the
-  * reference's acknowledged ordering hole, `sql/Report.groovy:90-93`), and
-  * only the order-dependent staircase collapse touches the driver — report
-  * output is human-readable scale by construction.
+  * driver-side iterator chain. Here the joins run distributed, and the
+  * duplicate suppression is one sort by an explicit deterministic order
+  * (fixing the reference's acknowledged ordering hole,
+  * `sql/Report.groovy:90-93`) plus one pass on a single partition; only the
+  * order-dependent staircase collapse touches the driver — report output is
+  * human-readable scale by construction.
   *
   * Columns are namespaced `table__column` (the reference uses
   * `table.column`).
@@ -67,9 +68,10 @@ object CondensedJoin {
       col2(lt, c) === col2(table, c)
     }.reduce(_ && _)
 
-  /** Run the join + windowed duplicate suppression + projection. Returns the
-    * condensed frame with namespaced columns in select order, ordered
-    * deterministically (header-order columns, nulls last within each).
+  /** Run the join + duplicate suppression + projection. Returns the
+    * condensed frame with namespaced columns in select order: one partition,
+    * ordered deterministically (duplicate keys, then header columns,
+    * ascending nulls first).
     */
   def condensed(spec: Spec, tables: Map[String, DataFrame]): DataFrame = {
     // One projection per table, not a withColumnRenamed fold: each fold
@@ -90,58 +92,32 @@ object CondensedJoin {
       have = have ++ tables(j.table).columns.map(c => (j.table, c))
     }
 
-    // Deterministic report order: all output-header columns ascending nulls
-    // first — clusters parent rows before their children, which is what the
-    // staircase collapse needs.
     val headerCols = spec.select.flatMap { case (t, cs) => cs.map(c => name2(t, c)) }
-    val dupAllCols = spec.select.flatMap { case (t, _) =>
-      spec.duplicateKey.getOrElse(t, Nil).collect {
-        case Own(c) => name2(t, c)
-        case Foreign(ft, c) => name2(ft, c)
-      }
+    def keyName(t: String)(part: KeyPart): String = part match {
+      case Own(c) => name2(t, c)
+      case Foreign(ft, c) => name2(ft, c)
     }
-    val ordNames = (dupAllCols ++ headerCols).distinct
-    // Stable row order is fixed BEFORE duplicate-blanking (the reference
-    // blanks later duplicates of the fetch order; re-sorting after blanking
-    // would push nulled rows ahead of their dense first occurrence). The
-    // order is carried as SNAPSHOTS of the ordering columns (`__ordN`
-    // copies taken before blanking): the first-occurrence windows and the
-    // final sort order by the snapshots' pre-blank values, which is exactly
-    // the order a dense id assigned in orderCols order would give. Rows
-    // tying on every ordering column are identical in every OUTPUT column
-    // (orderCols covers the full header and all duplicate keys it
-    // displays), but each group's window would otherwise pick its own
-    // "first" among them — one tied row could keep group A's columns and
-    // another group B's. The last snapshot, `__ordTie`, is one
-    // `monotonically_increasing_id()` taken here, before any window: it
-    // makes the order total, so every window and the final sort agree on
-    // which tied row comes first. The historical materialized dense id
-    // (range-partitioned zipWithIndex) cost a RangePartitioner sample job,
-    // a zipWithIndex partition-count job, one extra full exchange of the
-    // joined frame and an RDD round trip out of codegen PER REPORT — pure
-    // action churn at report scale and a strict superset of the shuffles
-    // the snapshots need at any scale.
-    val snapNames = ordNames.indices.map(i => s"__ord$i")
-    val ordered = joined.select(
-      joined.columns.map(col) ++
-        ordNames.zip(snapNames).map { case (c, s) => col(c).as(s) } :+
-        monotonically_increasing_id().as("__ordTie"): _*)
-    val orderNames = snapNames :+ "__ordTie"
-
     val groups = spec.select.map { case (t, visible) =>
       val key = spec.duplicateKey.get(t) match {
-        case Some(parts) => parts.map {
-          case Own(c) => name2(t, c)
-          case Foreign(ft, c) => name2(ft, c)
-        }
+        case Some(parts) => parts.map(keyName(t))
         case None => tables(t).columns.toSeq.map(c => name2(t, c))
       }
-      RowOps.DupGroup(t.replace(".", "_"), key, visible.map(c => name2(t, c)))
+      RowOps.DupGroup(t, key, visible.map(c => name2(t, c)))
     }
-    val deduped = RowOps.noDuplicates(ordered, groups, orderNames)
+    // Deterministic report order: the declared duplicate keys, then every
+    // output-header column, ascending nulls first — clusters parent rows
+    // before their children, which is what the staircase collapse needs.
+    // The remaining key columns (tables keyed on all their columns) break
+    // the last ties: rows tying on the whole order are then equal in every
+    // column any group reads, so which of them comes first cannot change
+    // the blanking. noDuplicates sorts once by this order and blanks in the
+    // same pass; its single ordered partition is the report order.
+    val declaredKeys = spec.select.flatMap { case (t, _) =>
+      spec.duplicateKey.getOrElse(t, Nil).map(keyName(t))
+    }
+    val ordering = (declaredKeys ++ headerCols ++ groups.flatMap(_.duplicateKey)).distinct
 
-    deduped
-      .orderBy(orderNames.map(c => col(c).asc_nulls_first): _*)
+    RowOps.noDuplicates(joined, groups, ordering)
       .select(headerCols.map(col): _*)
   }
 

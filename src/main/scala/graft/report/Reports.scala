@@ -1,7 +1,11 @@
 package graft.report
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.pipeline.ReferenceTables
 import CondensedJoin._
 
@@ -31,40 +35,18 @@ object Reports {
     aliases.getOrElse(bare, bare)
   }
 
-  /** Globally dense 1-based ids in `orderCols` order WITHOUT the
-    * single-partition global window (`Window.orderBy` with no partition
-    * moves the whole frame to one task — the WindowExec warning, and a
-    * straight bottleneck on a job-scale stage table): range-partition on
-    * the ordering (ascending nulls first, `SortOrder`'s default), sort
-    * within partitions, then `zipWithIndex` — the [[graft.ops.Ingest]]
-    * FK-resolution idiom. The extra job zipWithIndex runs to learn
-    * partition sizes is a count per partition, not a data movement. Rows
-    * tying on ALL of `orderCols` receive arbitrary-but-dense ids — callers
-    * must pass an ordering that is total over every column they observe.
-    */
-  private[report] def sequentialId(
-      df: DataFrame, orderCols: Seq[Column], idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val parts = math.max(1, spark.sparkContext.defaultParallelism)
-    val sorted = df.repartitionByRange(parts, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-    val schema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
-        idCol, org.apache.spark.sql.types.LongType, nullable = false))
-    spark.createDataFrame(
-      sorted.rdd.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1L))
-      },
-      schema)
-  }
-
   /** Stage frames get a surrogate per-row id (the reference tables carry
-    * auto_increment ids used as duplicate keys) in the frame's full column
-    * ordering — total over every column, so the assignment is
-    * deterministic; computed once per report build via [[sequentialId]].
+    * auto_increment ids used as duplicate keys): a `row_number` over the
+    * frame's full column order, ascending nulls first, inside the plan.
+    * The window runs on one partition, coalesced so it needs no exchange
+    * (stage tables are job-sized). Only fully identical rows can tie on
+    * every column, and their ids are interchangeable, so the assignment is
+    * deterministic.
     */
-  private def withId(df: DataFrame): DataFrame =
-    sequentialId(df, df.columns.map(c => col(c).asc_nulls_first).toSeq, "id")
+  private def withId(df: DataFrame): DataFrame = {
+    val order = Window.orderBy(df.columns.map(c => col(c).asc_nulls_first).toIndexedSeq: _*)
+    df.coalesce(1).select(col("*"), row_number().over(order).cast(LongType).as("id"))
+  }
 
   private def usingOn(left: Seq[(String, String)], table: String,
       cols: Seq[String]): Column = CondensedJoin.usingOn(left, table, cols)
@@ -199,39 +181,52 @@ object Reports {
   /** Novel-haplotype matrix report (`pipeline/Report.groovy:17-34` + matrix
     * iteration R3): per gene with novel calls, the known-haplotype matrix
     * plus one row per (patient, chromosome, combo) novel haplotype, columns
-    * = the gene's SNPs in sorted order.
+    * = the gene's SNPs in sorted order, rows sorted by name.
+    *
+    * One collect, a union with no exchange, brings the job's novel calls
+    * and its variants to the driver, where each call meets its
+    * chromosome's alleles at its gene's SNPs. The known rows come from the
+    * driver-side matrices, so each gene's matrix is assembled on the driver
+    * and returned as a driver-resident frame that reads without a job.
     */
   def novelHaplotypeReport(
       spark: SparkSession,
       stages: Map[String, DataFrame],
       refs: ReferenceTables,
       jobId: Long): Map[String, DataFrame] = {
-    import spark.implicits._
-    val novel = stages("novelHaplotype").filter(col("job_id") === jobId)
-    val jobVariants = stages("variant").filter(col("job_id") === jobId)
-    val genes = novel.select("gene_name").distinct()
-      .orderBy("gene_name").as[String].collect()
-    // Explicit pivot values: inferring them would run a distinct+sort job
-    // over the union frame (whose lineage embeds the whole pipeline) per
-    // gene. The gene's SNP set is exactly the pivot's column set — the
-    // `known` half carries every (haplotype, snp) pair of the gene and
-    // patient rows are filtered to the same set.
-    genes.map { gene =>
+    def ofJob(stage: String) = stages(stage).filter(col("job_id") === jobId)
+    val none = lit(null).cast(StringType)
+    val (calls, variants) = ofJob("novelHaplotype")
+      .select(lit(true), col("gene_name"), col("patient_id"), col("physical_chromosome"),
+        col("het_combo"), col("het_combos"), none, none)
+      .union(ofJob("variant")
+        .select(lit(false), none, col("patient_id"), col("physical_chromosome"),
+          lit(0), lit(0), col("snp_id"), col("allele")))
+      .collect().partition(_.getBoolean(0))
+    // (patient, chromosome) -> that chromosome's variants
+    val alleles = variants.groupBy(r => (r.getString(2), r.getString(3)))
+    val matrices = refs.matrices.value
+    calls.groupBy(_.getString(1)).map { case (gene, geneCalls) =>
       val snps = refs.snpsByGene.getOrElse(gene, Nil)
-      val known = refs.geneHaplotypeVariant
-        .filter(col("gene_name") === gene)
-        .select(col("haplotype_name").as("row_name"), col("snp_id"), col("allele"))
-      val patientRows = novel.filter(col("gene_name") === gene)
-        .join(jobVariants,
-          Seq("job_id", "patient_id", "physical_chromosome"))
-        .filter(col("snp_id").isin(snps: _*))
-        .select(
-          concat(lit("Sample "), col("patient_id"), lit(", chr"),
-            col("physical_chromosome"), lit(" ("), col("het_combo"), lit("/"),
-            col("het_combos"), lit(")")).as("row_name"),
-          col("snp_id"), col("allele"))
-      gene -> known.unionByName(patientRows).groupBy("row_name")
-        .pivot("snp_id", snps).agg(first("allele")).orderBy("row_name")
-    }.toMap
+      val at = snps.zipWithIndex.toMap
+      // row name -> (snp position -> allele); the first allele seen wins
+      val cells = mutable.Map.empty[String, mutable.Map[Int, String]]
+      def put(name: String, snp: String, allele: String): Unit =
+        at.get(snp).foreach(cells.getOrElseUpdate(name, mutable.Map.empty).getOrElseUpdate(_, allele))
+      matrices.get(gene).foreach(m => m.rows.foreach { case (hap, row) =>
+        m.snpIds.zip(row).foreach { case (snp, a) => a.foreach(put(hap, snp, _)) }
+      })
+      // a call on no physical chromosome meets no variant (SQL equality)
+      geneCalls.filter(c => !c.isNullAt(3)).foreach { c =>
+        val name = s"Sample ${c.getString(2)}, chr${c.getString(3)} (${c.getInt(4)}/${c.getInt(5)})"
+        alleles.getOrElse((c.getString(2), c.getString(3)), Array.empty[Row])
+          .foreach(v => put(name, v.getString(6), v.getString(7)))
+      }
+      val matrix = cells.toSeq.sortBy(c => UTF8String.fromString(c._1)).map { case (name, row) =>
+        Row.fromSeq(name +: snps.indices.map(row.get(_).orNull))
+      }
+      val schema = StructType(("row_name" +: snps).map(StructField(_, StringType)))
+      gene -> spark.createDataFrame(java.util.Arrays.asList(matrix: _*), schema)
+    }
   }
 }

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.TextFunctions
 
 /** Dedup + similarity operator tests on hand-built corpora with known
   * near-duplicate structure.

@@ -89,7 +89,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("upsert merge: caller-supplied update clause (Sql.groovy:399-408)") {
-    import org.apache.spark.sql.functions._
     val existing = Seq(("k1", 10, "a"), ("k2", 20, "b")).toDF("k", "n", "tag")
     val incoming = Seq(("k2", 5, "B"), ("k3", 7, "c")).toDF("k", "n", "tag")
     // clause: n = old.n + new.n; tag keeps the existing value (not listed)
@@ -123,6 +122,16 @@ class OpsSpec extends AnyFunSuite {
       (Some(1), Some(2), Some(3)),
       (None, Some(3), Some(3)),
       (None, None, None)))
+  }
+
+  test("noDuplicates: binary keys match by content, NaN keys match each other") {
+    val df = Seq((1, Array[Byte](1, 2), Double.NaN, "x"), (2, Array[Byte](1, 2), Double.NaN, "y"))
+      .toDF("ord", "b", "d", "v")
+    def shown(key: String): List[Option[String]] =
+      RowOps.noDuplicates(df, Seq(RowOps.DupGroup("g", Seq(key), Seq("v"))), Seq("ord"))
+        .collect().map(r => Option(r.getString(3))).toList
+    assert(shown("b") == List(Some("x"), None))
+    assert(shown("d") == List(Some("x"), None))
   }
 
   test("collapse: staircase merge of non-overlapping sparse rows") {

@@ -81,6 +81,38 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("noDuplicates ≡ naive one-pass blanking (shared columns, null keys, ties, 16 partitions)") {
+    // A shows k1 that C keys on; A and B share v2, A and C share v1.
+    val groups = Seq(
+      RowOps.DupGroup("A", Seq("k1", "k2"), Seq("k1", "v1", "v2")),
+      RowOps.DupGroup("B", Seq("k2", "k3"), Seq("v2", "v3")),
+      RowOps.DupGroup("C", Seq("k1"), Seq("v1", "k3")))
+    val cols = Seq("o1", "o2", "seq", "k1", "k2", "k3", "v1", "v2", "v3")
+    trials(10) { rnd =>
+      def maybe(n: Int): Option[Int] = if (rnd.nextInt(4) == 0) None else Some(rnd.nextInt(n))
+      // o1/o2 tie often (o2 may be null); seq, the last order column, is unique
+      val rows = rnd.shuffle((0 until 40).toList).map(seq => (rnd.nextInt(2), maybe(2), seq,
+        rnd.nextInt(3), maybe(3), maybe(3), rnd.nextInt(9), maybe(9), rnd.nextInt(9)))
+      val got = RowOps.noDuplicates(rows.toDF(cols: _*).repartition(16), groups,
+          Seq("o1", "o2", "seq"))
+        .collect().map(r => cols.indices.map(i => Option(r.get(i)))).toList
+      val at = cols.zipWithIndex.toMap
+      val seen = groups.map(_ => scala.collection.mutable.Set.empty[Seq[Option[Any]]])
+      val expected = rows.sortBy(r => (r._1, r._2, r._3)).map { t =>
+        val r = t.productIterator.map {
+          case o: Option[_] => o
+          case v => Some(v)
+        }.toIndexedSeq
+        val first = groups.zip(seen).map { case (g, s) => s.add(g.duplicateKey.map(c => r(at(c)))) }
+        cols.indices.map { i =>
+          val by = groups.indices.filter(g => groups(g).columnsToShow.contains(cols(i)))
+          if (by.isEmpty || by.exists(first)) r(i) else None
+        }
+      }
+      assert(got == expected, s"input: $rows")
+    }
+  }
+
   test("duplicateClusters ≡ naive union-find (random edge lists)") {
     trials(10) { rnd =>
       val edges = List.fill(15)((rnd.nextInt(12).toLong, rnd.nextInt(12).toLong))

@@ -1,9 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.{LoadBench, TestScratch}
+import graft.{JobCount, LoadBench, TestScratch}
 
 /** How reference data is held: the matrix build's two row sources
   * (driver-resident literal and distributed frame) and its once-per-instance
@@ -70,40 +69,18 @@ class ReferenceTablesSpec extends AnyFunSuite {
       ("g1", "*2", "rs1", "C"), ("g1", "*2", "rs2", "G"))
       .toDF("gene_name", "haplotype_name", "snp_id", "allele"))
     val refs = refsWith(ghv)
-    // Jobs whose call site (their stages' name) is the matrix build, counted
-    // between two marker jobs so every event of the block has been delivered.
-    val sites = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        sites.add(e.stageInfos.map(_.name).mkString(" "))
+    // Jobs whose call site (their stages' name) is the matrix build.
+    def buildJobs(block: => Unit): Int =
+      JobCount.during(spark)(block).count(_.contains("ReferenceTables.scala"))
+    val first = buildJobs {
+      Pipeline.runJob(spark, refs, 1L, variants = Some(homVariants(Seq(("p1", "A", "G")))))
     }
-    val sc = spark.sparkContext
-    def marker(name: String): Unit = {
-      sc.setCallSite(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearCallSite()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!sites.contains(name) && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(sites.contains(name), s"listener never saw $name")
+    val second = buildJobs {
+      val stages = Pipeline.runJob(spark, refs, 2L,
+        variants = Some(homVariants(Seq(("p2", "C", "G")))))
+      assert(calledHaplotypes(stages) == Set(("p2", "A", "*2"), ("p2", "B", "*2")))
     }
-    def buildJobs(block: => Unit): Int = {
-      marker("before"); sites.clear()
-      block
-      marker("after")
-      val seen = sites.toArray(new Array[String](0))
-      seen.takeWhile(_ != "after").count(_.contains("ReferenceTables.scala"))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val first = buildJobs {
-        Pipeline.runJob(spark, refs, 1L, variants = Some(homVariants(Seq(("p1", "A", "G")))))
-      }
-      val second = buildJobs {
-        val stages = Pipeline.runJob(spark, refs, 2L,
-          variants = Some(homVariants(Seq(("p2", "C", "G")))))
-        assert(calledHaplotypes(stages) == Set(("p2", "A", "*2"), ("p2", "B", "*2")))
-      }
-      assert(first > 0, "the first runJob encodes the parquet-backed frame")
-      assert(second == 0)
-    } finally sc.removeSparkListener(listener)
+    assert(first > 0, "the first runJob encodes the parquet-backed frame")
+    assert(second == 0)
   }
 }

@@ -72,6 +72,27 @@ class ReportsSpec extends AnyFunSuite {
   private def rowsOf(reports: Seq[DataFrame]): Seq[Seq[String]] =
     reports.map(_.collect().map(_.toString).toSeq)
 
+  private def jobsDuring(block: => Unit): Int = graft.JobCount.during(spark)(block).size
+
+  test("building a report runs no job, and collecting one runs a fixed number") {
+    val (stages, refs) = runFixtureJob()
+    val novel = runNovelJob(refs)
+    rowsOf(allReports(stages, novel, refs)) // the stage tables are computed once
+    def phenotype() = Reports.phenotypeDrugRecommendationReport(spark, stages, refs, 1L)
+    assert(jobsDuring(phenotype()) == 0)
+    assert(jobsDuring(Reports.genotypeDrugRecommendationReport(spark, stages, refs, 1L)) == 0)
+    // The novel matrices are assembled on the driver from one collect and
+    // render without a job.
+    var matrices = Map.empty[String, DataFrame]
+    assert(jobsDuring { matrices = Reports.novelHaplotypeReport(spark, novel, refs, 2L) } == 1)
+    assert(jobsDuring(matrices.values.foreach(graft.io.DsvWriter.renderString(_))) == 0)
+    val counts = (1 to 3).map { _ =>
+      val report = phenotype()
+      jobsDuring(report.collect())
+    }
+    assert(counts.distinct.size == 1, s"jobs per collect: $counts")
+  }
+
   test("runJob, the three reports and minhash near-dup leave the cache manager empty") {
     spark.catalog.clearCache()
     val (stages, refs) = runFixtureJob()

@@ -318,7 +318,6 @@ class EventsStreamSpec extends AnyFunSuite {
 
   test("slidingCounts: every event lands in exactly length/slide windows") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val evs = Seq(
       (1L, java.sql.Timestamp.valueOf("2024-01-01 10:07:00"), 1L, "click", 2.0),
       (2L, java.sql.Timestamp.valueOf("2024-01-01 10:20:00"), 2L, "click", 3.0),

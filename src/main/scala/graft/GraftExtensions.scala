@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import graft.functions.{HashExpressions, UnicodeExpressions, VecDot}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.GraftFunctions
 
 /** Session-extensions entry point: makes the engine's custom Catalyst
   * expressions available in ANY session via standard Spark wiring —
@@ -14,9 +14,10 @@ import graft.functions.{HashExpressions, UnicodeExpressions, VecDot}
   *   SparkSession.builder().withExtensions(new GraftExtensions()(_))
   * }}}
   *
-  * The same registrations are available imperatively for an existing
-  * session through [[graft.functions.GraftFunctions.register]], which
-  * additionally registers the TABLE functions (graft_subset_join,
+  * It injects every scalar function of [[GraftFunctions.scalars]], the
+  * table that [[graft.functions.GraftFunctions.register]] also registers
+  * imperatively for an existing session; `register` additionally adds the
+  * TABLE functions (graft_subset_join,
   * graft_either_subset_join, graft_asof_join) — those resolve view names
   * through the session catalog, so they live on the imperative path,
   * where a session exists. No custom Rule/SparkStrategy is injected —
@@ -26,40 +27,10 @@ import graft.functions.{HashExpressions, UnicodeExpressions, VecDot}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    def info(name: String, usage: String): ExpressionInfo =
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-    def intArg(e: Expression, fn: String): Int = e match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"$fn expects an integer literal argument, got $other")
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.scalars.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, f.name, f.usage, ""),
+        f.build))
     }
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      info("vec_dot", "vec_dot(a, b) - dot product of two float/double arrays"),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(shingles, k) - md5-min MinHash signature"),
-      (exprs: Seq[Expression]) =>
-        HashExpressions.MinHashSig(exprs(0), intArg(exprs(1), "minhash_sig"))))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(tokens) - 64-bit md5-derived SimHash"),
-      (exprs: Seq[Expression]) => HashExpressions.SimHash64(exprs(0))))
-    ext.injectFunction((FunctionIdentifier("shingle_set"),
-      info("shingle_set", "shingle_set(tokens, n) - distinct n-token shingles"),
-      (exprs: Seq[Expression]) =>
-        HashExpressions.ShingleSet(exprs(0), intArg(exprs(1), "shingle_set"))))
-    ext.injectFunction((FunctionIdentifier("ngram_set"),
-      info("ngram_set", "ngram_set(text, n) - distinct character n-grams"),
-      (exprs: Seq[Expression]) =>
-        HashExpressions.NgramSet(exprs(0), intArg(exprs(1), "ngram_set"))))
-    ext.injectFunction((FunctionIdentifier("unicode_normalize"),
-      info("unicode_normalize",
-        "unicode_normalize(text, 'NFC'|'NFKC'|'NFD'|'NFKD') - Unicode normalization"),
-      (exprs: Seq[Expression]) => exprs(1) match {
-        case Literal(v: org.apache.spark.unsafe.types.UTF8String, _) =>
-          UnicodeExpressions.UnicodeNormalize(exprs(0), v.toString)
-        case other => throw new IllegalArgumentException(
-          s"unicode_normalize expects a string literal form, got $other")
-      }))
-  }
 }

@@ -4,13 +4,15 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
-    // Optional third arg: comma-separated query names for a targeted run
-    // (local iteration with tools/crosscheck.py; the driver passes 2 args).
-    val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** A local session on `SPARK_GRAFT_CPUS` cores (else `defaultCpus`), one
+    * shuffle partition per core, then the extra confs of
+    * `SPARK_GRAFT_CONF="k=v;k=v"`. The scale probe
+    * (`graft.examples.ScaleProbe`) builds its session here too, so both
+    * switch on Spark's event log the same way.
+    */
+  def session(defaultCpus: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -21,11 +23,11 @@ object Verify {
       // avoids re-compiling every generated class per query (same rationale
       // as Bench; compiled classes only, no data cached).
       .config("spark.sql.codegen.cache.maxEntries", "10000")
-    // SPARK_GRAFT_CONF="k=v;k=v": extra session confs for invariance
-    // sweeps — the TWICE-mode fingerprints are order-insensitive and
-    // commutative, so OK lines from runs under different configs
-    // (shuffle partition counts, AQE on/off) are directly diffable:
-    // same results ⇒ same fingerprint, regardless of partitioning.
+    // Extra session confs for invariance sweeps — the TWICE-mode
+    // fingerprints are order-insensitive and commutative, so OK lines from
+    // runs under different configs (shuffle partition counts, AQE on/off)
+    // are directly diffable: same results ⇒ same fingerprint, regardless
+    // of partitioning. Also how a run switches on Spark's event log.
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
       .foreach { kv =>
         val parts = kv.split("=", 2)
@@ -33,7 +35,16 @@ object Verify {
           s"bad SPARK_GRAFT_CONF entry (expected key=value): $kv")
         builder.config(parts(0), parts(1))
       })
-    val spark = builder.getOrCreate()
+    builder.getOrCreate()
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, outDir) = (args(0), args(1))
+    // Optional third arg: comma-separated query names for a targeted run
+    // (local iteration with tools/crosscheck.py; a full run passes 2 args).
+    val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
+    def selected(name: String): Boolean = only.forall(_.contains(name))
+    val spark = session(defaultCpus = "4")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_TWICE=1: after dumping each query, execute it a

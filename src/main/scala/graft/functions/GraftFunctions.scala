@@ -15,55 +15,53 @@ import org.apache.spark.sql.types.LongType
   */
 object GraftFunctions {
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("vec_dot",
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction("minhash_sig",
-      (exprs: Seq[Expression]) =>
-        HashExpressions.MinHashSig(exprs(0), intArg(exprs(1), "minhash_sig")), "scala_udf")
-    registry.createOrReplaceTempFunction("simhash64",
-      (exprs: Seq[Expression]) => HashExpressions.SimHash64(exprs(0)), "scala_udf")
-    registry.createOrReplaceTempFunction("shingle_set",
-      (exprs: Seq[Expression]) =>
-        HashExpressions.ShingleSet(exprs(0), intArg(exprs(1), "shingle_set")), "scala_udf")
-    registry.createOrReplaceTempFunction("ngram_set",
-      (exprs: Seq[Expression]) =>
-        HashExpressions.NgramSet(exprs(0), intArg(exprs(1), "ngram_set")), "scala_udf")
-    registry.createOrReplaceTempFunction("unicode_normalize",
-      (exprs: Seq[Expression]) =>
-        UnicodeExpressions.UnicodeNormalize(exprs(0), strArg(exprs(1), "unicode_normalize")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction("url_canonicalize",
-      (exprs: Seq[Expression]) => UrlExpressions.UrlCanonicalize(exprs(0)),
-      "scala_udf")
-    registry.createOrReplaceTempFunction("url_host",
-      (exprs: Seq[Expression]) => UrlExpressions.UrlHost(exprs(0)),
-      "scala_udf")
+  /** One scalar SQL function: its name, usage line and expression builder.
+    * A builder that needs the session resolves the active one when called,
+    * so the same table serves [[register]] and [[graft.GraftExtensions]].
+    */
+  final case class Scalar(name: String, usage: String, build: Seq[Expression] => Expression)
+
+  val scalars: Seq[Scalar] = Seq(
+    Scalar("vec_dot", "vec_dot(a, b) - dot product of two float/double arrays",
+      exprs => VecDot(exprs(0), exprs(1))),
+    Scalar("minhash_sig", "minhash_sig(shingles, k) - md5-min MinHash signature",
+      exprs => HashExpressions.MinHashSig(exprs(0), intArg(exprs(1), "minhash_sig"))),
+    Scalar("simhash64", "simhash64(tokens) - 64-bit md5-derived SimHash",
+      exprs => HashExpressions.SimHash64(exprs(0))),
+    Scalar("shingle_set", "shingle_set(tokens, n) - distinct n-token shingles",
+      exprs => HashExpressions.ShingleSet(exprs(0), intArg(exprs(1), "shingle_set"))),
+    Scalar("ngram_set", "ngram_set(text, n) - distinct character n-grams",
+      exprs => HashExpressions.NgramSet(exprs(0), intArg(exprs(1), "ngram_set"))),
+    Scalar("unicode_normalize",
+      "unicode_normalize(text, 'NFC'|'NFKC'|'NFD'|'NFKD') - Unicode normalization",
+      exprs => UnicodeExpressions.UnicodeNormalize(exprs(0),
+        strArg(exprs(1), "unicode_normalize"))),
+    Scalar("url_canonicalize", "url_canonicalize(url) - canonical URL form",
+      exprs => UrlExpressions.UrlCanonicalize(exprs(0))),
+    Scalar("url_host", "url_host(url) - host of a URL",
+      exprs => UrlExpressions.UrlHost(exprs(0))),
     // Column-composition functions (TextFunctions builds them from
     // built-in expressions): the bridge wraps the argument expression in
     // a Column, composes, and converts back through the SESSION's
     // ColumnNode converter — the SQL surface gets the exact tree the
     // Column API builds, still fully codegen'd.
-    registry.createOrReplaceTempFunction("tokens",
-      (exprs: Seq[Expression]) => ColumnBridge.expression(
-        TextFunctions.tokens(ColumnBridge.column(exprs(0))), spark),
-      "scala_udf")
-    registry.createOrReplaceTempFunction("quality_score",
-      (exprs: Seq[Expression]) => ColumnBridge.expression(
-        TextFunctions.qualityScore(ColumnBridge.column(exprs(0))), spark),
-      "scala_udf")
-    registry.createOrReplaceTempFunction("char_bigram_entropy",
-      (exprs: Seq[Expression]) =>
-        HashExpressions.CharBigramEntropy(exprs(0)), "scala_udf")
+    Scalar("tokens", "tokens(text) - lower-cased whitespace tokens, empties dropped",
+      exprs => ColumnBridge.expression(
+        TextFunctions.tokens(ColumnBridge.column(exprs(0))), SparkSession.active)),
+    Scalar("quality_score", "quality_score(text) - heuristic document quality score",
+      exprs => ColumnBridge.expression(
+        TextFunctions.qualityScore(ColumnBridge.column(exprs(0))), SparkSession.active)),
+    Scalar("char_bigram_entropy", "char_bigram_entropy(text) - character-bigram entropy",
+      exprs => HashExpressions.CharBigramEntropy(exprs(0))),
     // nearest_centroid(vec, array(ids...), array(array(components...)...)):
     // the centroid table must be FOLDABLE (literal arrays or expressions
     // of literals) — it becomes the same bounded codegen reference object
     // the Column API's NearestCentroid.assign embeds, so SQL probes keep
     // the scan→project shape with no join. Ids and components accept any
     // numeric literal type (cast to long/double at registration).
-    registry.createOrReplaceTempFunction("nearest_centroid",
-      (exprs: Seq[Expression]) => {
+    Scalar("nearest_centroid",
+      "nearest_centroid(vec, ids, centroids) - id of the nearest literal centroid",
+      exprs => {
         val ids = foldableArray(exprs(1), LongType, "nearest_centroid")
           .map(_.asInstanceOf[Long])
         val vecs = foldableNested(exprs(2), "nearest_centroid")
@@ -71,7 +69,11 @@ object GraftFunctions {
           "nearest_centroid: ids and centroid vectors must align")
         val sorted = ids.zip(vecs).sortBy(_._1)
         NearestCentroid(exprs(0), sorted.map(_._1), sorted.map(_._2))
-      }, "scala_udf")
+      }))
+
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    scalars.foreach(f => registry.createOrReplaceTempFunction(f.name, f.build, "scala_udf"))
 
     // ---- SQL TABLE functions: whole-operator surface ----
     // The flagship relational operators (set-containment joins J3–J5,

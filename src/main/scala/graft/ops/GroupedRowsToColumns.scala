@@ -56,9 +56,12 @@ object GroupedRowsToColumns {
       .filterNot(groupBy.contains)
       .distinct
     val rowsCol = "__rows"
-    // Spread on the GROUP KEY: collect_list has no map-side reduction, so
-    // the groupBy reuses this exchange instead of adding one.
-    val grouped = Skew.spreadIfUnderSplit(df, groupBy.map(col): _*)
+    // Partition on the GROUP KEY: collect_list has no map-side reduction,
+    // so the groupBy reuses this exchange instead of adding one, and AQE
+    // sizes it. Do not ask the input for its partition count here: on an
+    // adaptive input that runs the upstream exchanges while the plan is
+    // built, and `Pipeline.runJob` must run no job.
+    val grouped = df.repartition(groupBy.map(col): _*)
       .groupBy(groupBy.map(col): _*)
       .agg(sort_array(collect_list(struct(carried.map(col): _*))).as(rowsCol))
 

@@ -41,15 +41,14 @@ object SetContainment {
 
   /** Generic set-containment join.
     *
-    * @param a          table A (often the small "rule" side)
+    * @param a          table A, the small "rule" side; always broadcast,
+    *                   which keeps the size join off the shuffle path
     * @param b          table B
     * @param setCols    columns forming the set elements (same names both sides)
     * @param aGroupBy   columns of A identifying one set
     * @param bGroupBy   columns of B identifying one set
     * @param select     output columns (from aGroupBy ++ bGroupBy); default all
     * @param pred       containment predicate
-    * @param broadcastA hint that A is small enough to broadcast (rule tables
-    *                   are; keeps the size-join off the shuffle path)
     * @return distinct rows of `select` for qualifying (aGroup, bGroup) pairs
     */
   def containment(
@@ -59,21 +58,19 @@ object SetContainment {
       aGroupBy: Seq[String],
       bGroupBy: Seq[String],
       select: Seq[String] = Nil,
-      pred: Predicate = subsetPred,
-      broadcastA: Boolean = true
+      pred: Predicate = subsetPred
   ): DataFrame = {
     require(aGroupBy.nonEmpty && bGroupBy.nonEmpty, "both group-bys required")
     val outCols = if (select.nonEmpty) select else aGroupBy ++ bGroupBy
 
     val keyCols = aGroupBy ++ bGroupBy
     val inter = b
-      .join(if (broadcastA) broadcast(a) else a, setCols)
+      .join(broadcast(a), setCols)
       .groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as(InterCol))
 
     val needB = pred ne subsetPred
-    val sizeA0 = a.groupBy(aGroupBy.map(col): _*).agg(count(lit(1)).as(SizeA))
-    val sizeA = if (broadcastA) broadcast(sizeA0) else sizeA0
+    val sizeA = broadcast(a.groupBy(aGroupBy.map(col): _*).agg(count(lit(1)).as(SizeA)))
 
     val withSizes0 = inter.join(sizeA, aGroupBy)
     val withSizes =
@@ -98,10 +95,9 @@ object SetContainment {
       setCols: Seq[String],
       aGroupBy: Seq[String],
       bGroupBy: Seq[String],
-      select: Seq[String] = Nil,
-      broadcastA: Boolean = true
+      select: Seq[String] = Nil
   ): DataFrame =
-    containment(a, b, setCols, aGroupBy, bGroupBy, select, subsetPred, broadcastA)
+    containment(a, b, setCols, aGroupBy, bGroupBy, select, subsetPred)
 
   /** A ⊆ B or B ⊆ A. Reference: `Sql.groovy:198-207`. */
   def selectWhereEitherSubsetOf(
@@ -110,8 +106,7 @@ object SetContainment {
       setCols: Seq[String],
       aGroupBy: Seq[String],
       bGroupBy: Seq[String],
-      select: Seq[String] = Nil,
-      broadcastA: Boolean = true
+      select: Seq[String] = Nil
   ): DataFrame =
-    containment(a, b, setCols, aGroupBy, bGroupBy, select, eitherSubsetPred, broadcastA)
+    containment(a, b, setCols, aGroupBy, bGroupBy, select, eitherSubsetPred)
 }

@@ -24,6 +24,10 @@ object Skew {
     * sf0.1: 0.7–3.4 s single-task stages in tokenization, span hashing and
     * grouped collection). A properly split input passes through with no
     * exchange.
+    *
+    * The partition count comes from `df.rdd`: on a frame with an exchange
+    * upstream, under AQE, that runs the exchange (and everything before
+    * it) as Spark jobs at the call, before the caller's first action.
     */
   def spreadIfUnderSplit(df: DataFrame, keys: Column*): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism

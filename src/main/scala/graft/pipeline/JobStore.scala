@@ -20,18 +20,20 @@ final class JobStore(root: String) {
 
   private def path(table: String): String = s"$root/$table"
 
-  /** Write (or re-write) one job's rows of a stage table. */
+  /** Write (or re-write) one job's rows of a stage table. Dynamic overwrite
+    * is this write's own option, so the session's other partitioned
+    * overwrites keep their mode.
+    */
   def writeJob(df: DataFrame, table: String, jobId: Long): Unit = {
-    val spark = df.sparkSession
     val withJob =
       if (df.columns.contains("job_id")) df
       else df.withColumn("job_id", lit(jobId))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     withJob
       .filter(col("job_id") === jobId)
       .write
       .partitionBy("job_id")
       .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .parquet(path(table))
   }
 

@@ -302,7 +302,7 @@ object CurationQueries {
       // recomputes. The old persist (justified when decontaminate
       // branched its input into a gram index + anti-join: 16.8 s vs
       // 33.8 s at 400k docs) became pure cache-encode overhead with zero
-      // reuse: ComposedChainScaleProbe alternating-arm pairs on the
+      // reuse: alternating-arm pairs (`ScaleProbe chain`) on the
       // current operators measure no-barrier 28.8 s vs barrier 38.7 s at
       // 4M docs, and 41.3 vs 39.7 s (parity, within host noise) at 8M.
       val deduped = Dedup.exactDedup(cleaned, "doc_id", "text_clean")

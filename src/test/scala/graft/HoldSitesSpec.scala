@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * new data.
   *
   * Two ways to look at a job: `perfbench --trace 1` spans, or Spark's own
-  * event log. No main source registers a hand-written listener except the
-  * two scale probes that still report their own per-stage numbers.
+  * event log (summarized by `tools/eventlog.py`). No main source, examples
+  * included, registers a hand-written listener.
   */
 class HoldSitesSpec extends AnyFunSuite {
 
@@ -23,11 +23,6 @@ class HoldSitesSpec extends AnyFunSuite {
   private val snapshots = Map(
     "ops/KeyedState.scala" -> 2,
     "streaming/EventsStream.scala" -> 1)
-
-  /** Files allowed to register a listener (path relative to `root`). */
-  private val listenerProbes = Set(
-    "examples/ComposedChainScaleProbe.scala",
-    "examples/DedupStreamScaleProbe.scala")
 
   private def sources(dir: java.io.File, withExamples: Boolean): Seq[java.io.File] =
     dir.listFiles().toSeq.sortBy(_.getName).flatMap { f =>
@@ -73,12 +68,12 @@ class HoldSitesSpec extends AnyFunSuite {
       "in a loop):\n" + hits.mkString("\n"))
   }
 
-  test("no hand-written listener outside the two kept scale probes") {
+  test("no hand-written listener in the main sources") {
     val hits = codeHits(listener, withExamples = true).flatMap { case (rel, code) =>
-      if (listenerProbes(rel)) Nil else show(rel, code)
+      show(rel, code)
     }
     assert(hits.isEmpty, "profile one query with Spark's event log " +
-      "(SPARK_GRAFT_CONF) or a perfbench --trace 1 span, not a new " +
+      "(SPARK_GRAFT_CONF, tools/eventlog.py) or a perfbench --trace 1 span, not a new " +
       "listener:\n" + hits.mkString("\n"))
   }
 }

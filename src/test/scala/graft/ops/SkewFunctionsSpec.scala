@@ -52,6 +52,17 @@ class SkewFunctionsSpec extends AnyFunSuite {
       val row = extended.sql(
         "SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").collect().head
       assert(row.getDouble(0) == 11.0)
+      // Both paths expose the same scalar names: what the extensions add
+      // to a plain session equals what register adds to one.
+      def names(s: SparkSession): Set[String] =
+        s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+      val plain = names(spark.newSession())
+      val registered = spark.newSession()
+      graft.functions.GraftFunctions.register(registered)
+      val viaExtensions = names(extended) -- plain
+      assert(viaExtensions == names(registered) -- plain)
+      assert(viaExtensions.size == 12)
+      assert(extended.sql("SELECT size(tokens('A b  c')) AS n").collect().head.getInt(0) == 3)
     } finally {
       SparkSession.setDefaultSession(spark)
       SparkSession.setActiveSession(spark)

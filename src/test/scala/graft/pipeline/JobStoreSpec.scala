@@ -40,6 +40,36 @@ class JobStoreSpec extends AnyFunSuite {
     assert(one == Set("p2"))
   }
 
+  test("writeJob leaves the session's partition overwrite mode alone") {
+    // A fresh session: the other tests' writes must not decide the value.
+    val session = spark.newSession()
+    import session.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = session.conf.get(key)
+    val store = new JobStore(graft.TestScratch.dir("graft-jobstore-mode"))
+    store.writeJob(Seq((1L, "p1")).toDF("job_id", "patient_id"), "t", 1L)
+    assert(session.conf.get(key) == before)
+
+    // A later static overwrite in the same session replaces the whole
+    // index: the 4-cell index's extra cell directories must not survive
+    // a re-save with 2 cells.
+    val dir = graft.TestScratch.dir("graft-ivf-resave")
+    def index(cells: Int, tag: Float) = {
+      val assigned = (0 until 8).map(i => (i.toLong, Seq(tag), (i % cells).toLong))
+        .toDF("vec_id", "embedding", "centroid_id")
+      val centroids = (0 until cells).map(c => (c.toLong, Seq(tag)))
+        .toDF("centroid_id", "centroid_vec")
+      graft.ops.Similarity.saveIvfIndex(assigned, centroids, dir)
+    }
+    index(4, 1f)
+    index(2, 2f)
+    val (assigned, centroids) = graft.ops.Similarity.loadIvfIndex(session, dir)
+    val rows = assigned.select("vec_id", "centroid_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Float](2)))
+    assert(rows.sortBy(_._1).toSeq == (0 until 8).map(i => (i.toLong, (i % 2).toLong, Seq(2f))))
+    assert(centroids.count() == 2)
+  }
+
   test("appendJob adds rows without replacing the job's prior rows (selectAs 'existing')") {
     val root = graft.TestScratch.dir("graft-jobstore-app")
     val store = new JobStore(root)

@@ -74,6 +74,12 @@ class ReportsSpec extends AnyFunSuite {
 
   private def jobsDuring(block: => Unit): Int = graft.JobCount.during(spark)(block).size
 
+  test("runJob runs no Spark job over driver-resident reference tables") {
+    val refs = fixtureRefs()
+    assert(jobsDuring(runFixtureJob(refs)) == 0)
+    assert(jobsDuring(runNovelJob(refs)) == 0)
+  }
+
   test("building a report runs no job, and collecting one runs a fixed number") {
     val (stages, refs) = runFixtureJob()
     val novel = runNovelJob(refs)

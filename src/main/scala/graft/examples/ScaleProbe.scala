@@ -295,7 +295,7 @@ object ScaleProbe {
     val docs = t.hold(corpus)
     val (odd, even) = (docs.filter(col("doc_id") % 2 === 1), docs.filter(col("doc_id") % 2 === 0))
     t.stage("exact_dedup_groups", n)(Dedup.exactGroups(docs, "doc_id", "text").count())
-    t.stage("minhash_signatures", n)(Dedup.minHashSignatures(docs, "doc_id", "text").count())
+    t.stage("minhash_signatures", n)(readAll(Dedup.minHashSignatures(docs, "doc_id", "text")))
     t.stage("minhash_pairs", n)(Dedup.minHashNearDuplicates(docs, "doc_id", "text",
       threshold = 0.8, numHashes = 16, bands = 4, shingleLen = 3).count())
     t.stage("ngram_jaccard_pairs", n)(Dedup.ngramJaccardPairs(docs, "doc_id", "text",
@@ -309,12 +309,12 @@ object ScaleProbe {
     t.stage("boilerplate_strip", n)(Curation.stripBoilerplate(docs, "doc_id", "text",
       separator = " ", minDocs = n / 10).count())
     t.stage("repetition", n)(
-      Curation.repetitionReport(docs, "doc_id", "text", separator = " ").count())
-    t.stage("pii_redaction", n)(docs.select(Curation.redactPii(col("text"))).count())
+      readAll(Curation.repetitionReport(docs, "doc_id", "text", separator = " ")))
+    t.stage("pii_redaction", n)(readAll(docs.select(Curation.redactPii(col("text")))))
     t.stage("pack_sequences", n)(Curation.packSequences(docs, "doc_id",
       TextFunctions.tokenCount(col("text")), "source", seqLen = 2048).count())
     t.stage("segment_dedup", n)(
-      Curation.dedupeSegments(docs, "doc_id", "text", separator = " ").count())
+      readAll(Curation.dedupeSegments(docs, "doc_id", "text", separator = " ")))
     t.stage("vocabulary_top100", n)(Curation.vocabulary(docs, "text", k = 100).count())
     t.stage("chunking", n)(Curation.chunkDocuments(docs, "doc_id", "text",
       chunkTokens = 32, stride = 24).count())
@@ -325,11 +325,16 @@ object ScaleProbe {
       "doc_id", "source", "score", k = 10).count())
     t.stage("outlier_report", n)(Curation.outlierReport(docs, "doc_id", "source",
       length(col("text")), "n_chars").count())
-    t.stage("char_entropy", n)(Curation.charEntropyReport(docs, "doc_id", "text").count())
+    t.stage("char_entropy", n)(readAll(Curation.charEntropyReport(docs, "doc_id", "text")))
     t.stage("bpe_pair_counts", n)(Curation.bpePairCounts(docs, "text", k = 100).count())
     q63Arms(t, n, docs)
     t.release(docs)
   }
+
+  /** Rows of `df`, read through a hash of every column: a bare `count()`
+    * of a row-local projection lets Catalyst prune the operator away. */
+  private def readAll(df: DataFrame): Long =
+    df.agg(count(lit(1)), sum(hash(col("*")).cast("long"))).head().getLong(0)
 
   // The q63 chain (strip → exact dedup → decontaminate against the first
   // 1000 docs → pack), one function per step.

@@ -1212,17 +1212,16 @@ object Dedup {
     // md5/regex work remains below the barrier, so branch recomputation of
     // the exploded index is cheap and ReuseExchange shares the shuffles.
     //
-    // Gram representation (round-17, guide §2.3/§1.2): at fraction 1.0 the
-    // index carries 64-BIT GRAM HASHES ([[graft.functions.HashExpressions
-    // .NgramHashSet]]) — the explode, pin, df-cut aggregate and the
-    // gram self-join all move and compare fixed-width longs instead of
-    // n-char strings (the gram VALUE is never output; only ids and
-    // set-size ratios are). Distinctness/join identity is the hash — see
-    // the expression's collision note; NgramPairsSpec proves the pair
-    // sets identical to the string form. The fractional-sampling path
-    // keeps STRING grams: its hash-sample selection is defined on the
-    // gram's md5 (the q50 oracle pattern), which external engines replay
-    // on the gram text.
+    // Gram representation: at fraction 1.0 the index carries 64-BIT GRAM
+    // HASHES ([[graft.functions.HashExpressions.NgramHashSet]]) — the
+    // explode, pin, df-cut aggregate and gram self-join move fixed-width
+    // longs, not n-char strings (only ids and set-size ratios are output).
+    // Join identity is the hash (see its collision note); CurationPropertySpec
+    // "ngramJaccardPairs (hashed gram index) ≡ naive jaccard with df pruning"
+    // and "ngramHashSet distinctness ≡ ngramSet (incl. non-ASCII text)" guard
+    // it. The fractional-sampling path keeps STRING grams: its hash-sample
+    // selection is the gram's md5 (the q50 oracle pattern), which external
+    // engines replay on the gram text.
     val normed = df
       .select(col(idCol), normalized(col(textCol)).as("__norm"))
       .repartition(p, col(idCol))

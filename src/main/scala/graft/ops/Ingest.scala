@@ -1,7 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Ingestion-side operators from the reference's scrape/load toolchain.
   */
@@ -106,15 +108,10 @@ object Ingest {
     * ids), then resolve children by joining on the natural key.
     *
     * Reference: `load_dsv.py` (`/root/reference/script/load_dsv.py:66-134`),
-    * which inserts parents one at a time to capture `lastrowid`. Here id
-    * assignment is range-partition + in-partition sort + `zipWithIndex`:
-    * the range partitioner guarantees cross-partition key order, so the
-    * per-partition offsets produce globally dense ids in natural-key order
-    * WITHOUT collapsing the dimension to one partition (the
-    * `Window.orderBy` formulation would). Resolution is a broadcast join —
-    * children never round-trip through the driver. The extra Spark job
-    * `zipWithIndex` runs to learn partition sizes is a count per partition,
-    * not a data movement.
+    * which inserts parents one at a time to capture `lastrowid`. Here the
+    * id is a `row_number()` over the natural key inside the plan (as in
+    * `Reports.withId`), so building runs no job. The window's one partition
+    * holds only the distinct keys, which the child join broadcasts anyway.
     *
     * @return (parent with `idCol`, child with `idCol` resolved)
     */
@@ -123,22 +120,8 @@ object Ingest {
       child: DataFrame,
       naturalKey: Seq[String],
       idCol: String = "id"): (DataFrame, DataFrame) = {
-    val spark = parent.sparkSession
-    val keyCols = naturalKey.map(col)
-    val parts = math.max(1, spark.sparkContext.defaultParallelism)
-    val sorted = parent
-      .dropDuplicates(naturalKey)
-      .repartitionByRange(parts, keyCols: _*)
-      .sortWithinPartitions(keyCols: _*)
-    val schema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+
-        org.apache.spark.sql.types.StructField(
-          idCol, org.apache.spark.sql.types.LongType, nullable = false))
-    val withId = spark.createDataFrame(
-      sorted.rdd.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1L))
-      },
-      schema)
+    val withId = parent.dropDuplicates(naturalKey).withColumn(idCol,
+      row_number().over(Window.orderBy(naturalKey.map(col): _*)).cast(LongType))
     val resolved = child.join(broadcast(withId.select((naturalKey :+ idCol).map(col): _*)),
       naturalKey)
     (withId, resolved)

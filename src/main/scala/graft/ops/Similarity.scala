@@ -53,11 +53,12 @@ object Similarity {
   private def boundedTopK(item: Column, k: Int): Column =
     array_sort(ColumnBridge.collectTopK(item, k, reverse = true))
 
-  /** Project (id, vec, norm), spreading UNDER-SPLIT inputs behind a
-    * repartition barrier (a small/single parquet file arrives as one
-    * input split and would serialize the whole scoring pipeline onto one
-    * task — the bm25TopK spread discipline). A properly-split corpus
-    * passes through untouched: the unconditional barrier this replaces
+  /** Project (id, vec, norm), spreading an UNDER-SPLIT scan behind a
+    * repartition barrier ([[Skew.spreadIfUnderSplit]], decided from the
+    * plan without running it: a single parquet file is one split and
+    * would serialize the whole scoring pipeline onto one task). An input
+    * behind an exchange or a pin, or a properly-split corpus, passes
+    * through untouched: the unconditional barrier this replaces
     * was a full-corpus shuffle of the vector payload per call — linear
     * in data size for zero benefit at the 100 TB posture, where the scan
     * is already thousands of splits (PLANS.md, round-16 retrieval scale

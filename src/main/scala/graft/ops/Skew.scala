@@ -1,6 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.{CodegenSupport, FileSourceScanExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities for hot keys at cluster scale.
@@ -16,22 +20,29 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** Spread an under-split input: when `df` has fewer partitions than the
-    * session's default parallelism, hash-repartition it on `keys` to that
-    * parallelism; otherwise return it untouched. A small or single-file
-    * input arrives as one or a few input splits, which would serialize the
-    * expensive per-row work after it onto that many tasks (measured at
-    * sf0.1: 0.7–3.4 s single-task stages in tokenization, span hashing and
-    * grouped collection). A properly split input passes through with no
-    * exchange.
+  /** Spread an under-split scan: when `df` reads straight from scans
+    * holding fewer input splits than the session's default parallelism,
+    * hash-repartition it on `keys` to that parallelism; otherwise return
+    * it untouched. A small or single-file input arrives as one or a few
+    * splits, which would serialize the per-row work after it onto that
+    * many tasks (measured at sf0.1: 0.7–3.4 s single-task stages in
+    * tokenization, span hashing and grouped collection).
     *
-    * The partition count comes from `df.rdd`: on a frame with an exchange
-    * upstream, under AQE, that runs the exchange (and everything before
-    * it) as Spark jobs at the call, before the caller's first action.
+    * The decision reads the physical plan and runs nothing. A plan with an
+    * exchange, an adaptive root, a pin ([[Checkpoints.pin]]) or another
+    * non-scan leaf is already placed and passes through. A scan's split
+    * count is known on the driver (listed files, sliced local rows).
     */
   def spreadIfUnderSplit(df: DataFrame, keys: Column*): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p, keys: _*) else df
+    val plan = df.queryExecution.executedPlan
+    val splits = if (plan.exists(_.isInstanceOf[Exchange])) p else plan.collectLeaves().map {
+      case _: AdaptiveSparkPlanExec | _: InMemoryTableScanExec => p
+      case scan: FileSourceScanExec => scan.inputRDD.partitions.length
+      case scan: CodegenSupport => scan.inputRDDs().map(_.partitions.length).sum
+      case _ => p
+    }.sum
+    if (splits < p) df.repartition(p, keys: _*) else df
   }
 
   /** Two-phase salted aggregation: group by (keys, salt) first — spreading a

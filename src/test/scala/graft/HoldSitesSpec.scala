@@ -12,12 +12,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * Two ways to look at a job: `perfbench --trace 1` spans, or Spark's own
   * event log (summarized by `tools/eventlog.py`). No main source, examples
   * included, registers a hand-written listener.
+  *
+  * One execution model: building a plan runs no job. No main source reads
+  * a frame's partition count or numbers its rows through its RDD.
   */
 class HoldSitesSpec extends AnyFunSuite {
 
   private val root = new java.io.File("src/main/scala/graft")
   private val hold = """\.persist\(|\.cache\(\)|localCheckpoint\(|\.checkpoint\(""".r
   private val listener = """addSparkListener\(|streams\.addListener\(""".r
+  private val rddRoundTrip = """\.rdd\.(getNumPartitions|zipWithIndex)""".r
 
   /** Eager snapshots allowed per file (path relative to `root`). */
   private val snapshots = Map(
@@ -34,14 +38,14 @@ class HoldSitesSpec extends AnyFunSuite {
       else Nil
     }
 
-  /** Per source file (path relative to `root`), its non-comment lines
+  /** Per source file under `from` (path relative to it), its non-comment lines
     * matching `pattern`, each with its 0-based line index.
     */
-  private def codeHits(pattern: scala.util.matching.Regex, withExamples: Boolean)
-      : Seq[(String, Vector[(String, Int)])] = {
-    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
-    sources(root, withExamples).map { f =>
-      val rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+  private def codeHits(pattern: scala.util.matching.Regex, withExamples: Boolean,
+      from: java.io.File = root): Seq[(String, Vector[(String, Int)])] = {
+    assert(from.isDirectory, s"run from the repository root: ${from.getAbsolutePath}")
+    sources(from, withExamples).map { f =>
+      val rel = from.toPath.relativize(f.toPath).toString.replace('\\', '/')
       val src = scala.io.Source.fromFile(f, "UTF-8")
       val lines = try src.getLines().toVector finally src.close()
       rel -> lines.zipWithIndex.filter { case (l, _) =>
@@ -75,5 +79,14 @@ class HoldSitesSpec extends AnyFunSuite {
     assert(hits.isEmpty, "profile one query with Spark's event log " +
       "(SPARK_GRAFT_CONF, tools/eventlog.py) or a perfbench --trace 1 span, not a new " +
       "listener:\n" + hits.mkString("\n"))
+  }
+
+  test("no RDD partition count or row numbering on a plan-building path") {
+    val main = new java.io.File("src/main")
+    val hits = codeHits(rddRoundTrip, withExamples = true, main).flatMap { case (rel, code) =>
+      show(rel, code)
+    }
+    assert(hits.isEmpty, "decide from the physical plan (Skew.spreadIfUnderSplit) or number " +
+      "rows with row_number() inside the plan, not through df.rdd:\n" + hits.mkString("\n"))
   }
 }

@@ -56,6 +56,22 @@ class IngestSpec extends AnyFunSuite {
       Set(("r1", 1L), ("r2", 2L)))
   }
 
+  test("FK ids over a multi-partition parent with duplicate keys are dense, in key order") {
+    // 300 rows over 40 keys, spread over 4 partitions so every key appears
+    // in several of them.
+    val parent = (1 to 300).map(i => (s"gene${(i * 7) % 40}", i)).toDF("gene_name", "n")
+      .repartition(4)
+    assert(parent.rdd.getNumPartitions == 4)
+    val child = Seq(("c1", "gene3"), ("c2", "gene39")).toDF("rec", "gene_name")
+    val (withId, resolved) = Ingest.resolveForeignKeys(parent, child, Seq("gene_name"), "gene_id")
+    val ids = withId.select("gene_name", "gene_id").collect()
+      .map(r => (r.getString(0), r.getLong(1))).sortBy(_._2).toSeq
+    val keys = (0 until 40).map(k => s"gene$k").sorted
+    assert(ids == keys.zip(1L to 40L))
+    assert(resolved.select("rec", "gene_id").collect().map(r => (r.getString(0), r.getLong(1)))
+      .toSet == Set(("c1", keys.indexOf("gene3") + 1L), ("c2", keys.indexOf("gene39") + 1L)))
+  }
+
   test("map DSL parses the reference's own scrapy_config.mk strings") {
     // The exact --map string from /root/reference/scrapy_config.mk:27.
     val m = Ingest.parseMapDsl(

@@ -117,14 +117,10 @@ object Bench {
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "/root/repo/BENCH_DETAIL.json")
-    // Pre-run LOAD GATE (r11 verdict #1): the r11 driver bench started at
-    // loadavg 9.44 and shipped a 110 s artifact for a 72 s engine (probe
-    // drift 2.311, 14-query suspect list). Ambient load is an environment
-    // fact the bench can defend against: spin-wait (sleeping, not burning
-    // CPU) until the 1-min loadavg drops below a threshold, with a bounded
-    // total wait so a permanently-busy host still produces an artifact.
-    // The wait and the load trajectory are recorded in the JSON so a reader
-    // can tell "gate passed" from "gate timed out, numbers are suspect".
+    // Pre-run load gate: a run started at loadavg 9.44 timed a 72 s suite
+    // at 110 s. Sleep until the 1-min loadavg drops below a threshold,
+    // bounded so a busy host still produces an artifact; the JSON records
+    // the wait, so "gate passed" reads apart from "gate timed out".
     val gateThreshold =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_GATE", "3.0").toDouble
     val gateMaxWait =
@@ -178,13 +174,10 @@ object Bench {
       while (t < 0.02) { it *= 4; t = spin(it)._1 } // coarse floor
       math.max(1L, (it * 0.1 / t).toLong)
     }
-    // PROBE GATE (r12 verdict #4): the loadavg gate alone admitted a
-    // drift-1.103 run — 1-minute loadavg is too laggy to certify the
-    // next few minutes quiet. Gate on the drift probe itself: take 5
-    // fixed-work samples; if max/median exceeds the target, the machine
-    // is jittering NOW — sleep and re-probe (bounded). The accepted
-    // median becomes the drift baseline, so the shipped artifact's
-    // drift is measured against a certified-quiet floor.
+    // Probe gate: 1-min loadavg lags (it admitted a drift-1.103 run), so
+    // also take 5 fixed-work samples and sleep and re-probe (bounded)
+    // while max/median exceeds the target. The accepted median is the
+    // drift baseline.
     val probeGateTarget =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_PROBE_GATE", "1.05").toDouble
     val probeGateMaxWait =
@@ -368,14 +361,9 @@ object Bench {
         spread || med > 3.0
       } => "\"" + short(k) + "\":[" + xs.map(fmt).mkString(",") + "]"
     }.mkString("{", ",", "}")
-    // CONTROL BLOCK (VERDICT r14 #4): cross-round comparisons kept being
-    // normalized by hand against whatever host-factor narrative seemed
-    // plausible — and round 14's PLANS.md normalized against the wrong
-    // round's probe base. Make it mechanical: q16 (the batch control the
-    // judge already uses — a fixed, pure-batch, mid-cost query) ships its
-    // own median/min, and every query ships its control-normalized ratio
-    // (med / control-med), so a round-over-round delta reads directly
-    // from two artifacts: ratio_r15 / ratio_r14 cancels the host.
+    // Control block: q16 (a fixed, pure-batch, mid-cost query) ships its
+    // own median/min and every query its ratio to it (med / control-med),
+    // so two artifacts from different hosts compare by ratio directly.
     val controlName = "q16_minhash_pairs"
     val controlMed = median(times(controlName))
     val controlMin = {

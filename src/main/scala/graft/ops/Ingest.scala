@@ -110,8 +110,9 @@ object Ingest {
     * Reference: `load_dsv.py` (`/root/reference/script/load_dsv.py:66-134`),
     * which inserts parents one at a time to capture `lastrowid`. Here the
     * id is a `row_number()` over the natural key inside the plan (as in
-    * `Reports.withId`), so building runs no job. The window's one partition
-    * holds only the distinct keys, which the child join broadcasts anyway.
+    * `Reports.withId`), so building runs no job. The window numbers only
+    * the distinct keys, one partition of the table that both joins
+    * broadcast; the parent's other columns join back to it.
     *
     * @return (parent with `idCol`, child with `idCol` resolved)
     */
@@ -120,11 +121,16 @@ object Ingest {
       child: DataFrame,
       naturalKey: Seq[String],
       idCol: String = "id"): (DataFrame, DataFrame) = {
-    val withId = parent.dropDuplicates(naturalKey).withColumn(idCol,
-      row_number().over(Window.orderBy(naturalKey.map(col): _*)).cast(LongType))
-    val resolved = child.join(broadcast(withId.select((naturalKey :+ idCol).map(col): _*)),
-      naturalKey)
-    (withId, resolved)
+    val keys = naturalKey.map(col)
+    val ids = parent.select(keys: _*).distinct()
+      .withColumn(idCol, row_number().over(Window.orderBy(keys: _*)).cast(LongType))
+    // null-safe on the parent side, so a row with a null key keeps its id
+    val fk = naturalKey.indices.map(i => s"__fk$i")
+    val withId = parent.dropDuplicates(naturalKey)
+      .join(broadcast(ids.toDF(fk :+ idCol: _*)),
+        naturalKey.zip(fk).map { case (k, f) => col(k) <=> col(f) }.reduce(_ && _))
+      .drop(fk: _*)
+    (withId, child.join(broadcast(ids), naturalKey))
   }
 
   /** A parsed `--map` entry from the reference loader's config DSL:

@@ -57,7 +57,7 @@ object Similarity {
     * repartition barrier ([[Skew.spreadIfUnderSplit]], decided from the
     * plan without running it: a single parquet file is one split and
     * would serialize the whole scoring pipeline onto one task). An input
-    * behind an exchange or a pin, or a properly-split corpus, passes
+    * a shuffle already placed, or a properly-split corpus, passes
     * through untouched: the unconditional barrier this replaces
     * was a full-corpus shuffle of the vector payload per call — linear
     * in data size for zero benefit at the 100 TB posture, where the scan

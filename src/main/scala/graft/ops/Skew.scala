@@ -1,10 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.{CodegenSupport, FileSourceScanExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{CodegenSupport, FileSourceScanExec, LeafExecNode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities for hot keys at cluster scale.
@@ -20,29 +20,36 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** Spread an under-split scan: when `df` reads straight from scans
-    * holding fewer input splits than the session's default parallelism,
-    * hash-repartition it on `keys` to that parallelism; otherwise return
-    * it untouched. A small or single-file input arrives as one or a few
-    * splits, which would serialize the per-row work after it onto that
-    * many tasks (measured at sf0.1: 0.7–3.4 s single-task stages in
-    * tokenization, span hashing and grouped collection).
-    *
-    * The decision reads the physical plan and runs nothing. A plan with an
-    * exchange, an adaptive root, a pin ([[Checkpoints.pin]]) or another
-    * non-scan leaf is already placed and passes through. A scan's split
-    * count is known on the driver (listed files, sliced local rows).
+  /** Spread an under-split scan: when fewer input splits than the default
+    * parallelism feed `df`'s output partitions, hash-repartition it on
+    * `keys` to that parallelism, else return it untouched. One or a few
+    * splits would serialize the per-row work after them onto that many
+    * tasks (sf0.1: 0.7–3.4 s single-task stages in tokenization, span
+    * hashing and grouped collection). The decision reads the plan and
+    * runs nothing.
     */
   def spreadIfUnderSplit(df: DataFrame, keys: Column*): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    val plan = df.queryExecution.executedPlan
-    val splits = if (plan.exists(_.isInstanceOf[Exchange])) p else plan.collectLeaves().map {
-      case _: AdaptiveSparkPlanExec | _: InMemoryTableScanExec => p
-      case scan: FileSourceScanExec => scan.inputRDD.partitions.length
-      case scan: CodegenSupport => scan.inputRDDs().map(_.partitions.length).sum
-      case _ => p
-    }.sum
-    if (splits < p) df.repartition(p, keys: _*) else df
+    if (splitsOf(df.queryExecution.executedPlan, p) < p) df.repartition(p, keys: _*) else df
+  }
+
+  /** Input splits feeding `plan`'s output partitions; `p` once a shuffle
+    * placed them, 0 for a broadcast side. Pins, adaptive plans and query
+    * stages count through the plans they wrap; an unknown leaf counts as
+    * placed. A scan's splits are known on the driver; the file scan is
+    * copied so the executing node still reports its listing metrics.
+    */
+  private def splitsOf(plan: SparkPlan, p: Int): Int = plan match {
+    case _: ShuffleExchangeLike => p
+    case _: BroadcastExchangeLike => 0
+    case reused: ReusedExchangeExec => splitsOf(reused.child, p)
+    case adaptive: AdaptiveSparkPlanExec => splitsOf(adaptive.executedPlan, p)
+    case stage: QueryStageExec => splitsOf(stage.plan, p)
+    case pinned: InMemoryTableScanExec => splitsOf(pinned.relation.cachedPlan, p)
+    case scan: FileSourceScanExec => scan.copy().inputRDD.partitions.length
+    case scan: LeafExecNode with CodegenSupport => scan.inputRDDs().map(_.partitions.length).sum
+    case _: LeafExecNode => p
+    case node => node.children.map(splitsOf(_, p)).sum
   }
 
   /** Two-phase salted aggregation: group by (keys, salt) first — spreading a

@@ -72,6 +72,22 @@ class IngestSpec extends AnyFunSuite {
       .toSet == Set(("c1", keys.indexOf("gene3") + 1L), ("c2", keys.indexOf("gene39") + 1L)))
   }
 
+  test("the FK id window numbers only the distinct keys; a null key gets an id") {
+    val parent = Seq((Some("b"), "wide1"), (None, "wide2"), (Some("a"), "wide3"), (Some("b"), "wide4"))
+      .toDF("k", "payload")
+    val child = Seq(("c1", "b")).toDF("rec", "k")
+    val (withId, resolved) = Ingest.resolveForeignKeys(parent, child, Seq("k"), "k_id")
+    assert(withId.columns.toSeq == Seq("k", "payload", "k_id"))
+    val windows = withId.queryExecution.sparkPlan.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w.child.output.map(_.name)
+    }
+    assert(windows == Seq(Seq("k")))
+    assert(withId.select("k", "k_id").collect().map(r => (Option(r.getString(0)), r.getLong(1)))
+      .toSet == Set((None, 1L), (Some("a"), 2L), (Some("b"), 3L)))
+    assert(resolved.select("rec", "k_id").collect().map(r => (r.getString(0), r.getLong(1)))
+      .toSeq == Seq(("c1", 3L)))
+  }
+
   test("map DSL parses the reference's own scrapy_config.mk strings") {
     // The exact --map string from /root/reference/scrapy_config.mk:27.
     val m = Ingest.parseMapDsl(

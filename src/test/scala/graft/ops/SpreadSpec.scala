@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,8 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{JobCount, TestScratch}
 
 /** `Skew.spreadIfUnderSplit` decides from the physical plan: an under-split
-  * scan gets one `repartition(defaultParallelism, keys)` exchange, anything
-  * already placed (a well-split scan, an exchange, a pin) passes through, and
+  * scan, also behind a broadcast join or a pin, gets one
+  * `repartition(defaultParallelism, keys)` exchange; anything already placed
+  * (a well-split scan, a shuffle, a pin of a shuffle) passes through; and
   * building a plan that spreads runs no Spark job.
   */
 class SpreadSpec extends AnyFunSuite {
@@ -53,11 +55,15 @@ class SpreadSpec extends AnyFunSuite {
       }
     }
 
-  test("an under-split scan or driver-resident frame gets one keyed exchange") {
+  test("an under-split scan, driver-resident frame, pin or broadcast join gets one keyed exchange") {
     assert(oneSplit.inputFiles.length == 1)
     val local = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
     assert(local.queryExecution.executedPlan.execute().getNumPartitions < p)
-    for (in <- Seq(oneSplit, local)) {
+    // the streamed side of a broadcast join keeps its scan's splits, and so
+    // does a pin whose own plan has no shuffle
+    val joined = oneSplit.join(broadcast(local.select(col("doc_id"), col("text").as("t"))),
+      "doc_id")
+    for (in <- Seq(oneSplit, local, joined, Checkpoints.pin(joined))) {
       assert(exchanges(in).isEmpty)
       assert(exchanges(Skew.spreadIfUnderSplit(in, col("doc_id"))) == Seq((Seq("doc_id"), p)))
     }
@@ -68,6 +74,10 @@ class SpreadSpec extends AnyFunSuite {
     assert(wellSplit.inputFiles.length == p)
     for (in <- Seq(wellSplit, spark.range(0, 100, 1, p).toDF("doc_id"), aggregated, pinned))
       assert(Skew.spreadIfUnderSplit(in, col("doc_id")) eq in, in.queryExecution.executedPlan)
+    // the decision reads a copy of the scan: the node that executes has not
+    // yet listed its files, so it reports them to the query that runs it
+    val scan = wellSplit.queryExecution.executedPlan.collectFirst { case s: FileSourceScanExec => s }
+    assert(scan.map(_.metrics("numFiles").value) == Some(0L))
   }
 
   test("building a spread site or resolving foreign keys runs no Spark job") {
@@ -89,7 +99,8 @@ class SpreadSpec extends AnyFunSuite {
         "resolveForeignKeys" -> (d => Ingest.resolveForeignKeys(
           d.select(col("text")), d.select("doc_id", "text"), Seq("text"), "text_id")))
       val inputs = Seq[(String, () => DataFrame)](
-        "scan" -> (() => oneSplit), "aggregated" -> (() => aggregated), "pinned" -> (() => pinned))
+        "scan" -> (() => oneSplit), "aggregated" -> (() => aggregated), "pinned" -> (() => pinned),
+        "pinned scan" -> (() => Checkpoints.pin(oneSplit)))
       val ran = for ((site, build) <- sites; (kind, input) <- inputs) yield {
         val in = input()
         s"$site($kind)" -> JobCount.during(spark)(build(in)).size

@@ -305,8 +305,12 @@ object Curation {
     * property of its CURRENT text, where the old aggregate shape would
     * have summed stale and fresh matches). The `minMatches` cut applies
     * on read-back (the sink keeps raw counts). Returns the blocklist
-    * after draining available input. Replay-safe: the row-local pass is
-    * deterministic, so a crash-replayed batch upserts identical values.
+    * after draining available input. Replay-safe: the sink's fenced
+    * writes resume a crashed batch and its `__pub/b<id>` witness skips a
+    * published one, so a restart from `checkpointDir` converges to the
+    * uninterrupted result. The witnesses name this checkpoint's batch
+    * ids: `sinkDir` belongs to ONE `checkpointDir`, and a new checkpoint
+    * needs a new sink dir.
     */
   def streamingContaminationBlocklistUpdate(
       spark: org.apache.spark.sql.SparkSession,
@@ -348,8 +352,9 @@ object Curation {
     graft.ops.KeyedState.withStatePartitionsFor(spark, statePartitions) {
       val q = matched.writeStream.outputMode("append")
         .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.ops.Upsert.upsertKeyedParquet(batch, sinkDir, Seq(idCol), nBuckets)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          graft.ops.Upsert.upsertKeyedParquet(batch, sinkDir, Seq(idCol),
+            nBuckets, batchId)
         }
         .start()
       try q.processAllAvailable()

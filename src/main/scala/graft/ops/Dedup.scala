@@ -77,6 +77,12 @@ object Dedup {
     * form remains the oracle/test harness. Returns the sink contents after
     * draining available input. `maxFilesPerTrigger` > 0 bounds each
     * micro-batch (and lets tests prove multi-batch behavior).
+    *
+    * Replay-safe: the sink's fenced writes resume a crashed batch and its
+    * `__pub/b<id>` witness skips a published one, so a restart from
+    * `checkpointDir` converges to the uninterrupted result. The witnesses
+    * name this checkpoint's batch ids: `sinkDir` belongs to ONE
+    * `checkpointDir`, and a new checkpoint needs a new sink dir.
     */
   def streamingExactGroupsUpdate(
       spark: org.apache.spark.sql.SparkSession,
@@ -105,8 +111,9 @@ object Dedup {
     KeyedState.withStatePartitionsFor(spark, statePartitions) {
       val q = agg.writeStream.outputMode("update")
         .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Upsert.upsertKeyedParquet(batch, sinkDir, Seq("fingerprint"), nBuckets)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          Upsert.upsertKeyedParquet(batch, sinkDir, Seq("fingerprint"),
+            nBuckets, batchId)
         }
         .start()
       try q.processAllAvailable()

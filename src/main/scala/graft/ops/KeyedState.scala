@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
 
 /** The keyed streaming-state discipline shared by every foreachBatch sink
@@ -318,79 +319,65 @@ object KeyedState {
 
   // ---- micro-batch staging (the affected-bucket source) ------------------
   //
-  // The keyed upsert/merge sinks need the micro-batch twice on a WARM
-  // sink: once to learn which buckets it touches (so the existing-state
-  // read prunes to those partitions) and once as merge input. Round 14
-  // pruned the first pass to a key-hash `distinct().collect()`, but that
-  // still re-executed the batch aggregate once per batch
-  // (PLANS.md, round-14 keyed-sink reclaim: jobs 6→5 / 8→7 covered only
-  // the fresh batch-0 path). Staging the batch's OUTPUT to a sibling dir
-  // makes the plan execute exactly once — the affected buckets fall out
-  // of the staged partition-dir listing (the same trick that replaced the
-  // isEmpty pre-job), and the merge re-reads the staged parquet, paying a
-  // roundtrip of the batch's small output instead of a second execution
-  // of its plan.
+  // A keyed sink ([[Upsert.upsertKeyedParquet]], [[Upsert.mergeKeyedParquet]])
+  // needs the micro-batch twice on a WARM sink: once to learn which
+  // buckets it touches (so the existing-state read prunes to those
+  // partitions) and once as combine input. Staging the batch's OUTPUT to
+  // a sibling dir makes the plan execute exactly once — the affected
+  // buckets fall out of the staged partition-dir listing, and the combine
+  // re-reads the staged parquet, paying a roundtrip of the batch's small
+  // output instead of a second execution of its plan. The staging is
+  // fenced like the staged appends above, so a replay reuses it and never
+  // re-executes the batch plan against half-written state.
 
-  private[ops] def batchStage(path: String, batchId: Option[Long]): Path =
-    new Path(path + batchId.fold("__batch")(id => s"__batch_b$id"))
+  private[ops] def batchStage(path: String, batchId: Long): Path =
+    new Path(path + s"__batch_b$batchId")
 
-  /** Stage the micro-batch frame into the `<path>__batch[_b<id>]` sibling,
+  /** Stage the micro-batch frame into the `<path>__batch_b<id>` sibling,
     * partitioned by `partCol` (one file per touched partition value), and
     * return the touched partition VALUES read off the staged dirs. Empty
     * batches stage no data files → the dir is dropped and Nil returned
-    * (the caller's emptiness guard, costing no extra action).
-    *
-    * With `fencedBatch` set (accumulate-merge sinks, where a replay that
-    * re-executed a NON-deterministic-ish batch plan against half-merged
-    * state is the double-apply hazard), a `_FENCE` file marks the staging
-    * complete and a replay REUSES it instead of re-executing the plan —
-    * mirroring the staged-append protocol above. Without it (replace-by-
-    * key sinks, replay-idempotent), every call deletes and re-stages. */
+    * (the caller's emptiness guard, costing no extra action). A `_FENCE`
+    * file marks the staging complete; a replay of `batchId` REUSES a
+    * fenced staging instead of re-executing the plan (draining the frame
+    * inside a micro-batch, [[drainInMicroBatch]]), and deletes an
+    * unfenced (torn) one before writing again. */
   private[ops] def stageMicroBatch(df: DataFrame, path: String,
-      partCol: String, numTasks: Int,
-      fencedBatch: Option[Long]): Seq[String] = {
+      partCol: String, numTasks: Int, batchId: Long): Seq[String] = {
     val spark = df.sparkSession
     val fs = fsOf(spark, path)
-    val dir = batchStage(path, fencedBatch)
+    val dir = batchStage(path, batchId)
     val fence = new Path(dir, "_FENCE")
-    val reusable =
-      fencedBatch.isDefined && fs.exists(fence) && fs.exists(dir)
-    if (!reusable) {
+    if (!(fs.exists(fence) && fs.exists(dir))) {
       fs.delete(dir, true) // unfenced partial staging from a crash
       df.repartition(numTasks, col(partCol))
         .write.mode("overwrite").partitionBy(partCol).parquet(dir.toString)
       if (dataFiles(fs, dir).isEmpty) { fs.delete(dir, true); return Nil }
-      fencedBatch.foreach { id =>
-        fs.create(fence, true).close()
-        // Injected-crash point (test-only, [[Failpoint]]): batch staged
-        // and fenced, merge not yet computed — the replay must reuse the
-        // staging (no batch-plan re-execution) and merge exactly once.
-        Failpoint.hit(spark, "batch_stage_post_fence", id)
-      }
-    }
+      fs.create(fence, true).close()
+      // Injected-crash point (test-only, [[Failpoint]]): batch staged
+      // and fenced, combine not yet computed — the replay must combine
+      // the staged rows, never a second execution of the batch plan, and
+      // apply them exactly once.
+      Failpoint.hit(spark, "batch_stage_post_fence", batchId)
+    } else drainInMicroBatch(df)
     fs.listStatus(dir).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(partCol + "="))
       .map(_.getPath.getName.split("=", 2).last)
   }
 
-  /** Is there a COMPLETE (fenced) staged micro-batch for `batchId`? A
-    * crashed earlier attempt's staging that the staged merge arm should
-    * resume rather than re-executing the batch plan. */
-  private[ops] def hasFencedBatchStage(spark: SparkSession, path: String,
-      batchId: Long): Boolean = {
-    val fs = fsOf(spark, path)
-    val dir = batchStage(path, Some(batchId))
-    fs.exists(new Path(dir, "_FENCE")) && fs.exists(dir)
-  }
-
-  /** Total data-file bytes under `dir` (one recursive listing; 0 when
-    * missing) — the merge-arm size estimator's input. */
-  private[ops] def dirBytes(spark: SparkSession, dir: String): Long =
-    dataFiles(fsOf(spark, dir), new Path(dir)).map(_.getLen).sum
+  /** Run `df` once into Spark's no-op sink when called inside a streaming
+    * micro-batch. A replay that finds its batch already staged, fenced or
+    * published writes nothing, but Structured Streaming commits a stateful
+    * query's state stores only when the `foreachBatch` frame executes, and
+    * fails the batch otherwise (`STATE_STORE_COMMIT_VALIDATION_FAILED`).
+    * Outside a stream there is no state to commit, and nothing runs. */
+  private[ops] def drainInMicroBatch(df: DataFrame): Unit =
+    if (df.sparkSession.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY) != null)
+      df.write.format("noop").mode("overwrite").save()
 
   /** Drop the staged micro-batch dir once its batch is fully published. */
   private[ops] def dropBatchStage(spark: SparkSession, path: String,
-      batchId: Option[Long]): Unit = {
+      batchId: Long): Unit = {
     val fs = fsOf(spark, path)
     val dir = batchStage(path, batchId)
     if (fs.exists(dir)) fs.delete(dir, true)
@@ -458,7 +445,7 @@ object KeyedState {
 
   /** Is batch `batchId`'s replace-swap staged write complete (fenced) but
     * not yet published? A replay at this point must resume the swap
-    * WITHOUT executing any plan — not even a batch re-staging. */
+    * WITHOUT recomputing its content — not even a batch re-staging. */
   private[ops] def isReplaceFenced(spark: SparkSession, path: String,
       batchId: Long): Boolean = {
     val fs = fsOf(spark, path)
@@ -466,64 +453,36 @@ object KeyedState {
     fs.exists(new Path(staged, "_FENCE")) && fs.exists(staged)
   }
 
-  /** Drop batch `batchId`'s replace-swap staged dir (post-publication
-    * cleanup for a replay that found the `__pub` witness). */
-  private[ops] def dropReplaceStage(spark: SparkSession, path: String,
-      batchId: Long): Unit = {
-    val fs = fsOf(spark, path)
-    val staged = stagedDir(path, batchId)
-    if (fs.exists(staged)) fs.delete(staged, true)
-  }
-
   // ---- replace-partition swaps (the keyed upsert/merge sinks) -----------
   //
   // Spark's dynamic partition overwrite commits by DELETING each existing
   // partition dir and renaming the staged one in — two separate driver fs
   // operations with no healing protocol. A crash between them loses the
-  // partition's accumulated state outright: the merged rows existed only
-  // in the in-flight job, and the batch replay can re-deliver the BATCH
-  // but not the prior state it was merged with. The swaps below stage the
-  // new partition contents to a sibling, then swap each partition via the
-  // compaction protocol (preserve live under `__old` → rename staged in →
-  // drop preserved), so at every instant a partition's rows exist under
-  // the live path or the `__old` sibling, never nowhere;
+  // partition's accumulated state outright: the combined rows existed
+  // only in the in-flight job, and the batch replay can re-deliver the
+  // BATCH but not the prior state it was combined with. The swap below
+  // stages the new partition contents to a sibling, then swaps each
+  // partition via the compaction protocol (preserve live under `__old` →
+  // rename staged in → drop preserved), so at every instant a partition's
+  // rows exist under the live path or the `__old` sibling, never nowhere;
   // [[repairPartitions]] heals any interruption. Because the write target
   // is the stage sibling, the caller may compute the new contents FROM
   // the live path without a localCheckpoint barrier — read path and write
   // path only meet at the (driver-side, healed) swap.
 
-  /** Stage `df`'s `partCol=v` dirs into the compaction stage sibling and
-    * swap each into the live tree via preserve-rename. For REPLACE-BY-KEY
-    * sinks ([[Upsert.upsertKeyedParquet]]): a crash at any point leaves
-    * every partition atomically old or new (healed by
-    * [[repairPartitions]]), and the batch replay re-merges correctly from
-    * either state — replace semantics are idempotent per key. NOT
-    * sufficient for accumulate-merge sinks: use
-    * [[replacePartitionsAtomic]] there. */
-  def swapPartitions(spark: SparkSession, path: String, partCol: String,
-      df: DataFrame): Unit = {
-    repairPartitions(spark, path)
-    val fs = fsOf(spark, path)
-    val stage = stageRoot(path)
-    fs.delete(stage, true)
-    df.write.partitionBy(partCol).parquet(stage.toString)
-    swapStagedDirs(spark, fs, stage, path, failpoint = "swap_mid_bucket",
-      batchId = 0L)
-    fs.delete(stage, true)
-  }
-
-  /** [[swapPartitions]] under the staged-batch fence protocol — the
-    * REPLACE-partition write for NON-idempotent accumulate-merge sinks
-    * ([[Upsert.mergeKeyedParquet]]). The merge's double-apply hazard is a
-    * replay that RECOMPUTES the merge against partially-new state (each
-    * key's list would concatenate the batch twice); the fence closes it:
-    * once the staged write completes and `_FENCE` lands, a replay never
-    * re-executes `df`'s plan — it RESUMES the swap from the staged dirs
-    * (df is lazy; the resume path never triggers its job), and the
-    * `__pub` marker witnesses a completed swap exactly as in the staged
-    * appends. Crash table mirrors [[appendPartitionedAtomic]], with
-    * preserve-rename (healed by [[repairPartitions]], which runs first)
-    * in place of per-file publication. */
+  /** Replace `df`'s `partCol=v` partitions of `path` under the staged-batch
+    * fence protocol — the one write of both keyed sinks
+    * ([[Upsert.upsertKeyedParquet]], [[Upsert.mergeKeyedParquet]]). The
+    * double-apply hazard is a replay that RECOMPUTES the new contents
+    * against partially-new state (an accumulate-merge key's list would
+    * concatenate the batch twice); the fence closes it: once the staged
+    * write completes and `_FENCE` lands, a replay never re-executes `df`'s
+    * plan — it RESUMES the swap from the staged dirs (df is lazy; the
+    * resume path never triggers its job), and the `__pub` marker
+    * witnesses a completed swap exactly as in the staged appends. Crash
+    * table mirrors [[appendPartitionedAtomic]], with preserve-rename
+    * (healed by [[repairPartitions]], which runs first) in place of
+    * per-file publication. */
   def replacePartitionsAtomic(df: DataFrame, path: String, partCol: String,
       numTasks: Int, batchId: Long): Unit = {
     val spark = df.sparkSession
@@ -548,8 +507,7 @@ object KeyedState {
       // merge plan (CrashRecoverySpec kills a stream here).
       Failpoint.hit(spark, "replace_post_fence", batchId)
     }
-    swapStagedDirs(spark, fs, staged, path, failpoint = "replace_mid_swap",
-      batchId = batchId)
+    swapStagedDirs(spark, fs, staged, path, batchId)
     val marker = pubMarker(path, batchId)
     fs.mkdirs(marker.getParent)
     fs.create(marker, true).close()
@@ -560,11 +518,11 @@ object KeyedState {
     * preserve live under `__old`, rename staged in, drop the preserved
     * copy — per partition, resumable (a staged dir disappears exactly
     * when its swap lands, so re-runs process whatever remains), healed at
-    * any interruption by [[repairPartitions]]. The failpoint fires after
-    * the FIRST partition's preserve — the worst window (live copy moved
-    * aside, new content not yet in). */
+    * any interruption by [[repairPartitions]]. The `replace_mid_swap`
+    * failpoint fires after the FIRST partition's preserve — the worst
+    * window (live copy moved aside, new content not yet in). */
   private def swapStagedDirs(spark: SparkSession, fs: FileSystem,
-      stage: Path, path: String, failpoint: String, batchId: Long): Unit = {
+      stage: Path, path: String, batchId: Long): Unit = {
     if (!fs.exists(stage)) return
     val old = oldRoot(path)
     val parts = fs.listStatus(stage).toSeq
@@ -575,7 +533,7 @@ object KeyedState {
       val name = st.getPath.getName
       val live = new Path(path, name)
       if (fs.exists(live)) fs.rename(live, new Path(old, name))
-      if (first) { Failpoint.hit(spark, failpoint, batchId); first = false }
+      if (first) { Failpoint.hit(spark, "replace_mid_swap", batchId); first = false }
       fs.rename(st.getPath, live)
       fs.delete(new Path(old, name), true)
     }
@@ -644,9 +602,8 @@ object KeyedState {
     fs.delete(stage, true)
   }
 
-  /** Distinct partition values present in a one-column frame — bounded
-    * by the partition count, the same driver-side footprint as
-    * [[Upsert.upsertKeyedParquet]]'s affected-bucket collect. */
+  /** Distinct partition values present in a one-column frame — one
+    * collect, bounded by the partition count. */
   def touchedValues(values: DataFrame): Seq[Any] =
     values.distinct().collect().map(_.get(0)).toSeq
 

@@ -17,8 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * a frame's partition count or numbers its rows through its RDD.
   */
 class HoldSitesSpec extends AnyFunSuite {
+  import HoldSitesSpec._
 
-  private val root = new java.io.File("src/main/scala/graft")
   private val hold = """\.persist\(|\.cache\(\)|localCheckpoint\(|\.checkpoint\(""".r
   private val listener = """addSparkListener\(|streams\.addListener\(""".r
   private val rddRoundTrip = """\.rdd\.(getNumPartitions|zipWithIndex)""".r
@@ -27,34 +27,6 @@ class HoldSitesSpec extends AnyFunSuite {
   private val snapshots = Map(
     "ops/KeyedState.scala" -> 2,
     "streaming/EventsStream.scala" -> 1)
-
-  private def sources(dir: java.io.File, withExamples: Boolean): Seq[java.io.File] =
-    dir.listFiles().toSeq.sortBy(_.getName).flatMap { f =>
-      if (f.isDirectory) {
-        if (f.getName == "examples" && !withExamples) Nil
-        else sources(f, withExamples)
-      }
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Nil
-    }
-
-  /** Per source file under `from` (path relative to it), its non-comment lines
-    * matching `pattern`, each with its 0-based line index.
-    */
-  private def codeHits(pattern: scala.util.matching.Regex, withExamples: Boolean,
-      from: java.io.File = root): Seq[(String, Vector[(String, Int)])] = {
-    assert(from.isDirectory, s"run from the repository root: ${from.getAbsolutePath}")
-    sources(from, withExamples).map { f =>
-      val rel = from.toPath.relativize(f.toPath).toString.replace('\\', '/')
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      val lines = try src.getLines().toVector finally src.close()
-      rel -> lines.zipWithIndex.filter { case (l, _) =>
-        val t = l.trim
-        !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) &&
-          pattern.findFirstIn(l).isDefined
-      }
-    }
-  }
 
   private def show(rel: String, hits: Seq[(String, Int)]): Seq[String] =
     hits.map { case (l, i) => s"$rel:${i + 1}: ${l.trim}" }
@@ -88,5 +60,39 @@ class HoldSitesSpec extends AnyFunSuite {
     }
     assert(hits.isEmpty, "decide from the physical plan (Skew.spreadIfUnderSplit) or number " +
       "rows with row_number() inside the plan, not through df.rdd:\n" + hits.mkString("\n"))
+  }
+}
+
+/** The source walk the guards over the main sources share. */
+object HoldSitesSpec {
+
+  private val root = new java.io.File("src/main/scala/graft")
+
+  private def sources(dir: java.io.File, withExamples: Boolean): Seq[java.io.File] =
+    dir.listFiles().toSeq.sortBy(_.getName).flatMap { f =>
+      if (f.isDirectory) {
+        if (f.getName == "examples" && !withExamples) Nil
+        else sources(f, withExamples)
+      }
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Nil
+    }
+
+  /** Per source file under `from` (path relative to it), its non-comment lines
+    * matching `pattern`, each with its 0-based line index.
+    */
+  def codeHits(pattern: scala.util.matching.Regex, withExamples: Boolean,
+      from: java.io.File = root): Seq[(String, Vector[(String, Int)])] = {
+    assert(from.isDirectory, s"run from the repository root: ${from.getAbsolutePath}")
+    sources(from, withExamples).map { f =>
+      val rel = from.toPath.relativize(f.toPath).toString.replace('\\', '/')
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toVector finally src.close()
+      rel -> lines.zipWithIndex.filter { case (l, _) =>
+        val t = l.trim
+        !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) &&
+          pattern.findFirstIn(l).isDefined
+      }
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The keyed-state compaction swap protocol: interrupted swaps are
@@ -266,29 +265,25 @@ class KeyedStateSpec extends AnyFunSuite {
 
   // ---- replace-partition swaps (the keyed upsert/merge sink writes) ----
 
-  test("swapPartitions: mid-swap crash leaves the bucket preserved under " +
-      "__old; repairPartitions restores it losslessly") {
+  test("replacePartitionsAtomic: a mid-swap crash is healed losslessly") {
     val p = graft.TestScratch.dir("graft-ks-swap") + "/store"
     writeBucketed(p, 1)
     val before = spark.read.parquet(p).orderBy("k", "__bucket").collect().toSeq
-    val replacement = (100L until 140L).toDF("k")
-      .withColumn("__bucket", KeyedState.bucketColumn(Seq("k"), 4))
-      .repartition(4, col("__bucket"))
-    spark.conf.set("spark.graft.test.failpoint", "swap_mid_bucket:0")
+    val replacement = batchDf(100, 140)
+    spark.conf.set("spark.graft.test.failpoint", "replace_mid_swap:1")
     try intercept[Failpoint.InjectedCrash] {
-      KeyedState.swapPartitions(spark, p, "__bucket", replacement)
+      KeyedState.replacePartitionsAtomic(replacement, p, "__bucket", 4, 1L)
     } finally spark.conf.unset("spark.graft.test.failpoint")
     // the crashed bucket's rows exist under __old, never nowhere
     assert(new java.io.File(p + "__compact_old").exists())
     KeyedState.repairPartitions(spark, p)
     assert(spark.read.parquet(p).orderBy("k", "__bucket").collect().toSeq
       == before, "repair must restore the pre-swap content exactly")
-    // a clean re-run completes the replacement
-    KeyedState.swapPartitions(spark, p, "__bucket", replacement)
-    assert(spark.read.parquet(p).select("k").collect().map(_.getLong(0)).toSet
-      == (100L until 140L).toSet)
+    // the replay resumes the fenced swap and completes the replacement
+    KeyedState.replacePartitionsAtomic(replacement, p, "__bucket", 4, 1L)
+    assert(rowsOf(p) == (100L until 140L).toSet)
     assert(!new java.io.File(p + "__compact_old").exists())
-    assert(!new java.io.File(p + "__compact_tmp").exists())
+    assert(!new java.io.File(p + "__staged_b1").exists())
   }
 
   test("replacePartitionsAtomic: a fenced staged write resumes the swap " +

@@ -104,6 +104,27 @@ class OpsSpec extends AnyFunSuite {
     assert(merged == Set(("k1", 1), ("k2", 20)))
   }
 
+  test("upsert modes keep the lowest duplicate incoming row without a tieBreak") {
+    val existing = Seq(("k0", 0, "old")).toDF("k", "n", "tag")
+      .withColumn("m", org.apache.spark.sql.functions.map($"tag", $"n"))
+    // 40 keys with four rows each; the lowest, (1, "a"), comes last. The
+    // map column cannot be ordered, so the tie-break skips it.
+    val rows = for (k <- 1 to 40; (n, tag) <- Seq((3, "a"), (1, "z"), (2, "a"), (1, "a")))
+      yield (s"k$k", n, tag)
+    val want = (1 to 40).map(k => (s"k$k", 1, "a")).toSet
+    def kept(df: org.apache.spark.sql.DataFrame) = df.filter($"k" =!= "k0").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
+    for (parts <- Seq(1, 3, 7)) {
+      val incoming = rows.toDF("k", "n", "tag")
+        .withColumn("m", org.apache.spark.sql.functions.map($"tag", $"n"))
+        .repartition(parts)
+      assert(kept(Upsert.discard(existing, incoming, Seq("k"))) == want, s"discard, $parts")
+      assert(kept(Upsert.update(existing, incoming, Seq("k"))) == want, s"update, $parts")
+      assert(kept(Upsert.merge(existing, incoming, Seq("k"),
+        mergeCols = Map("n" -> ((_, nu) => nu)))) == want, s"merge, $parts")
+    }
+  }
+
   test("noDuplicates: multi-group blanking, shared columns survive via any group") {
     // Reference example (Row.groovy:11-34): groups A=[a->[a,b]], B=[b->[b,c]]
     // rows [a:1,b:2,c:3], [a:1,b:3,c:3], [a:1,b:3,c:4]

@@ -54,7 +54,7 @@ class UpsertSinkSpec extends AnyFunSuite {
     // fragmentation trigger (tasks x buckets files without the repartition).
     val b1 = spark.range(500).repartition(16)
       .select(col("id").as("k"), lit("v1").as("v"))
-    Upsert.upsertKeyedParquet(b1, dir, Seq("k"), nBuckets)
+    Upsert.upsertKeyedParquet(b1, dir, Seq("k"), nBuckets, batchId = 0L)
     val f1 = filesPerBucket(dir)
     assert(f1.nonEmpty && f1.values.forall(_ == 1),
       s"expected exactly 1 file per bucket after batch 1, got $f1")
@@ -63,7 +63,7 @@ class UpsertSinkSpec extends AnyFunSuite {
     val b2 = spark.range(250).select(col("id").as("k"), lit("v2").as("v"))
       .union(spark.range(500, 600).select(col("id").as("k"), lit("v2").as("v")))
       .repartition(16)
-    Upsert.upsertKeyedParquet(b2, dir, Seq("k"), nBuckets)
+    Upsert.upsertKeyedParquet(b2, dir, Seq("k"), nBuckets, batchId = 1L)
     val f2 = filesPerBucket(dir)
     assert(f2.values.forall(_ == 1),
       s"expected exactly 1 file per bucket after batch 2, got $f2")
@@ -85,7 +85,7 @@ class UpsertSinkSpec extends AnyFunSuite {
     val dir = tempDir().resolve("stamped").toString
     KeyedState.stampParams(spark, dir, Map("nBuckets" -> 8))
     val b1 = spark.range(100).select(col("id").as("k"), lit("v").as("v"))
-    Upsert.upsertKeyedParquet(b1, dir, Seq("k"), nBuckets = 8)
+    Upsert.upsertKeyedParquet(b1, dir, Seq("k"), nBuckets = 8, batchId = 0L)
     assert(Files.exists(Paths.get(dir, "_PARAMS")),
       "_PARAMS must survive the first (fresh-sink) batch write")
     // the drift protection must still hold after data landed
@@ -104,8 +104,9 @@ class UpsertSinkSpec extends AnyFunSuite {
     // hasData stays false, the replay takes the fresh path again, and
     // FileOutputCommitter's commitJob merges ALL committed task dirs under
     // the shared `_temporary/0` — publishing the crashed attempt's partial
-    // rows next to the replayed batch's. freshAppend must drop the stale
-    // attempt dir first.
+    // rows next to the replayed batch's. The fresh write must never commit
+    // the stale attempt dir (it stages into a sibling and swaps the
+    // buckets in).
     val base = tempDir()
     val dir = base.resolve("sink").toString
     // forge the crashed attempt: a real parquet file holding a CONFLICTING
@@ -125,7 +126,7 @@ class UpsertSinkSpec extends AnyFunSuite {
     Files.copy(staleSrc, taskDir.resolve(staleSrc.getFileName))
 
     val batch = spark.range(100).select(col("id").as("k"), lit("live").as("v"))
-    Upsert.upsertKeyedParquet(batch, dir, Seq("k"), nBuckets = 8)
+    Upsert.upsertKeyedParquet(batch, dir, Seq("k"), nBuckets = 8, batchId = 0L)
     val got = Upsert.readKeyedParquet(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     assert(got.length == 100, s"expected 100 rows, got ${got.length} — " +
@@ -137,14 +138,14 @@ class UpsertSinkSpec extends AnyFunSuite {
     val dir = tempDir().resolve("once").toString
     // warm the sink
     val b0 = spark.range(50).select(col("id").as("k"), lit(0L).as("v"))
-    Upsert.upsertKeyedParquet(b0, dir, Seq("k"), nBuckets = 8)
+    Upsert.upsertKeyedParquet(b0, dir, Seq("k"), nBuckets = 8, batchId = 0L)
     // batch whose plan counts its own row evaluations; nondeterministic so
     // Catalyst neither collapses nor re-derives it across plan fragments
     val execs = spark.sparkContext.longAccumulator("upsert-plan-execs")
     val counted = udf { (k: Long) => execs.add(1L); k }.asNondeterministic()
     val b1 = spark.range(30)
       .select(counted(col("id")).as("k"), lit(1L).as("v"))
-    Upsert.upsertKeyedParquet(b1, dir, Seq("k"), nBuckets = 8)
+    Upsert.upsertKeyedParquet(b1, dir, Seq("k"), nBuckets = 8, batchId = 1L)
     assert(execs.value == 30L,
       s"batch plan row evaluations: expected 30 (one execution), got " +
         s"${execs.value} — the warm path re-executed the micro-batch plan")
@@ -156,100 +157,23 @@ class UpsertSinkSpec extends AnyFunSuite {
   test("warm-sink merge (staged arm) executes the batch plan exactly " +
       "once per batch") {
     val dir = tempDir().resolve("merge-once").toString
-    // pin the staged arm: the exactly-once-execution guarantee is ITS
-    // contract (auto also starts staged, but the pin keeps this spec
-    // meaningful whatever the size estimator decides)
-    spark.conf.set("spark.graft.mergeStaging", "always")
-    try {
-      val mergeCols = Map[String, (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column](
-        "n" -> ((old, nw) => old + nw))
-      val b0 = Seq(("a", 1L), ("b", 2L)).toDF("k", "n")
-      Upsert.mergeKeyedParquet(b0, dir, Seq("k"), mergeCols, nBuckets = 4, batchId = 0L)
-      val execs = spark.sparkContext.longAccumulator("merge-plan-execs")
-      val counted = udf { (k: String) => execs.add(1L); k }.asNondeterministic()
-      val b1 = Seq(("a", 10L), ("c", 5L)).toDF("k0", "n")
-        .select(counted(col("k0")).as("k"), col("n"))
-      Upsert.mergeKeyedParquet(b1, dir, Seq("k"), mergeCols, nBuckets = 4, batchId = 1L)
-      assert(execs.value == 2L,
-        s"batch plan row evaluations: expected 2 (one execution), got " +
-          s"${execs.value} — the warm merge path re-executed the micro-batch plan")
-      val got = Upsert.readKeyedParquet(spark, dir)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-      assert(got == Map("a" -> 11L, "b" -> 2L, "c" -> 5L))
-      // the staged batch sibling is cleaned up after publication
-      assert(!Files.exists(Paths.get(dir + "__batch_b1")))
-    } finally spark.conf.unset("spark.graft.mergeStaging")
-  }
-
-  test("warm-sink merge (direct arm) trades a second plan execution for " +
-      "no staging roundtrip, same merged state") {
-    val dir = tempDir().resolve("merge-direct").toString
-    spark.conf.set("spark.graft.mergeStaging", "direct")
-    try {
-      val mergeCols = Map[String, (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column](
-        "n" -> ((old, nw) => old + nw))
-      val b0 = Seq(("a", 1L), ("b", 2L)).toDF("k", "n")
-      Upsert.mergeKeyedParquet(b0, dir, Seq("k"), mergeCols, nBuckets = 4, batchId = 0L)
-      val execs = spark.sparkContext.longAccumulator("merge-direct-execs")
-      // deterministic CONTENT (the direct arm's documented contract) but
-      // still counting evaluations per execution
-      val counted = udf { (k: String) => execs.add(1L); k }.asNondeterministic()
-      val b1 = Seq(("a", 10L), ("c", 5L)).toDF("k0", "n")
-        .select(counted(col("k0")).as("k"), col("n"))
-      Upsert.mergeKeyedParquet(b1, dir, Seq("k"), mergeCols, nBuckets = 4, batchId = 1L)
-      assert(execs.value == 4L,
-        s"direct arm: expected 4 evaluations (discovery + merge write), " +
-          s"got ${execs.value}")
-      val got = Upsert.readKeyedParquet(spark, dir)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-      assert(got == Map("a" -> 11L, "b" -> 2L, "c" -> 5L))
-      // the direct arm never stages the batch sibling
-      assert(!Files.exists(Paths.get(dir + "__batch_b1")))
-    } finally spark.conf.unset("spark.graft.mergeStaging")
-  }
-
-  test("warm-sink merge auto mode flips to direct when the measured batch " +
-      "output outweighs the touched live state, and refreshes on the " +
-      "probe cadence") {
-    val dir = tempDir().resolve("merge-auto").toString
-    try {
-      val mergeCols = Map[String, (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column](
-        "n" -> ((old, nw) => old + nw))
-      // tiny live state
-      val b0 = Seq(("a", 1L), ("b", 2L)).toDF("k", "n")
-      Upsert.mergeKeyedParquet(b0, dir, Seq("k"), mergeCols, nBuckets = 4, batchId = 0L)
-      // batch 1 (auto, no stats yet): STAGED — and its staged output
-      // (300 fat keys) measures far larger than the touched live bytes
-      def fat(tag: String) = spark.range(300)
-        .select(concat(lit(tag), col("id").cast("string"),
-          lit("x" * 200)).as("k"), lit(1L).as("n"))
-      Upsert.mergeKeyedParquet(fat("p"), dir, Seq("k"), mergeCols,
-        nBuckets = 4, batchId = 1L)
-      // batch 2: stats say staged ≥ live → DIRECT (no __batch_b2 sibling
-      // ever exists; the staged arm would create then drop it, so assert
-      // via the accumulator instead)
-      val execs = spark.sparkContext.longAccumulator("merge-auto-execs")
-      val counted = udf { (k: String) => execs.add(1L); k }.asNondeterministic()
-      val b2 = Seq(("a", 10L)).toDF("k0", "n")
-        .select(counted(col("k0")).as("k"), col("n"))
-      Upsert.mergeKeyedParquet(b2, dir, Seq("k"), mergeCols, nBuckets = 4, batchId = 2L)
-      assert(execs.value == 2L,
-        s"auto mode should have chosen the direct arm (2 executions of " +
-          s"the 1-row plan); got ${execs.value} evaluations")
-      // batch 8 lands ON the probe cadence (8 % 8 == 0) → STAGED refresh
-      val execs8 = spark.sparkContext.longAccumulator("merge-auto-execs8")
-      val counted8 = udf { (k: String) => execs8.add(1L); k }.asNondeterministic()
-      val b8 = Seq(("b", 5L)).toDF("k0", "n")
-        .select(counted8(col("k0")).as("k"), col("n"))
-      Upsert.mergeKeyedParquet(b8, dir, Seq("k"), mergeCols, nBuckets = 4, batchId = 8L)
-      assert(execs8.value == 1L,
-        s"probe-cadence batch should run the staged arm (1 execution); " +
-          s"got ${execs8.value}")
-      val got = Upsert.readKeyedParquet(spark, dir)
-        .collect().collect { case r if r.getString(0).length < 5 =>
-          (r.getString(0), r.getLong(1)) }.toMap
-      assert(got == Map("a" -> 11L, "b" -> 7L))
-    } finally spark.conf.unset("spark.graft.mergeStaging")
+    val mergeCols = Map[String, (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column](
+      "n" -> ((old, nw) => old + nw))
+    val b0 = Seq(("a", 1L), ("b", 2L)).toDF("k", "n")
+    Upsert.mergeKeyedParquet(b0, dir, Seq("k"), mergeCols, nBuckets = 4, batchId = 0L)
+    val execs = spark.sparkContext.longAccumulator("merge-plan-execs")
+    val counted = udf { (k: String) => execs.add(1L); k }.asNondeterministic()
+    val b1 = Seq(("a", 10L), ("c", 5L)).toDF("k0", "n")
+      .select(counted(col("k0")).as("k"), col("n"))
+    Upsert.mergeKeyedParquet(b1, dir, Seq("k"), mergeCols, nBuckets = 4, batchId = 1L)
+    assert(execs.value == 2L,
+      s"batch plan row evaluations: expected 2 (one execution), got " +
+        s"${execs.value} — the warm merge path re-executed the micro-batch plan")
+    val got = Upsert.readKeyedParquet(spark, dir)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    assert(got == Map("a" -> 11L, "b" -> 2L, "c" -> 5L))
+    // the staged batch sibling is cleaned up after publication
+    assert(!Files.exists(Paths.get(dir + "__batch_b1")))
   }
 
   test("mergeKeyedParquet: accumulate semantics, one file per bucket") {

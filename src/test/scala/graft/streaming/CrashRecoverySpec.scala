@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Curation, Dedup, Failpoint, Similarity}
+import graft.ops.{Curation, Dedup, Failpoint, Similarity, Upsert}
 
 /** Kill-and-restart integration probes for the keyed streaming sinks.
   *
@@ -208,32 +208,81 @@ class CrashRecoverySpec extends AnyFunSuite {
     assert(!new java.io.File(s"$base/state/pairs__compact_old").exists())
   }
 
-  test("replace-by-key dedup sink killed MID-SWAP (a bucket preserved " +
-      "under __old, new content not yet in): restart heals and converges") {
-    val base = graft.TestScratch.dir("graft-crash-exact")
-    docs.repartition(3).write.mode("overwrite").parquet(s"$base/docs.parquet")
-    def run(tag: String) = Dedup.streamingExactGroupsUpdate(spark,
+  /** The replace-by-key dedup sink over `docs` in three single-file
+    * micro-batches: a stateful UPDATE-mode aggregate, so every replayed
+    * batch must still commit its state stores. */
+  private def exactGroupsRun(base: String, tag: String) =
+    Dedup.streamingExactGroupsUpdate(spark,
         s"$base/docs.parquet", "*.parquet", "doc_id", "text",
         sinkDir = s"$base/sink$tag", checkpointDir = s"$base/ckpt$tag",
         nBuckets = 4, maxFilesPerTrigger = 1)
       .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
-    val golden = run("_golden")
+
+  test("replace-by-key dedup sink killed MID-SWAP (a bucket preserved " +
+      "under __old, new content not yet in): restart heals and converges") {
+    val base = graft.TestScratch.dir("graft-crash-exact")
+    docs.repartition(3).write.mode("overwrite").parquet(s"$base/docs.parquet")
+    val golden = exactGroupsRun(base, "_golden")
     assert(golden.nonEmpty)
-    // batch 0 writes the fresh sink directly; the first SWAP (batch 1+)
+    // batch 0 fills the fresh sink; the first warm batch's swap (batch 1)
     // crashes between preserving a live bucket and renaming the staged
     // one in — the exact window where Spark's dynamic partition
-    // overwrite loses the bucket outright (swapPartitions' failpoint
-    // key is batch-independent: 0)
-    spark.conf.set("spark.graft.test.failpoint", "swap_mid_bucket:0")
-    crashes(run(""))
+    // overwrite loses the bucket outright
+    spark.conf.set("spark.graft.test.failpoint", "replace_mid_swap:1")
+    crashes(exactGroupsRun(base, ""))
     // the preserved copy must exist — the crashed bucket's rows are
     // never "nowhere"
     assert(new java.io.File(s"$base/sink__compact_old").exists(),
       "mid-swap crash must leave the preserved bucket copy")
-    // restart: repair heals, the replayed batch re-merges (replace
-    // semantics are replay-idempotent), results converge
-    assert(run("") == golden)
+    // restart: repair heals, the replayed batch resumes its fenced swap,
+    // results converge
+    assert(exactGroupsRun(base, "") == golden)
     assert(!new java.io.File(s"$base/sink__compact_old").exists())
+  }
+
+  test("replace-by-key dedup sink killed after its combined write is " +
+      "fenced, before any swap: restart resumes the swap, and a call " +
+      "with a published batch id runs no Spark job") {
+    val base = graft.TestScratch.dir("graft-crash-exact-fence")
+    docs.repartition(3).write.mode("overwrite").parquet(s"$base/docs.parquet")
+    val golden = exactGroupsRun(base, "_golden")
+    assert(golden.nonEmpty)
+    // batch 1's combined buckets are staged + fenced, nothing swapped,
+    // and Structured Streaming has not committed the batch
+    spark.conf.set("spark.graft.test.failpoint", "replace_post_fence:1")
+    crashes(exactGroupsRun(base, ""))
+    assert(new java.io.File(s"$base/sink__staged_b1/_FENCE").exists(),
+      "the injected crash must leave a fenced staged write")
+    assert(exactGroupsRun(base, "") == golden)
+    assert(!new java.io.File(base).listFiles().map(_.getName)
+      .exists(n => n.contains("__staged_b") || n.contains("__batch_b")))
+    // batch 1 is published: calling the sink with its id again (a replay
+    // after a lost checkpoint commit) must be a no-op that runs no job,
+    // whatever frame it is handed
+    val sink = s"$base/sink"
+    def contents = Upsert.readKeyedParquet(spark, sink).collect().toSet
+    val before = contents
+    val replay = Seq(("not-a-fingerprint", 9L, 9L))
+      .toDF("fingerprint", "n_docs", "keep_id")
+    val jobs = graft.JobCount.during(spark) {
+      Upsert.upsertKeyedParquet(replay, sink, Seq("fingerprint"),
+        nBuckets = 4, batchId = 1L)
+    }
+    assert(jobs.isEmpty, s"a published batch ran ${jobs.size} job(s): $jobs")
+    assert(contents == before)
+  }
+
+  test("replace-by-key dedup sink killed after its batch staging is " +
+      "fenced: restart reuses the staging and converges") {
+    val base = graft.TestScratch.dir("graft-crash-exact-batchstage")
+    docs.repartition(3).write.mode("overwrite").parquet(s"$base/docs.parquet")
+    val golden = exactGroupsRun(base, "_golden")
+    spark.conf.set("spark.graft.test.failpoint", "batch_stage_post_fence:1")
+    crashes(exactGroupsRun(base, ""))
+    assert(new java.io.File(s"$base/sink__batch_b1/_FENCE").exists(),
+      "the injected crash must leave a fenced staged batch")
+    assert(exactGroupsRun(base, "") == golden)
+    assert(!new java.io.File(s"$base/sink__batch_b1").exists())
   }
 
   private def assembleRows(base: String): Unit =

@@ -814,6 +814,9 @@ object Curation {
     * batch collect); per-batch work is batch-sized + touched buckets,
     * never sink-sized. Takes a pre-built streaming frame so callers
     * compose source specifics (schemas, nanos timestamps, file triggers).
+    * Replay-safe like [[streamingContaminationBlocklistUpdate]]: the
+    * merge sink's `__pub/b<id>` witness is the only fence, so `sinkDir`
+    * belongs to ONE `checkpointDir`.
     */
   def streamingAssembleSequences(
       stream: DataFrame,
@@ -837,20 +840,19 @@ object Curation {
       val q = stream.writeStream
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // The merge sink accumulates, so a checkpoint-recovery replay of
-          // an already-applied batch would concatenate its elements twice.
-          Upsert.applyBatchOnce(spark, s"$sinkDir/_applied", batchId) {
-            val agg = batch.groupBy(col(keyCol))
-              .agg(sort_array(collect_list(struct(col(orderCol).as("o"),
-                col(tieCol).as("t"), col(valueCol).cast("string").as("v"))))
-                .as("items"))
-            Upsert.mergeKeyedParquet(agg, sinkDir, Seq(keyCol),
-              Map("items" -> ((old: Column, nw: Column) =>
-                array_sort(concat(old, nw)))), nBuckets, batchId)
-          }
+          // The merge sink accumulates; its `__pub` witness skips a
+          // checkpoint-recovery replay of an already-published batch,
+          // which would otherwise concatenate its elements twice.
+          val agg = batch.groupBy(col(keyCol))
+            .agg(sort_array(collect_list(struct(col(orderCol).as("o"),
+              col(tieCol).as("t"), col(valueCol).cast("string").as("v"))))
+              .as("items"))
+          Upsert.mergeKeyedParquet(agg, sinkDir, Seq(keyCol),
+            Map("items" -> ((old: Column, nw: Column) =>
+              array_sort(concat(old, nw)))), nBuckets, batchId)
           // Injected-crash point (test-only, see [[graft.ops.Failpoint]]):
-          // merge applied + fence marker written, checkpoint commit not —
-          // the replayed batch must be skipped or each key's items
+          // merge published with its witness, checkpoint commit not — the
+          // replayed batch must be skipped or each key's items
           // concatenate twice.
           Failpoint.hit(spark, "assemble_post_fence", batchId)
           ()

@@ -800,9 +800,12 @@ object Dedup {
     * `compactAfterFiles` files is rewritten in place (amortized: at one
     * file/bucket/batch, ≤ one index rewrite per `compactAfterFiles`
     * batches), so the sink's file listing stays O(nStateBuckets).
-    * Both stores are append-only in CONTENT (docs never update); the
-    * pairs sink is a plain append whose replay is fenced by
-    * [[Upsert.applyBatchOnce]].
+    * Both stores are append-only in CONTENT (docs never update), and all
+    * three writes are KeyedState's staged appends: each skips a replayed
+    * batch its `__pub` witness marks published, so a checkpoint-recovery
+    * replay — of a fully or a partially applied batch — appends nothing
+    * twice. The witnesses name this checkpoint's batch ids: `stateDir`
+    * belongs to ONE `checkpointDir`.
     */
   def streamingMinHashNearDuplicates(
       spark: org.apache.spark.sql.SparkSession,
@@ -849,12 +852,6 @@ object Dedup {
     val q = tuned.parquet(dir).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-       // The appends are non-idempotent; the OUTER marker skips a
-       // checkpoint-recovery replay of a fully-applied batch, and each
-       // individual write below carries its own marker so a PARTIALLY
-       // applied batch replays without double-appending (see the
-       // per-write comment).
-       graft.ops.Upsert.applyBatchOnce(spark, s"$stateDir/_applied", batchId) {
         // Heal any compaction swap a previous run's crash interrupted
         // BEFORE this batch probes the stores (one `exists` each when
         // clean — see KeyedState's crash-safety protocol).
@@ -890,8 +887,8 @@ object Dedup {
             .select("id_new", "id_other"))
         else None
         // The id inequality is belt-and-braces for the self-pair case: if
-        // the band index somehow already holds this batch's bands (partial
-        // replay past the marker guard), the cross probe would pair each
+        // the band index already holds this batch's bands (a replay after
+        // the band append published), the cross probe would pair each
         // doc with itself at jaccard 1.0.
         val candRaw = cross.fold(within)(within.unionByName(_))
           .filter(col("id_new") =!= col("id_other"))
@@ -909,8 +906,8 @@ object Dedup {
           cand.select(stateBucket(Seq("id_other"), nStateBuckets)))
         else Nil
         // Anti-join the store against the batch's own ids: normally a
-        // no-op (the store holds only PRIOR batches), but on a partial-
-        // batch replay whose shingle append already landed, the batch's
+        // no-op (the store holds only PRIOR batches), but on a replay
+        // whose shingle append already landed, the batch's
         // docs would otherwise appear on BOTH sides of the union and
         // every candidate row would verify twice.
         val others = if (shBuckets.nonEmpty)
@@ -930,7 +927,7 @@ object Dedup {
           // batch pair surfaces both as (a,b) from the self-join and as
           // (b,a) from the cross probe, and only HERE — after the
           // least/greatest normalization — do the two collapse. Without
-          // this a partial replay would append duplicate pairs rows.
+          // this a replay would append duplicate pairs rows.
           .distinct()
         // The verified-pairs plan has exactly ONE consumer (the staged
         // append below — the append's old pre-write isEmpty guard is
@@ -956,80 +953,70 @@ object Dedup {
         // fires until some bucket accumulates compactAfterFiles files.)
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
-        // Each write carries its OWN replay marker (inside the outer
-        // whole-batch marker): a crash after SOME writes completed means
-        // the whole-batch marker was never written, so the batch replays
-        // — candidate generation is re-derivation (the store anti-join,
-        // id inequality, and post-normalization distinct above make the
-        // replayed pairs identical even against a half-appended index) —
-        // and the per-write markers skip every append that already
-        // landed, so nothing double-appends. A crash INSIDE one write's
-        // own job commit is closed too: every append here goes through
-        // KeyedState's staged-swap protocol (write to a fenced sibling
-        // dir, publish by per-file atomic renames), so a torn commit
-        // never lands partial files in the live tree.
+        // Replay: a crash after SOME (or all) writes published replays
+        // the whole batch — candidate generation is re-derivation (the
+        // store anti-join, id inequality, and post-normalization distinct
+        // above make the replayed pairs identical even against a
+        // half-appended index) — and each staged append skips itself when
+        // its `__pub` witness shows it already published, so nothing
+        // double-appends. A crash INSIDE one write's own job commit is
+        // closed too: the staged append writes to a fenced sibling dir and
+        // publishes by per-file atomic renames, so a torn commit never
+        // lands partial files in the live tree.
         def pairsWrite(): Unit =
-          // coalesce(1): the verified-pairs frame is small (candidates
-          // that survived the jaccard cut) but inherits the verify
-          // plan's partitioning — without it every batch appends up to
+          // one file: the verified-pairs frame is small (candidates that
+          // survived the jaccard cut) but inherits the verify plan's
+          // partitioning — without it every batch appends up to
           // shuffle-partitions files; with it, one.
-          try Upsert.applyBatchOnce(spark, s"$stateDir/_pairs_w", batchId) {
-            KeyedState.appendFlatAtomic(verified, pairsDir, 1, batchId)
-          } finally Checkpoints.release(cand)
-        // published bucket values per store — the compaction-candidate
-        // lists (only a bucket that just gained a file can newly cross
-        // the compaction threshold; sweeping ALL nStateBuckets dirs per
-        // batch was 2×nStateBuckets listings of mostly-idle dirs). On a
-        // replay skip the list stays Nil and compaction waits for the
-        // next real append — opportunistic by the documented contract.
-        val pubBanded =
-          new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
-        val pubShingles =
-          new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
-        def bandedWrite(): Unit =
-          Upsert.applyBatchOnce(spark, s"$stateDir/_banded_w", batchId) {
-            pubBanded.set(appendStateBuckets(banded, bandedDir,
-              Seq("band", "band_sig"), nStateBuckets, batchId))
-          }
-        def shinglesWrite(): Unit =
-          Upsert.applyBatchOnce(spark, s"$stateDir/_shingles_w", batchId) {
-            pubShingles.set(appendStateBuckets(sets, shinglesDir, Seq(idCol),
-              nStateBuckets, batchId))
-          }
+          try KeyedState.appendFlatAtomic(verified, pairsDir, 1, batchId)
+          finally Checkpoints.release(cand)
+        // Each index append returns the bucket values it published — the
+        // compaction-candidate list (only a bucket that just gained a file
+        // can newly cross the compaction threshold; sweeping ALL
+        // nStateBuckets dirs per batch was 2×nStateBuckets listings of
+        // mostly-idle dirs). On a replay skip the list is Nil and
+        // compaction waits for the next real append — opportunistic by
+        // the documented contract.
+        def bandedWrite(): Seq[String] =
+          appendStateBuckets(banded, bandedDir, Seq("band", "band_sig"),
+            nStateBuckets, batchId)
+        def shinglesWrite(): Seq[String] =
+          appendStateBuckets(sets, shinglesDir, Seq(idCol), nStateBuckets,
+            batchId)
         // Injected-crash point "minhash_mid_writes" (test-only, see
-        // [[Failpoint]]): the index appends land WITH their markers, the
-        // pairs append does not — the partial-batch crash the replay-safe
-        // regeneration above exists for, produced through a genuinely
-        // failing query rather than a hand-edited state dir. Writes run
-        // sequentially here so the crash state is deterministic; the
-        // production path below is untouched.
+        // [[Failpoint]]): the index appends publish WITH their witnesses,
+        // the pairs append does not — the partial-batch crash the
+        // replay-safe regeneration above exists for, produced through a
+        // genuinely failing query rather than a hand-edited state dir.
+        // Writes run sequentially here so the crash state is
+        // deterministic; the production path below is untouched.
         if (Failpoint.armed(spark, "minhash_mid_writes", batchId)) {
           bandedWrite(); shinglesWrite()
           Checkpoints.release(cand)
           Failpoint.hit(spark, "minhash_mid_writes", batchId)
         }
         pairsWrite() // sequential: materializes the sets/banded caches
-        val writes = Seq(Future(bandedWrite()), Future(shinglesWrite()))
-        writes.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-        // Compaction runs OUTSIDE the replay markers: it is idempotent
-        // and content-preserving, so re-running it on replay is free,
-        // whereas a crash inside a marker-guarded compaction would
-        // reopen the append's fence and double-apply the batch. Crash
-        // safety of the rewrites themselves (and healing of interrupted
-        // swaps) lives in KeyedState's staged-swap + repair protocol.
+        val (pubBanded, pubShingles) = {
+          val b = Future(bandedWrite())
+          val s = Future(shinglesWrite())
+          import scala.concurrent.duration.Duration.Inf
+          (Await.result(b, Inf), Await.result(s, Inf))
+        }
+        // Compaction runs AFTER the appends published: it is idempotent
+        // and content-preserving, so re-running it on replay is free.
+        // Crash safety of the rewrites themselves (and healing of
+        // interrupted swaps) lives in KeyedState's staged-swap + repair
+        // protocol.
         KeyedState.compactFlat(spark, pairsDir, compactAfterFiles)
-        compactStateBuckets(spark, bandedDir,
-          pubBanded.get, compactAfterFiles)
-        compactStateBuckets(spark, shinglesDir,
-          pubShingles.get, compactAfterFiles)
+        compactStateBuckets(spark, bandedDir, pubBanded, compactAfterFiles)
+        compactStateBuckets(spark, shinglesDir, pubShingles,
+          compactAfterFiles)
         Seq(sets, sigs, banded).foreach(Checkpoints.release)
         // Injected-crash point "minhash_post_writes" (test-only): every
-        // state write landed with its marker, but the whole-batch marker
-        // (written when this block returns) and the checkpoint commit
-        // have not — on restart Spark replays the batch and every
-        // per-write fence must skip its already-landed append.
+        // state write published with its witness, but the checkpoint
+        // commit has not — on restart Spark replays the batch and every
+        // staged append must skip its already-published write.
         Failpoint.hit(spark, "minhash_post_writes", batchId)
-       }
         ()
       }
       .start()

@@ -5,11 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Test-only crash injection for the streaming keyed sinks' recovery
   * probes.
   *
-  * The sinks' exactly-once story rests on replay fences
-  * ([[Upsert.applyBatchOnce]] markers) plus replay-safe regeneration, and
-  * the riskiest window is a crash AFTER the state writes land but BEFORE
-  * Structured Streaming commits the micro-batch to its checkpoint — on
-  * restart Spark re-delivers the batch and the fences must absorb it.
+  * The sinks' exactly-once story rests on one replay fence (the staged
+  * writers' `__pub/b<id>` publication witnesses, [[KeyedState]]) plus
+  * replay-safe regeneration, and the riskiest window is a crash AFTER the
+  * state writes land but BEFORE Structured Streaming commits the
+  * micro-batch to its checkpoint — on restart Spark re-delivers the batch
+  * and the witnesses must absorb it.
   * Simulating that window by hand-editing state dirs only tests the
   * simulation; these failpoints instead throw INSIDE `foreachBatch`, so
   * the query genuinely fails mid-stream and the restart genuinely runs

@@ -25,9 +25,16 @@ import org.apache.spark.sql.functions._
   * candidate partition), never data reads; nothing fires until some
   * partition crosses the threshold.
   *
+  * REPLAY SAFETY: every streaming write goes through one of the fenced
+  * staged writers below ([[appendPartitionedAtomic]], [[appendFlatAtomic]],
+  * [[replacePartitionsAtomic]]). Each skips a batch whose
+  * `<path>__pub/b<id>` witness exists, so a checkpoint-recovery replay
+  * of a published batch writes nothing; the witness is the one replay
+  * fence, and callers carry no markers of their own.
+  *
   * CRASH SAFETY: compaction must never be the operation that loses
-  * accumulated state — the appends it rewrites are fenced by replay
-  * markers, so a lost row cannot be re-derived. Both compactors
+  * accumulated state — the appends it rewrites are fenced by the
+  * witnesses, so a lost row cannot be re-derived. Both compactors
   * therefore stage the rewrite into a SIBLING dir and swap with renames,
   * keeping a restorable copy of the original until the swap completes;
   * [[repairPartitions]]/[[repairFlat]] heal any interruption (called at
@@ -141,26 +148,14 @@ object KeyedState {
   def bucketColumn(keys: Seq[String], nBuckets: Int): Column =
     pmod(xxhash64(keys.map(col): _*), lit(nBuckets)).cast("int")
 
-  /** Append into `path/<partCol>=<v>/` dirs, one file per touched
-    * partition value. Empty frames are skipped: a zero-row partitioned
-    * write creates no files, leaving a dir the next read cannot infer a
-    * schema from. `numTasks` bounds the write's task count (each
-    * partition value still lands wholly in one task, so files per batch
-    * = touched partition values). */
-  def appendPartitioned(df: DataFrame, path: String, partCol: String,
-      numTasks: Int): Unit =
-    if (!df.isEmpty)
-      df.repartition(numTasks, col(partCol))
-        .write.mode("append").partitionBy(partCol).parquet(path)
-
   // ---- staged-swap batch appends ---------------------------------------
   //
-  // A bare mode("append") under an [[Upsert.applyBatchOnce]] fence leaves
-  // one documented crash window: a crash INSIDE the parquet job commit
-  // (FileOutputCommitter moves task outputs into the live dir file by
-  // file) lands SOME of the batch's files without the replay marker, and
-  // the replayed batch then appends a full second copy next to the
-  // partial first. The staged variants close it: the batch writes to a
+  // A bare mode("append") cannot be replayed: a crash INSIDE the parquet
+  // job commit (FileOutputCommitter moves task outputs into the live dir
+  // file by file) lands SOME of the batch's files, and the replayed batch
+  // then appends a full second copy next to the partial first; a crash
+  // after the commit replays a full second copy outright. The staged
+  // appends close both: the batch writes to a
   // SIBLING staged dir (a crash inside THAT job commit touches only the
   // staged dir, which the replay deletes), a `_FENCE` file marks the
   // staged write complete, publication moves each staged file into the
@@ -177,19 +172,17 @@ object KeyedState {
   //   - crash after publication, before the `__pub` marker: replay finds
   //     a fenced staged dir with no data files left, moves nothing,
   //     writes the marker, cleans up;
-  //   - crash after the marker, before the staged-dir delete (or before
-  //     the caller's own replay marker): the `__pub/b<batchId>` marker
-  //     proves publication completed (it is written only after every
-  //     staged file moved), so replay just drops any staged leftovers
-  //     and returns without re-appending.
+  //   - crash after the marker (before the staged-dir delete, or any
+  //     time before Structured Streaming commits the batch): the
+  //     `__pub/b<batchId>` marker proves publication completed (it is
+  //     written only after every staged file moved), so replay just drops
+  //     any staged leftovers and returns without re-appending.
   //
-  // The marker replaces the previous witness (a recursive listing of the
-  // live tree for `b<batchId>_`-prefixed files) with ONE driver `exists`
-  // call per batch — the listing grew with accumulated state (partitions
-  // × files per partition) and was measured as part of the round-13
-  // streaming-sink bench regression. Markers accumulate one empty file
-  // per published batch (the same growth rate, and the same sibling-dir
-  // placement rationale, as applyBatchOnce's `_applied` markers).
+  // The marker is ONE driver `exists` call per batch — a listing of the
+  // live tree for `b<batchId>_`-prefixed files would grow with
+  // accumulated state (partitions × files per partition). Markers
+  // accumulate one empty file per published batch, pruned by the
+  // retention sweep below.
   //
   // Staged/marker dirs are SIBLINGS of the live root
   // (`<path>__staged_b<id>`, `<path>__pub`), never inside it — a stray
@@ -264,8 +257,8 @@ object KeyedState {
     // (old markers only — the current batch's is never at the floor)
     maybePruneMarkers(spark, path + "__pub", batchId)
     if (fs.exists(pubMarker(path, batchId))) {
-      // already fully published (crash landed after the marker, before
-      // the staged delete or the caller's replay marker)
+      // already fully published (a replay whose crash landed after the
+      // marker — before the staged delete or the checkpoint commit)
       if (fs.exists(staged)) fs.delete(staged, true)
       return Nil
     }
@@ -283,14 +276,14 @@ object KeyedState {
     publishStaged(fs, staged, live, path, batchId)
   }
 
-  /** [[appendPartitioned]] with the staged-swap protocol: atomic per
-    * batch under crashes anywhere, including inside the write's own job
-    * commit. Pair with [[Upsert.applyBatchOnce]] — the fence skips the
-    * common full-replay case cheaply; this closes the torn-commit window
-    * the fence cannot see. Returns the partition values this batch
-    * published into (the caller's compaction-candidate list, costing no
-    * extra Spark job; empty on a replay skip — compaction candidates are
-    * best-effort by design). */
+  /** Append into `path/<partCol>=<v>/` dirs under the staged-swap
+    * protocol, one file per touched partition value (`numTasks` bounds
+    * the write's task count; each value lands wholly in one task):
+    * exactly once per `batchId` under crashes anywhere, including inside
+    * the write's own job commit and after publication. Returns the
+    * partition values this batch published into (the caller's
+    * compaction-candidate list, costing no extra Spark job; empty on a
+    * replay skip — compaction candidates are best-effort by design). */
   def appendPartitionedAtomic(df: DataFrame, path: String, partCol: String,
       numTasks: Int, batchId: Long): Seq[String] =
     stagedAppend(df.sparkSession, path, batchId, "staged_post_fence") { out =>
@@ -391,17 +384,17 @@ object KeyedState {
 
   // ---- marker retention --------------------------------------------------
   //
-  // Both marker families grow one empty file per batch forever: `__pub/
-  // b<id>` publication witnesses and `_applied/batch_<id>` replay fences.
-  // Each CHECK is O(1) (`exists`), so this is not a scale-killer, but a
-  // month-long production stream accumulates millions of tiny files in
-  // those dirs. Structured Streaming's recovery contract only re-delivers
-  // the batches at or after the checkpoint's last committed batch (depth
-  // 1 in practice), so markers far below the current batch can never be
-  // consulted again. Every `markerRetention` batches the marker writers
-  // sweep their own dir, deleting markers with id ≤ batchId −
-  // markerRetention — one `listStatus` per sweep, amortized O(1) files
-  // per batch, and the dir's live size stays ≤ ~2× the retention window.
+  // The `__pub/b<id>` publication witnesses grow one empty file per batch
+  // forever. Each CHECK is O(1) (`exists`), so this is not a scale-killer,
+  // but a month-long production stream accumulates millions of tiny files
+  // in that dir. Structured Streaming's recovery contract only
+  // re-delivers the batches at or after the checkpoint's last committed
+  // batch (depth 1 in practice), so witnesses far below the current batch
+  // can never be consulted again. Every `markerRetention` batches the
+  // staged writers sweep their own `__pub` dir, deleting witnesses with
+  // id ≤ batchId − markerRetention — one `listStatus` per sweep,
+  // amortized O(1) files per batch, and the dir's live size stays ≤ ~2×
+  // the retention window.
 
   /** Batches between marker-retention sweeps (and the number of trailing
     * batches whose markers are always kept — vastly more than any replay
@@ -411,9 +404,9 @@ object KeyedState {
     spark.conf.getOption("spark.graft.markerRetentionBatches")
       .map(_.toLong).getOrElse(64L)
 
-  /** Delete per-batch markers (`b<id>` or `batch_<id>` files/dirs) in
-    * `markerDir` whose batch id is at or below `floor`. Missing dir is a
-    * no-op; non-marker names are left alone. Returns markers deleted. */
+  /** Delete per-batch `b<id>` markers in `markerDir` whose batch id is at
+    * or below `floor`. Missing dir is a no-op; non-marker names are left
+    * alone. Returns markers deleted. */
   def pruneBatchMarkers(spark: SparkSession, markerDir: String,
       floor: Long): Int = {
     val fs = fsOf(spark, markerDir)
@@ -422,10 +415,7 @@ object KeyedState {
     var n = 0
     fs.listStatus(dir).foreach { st =>
       val name = st.getPath.getName
-      val id =
-        if (name.startsWith("batch_")) name.stripPrefix("batch_")
-        else if (name.startsWith("b")) name.stripPrefix("b")
-        else ""
+      val id = if (name.startsWith("b")) name.stripPrefix("b") else ""
       if (id.nonEmpty && id.forall(_.isDigit) && id.toLong <= floor) {
         fs.delete(st.getPath, true)
         n += 1
@@ -434,7 +424,7 @@ object KeyedState {
     n
   }
 
-  /** Retention hook shared by the marker writers: every `markerRetention`
+  /** Retention hook shared by the staged writers: every `markerRetention`
     * batches, sweep `markerDir` with floor = batchId − retention. */
   private[ops] def maybePruneMarkers(spark: SparkSession, markerDir: String,
       batchId: Long): Unit = {
@@ -614,9 +604,9 @@ object KeyedState {
 
   /** Does this sink/state dir hold any DATA — a `__bucket=` partition dir
     * or a bare parquet file? Mere existence is not it: the `_PARAMS`
-    * stamp and `_applied` replay markers create the directory before any
-    * batch writes, and treating that as "data present" flips writers into
-    * their merge path against a frame schema inference cannot build. */
+    * stamp creates the directory before any batch writes, and treating
+    * that as "data present" flips writers into their merge path against a
+    * frame schema inference cannot build. */
   def hasData(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     val fs = fsOf(spark, path)
@@ -774,10 +764,9 @@ object KeyedState {
     * healed by [[repairFlat]]: before the stage swap the preserved copy
     * restores wholesale; after it the manifest says exactly which
     * renames remain, and each file exists in exactly one of the two
-    * dirs. `numFiles` is retained for signature compatibility; a tiered
-    * merge always produces one file (the generation unit). */
-  def compactFlat(spark: SparkSession, path: String, maxFiles: Int,
-      numFiles: Int = 8): Unit = {
+    * dirs. A tiered merge always produces one file (the generation
+    * unit). */
+  def compactFlat(spark: SparkSession, path: String, maxFiles: Int): Unit = {
     require(maxFiles >= 1, s"maxFiles must be >= 1, got $maxFiles")
     repairFlat(spark, path)
     val p = new Path(path)

@@ -930,8 +930,10 @@ object Similarity {
     * Sink discipline ([[KeyedState]]): each batch appends one file per
     * touched cell and any cell exceeding the file threshold is compacted
     * in place, so the per-cell listing a probe pays stays bounded across
-    * unbounded ingest; the append is fenced by [[Upsert.applyBatchOnce]]
-    * so a checkpoint-recovery replay cannot double-insert vectors.
+    * unbounded ingest; the append is KeyedState's staged append, whose
+    * `__pub` witness skips a published batch, so a checkpoint-recovery
+    * replay cannot double-insert vectors. The witnesses name this
+    * checkpoint's batch ids: `indexDir` belongs to ONE `checkpointDir`.
     */
   def streamingIvfIngest(
       spark: org.apache.spark.sql.SparkSession,
@@ -971,28 +973,23 @@ object Similarity {
         val assigned = batch.select(col(idCol), col(vecCol),
           graft.functions.NearestCentroid.assign(col(vecCol), centTable)
             .as("centroid_id"))
-        // The cell append is non-idempotent: fence checkpoint-recovery
-        // replays of an already-applied batch (else recovered batches
-        // duplicate every vector in their cells). ONLY the append sits
-        // inside the fence — compaction is idempotent and must not
-        // reopen it by crashing mid-rewrite.
-        var touched: Seq[String] = Nil
-        Upsert.applyBatchOnce(spark, s"$indexDir/_applied", batchId) {
-          // Keyed-state discipline (KeyedState): one file per touched
-          // cell per batch — the index is PROBED partition-pruned on
-          // centroid_id, so its per-cell file listing must stay bounded
-          // across batches (the compaction below). The publish reports
-          // the touched cells, so compaction candidates cost no extra
-          // Spark job (the old per-batch distinct-collect).
-          touched = KeyedState.appendPartitionedAtomic(assigned,
-            s"$indexDir/assigned", "centroid_id", parallelism(batch),
-            batchId)
-        }
+        // Keyed-state discipline (KeyedState): one file per touched cell
+        // per batch — the index is PROBED partition-pruned on
+        // centroid_id, so its per-cell file listing must stay bounded
+        // across batches (the compaction below). The cell append is
+        // non-idempotent; the staged append skips a checkpoint-recovery
+        // replay of an already-published batch (else recovered batches
+        // duplicate every vector in their cells). The publish reports the
+        // touched cells (Nil on a replay skip), so compaction candidates
+        // cost no extra Spark job.
+        val touched = KeyedState.appendPartitionedAtomic(assigned,
+          s"$indexDir/assigned", "centroid_id", parallelism(batch),
+          batchId)
         // Injected-crash point (test-only, see [[Failpoint]]): the cell
-        // append landed and its fence marker is written, but the
-        // checkpoint commit has not — on restart Spark replays this
-        // batch and the fence must skip the append (else every vector
-        // in the batch duplicates in its cell).
+        // append published with its `__pub` witness, but the checkpoint
+        // commit has not — on restart Spark replays this batch and the
+        // witness must skip the append (else every vector in the batch
+        // duplicates in its cell).
         Failpoint.hit(spark, "ivf_post_fence", batchId)
         KeyedState.compactPartitions(spark, s"$indexDir/assigned",
           "centroid_id", touched, compactAfterFiles)

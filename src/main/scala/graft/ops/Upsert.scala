@@ -136,9 +136,9 @@ object Upsert {
     *
     * NOT idempotent at the SEMANTIC level: re-merging the same batch
     * accumulates its elements into each key's state a second time.
-    * Streaming callers still wrap the call in [[applyBatchOnce]] to skip
-    * whole-batch replays cheaply; within a batch, [[writeKeyedParquet]]'s
-    * fences make a crash at ANY point replay to exactly-once.
+    * [[writeKeyedParquet]]'s fences make the replay of a `batchId` at ANY
+    * crash point — including after the batch fully published — apply it
+    * exactly once, so streaming callers need no fence of their own.
     */
   def mergeKeyedParquet(
       updates: DataFrame,
@@ -260,55 +260,12 @@ object Upsert {
   def readKeyedParquet(spark: org.apache.spark.sql.SparkSession, path: String,
       schemaIfEmpty: org.apache.spark.sql.types.StructType): DataFrame = {
     // "has data" = a partition dir or a bare parquet file (KeyedState's
-    // shared predicate): the _PARAMS stamp and _applied replay markers
-    // create the dir before any batch writes, and a data-less dir fails
-    // schema inference on read.
+    // shared predicate): the _PARAMS stamp creates the dir before any
+    // batch writes, and a data-less dir fails schema inference on read.
     KeyedState.repairPartitions(spark, path)
     if (!KeyedState.hasData(spark, path))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaIfEmpty)
     else spark.read.parquet(path).drop("__bucket")
-  }
-
-  /** Replay guard for non-idempotent `foreachBatch` sinks: run `body` only
-    * if micro-batch `batchId` has not already been applied, recording a
-    * marker file under `markerDir` afterwards. `foreachBatch` documents
-    * that a batch may be re-delivered after checkpoint recovery; replace-
-    * by-key sinks ([[upsertKeyedParquet]]) need no guard (their `__pub`
-    * witness skips a published batch, and replacing by key again lands
-    * the same rows), but append sinks and accumulate-merge sinks
-    * ([[mergeKeyedParquet]]) would double-apply the batch (duplicate
-    * appended rows / elements concatenated into each key's list twice).
-    * The marker is written after `body` completes, so a crash MID-batch
-    * still replays — the guard closes the common recovery case (batch
-    * fully applied, checkpoint commit lost). For the replay to be
-    * exactly-once under a crash INSIDE `body`'s own write commit, pair it
-    * with the staged batch writes
-    * ([[KeyedState.appendPartitionedAtomic]]/[[KeyedState.appendFlatAtomic]]
-    * for appends, [[KeyedState.replacePartitionsAtomic]] under the keyed
-    * sinks — as every streaming sink in this library does): they absorb a
-    * torn job commit AND recognize their own completed publication, so
-    * any crash point replays to the same final state.
-    *
-    * Markers and `__pub` witnesses are named by batch id, so a sink
-    * directory (and its `markerDir`) belongs to ONE streaming checkpoint:
-    * a fresh checkpoint restarts its ids at 0 and would find them already
-    * applied. Every caller pairs its `sinkDir` with its `checkpointDir`.
-    */
-  def applyBatchOnce(
-      spark: org.apache.spark.sql.SparkSession,
-      markerDir: String,
-      batchId: Long)(body: => Unit): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$markerDir/batch_$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // cadenced retention sweep: markers far enough below this batch can
-    // never be consulted again (recovery replays reach back at most one
-    // batch), but on a long-lived stream they'd accumulate one file per
-    // batch forever — see [[KeyedState.pruneBatchMarkers]]
-    KeyedState.maybePruneMarkers(spark, markerDir, batchId)
-    if (!fs.exists(marker)) {
-      body
-      fs.mkdirs(marker)
-    }
   }
 }

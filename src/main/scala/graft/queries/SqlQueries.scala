@@ -1,5 +1,7 @@
 package graft.queries
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import graft.streaming.EventsStream
 import Query.t
@@ -11,13 +13,21 @@ import SharedSql.{toks, minhashVerifiedCtes}
   */
 object SqlQueries {
 
+  /** Register the graft functions once per session: every builder below
+    * calls through them, and `GraftFunctions.register` replaces (and logs
+    * a warning for) each name it finds already registered. */
+  private def registerOnce(s: SparkSession): Unit =
+    if (!s.sessionState.tableFunctionRegistry
+        .functionExists(FunctionIdentifier("graft_pivot")))
+      graft.functions.GraftFunctions.register(s)
+
   lazy val queries: Seq[Query] = Seq(
     // The SQL table-function surface gated through DuckDB: graft_pivot
     // FROM-callable must produce exactly the q04 pivot (the builder
     // returns the Column API's logical plan; this proves it end-to-end
     // against an independent engine, not just against the Column API).
     Query("q152_sql_pivot", (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
+      registerOnce(s)
       t(s, dir, "lineitem").createOrReplaceTempView("graft_q152_lineitem")
       s.sql(
         "SELECT * FROM graft_pivot('graft_q152_lineitem', 'l_orderkey', " +
@@ -42,7 +52,7 @@ object SqlQueries {
     // DuckDB replay of the 6-gram survivor semantics (q56's oracle
     // machinery inverted to the kept rows — the q152 pattern).
     Query("q153_sql_decontaminate", (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
+      registerOnce(s)
       val docs = t(s, dir, "documents")
       docs.filter(col("doc_id") >= 25)
         .createOrReplaceTempView("graft_q153_corpus")
@@ -86,7 +96,7 @@ object SqlQueries {
     // this proves it end-to-end against the independent DuckDB replay of
     // the full shingle→minhash→band→verify chain).
     Query("q154_sql_minhash_pairs", (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
+      registerOnce(s)
       t(s, dir, "documents").createOrReplaceTempView("graft_q154_docs")
       s.sql(
         "SELECT * FROM graft_minhash_pairs('graft_q154_docs', 'doc_id', " +
@@ -103,7 +113,7 @@ object SqlQueries {
     // (first doc_id per normalized-text fingerprint), gated against the
     // DuckDB window replay.
     Query("q155_sql_exact_dedup", (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
+      registerOnce(s)
       t(s, dir, "documents").createOrReplaceTempView("graft_q155_docs")
       s.sql(
         "SELECT doc_id, text, lang, source, n_chars FROM " +
@@ -125,7 +135,7 @@ object SqlQueries {
     // oracle is the independent DuckDB replay — here q123's chained-min
     // funnel SQL verbatim).
     Query("q156_sql_funnel", (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
+      registerOnce(s)
       EventsStream.readEvents(s, s"$dir/events.parquet")
         .filter(col("event_id") < 3000)
         .createOrReplaceTempView("graft_q156_events")
@@ -159,7 +169,7 @@ object SqlQueries {
          ORDER BY step"""),
 
     Query("q157_sql_cohort", (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
+      registerOnce(s)
       EventsStream.readEvents(s, s"$dir/events.parquet")
         .filter(col("event_id") % 7 === 0)
         .createOrReplaceTempView("graft_q157_events")
@@ -182,7 +192,7 @@ object SqlQueries {
          ORDER BY cohort_week, week_offset"""),
 
     Query("q158_sql_scd2", (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
+      registerOnce(s)
       EventsStream.readEvents(s, s"$dir/events.parquet")
         .filter(col("event_type") === "view")
         .select(col("user_id"), col("ts"), col("event_id"),
@@ -217,7 +227,7 @@ object SqlQueries {
     // graft_bm25_topk is q107's plan FROM-callable — distinct query set
     // and k so this oracle is its own replay, not a q107 copy.
     Query("q159_sql_bm25_topk", (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
+      registerOnce(s)
       t(s, dir, "documents").createOrReplaceTempView("graft_q159_docs")
       s.sql(
         "SELECT CAST(query_id AS BIGINT) AS query_id, query_text " +
@@ -274,7 +284,7 @@ object SqlQueries {
     // so the oracle exercises the fusion TVF end-to-end without
     // duplicating q121's full hybrid chain.
     Query("q160_sql_rrf_fuse", (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
+      registerOnce(s)
       t(s, dir, "documents").createOrReplaceTempView("graft_q160_docs")
       s.sql(
         """SELECT query_id, doc_id, rank FROM (

@@ -621,7 +621,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(got.orderBy("id_a").select("id_a", "id_b", "jaccard").count() == 0)
   }
 
-  test("streaming minhash replay after a lost batch marker: per-write markers prevent double-appends") {
+  test("streaming minhash replay after a lost checkpoint: the __pub witnesses prevent double-appends") {
     val base = graft.TestScratch.dir("graft-mh-replay")
     docs.coalesce(1).write.mode("overwrite").parquet(s"$base/documents.parquet")
     def run() = Dedup.streamingMinHashNearDuplicates(spark, s"$base/documents.parquet",
@@ -639,12 +639,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
     val filesBefore = (fileCount(s"$base/state/pairs"),
       fileCount(s"$base/state/banded"), fileCount(s"$base/state/shingles"))
-    // Simulate the recovery gap applyBatchOnce documents: the batch fully
-    // applied but its whole-batch marker (committed last) was lost, and
-    // the checkpoint forces the batch to replay. The body re-runs — and
-    // every per-write marker must skip its already-landed append.
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(s"$base/state/_applied"))
+    // Simulate the recovery gap foreachBatch documents: the batch fully
+    // applied but its checkpoint commit was lost, so the batch replays.
+    // The body re-runs — and every staged append must find its `__pub`
+    // witness and skip its already-published write.
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$base/ckpt"))
     val second = run()
     assert(second == first) // no duplicate pairs
@@ -656,8 +654,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("streaming minhash PARTIAL replay: index applied, pairs lost — no duplicate or reversed pairs") {
-    // The crash the per-write markers exist for: the band/shingle appends
-    // committed (markers present) but the pairs write did not. The batch
+    // The partial-batch crash: the band/shingle appends published (their
+    // `__pub` witnesses present) but the pairs write did not. The batch
     // replays with its OWN docs already in the index, so the cross probe
     // re-finds every within-batch pair in BOTH orientations and the
     // shingle store holds the batch docs a second time — the
@@ -674,12 +672,11 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(first.nonEmpty)
     def storeRows(p: String) = spark.read.parquet(s"$base/state/$p").count()
     val (bandedRows, shingleRows) = (storeRows("banded"), storeRows("shingles"))
-    // simulate: pairs write lost, everything else (incl. markers) landed.
-    // "Never ran" includes the pairs publication witness (pairs__pub) —
-    // a real crash before the pairs append leaves neither the dir nor
-    // the marker, and the witness is written only after files move.
-    for (d <- Seq("ckpt", "state/_applied", "state/_pairs_w", "state/pairs",
-        "state/pairs__pub"))
+    // simulate: pairs write lost, everything else (incl. witnesses)
+    // landed. "Never ran" includes the pairs publication witness
+    // (pairs__pub) — a real crash before the pairs append leaves neither
+    // the dir nor the witness, which is written only after files move.
+    for (d <- Seq("ckpt", "state/pairs", "state/pairs__pub"))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$base/$d"))
     val second = run()
     assert(second == first) // same pairs, no reversed duplicates
@@ -687,15 +684,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(raw.count() == raw.distinct().count() && raw.count() == first.size)
     // the index appends were fenced: store row counts unchanged
     assert((storeRows("banded"), storeRows("shingles")) == ((bandedRows, shingleRows)))
-  }
-
-  test("applyBatchOnce: an already-applied batch id is skipped (foreachBatch replay guard)") {
-    val base = graft.TestScratch.dir("graft-once")
-    var runs = 0
-    Upsert.applyBatchOnce(spark, s"$base/_applied", 7L) { runs += 1 }
-    Upsert.applyBatchOnce(spark, s"$base/_applied", 7L) { runs += 1 } // replay: skipped
-    Upsert.applyBatchOnce(spark, s"$base/_applied", 8L) { runs += 1 } // new batch: runs
-    assert(runs == 2)
   }
 
   test("streaming IVF ingest ≡ batch assignment; index stays probe-ready") {

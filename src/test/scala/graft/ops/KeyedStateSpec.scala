@@ -18,11 +18,11 @@ class KeyedStateSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def writeBucketed(path: String, times: Int): Unit =
-    for (_ <- 1 to times)
-      KeyedState.appendPartitioned(
+    for (b <- 1 to times)
+      KeyedState.appendPartitionedAtomic(
         (0L until 40L).toDF("k")
           .withColumn("__bucket", KeyedState.bucketColumn(Seq("k"), 4)),
-        path, "__bucket", 4)
+        path, "__bucket", 4, b.toLong)
 
   test("compactPartitions bounds per-partition files; rows preserved") {
     val base = graft.TestScratch.dir("graft-ks-compact")
@@ -267,12 +267,12 @@ class KeyedStateSpec extends AnyFunSuite {
 
   test("replacePartitionsAtomic: a mid-swap crash is healed losslessly") {
     val p = graft.TestScratch.dir("graft-ks-swap") + "/store"
-    writeBucketed(p, 1)
+    writeBucketed(p, 1) // batch 1; the replacement is batch 2
     val before = spark.read.parquet(p).orderBy("k", "__bucket").collect().toSeq
     val replacement = batchDf(100, 140)
-    spark.conf.set("spark.graft.test.failpoint", "replace_mid_swap:1")
+    spark.conf.set("spark.graft.test.failpoint", "replace_mid_swap:2")
     try intercept[Failpoint.InjectedCrash] {
-      KeyedState.replacePartitionsAtomic(replacement, p, "__bucket", 4, 1L)
+      KeyedState.replacePartitionsAtomic(replacement, p, "__bucket", 4, 2L)
     } finally spark.conf.unset("spark.graft.test.failpoint")
     // the crashed bucket's rows exist under __old, never nowhere
     assert(new java.io.File(p + "__compact_old").exists())
@@ -280,10 +280,10 @@ class KeyedStateSpec extends AnyFunSuite {
     assert(spark.read.parquet(p).orderBy("k", "__bucket").collect().toSeq
       == before, "repair must restore the pre-swap content exactly")
     // the replay resumes the fenced swap and completes the replacement
-    KeyedState.replacePartitionsAtomic(replacement, p, "__bucket", 4, 1L)
+    KeyedState.replacePartitionsAtomic(replacement, p, "__bucket", 4, 2L)
     assert(rowsOf(p) == (100L until 140L).toSet)
     assert(!new java.io.File(p + "__compact_old").exists())
-    assert(!new java.io.File(p + "__staged_b1").exists())
+    assert(!new java.io.File(p + "__staged_b2").exists())
   }
 
   test("replacePartitionsAtomic: a fenced staged write resumes the swap " +
@@ -291,24 +291,24 @@ class KeyedStateSpec extends AnyFunSuite {
       "a post-publication replay a no-op") {
     val p = graft.TestScratch.dir("graft-ks-replace") + "/store"
     writeBucketed(p, 1)
-    val b1 = batchDf(100, 140)
-    spark.conf.set("spark.graft.test.failpoint", "replace_post_fence:1")
+    val b2 = batchDf(100, 140)
+    spark.conf.set("spark.graft.test.failpoint", "replace_post_fence:2")
     try intercept[Failpoint.InjectedCrash] {
-      KeyedState.replacePartitionsAtomic(b1, p, "__bucket", 4, 1L)
+      KeyedState.replacePartitionsAtomic(b2, p, "__bucket", 4, 2L)
     } finally spark.conf.unset("spark.graft.test.failpoint")
     // staged + fenced, nothing swapped: live still holds the old rows
-    assert(new java.io.File(p + "__staged_b1/_FENCE").exists())
+    assert(new java.io.File(p + "__staged_b2/_FENCE").exists())
     assert(rowsOf(p) == (0L until 40L).toSet)
     // replay with a DIFFERENT frame: the fence must force a pure resume
     // of the staged content (the new frame's plan is never executed)
-    KeyedState.replacePartitionsAtomic(batchDf(900, 910), p, "__bucket", 4, 1L)
+    KeyedState.replacePartitionsAtomic(batchDf(900, 910), p, "__bucket", 4, 2L)
     assert(rowsOf(p) == (100L until 140L).toSet,
       "resume must publish the FENCED content, not re-run the merge")
-    assert(new java.io.File(p + "__pub/b1").exists())
+    assert(new java.io.File(p + "__pub/b2").exists())
     // post-publication replay: marker short-circuits, content unchanged
-    KeyedState.replacePartitionsAtomic(batchDf(900, 910), p, "__bucket", 4, 1L)
+    KeyedState.replacePartitionsAtomic(batchDf(900, 910), p, "__bucket", 4, 2L)
     assert(rowsOf(p) == (100L until 140L).toSet)
-    assert(!new java.io.File(p + "__staged_b1").exists())
+    assert(!new java.io.File(p + "__staged_b2").exists())
   }
 
   test("stampParams: non-finite doubles stamp and re-verify instead of " +
@@ -365,53 +365,60 @@ class KeyedStateSpec extends AnyFunSuite {
       .count(_.getName.endsWith(".parquet")) <= 4)
   }
 
-  test("pruneBatchMarkers deletes only markers at or below the floor, " +
-      "both naming schemes, leaves non-marker names alone") {
+  test("pruneBatchMarkers deletes only b<id> markers at or below the " +
+      "floor, leaves non-marker names alone") {
     val base = graft.TestScratch.dir("graft-ks-prune")
-    val dir = java.nio.file.Paths.get(s"$base/_applied")
+    val dir = java.nio.file.Paths.get(s"$base/sink__pub")
     java.nio.file.Files.createDirectories(dir)
-    for (i <- 0 to 9) {
-      java.nio.file.Files.createDirectories(dir.resolve(s"batch_$i"))
-      java.nio.file.Files.createFile(dir.resolve(s"b$i"))
-    }
-    // non-marker residents a sweep must never touch
-    java.nio.file.Files.createFile(dir.resolve("_FENCE"))
-    java.nio.file.Files.createFile(dir.resolve("bogus"))
-    java.nio.file.Files.createFile(dir.resolve("b12x"))
+    for (i <- 0 to 9) java.nio.file.Files.createFile(dir.resolve(s"b$i"))
+    // non-marker residents a sweep must never touch (`batch_3` included:
+    // `b<id>` is the one marker naming)
+    for (n <- Seq("_FENCE", "bogus", "b12x", "batch_3"))
+      java.nio.file.Files.createFile(dir.resolve(n))
     val n = KeyedState.pruneBatchMarkers(spark, dir.toString, floor = 5L)
-    assert(n == 12, s"expected 12 deletions (b0-b5 + batch_0-5), got $n")
+    assert(n == 6, s"expected 6 deletions (b0-b5), got $n")
     val left = java.nio.file.Files.list(dir).iterator()
     val names = scala.collection.mutable.Set.empty[String]
     while (left.hasNext) names += left.next().getFileName.toString
-    assert(names == Set("batch_6", "batch_7", "batch_8", "batch_9",
-      "b6", "b7", "b8", "b9", "_FENCE", "bogus", "b12x"), names.toString)
+    assert(names == Set("b6", "b7", "b8", "b9", "_FENCE", "bogus", "b12x",
+      "batch_3"), names.toString)
     // missing dir is a no-op
     assert(KeyedState.pruneBatchMarkers(spark, s"$base/nothere", 99L) == 0)
   }
 
   test("marker retention sweeps fire on the cadence and keep the " +
-      "retention window: applyBatchOnce dirs stay bounded over 200 batches " +
+      "retention window: __pub witness dirs stay bounded over 200 batches " +
       "and a replay at the retention boundary still skips") {
     val base = graft.TestScratch.dir("graft-ks-retention")
-    val markers = s"$base/_applied"
+    val sink = s"$base/sink"
+    val markers = java.nio.file.Paths.get(sink + "__pub")
+    var applied = 0
+    // the staged writers' fence, without their Spark writes: sweep on
+    // the cadence, skip a batch whose witness exists, else apply it and
+    // write its witness
+    def publishOnce(b: Long): Unit = {
+      KeyedState.maybePruneMarkers(spark, markers.toString, b)
+      if (!KeyedState.isPublished(spark, sink, b)) {
+        applied += 1
+        java.nio.file.Files.createDirectories(markers)
+        java.nio.file.Files.createFile(markers.resolve(s"b$b"))
+      }
+    }
     spark.conf.set("spark.graft.markerRetentionBatches", "16")
     try {
-      var applied = 0
-      for (b <- 0L until 200L)
-        Upsert.applyBatchOnce(spark, markers, b) { applied += 1 }
+      for (b <- 0L until 200L) publishOnce(b)
       assert(applied == 200)
-      val count = java.nio.file.Files.list(
-        java.nio.file.Paths.get(markers)).count()
+      val count = java.nio.file.Files.list(markers).count()
       // last sweep at b=192 pruned ≤176; markers 177..199 live = 23
       assert(count <= 2 * 16, s"marker dir grew unbounded: $count files")
       assert(count >= 16, s"retention window violated: only $count markers " +
         "kept — a replay inside the window would re-apply")
       // the deepest replay recovery can deliver is the last batch; far
       // inside the window, so the fence still skips it
-      Upsert.applyBatchOnce(spark, markers, 199L) { applied += 1 }
+      publishOnce(199L)
       assert(applied == 200, "replay of the last batch must be skipped")
       // and the boundary batch of the retention window itself still skips
-      Upsert.applyBatchOnce(spark, markers, 184L) { applied += 1 }
+      publishOnce(184L)
       assert(applied == 200, "replay within the retention window must skip")
     } finally spark.conf.unset("spark.graft.markerRetentionBatches")
   }

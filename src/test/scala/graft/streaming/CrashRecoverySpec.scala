@@ -56,10 +56,11 @@ class CrashRecoverySpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val golden = run("_golden")
     assert(golden.nonEmpty)
-    // crash mid-stream on the SECOND micro-batch, after every write+marker
+    // crash mid-stream on the SECOND micro-batch, after every write and
+    // its witness
     spark.conf.set("spark.graft.test.failpoint", "minhash_post_writes:1")
     crashes(run(""))
-    // restart from the same checkpoint: batch 1 replays, fences skip
+    // restart from the same checkpoint: batch 1 replays, witnesses skip
     assert(run("") == golden)
     val raw = spark.read.parquet(s"$base/state/pairs")
     assert(raw.count() == raw.distinct().count() && raw.count() == golden.size)
@@ -131,8 +132,8 @@ class CrashRecoverySpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val golden = run("_golden")
     // the torn-commit-equivalent window: the batch's data files are all
-    // staged and fenced, but NONE are in the live tree and no replay
-    // marker exists — a bare append could not survive this point
+    // staged and fenced, but NONE are in the live tree and no `__pub`
+    // witness exists — a bare append could not survive this point
     spark.conf.set("spark.graft.test.failpoint", "staged_post_fence:1")
     crashes(run(""))
     // the fenced staged dir must exist with its batch unpublished
@@ -164,8 +165,8 @@ class CrashRecoverySpec extends AnyFunSuite {
     val golden = run("_golden")
     assert(golden.nonEmpty)
     // the flat-append torn-commit window: the batch's single pairs file is
-    // staged and fenced but NOT in the live tree, and the _pairs_w replay
-    // marker was never written — a bare append could not survive here
+    // staged and fenced but NOT in the live tree, and its `__pub` witness
+    // was never written — a bare append could not survive here
     spark.conf.set("spark.graft.test.failpoint", "staged_post_fence_flat:1")
     crashes(run(""))
     val stagedLeft = new java.io.File(s"$base/state")
@@ -311,7 +312,7 @@ class CrashRecoverySpec extends AnyFunSuite {
     val golden = assembleRun(base, "_golden")
     assert(golden.nonEmpty && golden.forall(_._2 == 12))
     // batch 1's merged buckets are all staged + fenced, nothing swapped,
-    // no replay marker: a replay that re-executed the merge against the
+    // no `__pub` witness: a replay that re-executed the merge against the
     // half-new state would double-apply; the fence forces a pure resume
     spark.conf.set("spark.graft.test.failpoint", "replace_post_fence:1")
     crashes(assembleRun(base, ""))
@@ -384,26 +385,21 @@ class CrashRecoverySpec extends AnyFunSuite {
     try {
       val golden = run("_golden")
       assert(golden.nonEmpty)
-      // kill after batch 6 fully applied (its _applied marker written, the
+      // kill after batch 6 fully applied (its `__pub` witness written, the
       // checkpoint commit lost) — batch 6 is ON the sweep cadence, so the
-      // replay's own entry sweep runs before the fence check
+      // replay's own entry sweep runs before the witness check
       spark.conf.set("spark.graft.test.failpoint", "assemble_post_fence:6")
       crashes(run(""))
       assert(run("") == golden)
-      // retention held: one marker per batch would be 8; the window is 2,
-      // so at most ~2 windows' worth survive in each marker family
+      // retention held: one witness per batch would be 8; the window is
+      // 2, so at most ~2 windows' worth survive
       // exclude the local FS's .crc checksum siblings — they track their
       // marker 1:1 (fs.delete removes both) and don't exist on HDFS/S3
-      def countIn(p: String) = {
-        val f = new java.io.File(p)
-        if (!f.exists()) 0
-        else f.listFiles().count(!_.getName.startsWith("."))
-      }
-      val applied = countIn(s"$base/sink/_applied")
-      val pub = countIn(s"$base/sink__pub")
-      assert(applied > 0 && applied <= 4,
-        s"_applied markers not pruned: $applied")
+      val pub = new java.io.File(s"$base/sink__pub").listFiles()
+        .count(!_.getName.startsWith("."))
       assert(pub > 0 && pub <= 4, s"__pub markers not pruned: $pub")
+      // the witness is the one marker family
+      assert(!new java.io.File(s"$base/sink/_applied").exists())
     } finally spark.conf.unset("spark.graft.markerRetentionBatches")
   }
 
@@ -429,5 +425,40 @@ class CrashRecoverySpec extends AnyFunSuite {
     crashes(run(""))
     // a double-applied merge would show 24-element sequences here
     assert(run("") == golden)
+  }
+
+  test("the minhash, IVF and assembly streams keep one marker family: no " +
+      "_applied or per-write marker dir, every batch's witness under __pub") {
+    val base = graft.TestScratch.dir("graft-one-marker-family")
+    // three single-file micro-batches per stream
+    docs.repartition(3).write.mode("overwrite").parquet(s"$base/docs.parquet")
+    Dedup.streamingMinHashNearDuplicates(spark, s"$base/docs.parquet",
+      "*.parquet", "doc_id", "text", stateDir = s"$base/mh",
+      checkpointDir = s"$base/mh_ckpt", threshold = 0.4,
+      maxFilesPerTrigger = 1).collect()
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb.repartition(3).write.mode("overwrite").parquet(s"$base/emb.parquet")
+    val centroids = emb
+      .filter(Similarity.hashSampleByThreshold(col("vec_id"),
+        Similarity.sampleThreshold(8L, emb.count())))
+      .select(col("vec_id").as("centroid_id"),
+        col("embedding").as("centroid_vec"))
+    Similarity.streamingIvfIngest(spark, s"$base/emb.parquet", "*.parquet",
+      "vec_id", "embedding", centroids, indexDir = s"$base/ivf",
+      checkpointDir = s"$base/ivf_ckpt", maxFilesPerTrigger = 1).collect()
+    assembleRows(base)
+    assembleRun(base, "")
+    def dirsUnder(f: java.io.File): Seq[java.io.File] =
+      if (!f.isDirectory) Nil
+      else f +: f.listFiles().toSeq.flatMap(dirsUnder)
+    val strays = dirsUnder(new java.io.File(base)).map(_.getName)
+      .filter(n => n == "_applied" || n.matches("_.+_w"))
+    assert(strays.isEmpty, s"marker dirs beside the __pub witnesses: $strays")
+    // exclude the local FS's .crc checksum siblings
+    def witnesses(dir: String) = new java.io.File(s"$base/$dir").listFiles()
+      .map(_.getName).filterNot(_.startsWith(".")).toSet
+    for (pub <- Seq("mh/pairs__pub", "mh/banded__pub", "mh/shingles__pub",
+        "ivf/assigned__pub", "sink__pub"))
+      assert(witnesses(pub) == Set("b0", "b1", "b2"), pub)
   }
 }

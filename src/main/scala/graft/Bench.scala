@@ -50,7 +50,7 @@ object Bench {
         // mirrors the memory-sink drains' RAM-backed WAL (round 17) so
         // the floor keeps measuring the path the smokes actually take
         .option("checkpointLocation",
-          graft.ops.KeyedState.ephemeralCheckpointDir("bench-floor-ckpt"))
+          graft.streaming.Drain.ephemeralCheckpointDir("bench-floor-ckpt"))
         .start()
       try q.processAllAvailable()
       finally q.stop()

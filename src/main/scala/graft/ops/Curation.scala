@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.streaming.Drain
 
 /** Corpus-curation operators a large-scale training-data pipeline needs
   * beyond dedup/similarity: benchmark decontamination, cross-document
@@ -239,7 +240,7 @@ object Curation {
   }
 
   /** Streaming form of the contamination check: the same gram-collision
-    * count over documents arriving through `readStream`, returning the
+    * count over documents arriving through [[Drain.files]], returning the
     * BLOCKLIST (doc_id, matched_grams) of contaminated documents — the
     * frame a continuous-ingest pipeline anti-joins at write time. The
     * benchmark side is STATIC and bounded by contract, so — exactly as
@@ -265,12 +266,9 @@ object Curation {
       benchTextCol: String,
       n: Int = 13,
       minMatches: Int = 1,
-      streamFilter: Column = lit(true),
-      queryName: String = "graft_streaming_contamination"): DataFrame = {
+      streamFilter: Column = lit(true)): DataFrame = {
     val schema = spark.read.parquet(s"$dir/$glob").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(dir)
-      .filter(streamFilter)
+    val stream = Drain.files(spark, dir, glob, schema).filter(streamFilter)
     // One eager bounded collect at construction (the batch form's
     // contract); the fp array then rides the plan into every micro-batch
     // — nothing static re-executes per trigger.
@@ -284,16 +282,9 @@ object Curation {
       // only matched docs reach the sink — the same bound the old
       // inner-join shape gave the complete-mode table
       .filter(col("matched_grams") >= 1L)
-    val q = matched.writeStream.outputMode("append")
-      // memory sink → RAM-backed WAL (durability-class match; see
-      // KeyedState.ephemeralCheckpointDir)
-      .option("checkpointLocation",
-        graft.ops.KeyedState.ephemeralCheckpointDir("graft-contam-ckpt"))
-      .format("memory").queryName(queryName).start()
-    try {
-      q.processAllAvailable()
-      spark.table(queryName).filter(col("matched_grams") >= minMatches)
-    } finally q.stop()
+    // No shuffle in the plan, so the drain keeps the session width (0).
+    Drain.toMemory(spark, matched, "contamination", "append", 0)
+      .filter(col("matched_grams") >= minMatches)
   }
 
   /** Production-shape variant of [[streamingContaminationBlocklist]]: the
@@ -333,13 +324,10 @@ object Curation {
     graft.ops.KeyedState.stampParams(spark, sinkDir,
       Map("nBuckets" -> nBuckets, "n" -> n))
     val schema = spark.read.parquet(s"$dir/$glob").schema
-    val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    val tuned = if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader
     // One eager bounded collect at construction; the fp array rides the
     // plan (see streamingContaminationBlocklist).
     val fps = benchFpArray(spark, benchGramFingerprints(bench, benchTextCol, n))
-    val matched = tuned.parquet(dir)
+    val matched = Drain.files(spark, dir, glob, schema, maxFilesPerTrigger)
       .select(col(idCol),
         coalesce(
           graft.functions.HashExpressions.gramMatchStats(col(textCol), n, fps)
@@ -348,17 +336,11 @@ object Curation {
       .filter(col("matched_grams") >= 1L)
     // Scoped shuffle width for the drain: callers size the upsert's
     // internal shuffles via `statePartitions`; unset keeps the session
-    // width (KeyedState.withStatePartitionsFor — cluster-safe).
-    graft.ops.KeyedState.withStatePartitionsFor(spark, statePartitions) {
-      val q = matched.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.ops.Upsert.upsertKeyedParquet(batch, sinkDir, Seq(idCol),
-            nBuckets, batchId)
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+    // width (Drain.foreachBatch — cluster-safe).
+    Drain.foreachBatch(matched, checkpointDir, statePartitions) {
+      (batch, batchId) =>
+        graft.ops.Upsert.upsertKeyedParquet(batch, sinkDir, Seq(idCol),
+          nBuckets, batchId)
     }
     // an UNCONTAMINATED corpus never creates the sink (the upsert writer
     // early-returns on every empty batch) — the expected clean outcome,
@@ -835,31 +817,24 @@ object Curation {
       Map("nBuckets" -> nBuckets))
     // Scoped shuffle width for the drain: callers size the per-batch
     // groupBy + merge via `statePartitions`; unset keeps the session
-    // width (KeyedState.withStatePartitionsFor — cluster-safe).
-    graft.ops.KeyedState.withStatePartitionsFor(spark, statePartitions) {
-      val q = stream.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // The merge sink accumulates; its `__pub` witness skips a
-          // checkpoint-recovery replay of an already-published batch,
-          // which would otherwise concatenate its elements twice.
-          val agg = batch.groupBy(col(keyCol))
-            .agg(sort_array(collect_list(struct(col(orderCol).as("o"),
-              col(tieCol).as("t"), col(valueCol).cast("string").as("v"))))
-              .as("items"))
-          Upsert.mergeKeyedParquet(agg, sinkDir, Seq(keyCol),
-            Map("items" -> ((old: Column, nw: Column) =>
-              array_sort(concat(old, nw)))), nBuckets, batchId)
-          // Injected-crash point (test-only, see [[graft.ops.Failpoint]]):
-          // merge published with its witness, checkpoint commit not — the
-          // replayed batch must be skipped or each key's items
-          // concatenate twice.
-          Failpoint.hit(spark, "assemble_post_fence", batchId)
-          ()
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+    // width (Drain.foreachBatch — cluster-safe).
+    Drain.foreachBatch(stream, checkpointDir, statePartitions) {
+      (batch, batchId) =>
+        // The merge sink accumulates; its `__pub` witness skips a
+        // checkpoint-recovery replay of an already-published batch,
+        // which would otherwise concatenate its elements twice.
+        val agg = batch.groupBy(col(keyCol))
+          .agg(sort_array(collect_list(struct(col(orderCol).as("o"),
+            col(tieCol).as("t"), col(valueCol).cast("string").as("v"))))
+            .as("items"))
+        Upsert.mergeKeyedParquet(agg, sinkDir, Seq(keyCol),
+          Map("items" -> ((old: Column, nw: Column) =>
+            array_sort(concat(old, nw)))), nBuckets, batchId)
+        // Injected-crash point (test-only, see [[graft.ops.Failpoint]]):
+        // merge published with its witness, checkpoint commit not — the
+        // replayed batch must be skipped or each key's items
+        // concatenate twice.
+        Failpoint.hit(spark, "assemble_post_fence", batchId)
     }
     // a drained stream that delivered no rows never creates the sink (the
     // merge writer early-returns on empty batches) — read that back as an

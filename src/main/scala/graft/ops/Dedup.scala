@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.streaming.Drain
 
 /** Deduplication operators for large-scale corpus curation: exact,
   * MinHash+LSH, SimHash, and n-gram Jaccard near-dup detection.
@@ -40,30 +41,16 @@ object Dedup {
       dir: String,
       glob: String,
       idCol: String,
-      textCol: String,
-      queryName: String = "graft_streaming_exact_groups"): DataFrame = {
-    // The streaming file source watches a DIRECTORY; the glob selects the
-    // table's files within it.
+      textCol: String): DataFrame = {
     val schema = spark.read.parquet(s"$dir/$glob").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(dir)
-    val agg = stream
+    val agg = Drain.files(spark, dir, glob, schema)
       .groupBy(contentFingerprint(col(textCol)).as("fingerprint"))
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keep_id"))
     // State stores sized to the smoke's state volume, not the session's
-    // shuffle width (KeyedState.withStatePartitions — measured 32 stores
-    // ≈ +0.45 s/batch of pure commit overhead on toy state).
-    KeyedState.withStatePartitions(spark) {
-      val q = agg.writeStream.outputMode("complete")
-        // memory sink → RAM-backed WAL (durability-class match; see
-        // KeyedState.ephemeralCheckpointDir)
-        .option("checkpointLocation",
-          KeyedState.ephemeralCheckpointDir("graft-exact-groups-ckpt"))
-        .format("memory").queryName(queryName).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(queryName)
+    // shuffle width (measured 32 stores ≈ +0.45 s/batch of pure commit
+    // overhead on toy state).
+    Drain.toMemory(spark, agg, "exact_groups", "complete",
+      Drain.smokeStatePartitions)
   }
 
   /** Production-shape streaming dedup sink: the [[streamingExactGroups]]
@@ -99,25 +86,16 @@ object Dedup {
     // re-run with a drifted count would merge against the wrong buckets
     KeyedState.stampParams(spark, sinkDir, Map("nBuckets" -> nBuckets))
     val schema = spark.read.parquet(s"$dir/$glob").schema
-    val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    val tuned = if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader
-    val agg = tuned.parquet(dir)
+    val agg = Drain.files(spark, dir, glob, schema, maxFilesPerTrigger)
       .groupBy(contentFingerprint(col(textCol)).as("fingerprint"))
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keep_id"))
     // State stores + foreachBatch shuffle width: callers size it to their
     // state volume via `statePartitions`; unset (0) keeps the session
-    // width — cluster-safe (see KeyedState.withStatePartitionsFor).
-    KeyedState.withStatePartitionsFor(spark, statePartitions) {
-      val q = agg.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Upsert.upsertKeyedParquet(batch, sinkDir, Seq("fingerprint"),
-            nBuckets, batchId)
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+    // width — cluster-safe (see Drain.foreachBatch).
+    Drain.foreachBatch(agg, checkpointDir, statePartitions,
+        outputMode = "update") { (batch, batchId) =>
+      Upsert.upsertKeyedParquet(batch, sinkDir, Seq("fingerprint"),
+        nBuckets, batchId)
     }
     // empty-input streams never create the sink (the upsert writer
     // early-returns on empty batches) — that's an empty result, not an error
@@ -836,9 +814,6 @@ object Dedup {
       "bands" -> bands, "shingleLen" -> shingleLen,
       "threshold" -> threshold))
     val schema = spark.read.parquet(s"$dir/$glob").schema
-    val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    val tuned = if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader
     def exists(p: String): Boolean = {
       val path = new org.apache.hadoop.fs.Path(p)
       path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
@@ -847,181 +822,174 @@ object Dedup {
     // but every foreachBatch-internal shuffle (band self-join, candidate
     // distinct, verify joins) runs at this width. Callers size it to
     // their batch/state volume via `statePartitions`; unset keeps the
-    // session width (KeyedState.withStatePartitionsFor).
-    KeyedState.withStatePartitionsFor(spark, statePartitions) {
-    val q = tuned.parquet(dir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Heal any compaction swap a previous run's crash interrupted
-        // BEFORE this batch probes the stores (one `exists` each when
-        // clean — see KeyedState's crash-safety protocol).
-        KeyedState.repairPartitions(spark, bandedDir)
-        KeyedState.repairPartitions(spark, shinglesDir)
-        KeyedState.repairFlat(spark, pairsDir)
-        // Every pin this batch makes is released at the end of the batch.
-        val sets = Checkpoints.pin(shingleSets(batch, idCol, textCol, shingleLen))
-        val sigs = Checkpoints.pin(
-          sets.select(col(idCol), minHashOfShingles(col("sh"), numHashes).as("sig")))
-        val banded = Checkpoints.pin(bandProjection(sigs, idCol, numHashes, bands))
-        // Within-batch candidates: the batch's own band self-collisions.
-        val within = banded.as("a").join(banded.as("b"),
-            col("a.band") === col("b.band") &&
-              col("a.band_sig") === col("b.band_sig") &&
-              col(s"a.$idCol") < col(s"b.$idCol"))
-          .select(col(s"a.$idCol").as("id_new"), col(s"b.$idCol").as("id_other"))
-        // Cross-batch candidates: probe ONLY the band-index buckets this
-        // batch's (band, band_sig) keys hash into — the bucket is a pure
-        // function of the join key, so every possible collision lives in
-        // a touched bucket and the pruned probe is exactly equivalent to
-        // a full-index join. (Bucket computation is skipped entirely on
-        // the first batch — there is no index to probe yet.)
-        val hasIndex = exists(bandedDir)
-        val bandBuckets = if (hasIndex) touchedBuckets(
-          banded.select(stateBucket(Seq("band", "band_sig"), nStateBuckets)))
-        else Nil
-        val cross = if (bandBuckets.nonEmpty) Some(
-          banded.withColumnRenamed(idCol, "id_new").join(
-            readStateBuckets(spark, bandedDir, bandBuckets, banded.schema)
-              .withColumnRenamed(idCol, "id_other"),
-            Seq("band", "band_sig"))
-            .select("id_new", "id_other"))
-        else None
-        // The id inequality is belt-and-braces for the self-pair case: if
-        // the band index already holds this batch's bands (a replay after
-        // the band append published), the cross probe would pair each
-        // doc with itself at jaccard 1.0.
-        val candRaw = cross.fold(within)(within.unionByName(_))
-          .filter(col("id_new") =!= col("id_other"))
-          .distinct()
-        // The verifier needs shingle sets only for docs that actually
-        // appear as candidates: batch docs come from `sets` (in memory);
-        // prior docs from the id-bucketed shingle store, pruned to the
-        // buckets the candidate id_others hash into. Pin + bucket
-        // collect only when a store exists to prune (from the second
-        // batch on) — candidates are consumed twice then and are small
-        // by LSH construction.
-        val hasShingles = exists(shinglesDir)
-        val cand = if (hasShingles) Checkpoints.pin(candRaw) else candRaw
-        val shBuckets = if (hasShingles) touchedBuckets(
-          cand.select(stateBucket(Seq("id_other"), nStateBuckets)))
-        else Nil
-        // Anti-join the store against the batch's own ids: normally a
-        // no-op (the store holds only PRIOR batches), but on a replay
-        // whose shingle append already landed, the batch's
-        // docs would otherwise appear on BOTH sides of the union and
-        // every candidate row would verify twice.
-        val others = if (shBuckets.nonEmpty)
-          sets.unionByName(
-            readStateBuckets(spark, shinglesDir, shBuckets, sets.schema)
-              .join(sets.select(idCol), Seq(idCol), "left_anti"))
-        else sets
-        val verified = verifyJaccard(cand
-            .join(sets.select(col(idCol).as("id_new"), col("sh").as("sh_a")), "id_new")
-            .join(others.select(col(idCol).as("id_other"), col("sh").as("sh_b")), "id_other"),
-            threshold)
-          .select(least(col("id_new"), col("id_other")).as("id_a"),
-            greatest(col("id_new"), col("id_other")).as("id_b"),
-            round(col("jaccard"), 6).as("jaccard"))
-          // The candidate distinct() is ORIENTED (id_new, id_other): when
-          // a replayed batch's bands already sit in the index, a within-
-          // batch pair surfaces both as (a,b) from the self-join and as
-          // (b,a) from the cross probe, and only HERE — after the
-          // least/greatest normalization — do the two collapse. Without
-          // this a replay would append duplicate pairs rows.
-          .distinct()
-        // The verified-pairs plan has exactly ONE consumer (the staged
-        // append below — the append's old pre-write isEmpty guard is
-        // gone; emptiness is detected from the staged output), so it is
-        // NOT checkpointed: the staged write computes the candidate +
-        // jaccard-verify joins once, directly over the pinned
-        // sets/banded/cand frames. A duplicate-free batch stages one
-        // 0-row schema file, which reads back as the empty pair set.
-        // The three sink writes are mutually independent (pairs, band
-        // index, shingle store — the next batch reads the indexes only
-        // after this foreachBatch returns). The pairs write runs FIRST,
-        // sequentially: its verified plan materializes the sets/banded
-        // caches, so the two index appends that then overlap as
-        // concurrent jobs are pure cache reads (launching all three
-        // together would race the first batch's cache materialization
-        // across threads — duplicated shingle/signature compute). Index
-        // appends still happen AFTER candidate generation: a doc never
-        // pairs with itself, and the next batch sees this one's state.
-        // Each append lands one file per touched bucket; oversized
-        // buckets are compacted in place so the listing stays
-        // O(nStateBuckets). (Compaction scans bucket DIRS, not data — a
-        // driver fs listing over ≤ nStateBuckets dirs per store; nothing
-        // fires until some bucket accumulates compactAfterFiles files.)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        // Replay: a crash after SOME (or all) writes published replays
-        // the whole batch — candidate generation is re-derivation (the
-        // store anti-join, id inequality, and post-normalization distinct
-        // above make the replayed pairs identical even against a
-        // half-appended index) — and each staged append skips itself when
-        // its `__pub` witness shows it already published, so nothing
-        // double-appends. A crash INSIDE one write's own job commit is
-        // closed too: the staged append writes to a fenced sibling dir and
-        // publishes by per-file atomic renames, so a torn commit never
-        // lands partial files in the live tree.
-        def pairsWrite(): Unit =
-          // one file: the verified-pairs frame is small (candidates that
-          // survived the jaccard cut) but inherits the verify plan's
-          // partitioning — without it every batch appends up to
-          // shuffle-partitions files; with it, one.
-          try KeyedState.appendFlatAtomic(verified, pairsDir, 1, batchId)
-          finally Checkpoints.release(cand)
-        // Each index append returns the bucket values it published — the
-        // compaction-candidate list (only a bucket that just gained a file
-        // can newly cross the compaction threshold; sweeping ALL
-        // nStateBuckets dirs per batch was 2×nStateBuckets listings of
-        // mostly-idle dirs). On a replay skip the list is Nil and
-        // compaction waits for the next real append — opportunistic by
-        // the documented contract.
-        def bandedWrite(): Seq[String] =
-          appendStateBuckets(banded, bandedDir, Seq("band", "band_sig"),
-            nStateBuckets, batchId)
-        def shinglesWrite(): Seq[String] =
-          appendStateBuckets(sets, shinglesDir, Seq(idCol), nStateBuckets,
-            batchId)
-        // Injected-crash point "minhash_mid_writes" (test-only, see
-        // [[Failpoint]]): the index appends publish WITH their witnesses,
-        // the pairs append does not — the partial-batch crash the
-        // replay-safe regeneration above exists for, produced through a
-        // genuinely failing query rather than a hand-edited state dir.
-        // Writes run sequentially here so the crash state is
-        // deterministic; the production path below is untouched.
-        if (Failpoint.armed(spark, "minhash_mid_writes", batchId)) {
-          bandedWrite(); shinglesWrite()
-          Checkpoints.release(cand)
-          Failpoint.hit(spark, "minhash_mid_writes", batchId)
-        }
-        pairsWrite() // sequential: materializes the sets/banded caches
-        val (pubBanded, pubShingles) = {
-          val b = Future(bandedWrite())
-          val s = Future(shinglesWrite())
-          import scala.concurrent.duration.Duration.Inf
-          (Await.result(b, Inf), Await.result(s, Inf))
-        }
-        // Compaction runs AFTER the appends published: it is idempotent
-        // and content-preserving, so re-running it on replay is free.
-        // Crash safety of the rewrites themselves (and healing of
-        // interrupted swaps) lives in KeyedState's staged-swap + repair
-        // protocol.
-        KeyedState.compactFlat(spark, pairsDir, compactAfterFiles)
-        compactStateBuckets(spark, bandedDir, pubBanded, compactAfterFiles)
-        compactStateBuckets(spark, shinglesDir, pubShingles,
-          compactAfterFiles)
-        Seq(sets, sigs, banded).foreach(Checkpoints.release)
-        // Injected-crash point "minhash_post_writes" (test-only): every
-        // state write published with its witness, but the checkpoint
-        // commit has not — on restart Spark replays the batch and every
-        // staged append must skip its already-published write.
-        Failpoint.hit(spark, "minhash_post_writes", batchId)
-        ()
+    // session width (Drain.foreachBatch).
+    Drain.foreachBatch(Drain.files(spark, dir, glob, schema, maxFilesPerTrigger),
+        checkpointDir, statePartitions) { (batch, batchId) =>
+      // Heal any compaction swap a previous run's crash interrupted
+      // BEFORE this batch probes the stores (one `exists` each when
+      // clean — see KeyedState's crash-safety protocol).
+      KeyedState.repairPartitions(spark, bandedDir)
+      KeyedState.repairPartitions(spark, shinglesDir)
+      KeyedState.repairFlat(spark, pairsDir)
+      // Every pin this batch makes is released at the end of the batch.
+      val sets = Checkpoints.pin(shingleSets(batch, idCol, textCol, shingleLen))
+      val sigs = Checkpoints.pin(
+        sets.select(col(idCol), minHashOfShingles(col("sh"), numHashes).as("sig")))
+      val banded = Checkpoints.pin(bandProjection(sigs, idCol, numHashes, bands))
+      // Within-batch candidates: the batch's own band self-collisions.
+      val within = banded.as("a").join(banded.as("b"),
+          col("a.band") === col("b.band") &&
+            col("a.band_sig") === col("b.band_sig") &&
+            col(s"a.$idCol") < col(s"b.$idCol"))
+        .select(col(s"a.$idCol").as("id_new"), col(s"b.$idCol").as("id_other"))
+      // Cross-batch candidates: probe ONLY the band-index buckets this
+      // batch's (band, band_sig) keys hash into — the bucket is a pure
+      // function of the join key, so every possible collision lives in
+      // a touched bucket and the pruned probe is exactly equivalent to
+      // a full-index join. (Bucket computation is skipped entirely on
+      // the first batch — there is no index to probe yet.)
+      val hasIndex = exists(bandedDir)
+      val bandBuckets = if (hasIndex) touchedBuckets(
+        banded.select(stateBucket(Seq("band", "band_sig"), nStateBuckets)))
+      else Nil
+      val cross = if (bandBuckets.nonEmpty) Some(
+        banded.withColumnRenamed(idCol, "id_new").join(
+          readStateBuckets(spark, bandedDir, bandBuckets, banded.schema)
+            .withColumnRenamed(idCol, "id_other"),
+          Seq("band", "band_sig"))
+          .select("id_new", "id_other"))
+      else None
+      // The id inequality is belt-and-braces for the self-pair case: if
+      // the band index already holds this batch's bands (a replay after
+      // the band append published), the cross probe would pair each
+      // doc with itself at jaccard 1.0.
+      val candRaw = cross.fold(within)(within.unionByName(_))
+        .filter(col("id_new") =!= col("id_other"))
+        .distinct()
+      // The verifier needs shingle sets only for docs that actually
+      // appear as candidates: batch docs come from `sets` (in memory);
+      // prior docs from the id-bucketed shingle store, pruned to the
+      // buckets the candidate id_others hash into. Pin + bucket
+      // collect only when a store exists to prune (from the second
+      // batch on) — candidates are consumed twice then and are small
+      // by LSH construction.
+      val hasShingles = exists(shinglesDir)
+      val cand = if (hasShingles) Checkpoints.pin(candRaw) else candRaw
+      val shBuckets = if (hasShingles) touchedBuckets(
+        cand.select(stateBucket(Seq("id_other"), nStateBuckets)))
+      else Nil
+      // Anti-join the store against the batch's own ids: normally a
+      // no-op (the store holds only PRIOR batches), but on a replay
+      // whose shingle append already landed, the batch's
+      // docs would otherwise appear on BOTH sides of the union and
+      // every candidate row would verify twice.
+      val others = if (shBuckets.nonEmpty)
+        sets.unionByName(
+          readStateBuckets(spark, shinglesDir, shBuckets, sets.schema)
+            .join(sets.select(idCol), Seq(idCol), "left_anti"))
+      else sets
+      val verified = verifyJaccard(cand
+          .join(sets.select(col(idCol).as("id_new"), col("sh").as("sh_a")), "id_new")
+          .join(others.select(col(idCol).as("id_other"), col("sh").as("sh_b")), "id_other"),
+          threshold)
+        .select(least(col("id_new"), col("id_other")).as("id_a"),
+          greatest(col("id_new"), col("id_other")).as("id_b"),
+          round(col("jaccard"), 6).as("jaccard"))
+        // The candidate distinct() is ORIENTED (id_new, id_other): when
+        // a replayed batch's bands already sit in the index, a within-
+        // batch pair surfaces both as (a,b) from the self-join and as
+        // (b,a) from the cross probe, and only HERE — after the
+        // least/greatest normalization — do the two collapse. Without
+        // this a replay would append duplicate pairs rows.
+        .distinct()
+      // The verified-pairs plan has exactly ONE consumer (the staged
+      // append below — the append's old pre-write isEmpty guard is
+      // gone; emptiness is detected from the staged output), so it is
+      // NOT checkpointed: the staged write computes the candidate +
+      // jaccard-verify joins once, directly over the pinned
+      // sets/banded/cand frames. A duplicate-free batch stages one
+      // 0-row schema file, which reads back as the empty pair set.
+      // The three sink writes are mutually independent (pairs, band
+      // index, shingle store — the next batch reads the indexes only
+      // after this foreachBatch returns). The pairs write runs FIRST,
+      // sequentially: its verified plan materializes the sets/banded
+      // caches, so the two index appends that then overlap as
+      // concurrent jobs are pure cache reads (launching all three
+      // together would race the first batch's cache materialization
+      // across threads — duplicated shingle/signature compute). Index
+      // appends still happen AFTER candidate generation: a doc never
+      // pairs with itself, and the next batch sees this one's state.
+      // Each append lands one file per touched bucket; oversized
+      // buckets are compacted in place so the listing stays
+      // O(nStateBuckets). (Compaction scans bucket DIRS, not data — a
+      // driver fs listing over ≤ nStateBuckets dirs per store; nothing
+      // fires until some bucket accumulates compactAfterFiles files.)
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      // Replay: a crash after SOME (or all) writes published replays
+      // the whole batch — candidate generation is re-derivation (the
+      // store anti-join, id inequality, and post-normalization distinct
+      // above make the replayed pairs identical even against a
+      // half-appended index) — and each staged append skips itself when
+      // its `__pub` witness shows it already published, so nothing
+      // double-appends. A crash INSIDE one write's own job commit is
+      // closed too: the staged append writes to a fenced sibling dir and
+      // publishes by per-file atomic renames, so a torn commit never
+      // lands partial files in the live tree.
+      def pairsWrite(): Unit =
+        // one file: the verified-pairs frame is small (candidates that
+        // survived the jaccard cut) but inherits the verify plan's
+        // partitioning — without it every batch appends up to
+        // shuffle-partitions files; with it, one.
+        try KeyedState.appendFlatAtomic(verified, pairsDir, 1, batchId)
+        finally Checkpoints.release(cand)
+      // Each index append returns the bucket values it published — the
+      // compaction-candidate list (only a bucket that just gained a file
+      // can newly cross the compaction threshold; sweeping ALL
+      // nStateBuckets dirs per batch was 2×nStateBuckets listings of
+      // mostly-idle dirs). On a replay skip the list is Nil and
+      // compaction waits for the next real append — opportunistic by
+      // the documented contract.
+      def bandedWrite(): Seq[String] =
+        appendStateBuckets(banded, bandedDir, Seq("band", "band_sig"),
+          nStateBuckets, batchId)
+      def shinglesWrite(): Seq[String] =
+        appendStateBuckets(sets, shinglesDir, Seq(idCol), nStateBuckets,
+          batchId)
+      // Injected-crash point "minhash_mid_writes" (test-only, see
+      // [[Failpoint]]): the index appends publish WITH their witnesses,
+      // the pairs append does not — the partial-batch crash the
+      // replay-safe regeneration above exists for, produced through a
+      // genuinely failing query rather than a hand-edited state dir.
+      // Writes run sequentially here so the crash state is
+      // deterministic; the production path below is untouched.
+      if (Failpoint.armed(spark, "minhash_mid_writes", batchId)) {
+        bandedWrite(); shinglesWrite()
+        Checkpoints.release(cand)
+        Failpoint.hit(spark, "minhash_mid_writes", batchId)
       }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+      pairsWrite() // sequential: materializes the sets/banded caches
+      val (pubBanded, pubShingles) = {
+        val b = Future(bandedWrite())
+        val s = Future(shinglesWrite())
+        import scala.concurrent.duration.Duration.Inf
+        (Await.result(b, Inf), Await.result(s, Inf))
+      }
+      // Compaction runs AFTER the appends published: it is idempotent
+      // and content-preserving, so re-running it on replay is free.
+      // Crash safety of the rewrites themselves (and healing of
+      // interrupted swaps) lives in KeyedState's staged-swap + repair
+      // protocol.
+      KeyedState.compactFlat(spark, pairsDir, compactAfterFiles)
+      compactStateBuckets(spark, bandedDir, pubBanded, compactAfterFiles)
+      compactStateBuckets(spark, shinglesDir, pubShingles,
+        compactAfterFiles)
+      Seq(sets, sigs, banded).foreach(Checkpoints.release)
+      // Injected-crash point "minhash_post_writes" (test-only): every
+      // state write published with its witness, but the checkpoint
+      // commit has not — on restart Spark replays the batch and every
+      // staged append must skip its already-published write.
+      Failpoint.hit(spark, "minhash_post_writes", batchId)
     }
     // A crash in a PREVIOUS invocation may have interrupted the pairs
     // compaction with no new batch arriving to heal it — repair before

@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
 
 /** The keyed streaming-state discipline shared by every foreachBatch sink
   * that accumulates partitioned parquet state ([[Dedup]]'s band index and
-  * shingle store, [[Similarity.streamingIvfIngest]]'s cell index):
+  * shingle store, [[Similarity.streamingIvfIngest]]'s cell index). This
+  * object only stores sinks: the streams that feed them are read, scoped
+  * and drained by [[graft.streaming.Drain]].
   *
   *   - state lives in `path/<partCol>=<value>/` partition dirs, keyed so
   *     a probe by key prunes the scan to its own partitions;
@@ -46,101 +48,6 @@ import org.apache.spark.sql.functions._
   * would break partition-value inference for every read.)
   */
 object KeyedState {
-
-  /** State-partition count for the single-node streaming smokes,
-    * overridable via `SPARK_GRAFT_STATE_PARTITIONS` — the shared home of
-    * the [[graft.streaming.EventsStream]] discipline, now applied to the
-    * Dedup/Similarity/Curation streaming entry points too. A streaming
-    * query pins its state-store count from `spark.sql.shuffle.partitions`
-    * at FIRST start, and every HDFSBackedStateStore pays a fixed
-    * commit/maintenance cost PER MICRO-BATCH regardless of how few rows
-    * it holds (PLANS.md, round-9 q140/q88 adjudication: 32 stores on 14k
-    * state rows cost ~7–9 s of summed commit time vs ~0.6 s across 8;
-    * wall 3.3 → 1.5 s);
-    * foreachBatch sinks additionally shuffle every internal join on the
-    * session count. Smokes size stores to their state volume (8), the
-    * same rule a cluster deployment applies upward (state rows ÷ target
-    * rows-per-store) — not a test-only shortcut.
-    */
-  lazy val smokeStatePartitions: Int =
-    // lazy + trimmed: an eager parse during object init would poison every
-    // KeyedState member with ExceptionInInitializerError on a malformed
-    // env var; lazily it can only fail the streaming paths that consume it
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.trim.toInt)
-      .getOrElse(8)
-
-  /** Run `body` (which STARTS and DRAINS a streaming query) with
-    * `spark.sql.shuffle.partitions` scoped to [[smokeStatePartitions]],
-    * restoring the session value after — only the streaming query keeps
-    * the scoped count (pinned at start); batch plans built later are
-    * unaffected. Safe because callers drive their query to completion
-    * inside the scope (single-threaded session use).
-    *
-    * This overload is the SMOKE form (memory-sink oracle/harness paths,
-    * where the caller is by construction toy-scale). Production-shape
-    * entry points (foreachBatch parquet sinks) instead take an explicit
-    * `statePartitions` argument resolved by [[withStatePartitionsFor]],
-    * so a cluster deployment that passes nothing keeps its own session
-    * shuffle width (VERDICT r16: a library default of 8 silently
-    * under-parallelized any deployment that forgot the env dial).
-    */
-  def withStatePartitions[A](spark: SparkSession)(body: => A): A =
-    withStatePartitionsFor(spark, smokeStatePartitions)(body)
-
-  /** [[withStatePartitions]] with an explicit width: `requested > 0`
-    * scopes the drain's shuffle/state width to it (callers size it to
-    * their known state volume — rows ÷ target rows-per-store, the
-    * EventsStream rule, PLANS.md round 9); `requested <= 0` leaves the
-    * SESSION width in force (the cluster-safe default). The
-    * `SPARK_GRAFT_STATE_PARTITIONS` env dial — the determinism sweeps'
-    * axis — overrides both when set.
-    */
-  def withStatePartitionsFor[A](spark: SparkSession, requested: Int)(
-      body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val resolved = sys.env.get("SPARK_GRAFT_STATE_PARTITIONS")
-      .map(_.trim.toInt)
-      .getOrElse(if (requested > 0) requested else prev.toInt)
-    spark.conf.set("spark.sql.shuffle.partitions", resolved.toString)
-    try body
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  private val ephemeralDirs =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[java.io.File]())
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      ephemeralDirs.forEach { f =>
-        try org.apache.commons.io.FileUtils.deleteDirectory(f)
-        catch { case _: Throwable => () }
-      }
-    }))
-  }
-
-  /** Scratch checkpoint dir for MEMORY-SINK streaming drains, RAM-backed
-    * (`/dev/shm`) when available, else `java.io.tmpdir`. Rationale (the
-    * same durability-class matching [[graft.ops.Checkpoints.truncate]]
-    * applies to lineage): a memory sink is non-durable by construction —
-    * its buffered rows die with the session — so its query's offset/commit
-    * WAL gains nothing from disk durability, yet the per-batch WAL writes
-    * were 17% of the measured micro-batch setup floor (OPTIMIZATION_r17.md
-    * §6: full 0.522 s min vs 0.444 s with a RAM checkpoint). Durable sinks
-    * (foreachBatch parquet paths) keep their caller-provided checkpoint
-    * dirs untouched — their WAL IS the crash-recovery story
-    * (CrashRecoverySpec). Dirs are deleted on JVM exit.
-    */
-  def ephemeralCheckpointDir(prefix: String): String = {
-    val shm = new java.io.File("/dev/shm")
-    // SPARK_GRAFT_EPHEMERAL_CKPT=disk pins the WAL to java.io.tmpdir —
-    // the A/B + determinism-sweep axis for this choice.
-    val useShm = !sys.env.get("SPARK_GRAFT_EPHEMERAL_CKPT").contains("disk")
-    val base =
-      if (useShm && shm.isDirectory && shm.canWrite) shm.toPath
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val p = java.nio.file.Files.createTempDirectory(base, prefix)
-    ephemeralDirs.add(p.toFile)
-    p.toString
-  }
 
   /** Hash bucket for key columns: a pure function of the key, so a probe
     * by key touches exactly one bucket and bucket-pruned joins are

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.functions.VecDot
+import graft.streaming.Drain
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -953,51 +954,40 @@ object Similarity {
     // contract), not one per micro-batch.
     val centTable = collectCentroidTable(centroids)
     val schema = spark.read.parquet(s"$dir/$glob").schema
-    val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    val tuned = if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader
     // Scoped shuffle width for the whole drain: callers size it to their
     // batch volume via `statePartitions`; unset keeps the session width
-    // (KeyedState.withStatePartitionsFor — cluster-safe). (The staged
-    // cell append's task count is the explicit parallelism(batch)
-    // argument, unaffected.)
-    KeyedState.withStatePartitionsFor(spark, statePartitions) {
-    val q = tuned.parquet(dir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // No withNorm barrier: a micro-batch is already partitioned by
-        // arrival, and the replicas=1 assignment is one codegen
-        // projection over the pre-collected centroid table. Single
-        // consumer (the staged append) — no persist, no pre-actions: the
-        // batch costs exactly one Spark job.
-        val assigned = batch.select(col(idCol), col(vecCol),
-          graft.functions.NearestCentroid.assign(col(vecCol), centTable)
-            .as("centroid_id"))
-        // Keyed-state discipline (KeyedState): one file per touched cell
-        // per batch — the index is PROBED partition-pruned on
-        // centroid_id, so its per-cell file listing must stay bounded
-        // across batches (the compaction below). The cell append is
-        // non-idempotent; the staged append skips a checkpoint-recovery
-        // replay of an already-published batch (else recovered batches
-        // duplicate every vector in their cells). The publish reports the
-        // touched cells (Nil on a replay skip), so compaction candidates
-        // cost no extra Spark job.
-        val touched = KeyedState.appendPartitionedAtomic(assigned,
-          s"$indexDir/assigned", "centroid_id", parallelism(batch),
-          batchId)
-        // Injected-crash point (test-only, see [[Failpoint]]): the cell
-        // append published with its `__pub` witness, but the checkpoint
-        // commit has not — on restart Spark replays this batch and the
-        // witness must skip the append (else every vector in the batch
-        // duplicates in its cell).
-        Failpoint.hit(spark, "ivf_post_fence", batchId)
-        KeyedState.compactPartitions(spark, s"$indexDir/assigned",
-          "centroid_id", touched, compactAfterFiles)
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    // (Drain.foreachBatch — cluster-safe). (The staged cell append's task
+    // count is the explicit parallelism(batch) argument, unaffected.)
+    Drain.foreachBatch(Drain.files(spark, dir, glob, schema, maxFilesPerTrigger),
+        checkpointDir, statePartitions) { (batch, batchId) =>
+      // No withNorm barrier: a micro-batch is already partitioned by
+      // arrival, and the replicas=1 assignment is one codegen
+      // projection over the pre-collected centroid table. Single
+      // consumer (the staged append) — no persist, no pre-actions: the
+      // batch costs exactly one Spark job.
+      val assigned = batch.select(col(idCol), col(vecCol),
+        graft.functions.NearestCentroid.assign(col(vecCol), centTable)
+          .as("centroid_id"))
+      // Keyed-state discipline (KeyedState): one file per touched cell
+      // per batch — the index is PROBED partition-pruned on
+      // centroid_id, so its per-cell file listing must stay bounded
+      // across batches (the compaction below). The cell append is
+      // non-idempotent; the staged append skips a checkpoint-recovery
+      // replay of an already-published batch (else recovered batches
+      // duplicate every vector in their cells). The publish reports the
+      // touched cells (Nil on a replay skip), so compaction candidates
+      // cost no extra Spark job.
+      val touched = KeyedState.appendPartitionedAtomic(assigned,
+        s"$indexDir/assigned", "centroid_id", parallelism(batch),
+        batchId)
+      // Injected-crash point (test-only, see [[Failpoint]]): the cell
+      // append published with its `__pub` witness, but the checkpoint
+      // commit has not — on restart Spark replays this batch and the
+      // witness must skip the append (else every vector in the batch
+      // duplicates in its cell).
+      Failpoint.hit(spark, "ivf_post_fence", batchId)
+      KeyedState.compactPartitions(spark, s"$indexDir/assigned",
+        "centroid_id", touched, compactAfterFiles)
     }
     // Partition-directory values read back as int by inference; restore
     // the assignment's long centroid ids.

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.ops.{Curation, Dedup, Similarity}
-import graft.streaming.EventsStream
+import graft.streaming.{Drain, EventsStream}
 import Query.{scratch, t}
 import SharedSql.{toks, minhashVerifiedCtes, ivfAssignCtes}
 
@@ -13,7 +13,7 @@ import SharedSql.{toks, minhashVerifiedCtes, ivfAssignCtes}
 object StreamingQueries {
 
   lazy val queries: Seq[Query] = Seq(
-    // Structured Streaming smoke: same windowed agg through readStream
+    // Structured Streaming smoke: same windowed agg through a stream
     Query("q25_streaming_window", (s, dir) => {
       EventsStream.runStreamingSmoke(s, dir)
         .select(col("window_start"), col("event_type"), col("n_events"),
@@ -24,7 +24,7 @@ object StreamingQueries {
                 count(*) AS n_events, round(sum(value), 2) AS total_value
          FROM events GROUP BY 1, 2 ORDER BY window_start, event_type"""),
 
-    // Streaming exact-dedup: the q14 aggregate through readStream (state =
+    // Streaming exact-dedup: the q14 aggregate through a stream (state =
     // one (count, min) pair per fingerprint), complete-mode memory sink.
     Query("q46_streaming_dedup", (s, dir) => {
       Dedup.streamingExactGroups(s, dir, "documents.parquet", "doc_id", "text")
@@ -51,7 +51,7 @@ object StreamingQueries {
          ORDER BY event_id"""),
 
     // Streaming contamination blocklist: q56's gram-collision count with
-    // the corpus arriving through readStream — the bench fp array rides
+    // the corpus arriving through a stream — the bench fp array rides
     // the plan into a stateless row-local pass per micro-batch (append
     // mode, zero joins/shuffles/state). Oracle is the batch formulation.
     Query("q61_streaming_contamination", (s, dir) => {
@@ -103,7 +103,7 @@ object StreamingQueries {
           "doc_id", "text", stateDir = s"$base/state",
           checkpointDir = s"$base/ckpt", threshold = 0.5,
           nStateBuckets = 8,
-          statePartitions = graft.ops.KeyedState.smokeStatePartitions)
+          statePartitions = Drain.smokeStatePartitions)
         .orderBy("id_a", "id_b")
     },
       // Stream ≡ batch: the streaming pair sink must equal q16's batch pairs.
@@ -126,7 +126,7 @@ object StreamingQueries {
       Similarity.streamingIvfIngest(s, dir, "embeddings.parquet",
           "vec_id", "embedding", centroids,
           indexDir = s"$base/index", checkpointDir = s"$base/ckpt",
-          statePartitions = graft.ops.KeyedState.smokeStatePartitions)
+          statePartitions = Drain.smokeStatePartitions)
         .select("vec_id", "centroid_id")
         .orderBy("vec_id")
     },
@@ -162,7 +162,7 @@ object StreamingQueries {
           "user_id", "ts", "event_id", "event_type", sep = ">",
           sinkDir = s"$base/sink", checkpointDir = s"$base/ckpt",
           nBuckets = 8,
-          statePartitions = graft.ops.KeyedState.smokeStatePartitions)
+          statePartitions = Drain.smokeStatePartitions)
         .orderBy("user_id")
     },
       // Stream ≡ batch: the merge-sink render equals q85's batch assembly.

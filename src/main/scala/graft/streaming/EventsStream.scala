@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   *
   * The reference engine is batch-only (SURVEY §2.9); this is the extension
   * surface for continuous ingest. The same transforms run identically over
-  * `read` (batch backfill) and `readStream` (live) — the usual lambda-free
+  * `read` (batch backfill) and [[Drain.files]] (live) — the usual lambda-free
   * kappa posture.
   */
 object EventsStream {
@@ -33,56 +33,22 @@ object EventsStream {
       case f => f
     })
 
-  /** Schema used while the file still carries NANOS timestamps (Spark's
-    * parquet reader has no nanosecond timestamp type).
-    */
-  private val eventNanosSchema: StructType = schemaWithTs(LongType)
-
   /** Read an events parquet robustly across the three physical encodings the
-    * fixture has shipped with: INT64 nanosecond timestamps (surfaced as long
-    * nanos via the legacy conf, converted with integer `div 1000`),
-    * microsecond TIMESTAMP without timezone (Spark 4 infers TIMESTAMP_NTZ —
-    * normalized to instant micros, identity under the UTC session zone), and
-    * plain UTC-adjusted TIMESTAMP. Downstream code always sees
-    * `TimestampType` so `unix_millis`/`unix_micros` and watermarks work.
+    * fixture has shipped with: INT64 nanosecond timestamps, microsecond
+    * TIMESTAMP without timezone, and plain UTC-adjusted TIMESTAMP (see
+    * [[decodeTs]]). Downstream code always sees `TimestampType` so
+    * `unix_millis`/`unix_micros` and watermarks work.
     */
-  def readEvents(spark: SparkSession, path: String): DataFrame = {
-    // Deliberately session-global, not scope-restored: parquet readers
-    // consult this conf at EXECUTION time (and a streaming query at every
-    // trigger), so restoring it after plan construction would break the
-    // nanos decode mid-query. Blast radius is narrow — the conf only
-    // changes behavior for files that physically carry INT64-nanos
-    // timestamp columns, where the alternative is a hard
-    // "Illegal Parquet type" error, never a silent value change for
-    // normal timestamp encodings.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(path)
-    raw.schema("ts").dataType match {
-      case LongType =>
-        // FLOOR division, not `div` (truncation toward zero): a pre-epoch
-        // nanos value like -1500 ns must decode to -2 us, the same
-        // floorDiv discipline toMicros documents. (ts - pmod(ts, 1000))
-        // is an exact multiple of 1000, so the remaining div is exact.
-        raw.withColumn("ts",
-          timestamp_micros(expr("(ts - pmod(ts, 1000)) div 1000")))
-      case TimestampNTZType =>
-        // Cast interprets the wall time in the session zone; sessions here
-        // run with spark.sql.session.timeZone=UTC, so this reads the stored
-        // micros as UTC instants — the same values the nanos path produced.
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
-  }
+  def readEvents(spark: SparkSession, path: String): DataFrame =
+    decodeTs(probeTs(spark)(spark.read.parquet(path))(_.schema("ts").dataType))
 
   /** Streaming flavour of [[readEvents]]: watches `dir` for files matching
-    * `glob` (the streaming file source requires a directory). The streaming
-    * file source needs a declared schema, so the footer of whatever is
-    * already in `dir` is probed with a batch read to pick the right decode.
+    * `glob` through [[Drain.files]]. The streaming file source needs a
+    * declared schema, so the footer of whatever is already in `dir` is
+    * probed with a batch read to pick the right decode.
     */
   def readEventsStream(spark: SparkSession, dir: String,
       glob: String = "events.parquet"): DataFrame = {
-    // session-global on purpose — see the readEvents note
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // A stream may start on an empty directory (files arrive later); the
     // probe then has no footer to read and the CURRENT fixture encoding
     // (microsecond TIMESTAMP, read as TimestampType) is assumed — a
@@ -92,7 +58,7 @@ object EventsStream {
     // take that fallback (logged): any other AnalysisException — corrupt
     // footer, a file without a ts column — is a real read error and
     // surfaces HERE, not as a confusing decode failure mid-stream.
-    val probed =
+    val probed = probeTs(spark) {
       try spark.read.option("pathGlobFilter", glob).parquet(dir)
         .schema("ts").dataType
       catch {
@@ -104,21 +70,54 @@ object EventsStream {
             s"(${e.getCondition}); assuming current micros-TIMESTAMP encoding")
           TimestampType
       }
-    val src = spark.readStream
-      .option("pathGlobFilter", glob)
-    probed match {
-      case LongType =>
-        src.schema(eventNanosSchema).parquet(dir)
-          // floored nanos->micros — see readEvents
-          .withColumn("ts",
-            timestamp_micros(expr("(ts - pmod(ts, 1000)) div 1000")))
-      case TimestampNTZType =>
-        src.schema(schemaWithTs(TimestampNTZType)).parquet(dir)
-          .withColumn("ts", col("ts").cast(TimestampType))
-      case _ =>
-        src.schema(eventSchema).parquet(dir)
+    }(identity)
+    val tsType = probed match {
+      case LongType | TimestampNTZType => probed
+      case _ => TimestampType
     }
+    decodeTs(Drain.files(spark, dir, glob, schemaWithTs(tsType)))
   }
+
+  /** Run `probe` (a footer read) with `spark.sql.legacy.parquet.nanosAsLong`
+    * on: Spark's parquet reader has no nanosecond timestamp type, and
+    * without the conf an INT64-nanos column fails analysis with "Illegal
+    * Parquet type". The conf stays set only when the probed `ts` type is
+    * `LongType` (INT64 nanos): parquet readers consult it again at
+    * EXECUTION, and a stream at every trigger. For every other encoding
+    * the caller's value is restored, so reading an ordinary events file
+    * leaves the session as it was.
+    */
+  private def probeTs[A](spark: SparkSession)(probe: => A)(ts: A => DataType): A = {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getAll.get(key) // None: unset, so unset it again
+    spark.conf.set(key, "true")
+    var nanos = false
+    try { val a = probe; nanos = ts(a) == LongType; a }
+    finally if (!nanos) prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** `events` with its `ts` column decoded to `TimestampType`, whichever
+    * encoding it carries: INT64 nanos surfaced as long (floored to micros),
+    * microsecond TIMESTAMP_NTZ (normalized to instant micros, identity
+    * under the UTC session zone), or TIMESTAMP (as is). Batch and stream
+    * frames alike.
+    */
+  private def decodeTs(events: DataFrame): DataFrame =
+    events.schema("ts").dataType match {
+      case LongType =>
+        // FLOOR division, not `div` (truncation toward zero): a pre-epoch
+        // nanos value like -1500 ns must decode to -2 us, the same
+        // floorDiv discipline toMicros documents. (ts - pmod(ts, 1000))
+        // is an exact multiple of 1000, so the remaining div is exact.
+        events.withColumn("ts",
+          timestamp_micros(expr("(ts - pmod(ts, 1000)) div 1000")))
+      case TimestampNTZType =>
+        // Cast interprets the wall time in the session zone; sessions here
+        // run with spark.sql.session.timeZone=UTC, so this reads the stored
+        // micros as UTC instants — the same values the nanos path produced.
+        events.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => events
+    }
 
   /** Tumbling-window per-type aggregation; watermark bounds state. Works on
     * either a streaming or batch frame with the events schema.
@@ -175,48 +174,6 @@ object EventsStream {
     ts.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
     ts
   }
-
-  /** Drive a streaming frame into a memory sink, drain all available
-    * input, and return the sink contents MATERIALIZED (localCheckpoint) so
-    * the backing temp view can be dropped immediately — per-invocation
-    * UUID sinks would otherwise accumulate their buffered rows in driver
-    * memory for the session lifetime (the temp-view analogue of the
-    * BlockManager leak the bench sweep fixes).
-    *
-    * The snapshot is eager on purpose: the sink's view is dropped right
-    * after, so lineage could not recompute it. Its blocks are freed by the
-    * context cleaner once the returned frame is unreachable, or at once by
-    * `Checkpoints.release`.
-    */
-  private def drainToBatch(spark: SparkSession, streaming: DataFrame,
-      prefix: String, outputMode: String = "update"): DataFrame = {
-    val name = s"${prefix}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    try withStatePartitions(spark) {
-      val q = streaming.writeStream.outputMode(outputMode)
-        // memory sink → RAM-backed WAL (durability-class match; see
-        // KeyedState.ephemeralCheckpointDir)
-        .option("checkpointLocation",
-          graft.ops.KeyedState.ephemeralCheckpointDir(s"graft-${prefix}-ckpt"))
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-      spark.table(name).localCheckpoint(true)
-    } finally
-      // inside a finally: a FAILED drain must not leak the sink's
-      // buffered rows for the session lifetime — the exact leak this
-      // helper exists to prevent
-      spark.catalog.dropTempView(name)
-  }
-
-  /** State-partition scoping for the single-node smokes — the measured
-    * rationale (PLANS.md, round-9 q140/q88 adjudication: 32 stores on 14k
-    * state rows cost ~7–9 s of summed commit time vs ~0.6 s across 8) and
-    * the `SPARK_GRAFT_STATE_PARTITIONS` dial now live in
-    * [[graft.ops.KeyedState.withStatePartitions]], shared with the
-    * Dedup/Similarity/Curation streaming entry points (round 16).
-    */
-  private def withStatePartitions[A](spark: SparkSession)(body: => A): A =
-    graft.ops.KeyedState.withStatePartitions(spark)(body)
 
   /** Stateful sessionization: per-user sessions closed after `gapMs` of
     * inactivity, via `flatMapGroupsWithState` with event-time timeout.
@@ -359,8 +316,8 @@ object EventsStream {
       steps: Seq[String],
       filter: Column = lit(true)): DataFrame = {
     val stream = readEventsStream(spark, dir).filter(filter)
-    val drained = drainToBatch(spark, funnelStream(spark, stream, steps),
-      "events_funnel")
+    val drained = Drain.toMemory(spark, funnelStream(spark, stream, steps),
+      "events_funnel", "update", Drain.smokeStatePartitions)
     graft.ops.EventAnalytics.funnelReportFromSteps(
       drained.groupBy("user_id")
         .agg(max(col("steps_completed")).as("steps_completed")),
@@ -421,8 +378,8 @@ object EventsStream {
       filter: Column = lit(true)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val stream = readEventsStream(spark, dir).filter(filter)
-    val drained = drainToBatch(spark, cohortStream(spark, stream),
-      "events_cohort")
+    val drained = Drain.toMemory(spark, cohortStream(spark, stream),
+      "events_cohort", "update", Drain.smokeStatePartitions)
     val latest = drained
       .withColumn("__rn", row_number().over(
         Window.partitionBy("user_id").orderBy(col("n_weeks").desc)))
@@ -514,8 +471,8 @@ object EventsStream {
       filter: Column = lit(true)): DataFrame = {
     var stream = readEventsStream(spark, dir).filter(filter)
     attrExprs.foreach { case (n, c) => stream = stream.withColumn(n, c) }
-    drainToBatch(spark, scd2Stream(spark, stream, attrExprs.map(_._1)),
-        "events_scd2")
+    Drain.toMemory(spark, scd2Stream(spark, stream, attrExprs.map(_._1)),
+        "events_scd2", "update", Drain.smokeStatePartitions)
       .select(col("user_id"),
         // the matching microsecond timestampFormat — see scd2Stream's
         // attrsJson (round-trip must not truncate what the fingerprint
@@ -626,12 +583,12 @@ object EventsStream {
     events.join(dim, events(eventKey) === dim(dimKey), "left")
       .drop(dim(dimKey))
 
-  /** Streaming smoke: drive the events parquet through readStream into a
+  /** Streaming smoke: drive the events parquet through [[Drain.files]] into a
     * memory sink; returns collected windowed counts.
     */
   def runStreamingSmoke(spark: SparkSession, dir: String): DataFrame =
-    drainToBatch(spark, windowedCounts(readEventsStream(spark, dir)),
-      "events_windowed", outputMode = "complete")
+    Drain.toMemory(spark, windowedCounts(readEventsStream(spark, dir)),
+      "events_windowed", "complete", Drain.smokeStatePartitions)
 
   /** Streaming smoke for [[slidingCounts]] — the kappa twin of the batch
     * sliding-window report: the same generator+aggregate maintained
@@ -644,6 +601,6 @@ object EventsStream {
     * transfer to micro-batches this small.)
     */
   def runStreamingSlidingSmoke(spark: SparkSession, dir: String): DataFrame =
-    drainToBatch(spark, slidingCounts(readEventsStream(spark, dir)),
-      "events_sliding", outputMode = "complete")
+    Drain.toMemory(spark, slidingCounts(readEventsStream(spark, dir)),
+      "events_sliding", "complete", Drain.smokeStatePartitions)
 }

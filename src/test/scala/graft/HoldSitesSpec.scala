@@ -5,9 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One way to hold a frame: every reused or barrier frame in the main
   * sources goes through `Checkpoints.pin` (iterative loops through
   * `Checkpoints.truncate`). The only direct holds allowed are in
-  * `Checkpoints.scala` itself and three eager snapshots whose sources are
-  * overwritten afterwards, so recomputing them from lineage would read the
-  * new data.
+  * `Checkpoints.scala` itself and two eager snapshots in `KeyedState`
+  * whose sources are overwritten afterwards, so recomputing them from
+  * lineage would read the new data.
+  *
+  * One drain: every stream is read by `Drain.files` and started, drained
+  * and stopped by `Drain.toMemory` or `Drain.foreachBatch`. Only `Bench`'s
+  * floor probe, which times Spark's own micro-batch floor, drives a stream
+  * by hand.
   *
   * Two ways to look at a job: `perfbench --trace 1` spans, or Spark's own
   * event log (summarized by `tools/eventlog.py`). No main source, examples
@@ -22,11 +27,13 @@ class HoldSitesSpec extends AnyFunSuite {
   private val hold = """\.persist\(|\.cache\(\)|localCheckpoint\(|\.checkpoint\(""".r
   private val listener = """addSparkListener\(|streams\.addListener\(""".r
   private val rddRoundTrip = """\.rdd\.(getNumPartitions|zipWithIndex)""".r
+  private val streamLifecycle = """\.readStream|\.writeStream|processAllAvailable\(""".r
 
   /** Eager snapshots allowed per file (path relative to `root`). */
-  private val snapshots = Map(
-    "ops/KeyedState.scala" -> 2,
-    "streaming/EventsStream.scala" -> 1)
+  private val snapshots = Map("ops/KeyedState.scala" -> 2)
+
+  /** The files allowed to drive a stream by hand. */
+  private val drainSites = Set("streaming/Drain.scala", "Bench.scala")
 
   private def show(rel: String, hits: Seq[(String, Int)]): Seq[String] =
     hits.map { case (l, i) => s"$rel:${i + 1}: ${l.trim}" }
@@ -51,6 +58,14 @@ class HoldSitesSpec extends AnyFunSuite {
     assert(hits.isEmpty, "profile one query with Spark's event log " +
       "(SPARK_GRAFT_CONF, tools/eventlog.py) or a perfbench --trace 1 span, not a new " +
       "listener:\n" + hits.mkString("\n"))
+  }
+
+  test("every stream is read and drained through Drain") {
+    val hits = codeHits(streamLifecycle, withExamples = true).flatMap { case (rel, code) =>
+      if (drainSites(rel)) Nil else show(rel, code)
+    }
+    assert(hits.isEmpty, "read a stream with Drain.files and drain it with Drain.toMemory " +
+      "or Drain.foreachBatch:\n" + hits.mkString("\n"))
   }
 
   test("no RDD partition count or row numbering on a plan-building path") {

@@ -417,8 +417,7 @@ class CurationSpec extends AnyFunSuite {
     val bench = docs.filter($"doc_id" < 10)
     val streamed = Curation.streamingContaminationBlocklist(
         spark, dir, "documents.parquet", "doc_id", "text", bench, "text",
-        n = 6, streamFilter = $"doc_id" >= 10,
-        queryName = "curation_spec_stream_contam")
+        n = 6, streamFilter = $"doc_id" >= 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val batch = Curation.contaminationReport(
         docs.filter($"doc_id" >= 10), "doc_id", "text", bench, "text", n = 6)
@@ -442,7 +441,7 @@ class CurationSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val complete = Curation.streamingContaminationBlocklist(
         spark, s"$base/documents.parquet", "*.parquet", "doc_id", "text",
-        bench, "text", n = 2, queryName = "curation_spec_upd_vs_complete")
+        bench, "text", n = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val batch = Curation.contaminationReport(docs, "doc_id", "text", bench, "text", n = 2)
       .filter($"contaminated")

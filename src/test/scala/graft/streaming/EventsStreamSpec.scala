@@ -36,6 +36,30 @@ class EventsStreamSpec extends AnyFunSuite {
     } finally java.nio.file.Files.deleteIfExists(empty)
   }
 
+  test("reading a micros-encoded events file leaves the session's nanosAsLong conf alone") {
+    // A fresh session: the other tests' reads must not decide the value.
+    val session = spark.newSession()
+    session.conf.set("spark.sql.session.timeZone", "UTC")
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = session.conf.getOption(key)
+    val base = graft.TestScratch.dir("graft-events-micros")
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 10:00:00.123456")
+    session.createDataFrame(java.util.List.of(
+        org.apache.spark.sql.Row(1L, ts, 7L, "click", 1.5, null)),
+        EventsStream.eventSchema)
+      .write.parquet(s"$base/events.parquet")
+    val read = EventsStream.readEvents(session, s"$base/events.parquet")
+    assert(session.conf.getOption(key) == before)
+    val streamed = EventsStream.readEventsStream(session,
+      s"$base/events.parquet", "*.parquet")
+    assert(session.conf.getOption(key) == before)
+    // the restored conf still reads the file: micros need no legacy decode
+    assert(read.select("event_id", "ts").collect().toSeq ==
+      Seq(org.apache.spark.sql.Row(1L, ts)))
+    assert(streamed.schema("ts").dataType ===
+      org.apache.spark.sql.types.TimestampType)
+  }
+
   test("windowed counts: streaming memory-sink result equals batch result") {
     val batch = EventsStream.windowedCounts(
       EventsStream.readEvents(spark, s"$dir/events.parquet"))

@@ -267,8 +267,7 @@ object Curation {
       n: Int = 13,
       minMatches: Int = 1,
       streamFilter: Column = lit(true)): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/$glob").schema
-    val stream = Drain.files(spark, dir, glob, schema).filter(streamFilter)
+    val stream = Drain.files(spark, dir, glob).filter(streamFilter)
     // One eager bounded collect at construction (the batch form's
     // contract); the fp array then rides the plan into every micro-batch
     // — nothing static re-executes per trigger.
@@ -323,11 +322,10 @@ object Curation {
     // against wrong buckets / mix incomparable counts — stamp-and-require
     graft.ops.KeyedState.stampParams(spark, sinkDir,
       Map("nBuckets" -> nBuckets, "n" -> n))
-    val schema = spark.read.parquet(s"$dir/$glob").schema
     // One eager bounded collect at construction; the fp array rides the
     // plan (see streamingContaminationBlocklist).
     val fps = benchFpArray(spark, benchGramFingerprints(bench, benchTextCol, n))
-    val matched = Drain.files(spark, dir, glob, schema, maxFilesPerTrigger)
+    val matched = Drain.files(spark, dir, glob, maxFilesPerTrigger)
       .select(col(idCol),
         coalesce(
           graft.functions.HashExpressions.gramMatchStats(col(textCol), n, fps)

@@ -42,8 +42,7 @@ object Dedup {
       glob: String,
       idCol: String,
       textCol: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/$glob").schema
-    val agg = Drain.files(spark, dir, glob, schema)
+    val agg = Drain.files(spark, dir, glob)
       .groupBy(contentFingerprint(col(textCol)).as("fingerprint"))
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keep_id"))
     // State stores sized to the smoke's state volume, not the session's
@@ -85,8 +84,7 @@ object Dedup {
     // the sink's __bucket= partition dirs are pmod(hash, nBuckets): a
     // re-run with a drifted count would merge against the wrong buckets
     KeyedState.stampParams(spark, sinkDir, Map("nBuckets" -> nBuckets))
-    val schema = spark.read.parquet(s"$dir/$glob").schema
-    val agg = Drain.files(spark, dir, glob, schema, maxFilesPerTrigger)
+    val agg = Drain.files(spark, dir, glob, maxFilesPerTrigger)
       .groupBy(contentFingerprint(col(textCol)).as("fingerprint"))
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keep_id"))
     // State stores + foreachBatch shuffle width: callers size it to their
@@ -688,69 +686,6 @@ object Dedup {
           size(array_union(col("sh_a"), col("sh_b"))))
       .filter(col("jaccard") >= threshold)
 
-  /** Hash bucket for the keyed streaming state dirs: a pure function of
-    * the key columns, so a probe by key touches exactly one bucket. */
-  // Keyed-state discipline (hash-bucket partition dirs, one-file appends,
-  // threshold compaction) — shared with the streaming IVF index via
-  // [[KeyedState]]; these wrappers fix the `__bucket` column name.
-  private def stateBucket(keys: Seq[String], nBuckets: Int): Column =
-    KeyedState.bucketColumn(keys, nBuckets).as("__bucket")
-
-  private def touchedBuckets(buckets: DataFrame): Seq[Any] =
-    KeyedState.touchedValues(buckets)
-
-  /** Read only the given hash buckets of a `__bucket=K`-partitioned state
-    * dir — partition pruning at the scan, so probe cost follows the
-    * touched buckets, not the accumulated state size. */
-  private def readStateBuckets(spark: org.apache.spark.sql.SparkSession,
-      path: String, buckets: Seq[Any],
-      dataSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-    // Explicit bucket dirs + basePath instead of a root read with an isin
-    // filter: partition DISCOVERY then lists only the touched dirs, not
-    // all nStateBuckets of them; the explicit schema (data columns + the
-    // __bucket partition column Spark appends last) skips the read's
-    // footer-inference job. Both were per-batch protocol costs the idle
-    // probe charged to every probe read, independent of batch size.
-    // one root listing finds which touched buckets EXIST (a batch can
-    // touch a bucket no prior batch wrote; an explicit read of a missing
-    // dir would throw where the old isin filter just matched nothing)
-    val fs = KeyedState.fsOf(spark, path)
-    val present = fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .collect { case st if st.getPath.getName.startsWith("__bucket=") =>
-        st.getPath.getName.stripPrefix("__bucket=") }.toSet
-    val touched = buckets.map(String.valueOf).distinct.filter(present)
-    if (touched.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dataSchema)
-    val schema = dataSchema.add("__bucket",
-      org.apache.spark.sql.types.IntegerType)
-    // A bulk batch touching MOST buckets reads the root (1 qualification
-    // + discovery over dirs it needs anyway); a trickle batch touching a
-    // few reads those dirs explicitly (discovery never lists the idle
-    // buckets — the idle-probe regime this read is priced for).
-    val base =
-      if (touched.size * 2 >= present.size)
-        spark.read.schema(schema).parquet(path)
-          .filter(col("__bucket").isin(buckets: _*))
-      else
-        spark.read.schema(schema).option("basePath", path)
-          .parquet(touched.map(b => s"$path/__bucket=$b"): _*)
-    base.drop("__bucket")
-  }
-
-  /** Returns the bucket values this batch actually published into (Nil on
-    * a replay skip) — the caller's compaction-candidate list. */
-  private def appendStateBuckets(df: DataFrame, path: String,
-      keys: Seq[String], nBuckets: Int, batchId: Long): Seq[String] =
-    KeyedState.appendPartitionedAtomic(
-      df.withColumn("__bucket", stateBucket(keys, nBuckets)),
-      path, "__bucket", nBuckets, batchId)
-
-  private def compactStateBuckets(spark: org.apache.spark.sql.SparkSession,
-      path: String, buckets: Seq[Any], maxFiles: Int): Unit =
-    if (buckets.nonEmpty)
-      KeyedState.compactPartitions(spark, path, "__bucket", buckets, maxFiles)
-
   /** Streaming incremental MinHash near-dedup: documents arrive in
     * micro-batches and each batch pays only ITS OWN work — shingle + sign +
     * band the new docs, probe the accumulated band index for cross-batch
@@ -813,7 +748,7 @@ object Dedup {
       "nStateBuckets" -> nStateBuckets, "numHashes" -> numHashes,
       "bands" -> bands, "shingleLen" -> shingleLen,
       "threshold" -> threshold))
-    val schema = spark.read.parquet(s"$dir/$glob").schema
+    val stream = Drain.files(spark, dir, glob, maxFilesPerTrigger)
     def exists(p: String): Boolean = {
       val path = new org.apache.hadoop.fs.Path(p)
       path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
@@ -823,8 +758,7 @@ object Dedup {
     // distinct, verify joins) runs at this width. Callers size it to
     // their batch/state volume via `statePartitions`; unset keeps the
     // session width (Drain.foreachBatch).
-    Drain.foreachBatch(Drain.files(spark, dir, glob, schema, maxFilesPerTrigger),
-        checkpointDir, statePartitions) { (batch, batchId) =>
+    Drain.foreachBatch(stream, checkpointDir, statePartitions) { (batch, batchId) =>
       // Heal any compaction swap a previous run's crash interrupted
       // BEFORE this batch probes the stores (one `exists` each when
       // clean — see KeyedState's crash-safety protocol).
@@ -849,13 +783,13 @@ object Dedup {
       // a full-index join. (Bucket computation is skipped entirely on
       // the first batch — there is no index to probe yet.)
       val hasIndex = exists(bandedDir)
-      val bandBuckets = if (hasIndex) touchedBuckets(
-        banded.select(stateBucket(Seq("band", "band_sig"), nStateBuckets)))
+      val bandBuckets = if (hasIndex) KeyedState.touchedValues(
+        banded.select(KeyedState.bucketColumn(Seq("band", "band_sig"), nStateBuckets)))
       else Nil
       val cross = if (bandBuckets.nonEmpty) Some(
         banded.withColumnRenamed(idCol, "id_new").join(
-          readStateBuckets(spark, bandedDir, bandBuckets, banded.schema)
-            .withColumnRenamed(idCol, "id_other"),
+          KeyedState.readBuckets(spark, bandedDir, bandBuckets, banded.schema)
+            .drop("__bucket").withColumnRenamed(idCol, "id_other"),
           Seq("band", "band_sig"))
           .select("id_new", "id_other"))
       else None
@@ -875,8 +809,8 @@ object Dedup {
       // by LSH construction.
       val hasShingles = exists(shinglesDir)
       val cand = if (hasShingles) Checkpoints.pin(candRaw) else candRaw
-      val shBuckets = if (hasShingles) touchedBuckets(
-        cand.select(stateBucket(Seq("id_other"), nStateBuckets)))
+      val shBuckets = if (hasShingles) KeyedState.touchedValues(
+        cand.select(KeyedState.bucketColumn(Seq("id_other"), nStateBuckets)))
       else Nil
       // Anti-join the store against the batch's own ids: normally a
       // no-op (the store holds only PRIOR batches), but on a replay
@@ -885,8 +819,8 @@ object Dedup {
       // every candidate row would verify twice.
       val others = if (shBuckets.nonEmpty)
         sets.unionByName(
-          readStateBuckets(spark, shinglesDir, shBuckets, sets.schema)
-            .join(sets.select(idCol), Seq(idCol), "left_anti"))
+          KeyedState.readBuckets(spark, shinglesDir, shBuckets, sets.schema)
+            .drop("__bucket").join(sets.select(idCol), Seq(idCol), "left_anti"))
       else sets
       val verified = verifyJaccard(cand
           .join(sets.select(col(idCol).as("id_new"), col("sh").as("sh_a")), "id_new")
@@ -950,12 +884,13 @@ object Dedup {
       // mostly-idle dirs). On a replay skip the list is Nil and
       // compaction waits for the next real append — opportunistic by
       // the documented contract.
-      def bandedWrite(): Seq[String] =
-        appendStateBuckets(banded, bandedDir, Seq("band", "band_sig"),
-          nStateBuckets, batchId)
-      def shinglesWrite(): Seq[String] =
-        appendStateBuckets(sets, shinglesDir, Seq(idCol), nStateBuckets,
-          batchId)
+      def bandedWrite(): Seq[String] = KeyedState.appendPartitionedAtomic(
+        banded.withColumn("__bucket",
+          KeyedState.bucketColumn(Seq("band", "band_sig"), nStateBuckets)),
+        bandedDir, "__bucket", nStateBuckets, batchId)
+      def shinglesWrite(): Seq[String] = KeyedState.appendPartitionedAtomic(
+        sets.withColumn("__bucket", KeyedState.bucketColumn(Seq(idCol), nStateBuckets)),
+        shinglesDir, "__bucket", nStateBuckets, batchId)
       // Injected-crash point "minhash_mid_writes" (test-only, see
       // [[Failpoint]]): the index appends publish WITH their witnesses,
       // the pairs append does not — the partial-batch crash the
@@ -981,8 +916,9 @@ object Dedup {
       // interrupted swaps) lives in KeyedState's staged-swap + repair
       // protocol.
       KeyedState.compactFlat(spark, pairsDir, compactAfterFiles)
-      compactStateBuckets(spark, bandedDir, pubBanded, compactAfterFiles)
-      compactStateBuckets(spark, shinglesDir, pubShingles,
+      KeyedState.compactPartitions(spark, bandedDir, "__bucket", pubBanded,
+        compactAfterFiles)
+      KeyedState.compactPartitions(spark, shinglesDir, "__bucket", pubShingles,
         compactAfterFiles)
       Seq(sets, sigs, banded).foreach(Checkpoints.release)
       // Injected-crash point "minhash_post_writes" (test-only): every
@@ -999,7 +935,7 @@ object Dedup {
     else {
       // A duplicate-free corpus must still yield the pairs schema so
       // callers can select/orderBy id_a without special-casing.
-      val idType = schema(schema.fieldIndex(idCol)).dataType
+      val idType = stream.schema(idCol).dataType
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(

@@ -1,9 +1,10 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** The keyed streaming-state discipline shared by every foreachBatch sink
   * that accumulates partitioned parquet state ([[Dedup]]'s band index and
@@ -27,12 +28,15 @@ import org.apache.spark.sql.functions._
   * candidate partition), never data reads; nothing fires until some
   * partition crosses the threshold.
   *
-  * REPLAY SAFETY: every streaming write goes through one of the fenced
-  * staged writers below ([[appendPartitionedAtomic]], [[appendFlatAtomic]],
-  * [[replacePartitionsAtomic]]). Each skips a batch whose
+  * REPLAY SAFETY: every streaming write goes through one of the staged
+  * writers below ([[appendPartitionedAtomic]], [[appendFlatAtomic]],
+  * [[replacePartitionsAtomic]], [[combineBucketsAtomic]]), and each takes
+  * the one fenced [[stage]] step: it skips a batch whose
   * `<path>__pub/b<id>` witness exists, so a checkpoint-recovery replay
-  * of a published batch writes nothing; the witness is the one replay
-  * fence, and callers carry no markers of their own.
+  * of a published batch writes nothing, and reuses a fenced stage
+  * instead of re-running the batch plan. The witness is the one replay
+  * fence, written in one place ([[stageAndPublish]]), and callers carry
+  * no markers of their own.
   *
   * CRASH SAFETY: compaction must never be the operation that loses
   * accumulated state — the appends it rewrites are fenced by the
@@ -55,49 +59,51 @@ object KeyedState {
   def bucketColumn(keys: Seq[String], nBuckets: Int): Column =
     pmod(xxhash64(keys.map(col): _*), lit(nBuckets)).cast("int")
 
-  // ---- staged-swap batch appends ---------------------------------------
+  // ---- the staged-write protocol ------------------------------------------
   //
   // A bare mode("append") cannot be replayed: a crash INSIDE the parquet
   // job commit (FileOutputCommitter moves task outputs into the live dir
   // file by file) lands SOME of the batch's files, and the replayed batch
   // then appends a full second copy next to the partial first; a crash
-  // after the commit replays a full second copy outright. The staged
-  // appends close both: the batch writes to a
+  // after the commit replays a full second copy outright. Every streaming
+  // write therefore takes one [[stage]] step: the batch writes to a
   // SIBLING staged dir (a crash inside THAT job commit touches only the
-  // staged dir, which the replay deletes), a `_FENCE` file marks the
-  // staged write complete, publication moves each staged file into the
-  // live dir under a batch-prefixed name (collision-proof across
-  // batches), and a per-batch marker under the `<path>__pub` sibling
-  // records completed publication. Each per-file rename is atomic, so at
-  // every instant a staged file exists in exactly one of the two dirs,
-  // and every crash point replays to the same final state:
+  // staged dir, which the replay deletes) and a `_FENCE` file marks the
+  // staged write complete. Publication then moves the staged output into
+  // the live tree — per-file renames under batch-prefixed names for the
+  // appends, per-partition swaps for the replaces — and only after every
+  // move lands does [[stageAndPublish]] write the `<path>__pub/b<id>`
+  // witness. Every crash point replays to the same final state:
   //
   //   - crash before `_FENCE` (incl. inside the staged job commit):
   //     replay deletes the unfenced staged dir and rewrites;
   //   - crash mid-publication: the fenced staged dir survives, replay
-  //     resumes moving whatever files remain;
-  //   - crash after publication, before the `__pub` marker: replay finds
-  //     a fenced staged dir with no data files left, moves nothing,
-  //     writes the marker, cleans up;
-  //   - crash after the marker (before the staged-dir delete, or any
-  //     time before Structured Streaming commits the batch): the
-  //     `__pub/b<batchId>` marker proves publication completed (it is
-  //     written only after every staged file moved), so replay just drops
-  //     any staged leftovers and returns without re-appending.
+  //     resumes moving whatever remains;
+  //   - crash after publication, before the witness: replay finds a
+  //     fenced staged dir with nothing left to move, moves nothing,
+  //     writes the witness, cleans up;
+  //   - crash after the witness (before the staged-dir delete, or any
+  //     time before Structured Streaming commits the batch): the witness
+  //     proves publication completed, so replay just drops any staged
+  //     leftovers and writes nothing.
   //
-  // The marker is ONE driver `exists` call per batch — a listing of the
+  // The witness is ONE driver `exists` call per batch — a listing of the
   // live tree for `b<batchId>_`-prefixed files would grow with
-  // accumulated state (partitions × files per partition). Markers
+  // accumulated state (partitions × files per partition). Witnesses
   // accumulate one empty file per published batch, pruned by the
   // retention sweep below.
   //
-  // Staged/marker dirs are SIBLINGS of the live root
-  // (`<path>__staged_b<id>`, `<path>__pub`), never inside it — a stray
-  // non-partition dir inside a partitioned root breaks partition-value
-  // inference for every read (the compactor discipline above).
+  // Staged/witness dirs are SIBLINGS of the live root
+  // (`<path>__staged_b<id>`, `<path>__batch_b<id>`, `<path>__pub`), never
+  // inside it — a stray non-partition dir inside a partitioned root
+  // breaks partition-value inference for every read (the compactor
+  // discipline above).
 
   private def stagedDir(path: String, batchId: Long): Path =
     new Path(path + s"__staged_b$batchId")
+
+  private def batchStage(path: String, batchId: Long): Path =
+    new Path(path + s"__batch_b$batchId")
 
   private def pubMarker(path: String, batchId: Long): Path =
     new Path(path + "__pub", s"b$batchId")
@@ -110,20 +116,107 @@ object KeyedState {
       else Seq.empty
     }
 
-  /** Move every remaining staged data file into the live tree under its
-    * batch-prefixed name, preserving the partition subdir, write the
-    * batch's `__pub` marker (the completed-publication witness — written
-    * only after every file moved), then drop the staged dir. Idempotent:
-    * re-runs move whatever is left. Returns the partition VALUES whose
-    * dirs received files — the caller's compaction-candidate list for
-    * free (the publish walks exactly the touched dirs; a resumed
+  /** Has batch `batchId` already published into `path`? (its `__pub/b<id>`
+    * completed-publication witness) */
+  private[ops] def isPublished(spark: SparkSession, path: String,
+      batchId: Long): Boolean =
+    fsOf(spark, path).exists(pubMarker(path, batchId))
+
+  /** The one fenced stage step of every staged write: stage batch
+    * `batchId` of the sink at `path` into the sibling `dir` by `write`.
+    *
+    *   - published (the batch's witness exists): a leftover `dir` is
+    *     deleted and nothing is written;
+    *   - fenced (`dir` holds `_FENCE` from an earlier attempt): the stage
+    *     is reused, never rewritten;
+    *   - otherwise a torn `dir` is deleted and `write` stages afresh — the
+    *     only Spark job, with deliberately NO pre-write `isEmpty` action:
+    *     a stage holding no data file is dropped, so an empty batch costs
+    *     the one write job it was already paying. A non-empty stage gets
+    *     its `_FENCE`, then the writer's test-only crash point
+    *     ([[Failpoint]] `failpoint`: staged and fenced, nothing published
+    *     — the torn-commit window a bare write cannot survive).
+    *
+    * A published or fenced step runs no write, so inside a micro-batch it
+    * runs `df` once into Spark's no-op sink ([[drainInMicroBatch]]).
+    * Returns whether `dir` now holds a fenced stage to publish. */
+  private def stage(df: DataFrame, path: String, dir: Path, batchId: Long,
+      failpoint: String)(write: String => Unit): Boolean = {
+    val spark = df.sparkSession
+    val fs = fsOf(spark, path)
+    val fence = new Path(dir, "_FENCE")
+    val published = isPublished(spark, path, batchId)
+    if (published || fs.exists(fence)) {
+      if (published) fs.delete(dir, true)
+      drainInMicroBatch(df)
+      return !published
+    }
+    fs.delete(dir, true) // an unfenced partial stage from a crash
+    write(dir.toString)
+    if (dataFiles(fs, dir).isEmpty) { fs.delete(dir, true); return false }
+    fs.create(fence, true).close()
+    Failpoint.hit(spark, failpoint, batchId)
+    true
+  }
+
+  /** Run `df` once into Spark's no-op sink when called inside a streaming
+    * micro-batch. A replay that finds its batch already staged, fenced or
+    * published writes nothing, but Structured Streaming commits a stateful
+    * query's state stores only when the `foreachBatch` frame executes, and
+    * fails the batch otherwise (`STATE_STORE_COMMIT_VALIDATION_FAILED`).
+    * Outside a stream there is no state to commit, and nothing runs. */
+  private def drainInMicroBatch(df: DataFrame): Unit =
+    if (df.sparkSession.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY) != null)
+      df.write.format("noop").mode("overwrite").save()
+
+  /** The witnessed writers' shared body: sweep old witnesses, take the
+    * [[stage]] step on `<path>__staged_b<id>`, and when it holds a fenced
+    * stage, `publish` it into the live tree (idempotent: a resumed
+    * publication moves whatever remains), then write the batch's `__pub`
+    * witness — the one place it is written, only after every move landed
+    * — and drop the stage. Returns `publish`'s result; None when there
+    * was nothing to publish. */
+  private def stageAndPublish[A](df: DataFrame, path: String, batchId: Long,
+      failpoint: String)(write: String => Unit)(
+      publish: (FileSystem, Path) => A): Option[A] = {
+    val spark = df.sparkSession
+    val fs = fsOf(spark, path)
+    val staged = stagedDir(path, batchId)
+    // cadenced retention sweep of this sink's publication witnesses
+    // (old witnesses only — the current batch's is never at the floor)
+    maybePruneMarkers(spark, path + "__pub", batchId)
+    if (!stage(df, path, staged, batchId, failpoint)(write)) return None
+    val published = publish(fs, staged)
+    val marker = pubMarker(path, batchId)
+    fs.mkdirs(marker.getParent)
+    fs.create(marker, true).close()
+    fs.delete(staged, true)
+    Some(published)
+  }
+
+  /** Write `df` into `out` partitioned by `partCol`, one file per touched
+    * value: an explicit repartition count before the dynamic-partition
+    * write (`numTasks` bounds the task count; each value lands wholly in
+    * one task). */
+  private def writePartitioned(df: DataFrame, partCol: String,
+      numTasks: Int)(out: String): Unit =
+    df.repartition(numTasks, col(partCol))
+      .write.mode("overwrite").partitionBy(partCol).parquet(out)
+
+  /** The staged appends' publication: move every remaining staged data
+    * file into the live tree under its batch-prefixed name (collision-
+    * proof across batches), preserving the partition subdir. Each rename
+    * is atomic, so a staged file exists in exactly one of the two dirs at
+    * every instant. Returns the partition VALUES whose dirs received
+    * files — the caller's compaction-candidate list for free (a resumed
     * publication reports only the remainder, which under-reports
     * candidates harmlessly — compaction is opportunistic). */
-  private def publishStaged(fs: FileSystem, staged: Path, live: Path,
-      path: String, batchId: Long): Seq[String] = {
+  private def moveStaged(path: String, batchId: Long)(fs: FileSystem,
+      staged: Path): Seq[String] = {
     // listStatus returns QUALIFIED paths (scheme + authority); qualify the
     // root too or the flat-dir parent comparison below never matches
     val stagedQ = fs.makeQualified(staged)
+    val live = new Path(path)
     val touched = collection.mutable.LinkedHashSet.empty[String]
     for (st <- dataFiles(fs, staged)) {
       val rel = st.getPath.getParent
@@ -138,54 +231,11 @@ object KeyedState {
       if (fs.exists(dest)) fs.delete(st.getPath, false)
       else fs.rename(st.getPath, dest)
     }
-    val marker = pubMarker(path, batchId)
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close()
-    fs.delete(staged, true)
     touched.toSeq
   }
 
-  /** Shared body of the two staged appends: `write` stages the frame
-    * into `staged` (the only Spark job — there is deliberately NO
-    * pre-write `isEmpty` action: emptiness is detected from the staged
-    * output's data-file listing instead, so an empty batch costs the one
-    * write job it was already paying, not two). A staged write that
-    * produced no data files (empty partitioned frame) is dropped without
-    * publication — publishing nothing would leave no witness, and the
-    * replayed empty write is a no-op anyway. Returns the published
-    * partition values ([[publishStaged]]); Nil on the skip paths. */
-  private def stagedAppend(spark: SparkSession, path: String, batchId: Long,
-      failpoint: String)(write: String => Unit): Seq[String] = {
-    val fs = fsOf(spark, path)
-    val staged = stagedDir(path, batchId)
-    val live = new Path(path)
-    val fence = new Path(staged, "_FENCE")
-    // cadenced retention sweep of this sink's publication witnesses
-    // (old markers only — the current batch's is never at the floor)
-    maybePruneMarkers(spark, path + "__pub", batchId)
-    if (fs.exists(pubMarker(path, batchId))) {
-      // already fully published (a replay whose crash landed after the
-      // marker — before the staged delete or the checkpoint commit)
-      if (fs.exists(staged)) fs.delete(staged, true)
-      return Nil
-    }
-    if (fs.exists(staged) && fs.exists(fence))
-      return publishStaged(fs, staged, live, path, batchId)
-    if (fs.exists(staged)) fs.delete(staged, true) // unfenced partial write
-    write(staged.toString)
-    if (dataFiles(fs, staged).isEmpty) { fs.delete(staged, true); return Nil }
-    fs.create(fence, true).close()
-    // Injected-crash point (test-only, [[Failpoint]]): the staged write
-    // is complete and fenced but NOTHING is published — the torn-commit
-    // window a bare append cannot survive. CrashRecoverySpec kills a
-    // stream here and proves the checkpoint replay resumes publication.
-    Failpoint.hit(spark, failpoint, batchId)
-    publishStaged(fs, staged, live, path, batchId)
-  }
-
-  /** Append into `path/<partCol>=<v>/` dirs under the staged-swap
-    * protocol, one file per touched partition value (`numTasks` bounds
-    * the write's task count; each value lands wholly in one task):
+  /** Append into `path/<partCol>=<v>/` dirs through the staged-write
+    * protocol, one file per touched partition value ([[writePartitioned]]):
     * exactly once per `batchId` under crashes anywhere, including inside
     * the write's own job commit and after publication. Returns the
     * partition values this batch published into (the caller's
@@ -193,10 +243,9 @@ object KeyedState {
     * replay skip — compaction candidates are best-effort by design). */
   def appendPartitionedAtomic(df: DataFrame, path: String, partCol: String,
       numTasks: Int, batchId: Long): Seq[String] =
-    stagedAppend(df.sparkSession, path, batchId, "staged_post_fence") { out =>
-      df.repartition(numTasks, col(partCol))
-        .write.mode("overwrite").partitionBy(partCol).parquet(out)
-    }
+    stageAndPublish(df, path, batchId, "staged_post_fence")(
+      writePartitioned(df, partCol, numTasks))(moveStaged(path, batchId))
+      .getOrElse(Nil)
 
   /** [[appendPartitionedAtomic]] for FLAT (unpartitioned) append dirs,
     * shuffled down to `numFiles` output files per batch. `repartition`,
@@ -208,86 +257,14 @@ object KeyedState {
     * publishes harmlessly and later compaction absorbs it. */
   def appendFlatAtomic(df: DataFrame, path: String, numFiles: Int,
       batchId: Long): Unit = {
-    stagedAppend(df.sparkSession, path, batchId, "staged_post_fence_flat") {
+    stageAndPublish(df, path, batchId, "staged_post_fence_flat") {
       out => df.repartition(numFiles).write.mode("overwrite").parquet(out)
-    }
+    }(moveStaged(path, batchId))
     ()
   }
 
   private[ops] def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  // ---- micro-batch staging (the affected-bucket source) ------------------
-  //
-  // A keyed sink ([[Upsert.upsertKeyedParquet]], [[Upsert.mergeKeyedParquet]])
-  // needs the micro-batch twice on a WARM sink: once to learn which
-  // buckets it touches (so the existing-state read prunes to those
-  // partitions) and once as combine input. Staging the batch's OUTPUT to
-  // a sibling dir makes the plan execute exactly once — the affected
-  // buckets fall out of the staged partition-dir listing, and the combine
-  // re-reads the staged parquet, paying a roundtrip of the batch's small
-  // output instead of a second execution of its plan. The staging is
-  // fenced like the staged appends above, so a replay reuses it and never
-  // re-executes the batch plan against half-written state.
-
-  private[ops] def batchStage(path: String, batchId: Long): Path =
-    new Path(path + s"__batch_b$batchId")
-
-  /** Stage the micro-batch frame into the `<path>__batch_b<id>` sibling,
-    * partitioned by `partCol` (one file per touched partition value), and
-    * return the touched partition VALUES read off the staged dirs. Empty
-    * batches stage no data files → the dir is dropped and Nil returned
-    * (the caller's emptiness guard, costing no extra action). A `_FENCE`
-    * file marks the staging complete; a replay of `batchId` REUSES a
-    * fenced staging instead of re-executing the plan (draining the frame
-    * inside a micro-batch, [[drainInMicroBatch]]), and deletes an
-    * unfenced (torn) one before writing again. */
-  private[ops] def stageMicroBatch(df: DataFrame, path: String,
-      partCol: String, numTasks: Int, batchId: Long): Seq[String] = {
-    val spark = df.sparkSession
-    val fs = fsOf(spark, path)
-    val dir = batchStage(path, batchId)
-    val fence = new Path(dir, "_FENCE")
-    if (!(fs.exists(fence) && fs.exists(dir))) {
-      fs.delete(dir, true) // unfenced partial staging from a crash
-      df.repartition(numTasks, col(partCol))
-        .write.mode("overwrite").partitionBy(partCol).parquet(dir.toString)
-      if (dataFiles(fs, dir).isEmpty) { fs.delete(dir, true); return Nil }
-      fs.create(fence, true).close()
-      // Injected-crash point (test-only, [[Failpoint]]): batch staged
-      // and fenced, combine not yet computed — the replay must combine
-      // the staged rows, never a second execution of the batch plan, and
-      // apply them exactly once.
-      Failpoint.hit(spark, "batch_stage_post_fence", batchId)
-    } else drainInMicroBatch(df)
-    fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(partCol + "="))
-      .map(_.getPath.getName.split("=", 2).last)
-  }
-
-  /** Run `df` once into Spark's no-op sink when called inside a streaming
-    * micro-batch. A replay that finds its batch already staged, fenced or
-    * published writes nothing, but Structured Streaming commits a stateful
-    * query's state stores only when the `foreachBatch` frame executes, and
-    * fails the batch otherwise (`STATE_STORE_COMMIT_VALIDATION_FAILED`).
-    * Outside a stream there is no state to commit, and nothing runs. */
-  private[ops] def drainInMicroBatch(df: DataFrame): Unit =
-    if (df.sparkSession.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY) != null)
-      df.write.format("noop").mode("overwrite").save()
-
-  /** Drop the staged micro-batch dir once its batch is fully published. */
-  private[ops] def dropBatchStage(spark: SparkSession, path: String,
-      batchId: Long): Unit = {
-    val fs = fsOf(spark, path)
-    val dir = batchStage(path, batchId)
-    if (fs.exists(dir)) fs.delete(dir, true)
-  }
-
-  /** Has batch `batchId`'s replace-swap already published into `path`?
-    * (the `__pub/b<id>` completed-publication witness) */
-  private[ops] def isPublished(spark: SparkSession, path: String,
-      batchId: Long): Boolean =
-    fsOf(spark, path).exists(pubMarker(path, batchId))
 
   // ---- marker retention --------------------------------------------------
   //
@@ -340,16 +317,6 @@ object KeyedState {
       pruneBatchMarkers(spark, markerDir, batchId - every)
   }
 
-  /** Is batch `batchId`'s replace-swap staged write complete (fenced) but
-    * not yet published? A replay at this point must resume the swap
-    * WITHOUT recomputing its content — not even a batch re-staging. */
-  private[ops] def isReplaceFenced(spark: SparkSession, path: String,
-      batchId: Long): Boolean = {
-    val fs = fsOf(spark, path)
-    val staged = stagedDir(path, batchId)
-    fs.exists(new Path(staged, "_FENCE")) && fs.exists(staged)
-  }
-
   // ---- replace-partition swaps (the keyed upsert/merge sinks) -----------
   //
   // Spark's dynamic partition overwrite commits by DELETING each existing
@@ -357,69 +324,141 @@ object KeyedState {
   // operations with no healing protocol. A crash between them loses the
   // partition's accumulated state outright: the combined rows existed
   // only in the in-flight job, and the batch replay can re-deliver the
-  // BATCH but not the prior state it was combined with. The swap below
-  // stages the new partition contents to a sibling, then swaps each
-  // partition via the compaction protocol (preserve live under `__old` →
-  // rename staged in → drop preserved), so at every instant a partition's
-  // rows exist under the live path or the `__old` sibling, never nowhere;
-  // [[repairPartitions]] heals any interruption. Because the write target
-  // is the stage sibling, the caller may compute the new contents FROM
-  // the live path without a localCheckpoint barrier — read path and write
-  // path only meet at the (driver-side, healed) swap.
+  // BATCH but not the prior state it was combined with. The replace
+  // below stages the new partition contents to a sibling, then swaps
+  // each partition via the compaction protocol ([[swapStagedDirs]]), so
+  // at every instant a partition's rows exist under the live path or the
+  // `__old` sibling, never nowhere; [[repairPartitions]] heals any
+  // interruption. Because the write target is the stage sibling, the
+  // caller may compute the new contents FROM the live path without a
+  // localCheckpoint barrier — read path and write path only meet at the
+  // (driver-side, healed) swap.
 
-  /** Replace `df`'s `partCol=v` partitions of `path` under the staged-batch
-    * fence protocol — the one write of both keyed sinks
-    * ([[Upsert.upsertKeyedParquet]], [[Upsert.mergeKeyedParquet]]). The
-    * double-apply hazard is a replay that RECOMPUTES the new contents
-    * against partially-new state (an accumulate-merge key's list would
-    * concatenate the batch twice); the fence closes it: once the staged
-    * write completes and `_FENCE` lands, a replay never re-executes `df`'s
-    * plan — it RESUMES the swap from the staged dirs (df is lazy; the
-    * resume path never triggers its job), and the `__pub` marker
-    * witnesses a completed swap exactly as in the staged appends. Crash
-    * table mirrors [[appendPartitionedAtomic]], with preserve-rename
-    * (healed by [[repairPartitions]], which runs first) in place of
-    * per-file publication. */
+  /** Replace `df`'s `partCol=v` partitions of `path` through the
+    * staged-write protocol. The double-apply hazard is a replay that
+    * RECOMPUTES the new contents against partially-new state (an
+    * accumulate-merge key's list would concatenate the batch twice); the
+    * fence closes it: once the staged write completes and `_FENCE` lands,
+    * a replay never re-executes `df`'s plan — it RESUMES the swap from
+    * the staged dirs (df is lazy; the resume path never triggers its
+    * job), and the `__pub` witness marks a completed swap exactly as in
+    * the staged appends. Crash table as in [[appendPartitionedAtomic]],
+    * with the partition swap (healed by [[repairPartitions]], which runs
+    * first) in place of per-file publication. */
   def replacePartitionsAtomic(df: DataFrame, path: String, partCol: String,
       numTasks: Int, batchId: Long): Unit = {
-    val spark = df.sparkSession
+    repairPartitions(df.sparkSession, path)
+    replaceStaged(df, path, batchId)(writePartitioned(df, partCol, numTasks))
+  }
+
+  /** The replace writes' [[stageAndPublish]]: publication is the
+    * partition swap, whose `replace_mid_swap` crash point fires after the
+    * FIRST partition's preserve — the worst window (live copy moved
+    * aside, new content not yet in). */
+  private def replaceStaged(df: DataFrame, path: String, batchId: Long)(
+      write: String => Unit): Unit = {
+    stageAndPublish(df, path, batchId, "replace_post_fence")(write) {
+      (fs, staged) => swapStagedDirs(fs, staged, path)(
+        Failpoint.hit(df.sparkSession, "replace_mid_swap", batchId))
+    }
+    ()
+  }
+
+  /** The one write of the keyed parquet sinks ([[Upsert.upsertKeyedParquet]],
+    * [[Upsert.mergeKeyedParquet]]). The sink is partitioned by
+    * `__bucket = pmod(xxhash64(keys), nBuckets)`; `combine(existing,
+    * batch)` computes the new contents of the buckets the batch touches
+    * from their live rows and the batch's rows (both with `__bucket` last,
+    * read with the batch's schema — so a combine must keep each column's
+    * type).
+    *
+    *   - A FRESH sink combines against nothing: the batch is the new
+    *     content, replaced in directly; the stage step's no-data-file
+    *     check is the emptiness guard. Never a direct append: a torn
+    *     first write replayed into the warm path would combine the batch
+    *     with its own partial rows.
+    *   - A WARM sink needs the batch twice: once to learn which buckets it
+    *     touches (so the live read prunes to them) and once as combine
+    *     input. It stages the batch's OUTPUT to `<path>__batch_b<id>`
+    *     first — a fenced [[stage]] step of its own, the ONLY execution of
+    *     the batch plan — reads the touched buckets off the staged
+    *     partition dirs (no extra Spark action), and combines two parquet
+    *     reads ([[readBuckets]] of the live sink + the staged batch), so
+    *     the replace never re-runs the batch plan.
+    *
+    * Both paths write through the replace's fenced stage, so a crash at
+    * ANY point — including inside a staged write's job commit or
+    * mid-swap — replays to exactly-once: a fenced or published replace
+    * resumes or skips before anything else runs, a fenced batch staging
+    * is reused, and the batch staging is dropped once the replace
+    * published. */
+  def combineBucketsAtomic(updates: DataFrame, path: String, keys: Seq[String],
+      nBuckets: Int, batchId: Long)(
+      combine: (DataFrame, DataFrame) => DataFrame): Unit = {
+    val spark = updates.sparkSession
+    val withBucket = updates.withColumn("__bucket", bucketColumn(keys, nBuckets))
+    def write(df: DataFrame): String => Unit =
+      writePartitioned(df, "__bucket", nBuckets)
+    val batchDir = batchStage(path, batchId)
+    // heal any interrupted swap before anything lists or reads the sink
     repairPartitions(spark, path)
-    val fs = fsOf(spark, path)
-    val staged = stagedDir(path, batchId)
-    val fence = new Path(staged, "_FENCE")
-    // cadenced retention sweep of this sink's publication witnesses
-    maybePruneMarkers(spark, path + "__pub", batchId)
-    if (fs.exists(pubMarker(path, batchId))) {
-      if (fs.exists(staged)) fs.delete(staged, true)
-      return
+    replaceStaged(withBucket, path, batchId) { out =>
+      if (!hasData(spark, path)) write(withBucket)(out)
+      else if (stage(withBucket, path, batchDir, batchId,
+          "batch_stage_post_fence")(write(withBucket))) {
+        val touched = fsOf(spark, path).listStatus(batchDir).toSeq
+          .filter(st => st.isDirectory && st.getPath.getName.startsWith("__bucket="))
+          .map(_.getPath.getName.stripPrefix("__bucket="))
+        val dataSchema = StructType(withBucket.schema.filterNot(_.name == "__bucket"))
+        val batchRows = spark.read.schema(dataSchema.add("__bucket", IntegerType))
+          .parquet(batchDir.toString)
+        // __bucket is a pure function of the keys, so every combine keeps
+        // it correct by construction; the replace writes one file per
+        // touched bucket
+        write(combine(readBuckets(spark, path, touched, dataSchema), batchRows))(out)
+      }
     }
-    if (!(fs.exists(staged) && fs.exists(fence))) {
-      if (fs.exists(staged)) fs.delete(staged, true) // unfenced partial write
-      df.repartition(numTasks, col(partCol))
-        .write.mode("overwrite").partitionBy(partCol).parquet(staged.toString)
-      if (dataFiles(fs, staged).isEmpty) { fs.delete(staged, true); return }
-      fs.create(fence, true).close()
-      // Injected-crash point (test-only): staged write fenced, nothing
-      // swapped — the replay must resume the swap WITHOUT re-running the
-      // merge plan (CrashRecoverySpec kills a stream here).
-      Failpoint.hit(spark, "replace_post_fence", batchId)
-    }
-    swapStagedDirs(spark, fs, staged, path, batchId)
-    val marker = pubMarker(path, batchId)
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close()
-    fs.delete(staged, true)
+    fsOf(spark, path).delete(batchDir, true)
+  }
+
+  /** Read only the given hash buckets of a `__bucket=K`-partitioned state
+    * dir, as `dataSchema` plus the `__bucket` column last — partition
+    * pruning at the scan, so probe cost follows the touched buckets, not
+    * the accumulated state size. The explicit schema skips the read's
+    * footer-inference job. */
+  private[ops] def readBuckets(spark: SparkSession, path: String,
+      buckets: Seq[Any], dataSchema: StructType): DataFrame = {
+    val schema = dataSchema.add("__bucket", IntegerType)
+    // one root listing finds which touched buckets EXIST (a batch can
+    // touch a bucket no prior batch wrote; an explicit read of a missing
+    // dir would throw where a root read's filter just matches nothing)
+    val present = fsOf(spark, path).listStatus(new Path(path))
+      .collect { case st if st.getPath.getName.startsWith("__bucket=") =>
+        st.getPath.getName.stripPrefix("__bucket=") }.toSet
+    val touched = buckets.map(String.valueOf).distinct.filter(present)
+    if (touched.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    // A bulk batch touching MOST buckets reads the root (1 qualification
+    // + discovery over dirs it needs anyway); a trickle batch touching a
+    // few reads those dirs explicitly (partition discovery never lists
+    // the idle buckets — the idle-probe regime this read is priced for).
+    else if (touched.size * 2 >= present.size)
+      spark.read.schema(schema).parquet(path)
+        .filter(col("__bucket").isin(touched.map(_.toInt): _*))
+    else
+      spark.read.schema(schema).option("basePath", path)
+        .parquet(touched.map(b => s"$path/__bucket=$b"): _*)
   }
 
   /** Swap every `partCol=v` dir under `stage` into the live tree:
     * preserve live under `__old`, rename staged in, drop the preserved
     * copy — per partition, resumable (a staged dir disappears exactly
     * when its swap lands, so re-runs process whatever remains), healed at
-    * any interruption by [[repairPartitions]]. The `replace_mid_swap`
-    * failpoint fires after the FIRST partition's preserve — the worst
-    * window (live copy moved aside, new content not yet in). */
-  private def swapStagedDirs(spark: SparkSession, fs: FileSystem,
-      stage: Path, path: String, batchId: Long): Unit = {
+    * any interruption by [[repairPartitions]]. `afterFirstPreserve` runs
+    * once, after the first partition's preserve (the replace's crash
+    * point). */
+  private def swapStagedDirs(fs: FileSystem, stage: Path, path: String)(
+      afterFirstPreserve: => Unit): Unit = {
     if (!fs.exists(stage)) return
     val old = oldRoot(path)
     val parts = fs.listStatus(stage).toSeq
@@ -430,7 +469,7 @@ object KeyedState {
       val name = st.getPath.getName
       val live = new Path(path, name)
       if (fs.exists(live)) fs.rename(live, new Path(old, name))
-      if (first) { Failpoint.hit(spark, "replace_mid_swap", batchId); first = false }
+      if (first) { afterFirstPreserve; first = false }
       fs.rename(st.getPath, live)
       fs.delete(new Path(old, name), true)
     }
@@ -440,11 +479,14 @@ object KeyedState {
   private def stageRoot(path: String) = new Path(path + "__compact_tmp")
   private def oldRoot(path: String) = new Path(path + "__compact_old")
 
-  /** Heal an interrupted [[compactPartitions]] swap: any partition dir
-    * preserved under the `__old` sibling whose live dir is MISSING was
-    * caught between the two renames — restore it; one whose live dir
-    * exists was already swapped — drop the preserved copy. One `exists`
-    * call when there is nothing to heal. */
+  /** Heal an interrupted partition swap ([[swapStagedDirs]]: a
+    * [[compactPartitions]] rewrite or a [[replacePartitionsAtomic]] /
+    * [[combineBucketsAtomic]] replace): any partition dir preserved under
+    * the `__old` sibling whose live dir is MISSING was caught between the
+    * two renames — restore it; one whose live dir exists was already
+    * swapped — drop the preserved copy. One `exists` call when there is
+    * nothing to heal. A replace's own stage survives the repair: its
+    * fenced replay resumes the swap. */
   def repairPartitions(spark: SparkSession, path: String): Unit = {
     val fs = fsOf(spark, path)
     val old = oldRoot(path)
@@ -460,10 +502,11 @@ object KeyedState {
 
   /** Rewrite any of the given partition values whose parquet-file count
     * exceeds `maxFiles` down to one file each. The compacted copy is
-    * staged to a sibling dir, then each partition swaps via
-    * preserve-rename / stage-rename / drop-preserved — a crash at any
-    * point leaves the original rows restorable by [[repairPartitions]]
-    * (which also runs first, healing any earlier interruption). */
+    * staged to a sibling dir — the read of the live partitions completes
+    * before anything renames, so it needs no snapshot — then swapped in by
+    * [[swapStagedDirs]]: a crash at any point leaves the original rows
+    * restorable by [[repairPartitions]] (which also runs first, healing
+    * any earlier interruption). */
   def compactPartitions(spark: SparkSession, path: String, partCol: String,
       values: Seq[Any], maxFiles: Int): Unit = {
     repairPartitions(spark, path)
@@ -475,27 +518,10 @@ object KeyedState {
     }
     if (oversized.isEmpty) return
     val stage = stageRoot(path)
-    val old = oldRoot(path)
     fs.delete(stage, true)
-    val rows = spark.read.parquet(path)
-      .filter(col(partCol).isin(oversized: _*))
-      .repartition(oversized.size, col(partCol))
-      .localCheckpoint(true)
-    try rows.write.partitionBy(partCol).parquet(stage.toString)
-    finally Checkpoints.release(rows)
-    fs.mkdirs(old)
-    oversized.foreach { v =>
-      val name = s"$partCol=$v"
-      val staged = new Path(stage, name)
-      val live = new Path(path, name)
-      if (fs.exists(staged)) {
-        // preserve, swap, drop — original restorable until the swap lands
-        if (fs.exists(live)) fs.rename(live, new Path(old, name))
-        fs.rename(staged, live)
-        fs.delete(new Path(old, name), true)
-      }
-    }
-    fs.delete(old, true)
+    writePartitioned(spark.read.parquet(path).filter(col(partCol).isin(oversized: _*)),
+      partCol, oversized.size)(stage.toString)
+    swapStagedDirs(fs, stage, path)(())
     fs.delete(stage, true)
   }
 
@@ -523,15 +549,6 @@ object KeyedState {
     }
   }
 
-  /** Layout-parameter stamp for a persistent keyed state/sink dir: the
-    * first run writes `_PARAMS` (sorted `k=v` lines); every later run
-    * REQUIRES equality. Bucket counts, signature widths, band counts and
-    * gram lengths are baked into the stored bytes — a re-run with a
-    * drifted value doesn't error, it silently probes nonexistent buckets
-    * or compares unmatchable signatures (missed pairs, corrupt merges).
-    * Same discipline as the benchmark index's `_gram_n` stamp; the
-    * underscore name keeps it out of Spark's data listing, and bucketed
-    * dirs compact per partition so the root stamp survives compaction. */
   /** Canonical stamp rendering for one parameter value: numeric types
     * render as plain decimal strings (no exponent, no trailing zeros, via
     * BigDecimal), so the SAME number always produces the SAME line
@@ -555,6 +572,15 @@ object KeyedState {
     case other => String.valueOf(other)
   }
 
+  /** Layout-parameter stamp for a persistent keyed state/sink dir: the
+    * first run writes `_PARAMS` (sorted `k=v` lines); every later run
+    * REQUIRES equality. Bucket counts, signature widths, band counts and
+    * gram lengths are baked into the stored bytes — a re-run with a
+    * drifted value doesn't error, it silently probes nonexistent buckets
+    * or compares unmatchable signatures (missed pairs, corrupt merges).
+    * Same discipline as the benchmark index's `_gram_n` stamp; the
+    * underscore name keeps it out of Spark's data listing, and bucketed
+    * dirs compact per partition so the root stamp survives compaction. */
   def stampParams(spark: SparkSession, path: String,
       params: Map[String, Any]): Unit = {
     val fs = fsOf(spark, path)
@@ -701,13 +727,12 @@ object KeyedState {
       }
     val kept = parquet.map(_.getPath.getName)
       .filterNot(m.map(_.getPath.getName).toSet).toSeq
-    val rows = spark.read
-      .parquet(m.map(_.getPath.toString): _*).localCheckpoint(true)
+    // the merge is written to the sibling stage and completes before
+    // any rename, so it reads the live files directly (no snapshot)
     val stage = stageRoot(path)
-    try {
-      fs.delete(stage, true)
-      rows.coalesce(1).write.parquet(stage.toString)
-    } finally Checkpoints.release(rows)
+    fs.delete(stage, true)
+    spark.read.parquet(m.map(_.getPath.toString): _*)
+      .coalesce(1).write.parquet(stage.toString)
     if (kept.nonEmpty) {
       val out = fs.create(new Path(stage, keptManifest), true)
       try out.write((kept.mkString("\n") + "\n").getBytes("UTF-8"))

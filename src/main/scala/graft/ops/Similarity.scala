@@ -953,12 +953,11 @@ object Similarity {
     // ONE centroid collect for the whole stream (the geometry is frozen by
     // contract), not one per micro-batch.
     val centTable = collectCentroidTable(centroids)
-    val schema = spark.read.parquet(s"$dir/$glob").schema
     // Scoped shuffle width for the whole drain: callers size it to their
     // batch volume via `statePartitions`; unset keeps the session width
     // (Drain.foreachBatch — cluster-safe). (The staged cell append's task
     // count is the explicit parallelism(batch) argument, unaffected.)
-    Drain.foreachBatch(Drain.files(spark, dir, glob, schema, maxFilesPerTrigger),
+    Drain.foreachBatch(Drain.files(spark, dir, glob, maxFilesPerTrigger),
         checkpointDir, statePartitions) { (batch, batchId) =>
       // No withNorm barrier: a micro-batch is already partitioned by
       // arrival, and the replicas=1 assignment is one codegen

@@ -107,13 +107,14 @@ object Upsert {
     * keyed sink a `foreachBatch` streaming query in UPDATE output mode
     * writes through (plain parquet has no native merge). Each touched
     * bucket keeps its rows whose key the batch does not carry, plus every
-    * batch row. Written by [[writeKeyedParquet]], the protocol it shares
-    * with [[mergeKeyedParquet]]: per-call work is proportional to
-    * touched-bucket size, not sink size, and a replay of `batchId` at any
-    * crash point converges to the same sink. The sink directory belongs to
-    * ONE streaming checkpoint: its `__pub/b<id>` witnesses name that
-    * checkpoint's batch ids, so a second checkpoint writing the same
-    * directory would have its batches skipped as already published.
+    * batch row. Written by [[KeyedState.combineBucketsAtomic]], the
+    * protocol it shares with [[mergeKeyedParquet]]: per-call work is
+    * proportional to touched-bucket size, not sink size, and a replay of
+    * `batchId` at any crash point converges to the same sink. The sink
+    * directory belongs to ONE streaming checkpoint: its `__pub/b<id>`
+    * witnesses name that checkpoint's batch ids, so a second checkpoint
+    * writing the same directory would have its batches skipped as
+    * already published.
     */
   def upsertKeyedParquet(
       updates: DataFrame,
@@ -121,7 +122,7 @@ object Upsert {
       keys: Seq[String],
       nBuckets: Int,
       batchId: Long): Unit =
-    writeKeyedParquet(updates, path, keys, nBuckets, batchId) {
+    KeyedState.combineBucketsAtomic(updates, path, keys, nBuckets, batchId) {
       (existing, batch) =>
         existing
           .join(batch.select(keys.map(col): _*).distinct(), keys, "left_anti")
@@ -132,13 +133,15 @@ object Upsert {
     * [[upsertKeyedParquet]] but combining matched rows with the caller's
     * per-column merge functions ([[merge]] semantics) instead of
     * replacing them — the sink shape for streaming state that ACCUMULATES
-    * per key (running lists, counters) rather than superseding.
+    * per key (running lists, counters) rather than superseding. Each
+    * merge function returns its column's type.
     *
     * NOT idempotent at the SEMANTIC level: re-merging the same batch
     * accumulates its elements into each key's state a second time.
-    * [[writeKeyedParquet]]'s fences make the replay of a `batchId` at ANY
-    * crash point — including after the batch fully published — apply it
-    * exactly once, so streaming callers need no fence of their own.
+    * [[KeyedState.combineBucketsAtomic]]'s fences make the replay of a
+    * `batchId` at ANY crash point — including after the batch fully
+    * published — apply it exactly once, so streaming callers need no
+    * fence of their own.
     */
   def mergeKeyedParquet(
       updates: DataFrame,
@@ -147,101 +150,9 @@ object Upsert {
       mergeCols: Map[String, (Column, Column) => Column],
       nBuckets: Int,
       batchId: Long): Unit =
-    writeKeyedParquet(updates, path, keys, nBuckets, batchId) {
+    KeyedState.combineBucketsAtomic(updates, path, keys, nBuckets, batchId) {
       (existing, batch) => merge(existing, batch, keys, mergeCols)
     }
-
-  /** The one write protocol of the keyed parquet sinks. The sink is
-    * partitioned by `pmod(xxhash64(keys), nBuckets)`; `combine(existing,
-    * batch)` computes the new contents of the buckets the batch touches
-    * from their live rows and the batch's rows (both with `__bucket`, in
-    * the sink's column order).
-    *
-    *   - A FRESH sink combines against nothing: the batch is the new
-    *     content, written by [[KeyedState.replacePartitionsAtomic]], whose
-    *     no-data-files check is the emptiness guard. The batch plan runs
-    *     once, inside the staged write. Never a direct append: a torn
-    *     first write replayed into the warm path would combine the batch
-    *     with its own partial rows.
-    *   - A WARM sink stages the batch's OUTPUT first, under its own fence
-    *     — the ONLY execution of the batch plan — and reads the touched
-    *     buckets off the staged partition dirs (no extra Spark action).
-    *     The combine then reads two parquet sources (staged batch +
-    *     touched live buckets), so the fenced swap write never re-runs
-    *     the batch plan.
-    *
-    * Every write goes through [[KeyedState.replacePartitionsAtomic]]
-    * (`batchId` names the staged dirs), so a crash at ANY point —
-    * including inside a staged write's job commit or mid-swap — replays
-    * to exactly-once: a fenced batch staging is reused, a fenced combine
-    * resumes its swap without running any plan, and the `__pub` witness
-    * marks the batch done. Inside a streaming micro-batch those replay
-    * paths still run the batch frame once into Spark's no-op sink
-    * ([[KeyedState.drainInMicroBatch]]), which a stateful upstream needs
-    * to commit its state stores.
-    */
-  private def writeKeyedParquet(
-      updates: DataFrame,
-      path: String,
-      keys: Seq[String],
-      nBuckets: Int,
-      batchId: Long)(combine: (DataFrame, DataFrame) => DataFrame): Unit = {
-    val spark = updates.sparkSession
-    // heal any interrupted swap before anything lists or reads the sink
-    KeyedState.repairPartitions(spark, path)
-    // the shared keyed-state bucket hash — Upsert-written sinks and
-    // KeyedState-probed state must bucket bit-identically
-    val withBucket = updates
-      .withColumn("__bucket", KeyedState.bucketColumn(keys, nBuckets))
-    if (KeyedState.isPublished(spark, path, batchId) ||
-        KeyedState.isReplaceFenced(spark, path, batchId)) {
-      // a previous attempt fenced or published this batch's combined
-      // write: the atomic replace resumes the swap (or, once published,
-      // only drops leftovers) without recomputing the combine —
-      // withBucket stays lazy, that branch only moves files — then the
-      // batch staging this attempt no longer needs is dropped
-      KeyedState.replacePartitionsAtomic(withBucket, path, "__bucket",
-        nBuckets, batchId)
-      KeyedState.dropBatchStage(spark, path, batchId)
-      KeyedState.drainInMicroBatch(updates)
-      return
-    }
-    if (!KeyedState.hasData(spark, path)) {
-      KeyedState.replacePartitionsAtomic(withBucket, path, "__bucket",
-        nBuckets, batchId)
-      return
-    }
-    val affected = KeyedState
-      .stageMicroBatch(withBucket, path, "__bucket", nBuckets, batchId)
-    if (affected.isEmpty) return // empty batch: nothing staged, no-op
-    // explicit schema: the staged layout is exactly the batch's schema
-    // (Spark appends the partition column last on read) — passing it
-    // skips the read's footer-inference job, one fewer job per batch
-    val batchRows = spark.read
-      .schema(stagedSchema(withBucket))
-      .parquet(KeyedState.batchStage(path, batchId).toString)
-    val existing = spark.read.parquet(path)
-      .filter(col("__bucket").isin(affected.map(_.toInt): _*))
-    // __bucket is a pure function of the keys, so every combine keeps it
-    // correct by construction. replacePartitionsAtomic repartitions to one
-    // task per bucket: one file per touched bucket, where the batch's own
-    // partitioning would leave up to tasks × buckets fragments that every
-    // later read-back pays to list.
-    KeyedState.replacePartitionsAtomic(
-      combine(existing, batchRows.select(existing.columns.map(col): _*)),
-      path, "__bucket", nBuckets, batchId)
-    KeyedState.dropBatchStage(spark, path, batchId)
-  }
-
-  /** Read-back schema of a staged micro-batch: the batch's own columns
-    * with the `__bucket` partition column moved last (where a partitioned
-    * parquet read appends it). */
-  private def stagedSchema(withBucket: DataFrame)
-      : org.apache.spark.sql.types.StructType = {
-    val s = withBucket.schema
-    org.apache.spark.sql.types.StructType(
-      s.filterNot(_.name == "__bucket") :+ s("__bucket"))
-  }
 
   /** Read a [[upsertKeyedParquet]] sink back as a plain table (healing
     * any swap a crash interrupted first — one `exists` when clean). */

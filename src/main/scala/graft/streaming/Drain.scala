@@ -41,13 +41,16 @@ object Drain {
   lazy val smokeStatePartitions: Int = stateEnv.getOrElse(8)
 
   /** The one file source: `dir` watched for parquet files matching `glob`
-    * (the streaming file source requires a directory), read with the
-    * caller's probed `schema`. `maxFilesPerTrigger` > 0 bounds each
-    * micro-batch, so a split input drains as several batches.
+    * (the streaming file source requires a directory). The stream's
+    * schema is the footer schema of the files present now, unless the
+    * caller passes one (EventsStream passes its retyped `ts`).
+    * `maxFilesPerTrigger` > 0 bounds each micro-batch, so a split input
+    * drains as several batches.
     */
   def files(spark: SparkSession, dir: String, glob: String,
-      schema: StructType, maxFilesPerTrigger: Int = 0): DataFrame = {
-    val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
+      maxFilesPerTrigger: Int = 0, schema: Option[StructType] = None): DataFrame = {
+    val resolved = schema.getOrElse(spark.read.parquet(s"$dir/$glob").schema)
+    val reader = spark.readStream.schema(resolved).option("pathGlobFilter", glob)
     val bounded = if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader
     bounded.parquet(dir)

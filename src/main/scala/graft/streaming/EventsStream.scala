@@ -75,7 +75,7 @@ object EventsStream {
       case LongType | TimestampNTZType => probed
       case _ => TimestampType
     }
-    decodeTs(Drain.files(spark, dir, glob, schemaWithTs(tsType)))
+    decodeTs(Drain.files(spark, dir, glob, schema = Some(schemaWithTs(tsType))))
   }
 
   /** Run `probe` (a footer read) with `spark.sql.legacy.parquet.nanosAsLong`

@@ -5,9 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One way to hold a frame: every reused or barrier frame in the main
   * sources goes through `Checkpoints.pin` (iterative loops through
   * `Checkpoints.truncate`). The only direct holds allowed are in
-  * `Checkpoints.scala` itself and two eager snapshots in `KeyedState`
-  * whose sources are overwritten afterwards, so recomputing them from
-  * lineage would read the new data.
+  * `Checkpoints.scala` itself.
   *
   * One drain: every stream is read by `Drain.files` and started, drained
   * and stopped by `Drain.toMemory` or `Drain.foreachBatch`. Only `Bench`'s
@@ -29,23 +27,15 @@ class HoldSitesSpec extends AnyFunSuite {
   private val rddRoundTrip = """\.rdd\.(getNumPartitions|zipWithIndex)""".r
   private val streamLifecycle = """\.readStream|\.writeStream|processAllAvailable\(""".r
 
-  /** Eager snapshots allowed per file (path relative to `root`). */
-  private val snapshots = Map("ops/KeyedState.scala" -> 2)
-
   /** The files allowed to drive a stream by hand. */
   private val drainSites = Set("streaming/Drain.scala", "Bench.scala")
 
   private def show(rel: String, hits: Seq[(String, Int)]): Seq[String] =
     hits.map { case (l, i) => s"$rel:${i + 1}: ${l.trim}" }
 
-  test("no persist/cache/checkpoint outside Checkpoints and the eager snapshots") {
+  test("no persist/cache/checkpoint outside Checkpoints") {
     val hits = codeHits(hold, withExamples = false).flatMap { case (rel, code) =>
-      if (rel == "ops/Checkpoints.scala") Nil
-      else {
-        val snaps = code.filter(_._1.contains("localCheckpoint(true)"))
-        val allowed = snapshots.getOrElse(rel, 0)
-        show(rel, if (snaps.size == allowed) code.filterNot(snaps.contains) else code)
-      }
+      if (rel == "ops/Checkpoints.scala") Nil else show(rel, code)
     }
     assert(hits.isEmpty, "hold a reused frame with Checkpoints.pin (or truncate " +
       "in a loop):\n" + hits.mkString("\n"))

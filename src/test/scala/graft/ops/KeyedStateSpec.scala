@@ -42,6 +42,30 @@ class KeyedStateSpec extends AnyFunSuite {
     assert(!new java.io.File(p + "__compact_old").exists())
   }
 
+  test("compactPartitions and compactFlat start no localCheckpoint job; " +
+      "a compaction never hits the replace's mid-swap crash point") {
+    // both rewrites stage into a sibling dir and finish reading before any
+    // rename, so neither snapshots its input
+    val p = graft.TestScratch.dir("graft-ks-nosnap") + "/store"
+    writeBucketed(p, 3)
+    // the partition swap is shared with the replace, whose crash point
+    // must never fire in a compaction
+    spark.conf.set("spark.graft.test.failpoint", "replace_mid_swap:0")
+    val partJobs = try graft.JobCount.during(spark) {
+      KeyedState.compactPartitions(spark, p, "__bucket", 0 until 4, maxFiles = 2)
+    } finally spark.conf.unset("spark.graft.test.failpoint")
+    val f = graft.TestScratch.dir("graft-ks-nosnap-flat") + "/pairs"
+    for (i <- 1 to 3)
+      (1L to 5L).map(_ + 10L * i).toDF("v").coalesce(1).write.mode("append").parquet(f)
+    val flatJobs = graft.JobCount.during(spark) {
+      KeyedState.compactFlat(spark, f, maxFiles = 1)
+    }
+    assert(partJobs.nonEmpty && flatJobs.nonEmpty)
+    assert(!(partJobs ++ flatJobs).exists(_.contains("localCheckpoint")),
+      s"compactPartitions: $partJobs; compactFlat: $flatJobs")
+    assert(spark.read.parquet(p).count() == 120 && spark.read.parquet(f).count() == 15)
+  }
+
   test("repairPartitions restores a swap interrupted between the renames") {
     val base = graft.TestScratch.dir("graft-ks-repair")
     val p = s"$base/store"

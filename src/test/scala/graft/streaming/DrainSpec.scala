@@ -82,7 +82,7 @@ class DrainSpec extends AnyFunSuite {
     val s = fresh()
     val path = s"$dir/events.parquet"
     val schema = s.read.parquet(path).schema
-    def events = Drain.files(s, dir, "events.parquet", schema)
+    def events = Drain.files(s, dir, "events.parquet", schema = Some(schema))
     // The same micro-batches collected by hand: the jobs the drain runs
     // before it returns.
     val batches = graft.JobCount.during(s) {

@@ -263,7 +263,7 @@ object KeyedState {
     ()
   }
 
-  private[ops] def fsOf(spark: SparkSession, path: String): FileSystem =
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // ---- marker retention --------------------------------------------------
